@@ -21,8 +21,10 @@ Spark DataFrame operators:
 - training-data pipeline ops (dedup / similarity / text / multimodal)
   over the documents + embeddings tables.
 
-Pixel work is Arrow-batched numpy inside pandas UDFs; everything
-relational stays JVM-side for Catalyst/Tungsten.
+Pixel work is numpy over Arrow batches: per-row maps are pandas UDFs,
+and every per-tile kernel runs once per group through one grouped
+Arrow runner (``operators._groups.run_grouped``); everything relational
+stays JVM-side for Catalyst/Tungsten.
 """
 
 from __future__ import annotations
@@ -77,8 +79,16 @@ def get_spark(
     """Session tuned for the engine: AQE on, Arrow on, shuffle partitions
     sized to parallelism (not the 200 default, which over-partitions
     local mode and under-partitions a 1000-executor cluster — on a real
-    cluster set ``spark.sql.shuffle.partitions`` ≈ 2-3× total cores)."""
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cluster set ``spark.sql.shuffle.partitions`` ≈ 2-3× total cores).
+
+    Defaults come from the machine: ``local[n]`` over the CPUs this
+    process may run on, and a driver heap of half the physical RAM —
+    in local mode that heap serves the executors too, and the Python
+    workers and page cache need the other half. ``SPARK_GRAFT_CPUS``
+    and ``SPARK_GRAFT_DRIVER_MEM`` override them."""
+    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    heap = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or f"{ram // 2 >> 20}m"
     sp = shuffle_partitions or max(cores, 8)
     return _ship(
         SparkSession.builder.master(f"local[{cores}]")
@@ -89,7 +99,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", heap)
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )

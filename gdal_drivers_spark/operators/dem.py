@@ -34,48 +34,18 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from gdal_drivers_spark.operators.halo import with_halo_strips
+from gdal_drivers_spark.operators.halo import run_halo
 
 
-def _assemble_padded(pdf: pd.DataFrame, t: int) -> tuple[np.ndarray | None, int, bool]:
+def _assemble_padded(contrib: dict, t: int) -> np.ndarray | None:
     """(t+2)² padded elevation window for one target cell from its
-    STRIP-projected halo group (``with_halo_strips`` payload layout):
-    center tile edge-replicated first (covers domain edges / absent
-    neighbors), then actual neighbor strips / corner bytes overwrite.
-
-    Poison policy (house rule): a NULL / corrupt / wrong-length
-    contribution is counted in ``n_bad`` and treated as absent —
-    never a stage kill. A duplicate (dx, dy) contribution (malformed
-    upstream union) keeps the lexicographically-smaller payload
-    (deterministic across shuffle orders) and also counts as bad.
-    Returns (padded-or-None, n_bad, center_row_present): a target
-    with NO center row at all is a normal sparse-raster neighbor
-    group (callers drop it silently); a target whose center row
-    exists but is corrupt is poison (callers emit a flagged row)."""
-    contrib: dict = {}
-    n_bad = 0
-    center_row = False
-    for r in pdf.itertuples():
-        off = (int(r.dx), int(r.dy))
-        if off == (0, 0):
-            center_row = True
-        try:
-            raw = bytes(r.payload)
-        except Exception:
-            n_bad += 1
-            continue
-        need = t * t if off == (0, 0) else (1 if (off[0] and off[1]) else t)
-        if len(raw) != need:
-            n_bad += 1
-            continue
-        if off in contrib:
-            n_bad += 1
-            if raw >= contrib[off]:
-                continue
-        contrib[off] = raw
+    parsed STRIP halo (``halo.parse_halo`` at width 1): center tile
+    edge-replicated first (covers domain edges / absent neighbors),
+    then actual neighbor strips / corner bytes overwrite. None when
+    the center tile itself is corrupt (poison)."""
     center = contrib.get((0, 0))
     if center is None:
-        return None, n_bad, center_row
+        return None
     C = np.frombuffer(center, np.uint8).reshape(t, t)
     P = np.pad(C.astype(np.int64), 1, mode="edge")
 
@@ -109,7 +79,18 @@ def _assemble_padded(pdf: pd.DataFrame, t: int) -> tuple[np.ndarray | None, int,
     corner(0, t + 1, (1, -1), (0, -1), t - 1, (1, 0), 0)
     corner(t + 1, 0, (-1, 1), (0, 1), 0, (-1, 0), t - 1)
     corner(t + 1, t + 1, (1, 1), (0, 1), t - 1, (1, 0), t - 1)
-    return P, n_bad, True
+    return P
+
+
+def _run_padded(tiles: DataFrame, t: int, cell: str, schema: str, kernel) -> DataFrame:
+    """The DEM plan: one strip-halo exchange, then ``kernel(kc, P,
+    n_bad)`` once per tile with its padded window (``P`` None for a
+    poison center — callers emit a flagged row, never kill the stage)."""
+    return run_halo(
+        tiles, t, 1, schema,
+        lambda kc, contrib, n_bad: kernel(kc, _assemble_padded(contrib, t), n_bad),
+        cell=cell,
+    )
 
 
 def _horn_pq8(P: np.ndarray, t: int) -> tuple[np.ndarray, np.ndarray]:
@@ -132,40 +113,20 @@ def horn_gradients(tiles: DataFrame, tile_px: int, cell: str = "cell") -> DataFr
     (cell, n_px, p8_sum, q8_sum, p8_abs_sum, q8_abs_sum). The seam- and
     clamp-sensitive part of the DEM pipeline, fully oracle-checkable.
     Input rows: (cell, tile: raw u8 elevations, t×t)."""
-    h = with_halo_strips(tiles, tile_px, cell=cell)
+    t = tile_px
 
-    def _grad(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        t = tile_px
-        P, n_bad, center_row = _assemble_padded(pdf, t)
-        if P is None:
-            if not center_row:  # sparse neighbor group — not a tile
-                return pd.DataFrame(
-                    columns=["cell", "n_px", "p8_sum", "q8_sum",
-                             "p8_abs_sum", "q8_abs_sum", "n_bad"]
-                )
-            # poison center: flagged row, zero stats — never a stage kill
-            return pd.DataFrame(
-                {"cell": [int(key[0])], "n_px": [0], "p8_sum": [0],
-                 "q8_sum": [0], "p8_abs_sum": [0], "q8_abs_sum": [0],
-                 "n_bad": [n_bad]}
-            )
+    def _grad(kc, P, n_bad):
+        if P is None:  # poison center: flagged row, zero stats
+            return [(kc, 0, 0, 0, 0, 0, n_bad)]
         p8, q8 = _horn_pq8(P, t)
-        return pd.DataFrame(
-            {
-                "cell": [int(key[0])],
-                "n_px": [t * t],
-                "p8_sum": [int(p8.sum())],
-                "q8_sum": [int(q8.sum())],
-                "p8_abs_sum": [int(np.abs(p8).sum())],
-                "q8_abs_sum": [int(np.abs(q8).sum())],
-                "n_bad": [n_bad],
-            }
-        )
+        return [(kc, t * t, int(p8.sum()), int(q8.sum()),
+                 int(np.abs(p8).sum()), int(np.abs(q8).sum()), n_bad)]
 
-    return h.groupBy("target_cell").applyInPandas(
-        _grad,
+    return _run_padded(
+        tiles, t, cell,
         "cell long, n_px long, p8_sum long, q8_sum long, "
         "p8_abs_sum long, q8_abs_sum long, n_bad long",
+        _grad,
     )
 
 
@@ -238,34 +199,19 @@ def hillshade(
     downstream auditing; a poison CENTER yields an empty tile with
     hs_sum = −1 and its bad-contribution count (house poison policy:
     flag, never kill)."""
-    h = with_halo_strips(tiles, tile_px, cell=cell)
+    t = tile_px
 
-    def _hs(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        t = tile_px
-        P, n_bad, center_row = _assemble_padded(pdf, t)
+    def _hs(kc, P, n_bad):
         if P is None:
-            if not center_row:  # sparse neighbor group — not a tile
-                return pd.DataFrame(columns=["cell", "tile", "hs_sum", "n_bad"])
-            return pd.DataFrame(
-                {"cell": [int(key[0])], "tile": [b""], "hs_sum": [-1],
-                 "n_bad": [n_bad]}
-            )
+            return [(kc, b"", -1, n_bad)]
         p8, q8 = _horn_pq8(P, t)
         out = (_shade_multi(p8, q8, altitude_deg, z_factor)
                if multidirectional
                else _shade(p8, q8, azimuth_deg, altitude_deg, z_factor))
-        return pd.DataFrame(
-            {
-                "cell": [int(key[0])],
-                "tile": [out.tobytes()],
-                "hs_sum": [int(out.sum(dtype=np.int64))],
-                "n_bad": [n_bad],
-            }
-        )
+        return [(kc, out.tobytes(), int(out.sum(dtype=np.int64)), n_bad)]
 
-    return h.groupBy("target_cell").applyInPandas(
-        _hs, "cell long, tile binary, hs_sum long, n_bad long"
-    )
+    return _run_padded(
+        tiles, t, cell, "cell long, tile binary, hs_sum long, n_bad long", _hs)
 
 
 def hillshade_np(elev: np.ndarray, azimuth_deg=315.0, altitude_deg=45.0,
@@ -313,28 +259,17 @@ def slope_aspect(
     reference). Output rows: (cell, slope_tile, aspect_tile, n_bad) —
     float32 payloads; a poison CENTER yields empty tiles with
     n_bad set (flag, never kill)."""
-    h = with_halo_strips(tiles, tile_px, cell=cell)
+    t = tile_px
 
-    def _sa(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        t = tile_px
-        P, n_bad, center_row = _assemble_padded(pdf, t)
+    def _sa(kc, P, n_bad):
         if P is None:
-            if not center_row:
-                return pd.DataFrame(columns=["cell", "slope_tile", "aspect_tile", "n_bad"])
-            return pd.DataFrame(
-                {"cell": [int(key[0])], "slope_tile": [b""],
-                 "aspect_tile": [b""], "n_bad": [n_bad]}
-            )
-        p8, q8 = _horn_pq8(P, t)
-        slope, aspect = _slope_aspect(p8, q8, z_factor)
-        return pd.DataFrame(
-            {"cell": [int(key[0])], "slope_tile": [slope.tobytes()],
-             "aspect_tile": [aspect.tobytes()], "n_bad": [n_bad]}
-        )
+            return [(kc, b"", b"", n_bad)]
+        slope, aspect = _slope_aspect(*_horn_pq8(P, t), z_factor)
+        return [(kc, slope.tobytes(), aspect.tobytes(), n_bad)]
 
-    return h.groupBy("target_cell").applyInPandas(
-        _sa, "cell long, slope_tile binary, aspect_tile binary, n_bad long"
-    )
+    return _run_padded(
+        tiles, t, cell,
+        "cell long, slope_tile binary, aspect_tile binary, n_bad long", _sa)
 
 
 def _terrain_px(P: np.ndarray, t: int):
@@ -370,41 +305,22 @@ def terrain_indices(tiles: DataFrame, tile_px: int, cell: str = "cell") -> DataF
     hop, integer sums before any further shuffle. Riley TRI is
     reported pre-sqrt (Σ of squared diffs is exact; the sqrt is a
     display transform callers apply after aggregation)."""
-    h = with_halo_strips(tiles, tile_px, cell=cell)
-    cols = ["cell", "n_px", "tri_w8_sum", "tri_r2_sum", "tpi8_sum",
-            "tpi8_abs_sum", "rough_sum", "rough_max", "n_bad"]
+    t = tile_px
 
-    def _ti(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        t = tile_px
-        P, n_bad, center_row = _assemble_padded(pdf, t)
+    def _ti(kc, P, n_bad):
         if P is None:
-            if not center_row:
-                return pd.DataFrame(columns=cols)
-            return pd.DataFrame(
-                {"cell": [int(key[0])], "n_px": [0], "tri_w8_sum": [0],
-                 "tri_r2_sum": [0], "tpi8_sum": [0], "tpi8_abs_sum": [0],
-                 "rough_sum": [0], "rough_max": [0], "n_bad": [n_bad]}
-            )
+            return [(kc, 0, 0, 0, 0, 0, 0, 0, n_bad)]
         tri_w8, tri_r2, tpi8, rough = _terrain_px(P, t)
-        return pd.DataFrame(
-            {
-                "cell": [int(key[0])],
-                "n_px": [t * t],
-                "tri_w8_sum": [int(tri_w8.sum())],
-                "tri_r2_sum": [int(tri_r2.sum())],
-                "tpi8_sum": [int(tpi8.sum())],
-                "tpi8_abs_sum": [int(np.abs(tpi8).sum())],
-                "rough_sum": [int(rough.sum())],
-                "rough_max": [int(rough.max())],
-                "n_bad": [n_bad],
-            }
-        )
+        return [(kc, t * t, int(tri_w8.sum()), int(tri_r2.sum()),
+                 int(tpi8.sum()), int(np.abs(tpi8).sum()),
+                 int(rough.sum()), int(rough.max()), n_bad)]
 
-    return h.groupBy("target_cell").applyInPandas(
-        _ti,
+    return _run_padded(
+        tiles, t, cell,
         "cell long, n_px long, tri_w8_sum long, tri_r2_sum long, "
         "tpi8_sum long, tpi8_abs_sum long, rough_sum long, rough_max long, "
         "n_bad long",
+        _ti,
     )
 
 
@@ -413,29 +329,15 @@ def roughness_tiles(tiles: DataFrame, tile_px: int, cell: str = "cell") -> DataF
     one gdaldem terrain index whose exact value fits the u8 payload
     (≤255 for u8 DEMs), so it ships as tiles like hillshade. Seam-
     exact through the strip halo; poison center → empty tile + n_bad."""
-    h = with_halo_strips(tiles, tile_px, cell=cell)
+    t = tile_px
 
-    def _r(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        t = tile_px
-        P, n_bad, center_row = _assemble_padded(pdf, t)
+    def _r(kc, P, n_bad):
         if P is None:
-            if not center_row:
-                return pd.DataFrame(columns=["cell", "tile", "n_bad"])
-            return pd.DataFrame(
-                {"cell": [int(key[0])], "tile": [b""], "n_bad": [n_bad]}
-            )
-        _, _, _, rough = _terrain_px(P, t)
-        return pd.DataFrame(
-            {
-                "cell": [int(key[0])],
-                "tile": [rough.astype(np.uint8).tobytes()],
-                "n_bad": [n_bad],
-            }
-        )
+            return [(kc, b"", n_bad)]
+        rough = _terrain_px(P, t)[3]
+        return [(kc, rough.astype(np.uint8).tobytes(), n_bad)]
 
-    return h.groupBy("target_cell").applyInPandas(
-        _r, "cell long, tile binary, n_bad long"
-    )
+    return _run_padded(tiles, t, cell, "cell long, tile binary, n_bad long", _r)
 
 
 def color_relief(
@@ -525,23 +427,14 @@ def contour_case_census(
     the SQL-hashable skeleton of contouring; vertex geometry is the
     same linear interpolation the warp kernels pin in pytest and
     rides on these cases."""
-    h = with_halo_strips(tiles, tile_px, cell=cell)
     lv = [float(v) for v in levels]
     gw, gh = int(grid_wh[0]), int(grid_wh[1])
-    cols = ["cell", "level", "n_squares", "n_segments", "case_sum", "n_bad"]
+    t = tile_px
+    seg_of = np.array([0, 1, 1, 1, 1, 1, 2, 1, 1, 2, 1, 1, 1, 1, 1, 0])
 
-    def _census(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        t = tile_px
-        P, n_bad, center_row = _assemble_padded(pdf, t)
-        kc = int(key[0])
+    def _census(kc, P, n_bad):
         if P is None:
-            if not center_row:
-                return pd.DataFrame(columns=cols)
-            return pd.DataFrame(
-                {"cell": [kc] * len(lv), "level": lv,
-                 "n_squares": [0] * len(lv), "n_segments": [0] * len(lv),
-                 "case_sum": [0] * len(lv), "n_bad": [n_bad] * len(lv)}
-            )
+            return [(kc, L, 0, 0, 0, n_bad) for L in lv]
         tx = (kc >> 26) & ((1 << 26) - 1)
         ty = kc & ((1 << 26) - 1)
         # square corners: TL = tile pixel (r, c), BR = (r+1, c+1) — the
@@ -552,7 +445,6 @@ def contour_case_census(
         br = P[2 : t + 2, 2 : t + 2]
         ncol = t - 1 if tx == gw - 1 else t
         nrow = t - 1 if ty == gh - 1 else t
-        seg_of = np.array([0, 1, 1, 1, 1, 1, 2, 1, 1, 2, 1, 1, 1, 1, 1, 0])
         rows = []
         for L in lv:
             case = (
@@ -564,10 +456,11 @@ def contour_case_census(
             rows.append(
                 (kc, L, int(case.size), int(seg_of[case].sum()), int(case.sum()), n_bad)
             )
-        return pd.DataFrame(rows, columns=cols)
+        return rows
 
-    return h.groupBy("target_cell").applyInPandas(
-        _census,
+    return _run_padded(
+        tiles, t, cell,
         "cell long, level double, n_squares long, n_segments long, "
         "case_sum long, n_bad long",
+        _census,
     )

@@ -5,12 +5,12 @@ gdal_grid scans ALL points for every output pixel (its quadtree only
 helps single-node). The distributed shape: each point is re-keyed to
 every output tile whose ``radius``-expanded envelope contains it — a
 JVM ``explode`` over at most ⌈2r/t+1⌉² tile keys (usually 1–4, pure
-codegen, no Python) — then one ``applyInPandas`` kernel per tile
-interpolates its t² pixels from ONLY the local candidates. The single
-shuffle is the re-key; kernel cost is O(candidates·t²) vectorized
-numpy, and the candidate count per tile is bounded by point density ×
-(t+2r)², independent of total raster size — the plan is flat to a
-10⁶-tile raster.
+codegen, no Python) — then one grouped Arrow kernel per tile
+(``_groups.run_grouped``) interpolates its t² pixels from ONLY the
+local candidates. The single shuffle is the re-key; kernel cost is
+O(candidates·t²) vectorized numpy, and the candidate count per tile
+is bounded by point density × (t+2r)², independent of total raster
+size — the plan is flat to a 10⁶-tile raster.
 
 Tiles with NO candidate point still exist in the output (GDAL writes
 nodata there): the kernel output left-joins the dense cell universe
@@ -39,9 +39,10 @@ detail/mbtiles.cpp:146-155.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from gdal_drivers_spark.operators._groups import run_grouped
 
 _OUT_SCHEMA = "cell long, raster binary, n_points long, n_filled long"
 
@@ -107,7 +108,7 @@ def _grid(
     if not 1 <= int(radius):
         raise ValueError(f"radius {radius} must be >= 1")
     scattered = _scatter(points, t, z, radius, grid_wh, px, py, val, pid)
-    computed = scattered.groupBy("cell").applyInPandas(kernel, _OUT_SCHEMA)
+    computed = run_grouped(scattered, ["cell"], ["_pid", "_px", "_py", "_v"], kernel, _OUT_SCHEMA)
     spark = points.sparkSession
     universe = spark.range(gw * gh).select(
         (
@@ -141,30 +142,24 @@ def grid_nearest(
     t, r = int(tile_px), int(radius)
     cap = r * r + 1
 
-    def _kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        kc = int(key[0])
+    def _kernel(key, g):
+        kc = key[0]
         tx = (kc >> 26) & ((1 << 26) - 1)
         ty = kc & ((1 << 26) - 1)
         gx = np.arange(t)[None, :] + tx * t
         gy = np.arange(t)[:, None] + ty * t
         best = np.full((t, t), cap, np.int64)
-        bestpid = np.full((t, t), np.iinfo(np.int64).max, np.int64)
         bestv = np.full((t, t), nodata, np.uint8)
-        order = np.argsort(pdf["_pid"].to_numpy(), kind="stable")
-        for i in order:
-            p, q = int(pdf["_px"].iloc[i]), int(pdf["_py"].iloc[i])
+        pids = g["_pid"]
+        for i in np.argsort(pids, kind="stable"):
+            p, q = int(g["_px"][i]), int(g["_py"][i])
             d2 = (gx - p) ** 2 + (gy - q) ** 2
             # strict < keeps the FIRST (lowest-pid) point on ties
             m = (d2 <= r * r) & (d2 < best)
             best[m] = d2[m]
-            v = int(pdf["_v"].iloc[i]) & 0xFF
-            bestv[m] = v
-            bestpid[m] = int(pdf["_pid"].iloc[i])
+            bestv[m] = int(g["_v"][i]) & 0xFF
         n_filled = int((best <= r * r).sum())
-        return pd.DataFrame(
-            [(kc, bestv.tobytes(), len(pdf), n_filled)],
-            columns=["cell", "raster", "n_points", "n_filled"],
-        )
+        return [(kc, bestv.tobytes(), len(pids), n_filled)]
 
     return _grid(points, t, z, r, grid_wh, _kernel, px, py, val, pid, nodata)
 
@@ -200,8 +195,8 @@ def grid_datametrics(
     if not 1 <= r:
         raise ValueError(f"radius {radius} must be >= 1")
 
-    def _kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        kc = int(key[0])
+    def _kernel(key, g):
+        kc = key[0]
         tx = (kc >> 26) & ((1 << 26) - 1)
         ty = kc & ((1 << 26) - 1)
         gx = np.arange(t)[None, :] + tx * t
@@ -209,10 +204,8 @@ def grid_datametrics(
         cnt = np.zeros((t, t), np.int64)
         vmin = np.full((t, t), 256, np.int64)
         vmax = np.full((t, t), -1, np.int64)
-        pxs = pdf["_px"].to_numpy(np.int64)
-        pys = pdf["_py"].to_numpy(np.int64)
-        vs = pdf["_v"].to_numpy(np.int64) & 0xFF
-        for p, q, v in zip(pxs.tolist(), pys.tolist(), vs.tolist()):
+        for p, q, v in zip(g["_px"], g["_py"], g["_v"]):
+            p, q, v = int(p), int(q), int(v) & 0xFF
             m = (gx - p) ** 2 + (gy - q) ** 2 <= r * r
             cnt += m
             vmin[m] = np.minimum(vmin[m], v)
@@ -223,15 +216,11 @@ def grid_datametrics(
         out_min = np.where(filled, vmin, nd).astype(np.uint8)
         out_max = np.where(filled, vmax, nd).astype(np.uint8)
         out_rng = np.where(filled, vmax - vmin, nd).astype(np.uint8)
-        return pd.DataFrame(
-            [(kc, out_cnt.tobytes(), out_min.tobytes(), out_max.tobytes(),
-              out_rng.tobytes(), len(pdf), int(filled.sum()))],
-            columns=["cell", "count", "vmin", "vmax", "vrange",
-                     "n_points", "n_filled"],
-        )
+        return [(kc, out_cnt.tobytes(), out_min.tobytes(), out_max.tobytes(),
+                 out_rng.tobytes(), len(g["_v"]), int(filled.sum()))]
 
     scattered = _scatter(points, t, z, r, grid_wh, px, py, val, pid)
-    computed = scattered.groupBy("cell").applyInPandas(_kernel, _METRICS_SCHEMA)
+    computed = run_grouped(scattered, ["cell"], ["_px", "_py", "_v"], _kernel, _METRICS_SCHEMA)
     spark = points.sparkSession
     universe = spark.range(gw * gh).select(
         (
@@ -271,8 +260,8 @@ def grid_idw(
     t, r = int(tile_px), int(radius)
     pw = int(power)
 
-    def _kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        kc = int(key[0])
+    def _kernel(key, g):
+        kc = key[0]
         tx = (kc >> 26) & ((1 << 26) - 1)
         ty = kc & ((1 << 26) - 1)
         gx = np.arange(t)[None, :] + tx * t
@@ -281,17 +270,17 @@ def grid_idw(
         wvsum = np.zeros((t, t), np.float64)
         exact = np.full((t, t), -1, np.int64)  # pid of a coincident point
         exactv = np.zeros((t, t), np.uint8)
-        order = np.argsort(pdf["_pid"].to_numpy(), kind="stable")
-        for i in order:
-            p, q = int(pdf["_px"].iloc[i]), int(pdf["_py"].iloc[i])
-            v = int(pdf["_v"].iloc[i]) & 0xFF
+        pids = g["_pid"]
+        for i in np.argsort(pids, kind="stable"):
+            p, q = int(g["_px"][i]), int(g["_py"][i])
+            v = int(g["_v"][i]) & 0xFF
             d2 = (gx - p) ** 2 + (gy - q) ** 2
             hit = d2 == 0
             if hit.any():
                 first = exact[hit] < 0
                 if first.any():
                     yy, xx = np.nonzero(hit)
-                    exact[yy[first], xx[first]] = int(pdf["_pid"].iloc[i])
+                    exact[yy[first], xx[first]] = pids[i]
                     exactv[yy[first], xx[first]] = v
             m = (d2 <= r * r) & ~hit
             w = np.zeros((t, t), np.float64)
@@ -306,9 +295,6 @@ def grid_idw(
         on_pt = exact >= 0
         outv[on_pt] = exactv[on_pt]
         n_filled = int((reach | on_pt).sum())
-        return pd.DataFrame(
-            [(kc, outv.tobytes(), len(pdf), n_filled)],
-            columns=["cell", "raster", "n_points", "n_filled"],
-        )
+        return [(kc, outv.tobytes(), len(pids), n_filled)]
 
     return _grid(points, t, z, r, grid_wh, _kernel, px, py, val, pid, nodata)

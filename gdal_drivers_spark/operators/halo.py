@@ -18,13 +18,17 @@ Two fan-out strategies:
 - ``with_halo`` — re-key the FULL tile to every neighbor. Simple,
   ring-generic, but shuffles ≤9× the raster bytes; fine for small
   rasters or kernels that genuinely read whole neighbor tiles.
-- ``with_halo_strips`` — the scale path for 1-px (3×3) kernels: a
-  narrow Arrow stage projects each tile down to its 4 edge strips + 4
-  corner bytes BEFORE the re-key explode, so neighbors receive only
-  the pixels they read. Shuffle bytes ≈ raster bytes (the self
-  contribution) + 4·t+4 per tile (+0.8% at t=512 vs the 9× of the
-  full re-key — the difference between "works" and "doesn't" at
-  100 TB of DEM).
+- ``with_halo_bands`` — the scale path for kernels of support radius
+  ``w``: a narrow Arrow stage projects each tile down to its 4 edge
+  bands + 4 corner blocks BEFORE the re-key explode, so neighbors
+  receive only the pixels they read. Shuffle bytes ≈ raster bytes (the
+  self contribution) + 4·w·t + 4·w² per tile (+0.8% at t=512, w=1 vs
+  the 9× of the full re-key — the difference between "works" and
+  "doesn't" at 100 TB of DEM). ``with_halo_strips`` is its w=1 case.
+
+The consuming side is shared too: :func:`run_halo` runs one kernel per
+target tile over the contributions :func:`parse_halo` validated, so
+the poison and duplicate rules below hold for every halo operator.
 """
 
 from __future__ import annotations
@@ -34,6 +38,71 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from gdal_drivers_spark.operators._groups import run_grouped
+
+
+def parse_halo(dxs, dys, payloads, t: int, w: int):
+    """One target cell's ``with_halo_bands`` contributions →
+    ``(contrib, n_bad, center_row)``, ``contrib`` mapping each
+    offset (dx, dy) to its payload bytes.
+
+    Poison policy (house rule): a NULL or wrong-length payload (t² at
+    the center, w·t on a side, w² on a diagonal) is counted in
+    ``n_bad`` and treated as absent — never a stage kill. A duplicate
+    offset (malformed upstream union) keeps the lexicographically
+    smaller payload and also counts as bad, so the winner never depends
+    on shuffle order. ``center_row`` tells a target whose own tile is
+    corrupt (poison: callers emit a flagged row) from a sparse-raster
+    neighbor group that holds no tile at all."""
+    contrib: dict = {}
+    n_bad = 0
+    center_row = False
+    for dx, dy, raw in zip(dxs, dys, payloads):
+        off = (dx, dy)
+        if off == (0, 0):
+            center_row = True
+        need = t * t if off == (0, 0) else w * w if off[0] and off[1] else w * t
+        if raw is None or len(raw) != need:
+            n_bad += 1
+            continue
+        if off in contrib:
+            n_bad += 1
+            if raw >= contrib[off]:
+                continue
+        contrib[off] = raw
+    return contrib, n_bad, center_row
+
+
+def halo_window(contrib: dict, t: int, w: int, fill: int) -> np.ndarray:
+    """The (t+2w)² int64 window around a target tile: the center tile
+    and every neighbor band pasted at its offset (band payloads are
+    row-major slices, see ``with_halo_bands``), ``fill`` elsewhere."""
+    win = np.full((t + 2 * w, t + 2 * w), fill, np.int64)
+    for (dx, dy), raw in contrib.items():
+        h, wd = (t if dy == 0 else w), (t if dx == 0 else w)
+        y0 = 0 if dy < 0 else w + t if dy > 0 else w
+        x0 = 0 if dx < 0 else w + t if dx > 0 else w
+        win[y0:y0 + h, x0:x0 + wd] = np.frombuffer(raw, np.uint8).reshape(h, wd)
+    return win
+
+
+def run_halo(
+    tiles: DataFrame, tile_px: int, width: int, schema: str, kernel,
+    cell: str = "cell", tile: str = "tile",
+) -> DataFrame:
+    """One ``with_halo_bands`` exchange, then ``kernel(kc, contrib,
+    n_bad)`` once per target cell that holds a tile row (``contrib``
+    lacks (0, 0) when that tile is corrupt). Neighbor-only groups of a
+    sparse raster emit nothing. The kernel returns rows of ``schema``."""
+    t, w = int(tile_px), int(width)
+
+    def _k(key, g):
+        contrib, n_bad, center_row = parse_halo(g["dx"], g["dy"], g["payload"], t, w)
+        return kernel(key[0], contrib, n_bad) if center_row else []
+
+    h = with_halo_bands(tiles, t, w, cell=cell, tile=tile)
+    return run_grouped(h, ["target_cell"], ["dx", "dy", "payload"], _k, schema)
 
 
 def halo_convolve(tiles: DataFrame, tile_px: int, cell: str = "cell") -> DataFrame:
@@ -50,76 +119,21 @@ def halo_convolve(tiles: DataFrame, tile_px: int, cell: str = "cell") -> DataFra
     Input rows: (cell:long, tile:binary u8 raw tile_px²). Missing
     neighbors (domain edge or absent tile) contribute zeros and the
     mean divides by the number of PRESENT in-window samples
-    (edge-normalized — NOT the clamp convention DEM uses). Poison
-    policy (house rule, same as the DEM assembler): a corrupt/NULL
-    contribution is treated as absent and counted in ``n_bad``; a
-    target whose own tile is corrupt emits a FLAGGED row (empty tile,
-    its n_bad) — distinguishable from a sparse/absent tile (no row)
-    and never a stage kill (pre-r03 a corrupt tile crashed the stage
-    here). A duplicate (dx, dy) contribution (malformed upstream
-    union) keeps the lexicographically-smaller payload and counts as
-    bad — the same deterministic rule as ``dem._assemble_padded``
-    (ADVICE r03: pandas row order is shuffle-dependent, so
-    last-writer-wins was nondeterministic).
+    (edge-normalized — NOT the clamp convention DEM uses). Poison and
+    duplicate contributions follow :func:`parse_halo`: a corrupt/NULL
+    contribution is absent and counted in ``n_bad``; a target whose
+    own tile is corrupt emits a FLAGGED row (empty tile, its n_bad) —
+    distinguishable from a sparse/absent tile (no row) and never a
+    stage kill.
     """
-    h = with_halo_strips(tiles, tile_px, cell=cell)
+    t = tile_px
 
-    def _conv(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        t = tile_px
-        V = np.zeros((t + 2, t + 2), np.float64)
-        Pm = np.zeros((t + 2, t + 2), np.float64)
-        center_row = False
-        n_bad = 0
-        contrib: dict = {}
-        for r in pdf.itertuples():
-            off = (int(r.dx), int(r.dy))
-            if off == (0, 0):
-                center_row = True
-            try:
-                raw = bytes(r.payload)
-            except Exception:
-                n_bad += 1
-                continue
-            need = t * t if off == (0, 0) else (1 if (off[0] and off[1]) else t)
-            if len(raw) != need:
-                n_bad += 1
-                continue
-            if off in contrib:
-                n_bad += 1
-                if raw >= contrib[off]:
-                    continue
-            contrib[off] = raw
-        center_seen = (0, 0) in contrib
-        for off, raw in contrib.items():
-            a = np.frombuffer(raw, np.uint8).astype(np.float64)
-            if off == (0, 0):
-                V[1 : t + 1, 1 : t + 1] = a.reshape(t, t)
-                Pm[1 : t + 1, 1 : t + 1] = 1.0
-            elif off == (-1, 0):
-                V[1 : t + 1, 0] = a
-                Pm[1 : t + 1, 0] = 1.0
-            elif off == (1, 0):
-                V[1 : t + 1, t + 1] = a
-                Pm[1 : t + 1, t + 1] = 1.0
-            elif off == (0, -1):
-                V[0, 1 : t + 1] = a
-                Pm[0, 1 : t + 1] = 1.0
-            elif off == (0, 1):
-                V[t + 1, 1 : t + 1] = a
-                Pm[t + 1, 1 : t + 1] = 1.0
-            else:
-                py = 0 if off[1] == -1 else t + 1
-                px = 0 if off[0] == -1 else t + 1
-                V[py, px] = a[0]
-                Pm[py, px] = 1.0
-        if not center_seen:
-            if center_row:
-                # poison CENTER: flagged empty row, never a silent drop
-                return pd.DataFrame(
-                    {"cell": [int(key[0])], "tile": [b""], "n_bad": [n_bad]}
-                )
-            # sparse neighbor group — not a tile of the raster
-            return pd.DataFrame({"cell": [], "tile": [], "n_bad": []})
+    def _conv(kc, contrib, n_bad):
+        if (0, 0) not in contrib:
+            return [(kc, b"", n_bad)]  # poison CENTER: flagged, never dropped
+        win = halo_window(contrib, t, 1, -1)
+        Pm = (win >= 0).astype(np.float64)
+        V = np.where(win >= 0, win, 0).astype(np.float64)
         acc = np.zeros((t, t), np.float64)
         cnt = np.zeros((t, t), np.float64)
         for ky in range(3):
@@ -127,13 +141,9 @@ def halo_convolve(tiles: DataFrame, tile_px: int, cell: str = "cell") -> DataFra
                 acc += V[ky : ky + t, kx : kx + t]
                 cnt += Pm[ky : ky + t, kx : kx + t]
         out = np.rint(acc / np.maximum(cnt, 1.0)).astype(np.uint8)
-        return pd.DataFrame(
-            {"cell": [int(key[0])], "tile": [out.tobytes()], "n_bad": [n_bad]}
-        )
+        return [(kc, out.tobytes(), n_bad)]
 
-    return h.groupBy("target_cell").applyInPandas(
-        _conv, "cell long, tile binary, n_bad long"
-    )
+    return run_halo(tiles, t, 1, "cell long, tile binary, n_bad long", _conv, cell=cell)
 
 
 def with_halo(tiles: DataFrame, cell: str = "cell", ring: int = 1) -> DataFrame:
@@ -172,102 +182,16 @@ def with_halo(tiles: DataFrame, cell: str = "cell", ring: int = 1) -> DataFrame:
 def with_halo_strips(
     tiles: DataFrame, tile_px: int, cell: str = "cell", tile: str = "tile"
 ) -> DataFrame:
-    """Strip-projected ring-1 halo for 3×3 kernels: each tile ships its
-    FULL payload only to itself; each side neighbor receives just the
-    1-px edge strip it reads, each diagonal neighbor a single corner
-    byte. Input rows: (cell:long, tile:binary raw u8 tile_px²) — the
-    payload column name is ``tile`` (parameter; extra input columns
-    are dropped, the output contract is (target_cell, dx, dy, payload)
-    only — ADVICE r03 made the column requirement explicit).
-
-    Output columns: ``target_cell``, ``dx``/``dy`` (offset of the
-    contributing tile relative to the target, as in ``with_halo``) and
-    ``payload`` — t² bytes at (0,0), t bytes on sides, 1 byte on
-    diagonals. Strip layout (payload index = the coordinate that varies
-    along the shared edge):
-
-    - (0,-1) contribution (tile NORTH of target): its row t-1,
-      payload[x] = n[t-1, x]
-    - (0,1) (south): its row 0, payload[x] = n[0, x]
-    - (-1,0) (west): its column t-1, payload[y] = n[y, t-1]
-    - (1,0) (east): its column 0, payload[y] = n[y, 0]
-    - diagonals: the single corner pixel the target's padded window
-      reads (e.g. (-1,-1) ships n[t-1, t-1]).
+    """Strip-projected ring-1 halo for 3×3 kernels: ``with_halo_bands``
+    at width 1. Each side neighbor receives the 1-px edge strip it
+    reads (payload index = the coordinate that varies along the shared
+    edge), each diagonal neighbor the single corner byte its padded
+    window reads — e.g. the (-1,-1) contribution ships n[t-1, t-1].
 
     This projection is LOSSLESS for the DEM assembler including its
     corner-fallback chain (a missing diagonal falls back to a side
-    neighbor's corner pixel — always an element of that side's strip).
-
-    Plan shape: one narrow Arrow hop (strip extraction, 1 row in → 1
-    row out, zero shuffle), a JVM explode over the 9 offsets with a
-    CASE payload pick, then the one re-key shuffle. Exchange bytes ≈
-    raster + 4t+4 per tile instead of 9× the raster — the scale path
-    for 100-TB DEM jobs (VERDICT r02's one flagged scale risk).
-
-    Poison policy: a NULL/corrupt tile still produces its 9 output
-    rows with NULL strip payloads (and its original payload at (0,0)),
-    so downstream assemblers can count bad contributions and flag a
-    corrupt CENTER exactly as with the full-tile path."""
-    t = tile_px
-
-    def _extract(batches):
-        for pdf in batches:
-            n = len(pdf)
-            cols: dict[str, list] = {k: [None] * n for k in
-                                     ("_r0", "_rl", "_c0", "_cl",
-                                      "_b00", "_b0l", "_bl0", "_bll")}
-            for i, raw in enumerate(pdf["tile"]):
-                try:
-                    arr = np.frombuffer(bytes(raw), np.uint8).reshape(t, t)
-                except Exception:
-                    continue  # strips stay NULL; (0,0) ships the raw payload
-                cols["_r0"][i] = arr[0].tobytes()
-                cols["_rl"][i] = arr[t - 1].tobytes()
-                cols["_c0"][i] = np.ascontiguousarray(arr[:, 0]).tobytes()
-                cols["_cl"][i] = np.ascontiguousarray(arr[:, t - 1]).tobytes()
-                cols["_b00"][i] = arr[0, 0].tobytes()
-                cols["_b0l"][i] = arr[0, t - 1].tobytes()
-                cols["_bl0"][i] = arr[t - 1, 0].tobytes()
-                cols["_bll"][i] = arr[t - 1, t - 1].tobytes()
-            out = pd.DataFrame({cell: pdf[cell], "tile": pdf["tile"], **cols})
-            yield out
-
-    stripped = tiles.select(F.col(cell).alias(cell), F.col(tile).alias("tile")).mapInPandas(
-        _extract,
-        f"{cell} long, tile binary, _r0 binary, _rl binary, _c0 binary, "
-        "_cl binary, _b00 binary, _b0l binary, _bl0 binary, _bll binary",
-    )
-
-    z = F.shiftright(F.col(cell), 52)
-    x = F.shiftright(F.col(cell), 26) % F.lit(1 << 26)
-    y = F.col(cell) % F.lit(1 << 26)
-    n = F.expr(f"shiftleft(CAST(1 AS BIGINT), CAST(shiftright({cell}, 52) AS INT))")
-    dx, dy = -F.col("_dx"), -F.col("_dy")  # contribution offset rel. target
-    payload = (
-        F.when((dx == 0) & (dy == 0), F.col("tile"))
-        .when((dx == -1) & (dy == 0), F.col("_cl"))
-        .when((dx == 1) & (dy == 0), F.col("_c0"))
-        .when((dx == 0) & (dy == -1), F.col("_rl"))
-        .when((dx == 0) & (dy == 1), F.col("_r0"))
-        .when((dx == -1) & (dy == -1), F.col("_bll"))
-        .when((dx == 1) & (dy == -1), F.col("_bl0"))
-        .when((dx == -1) & (dy == 1), F.col("_b0l"))
-        .otherwise(F.col("_b00"))  # (1, 1)
-    )
-    return (
-        stripped.withColumn("_dx", F.explode(F.sequence(F.lit(-1), F.lit(1))))
-        .withColumn("_dy", F.explode(F.sequence(F.lit(-1), F.lit(1))))
-        .withColumn("_tx", x + F.col("_dx"))
-        .withColumn("_ty", y + F.col("_dy"))
-        # same out-of-domain drop semantics as with_halo
-        .filter((F.col("_tx") >= 0) & (F.col("_tx") < n) & (F.col("_ty") >= 0) & (F.col("_ty") < n))
-        .select(
-            (z * F.lit(1 << 52) + F.col("_tx") * F.lit(1 << 26) + F.col("_ty")).alias("target_cell"),
-            dx.cast("int").alias("dx"),
-            dy.cast("int").alias("dy"),
-            payload.alias("payload"),
-        )
-    )
+    neighbor's corner pixel — always an element of that side's strip)."""
+    return with_halo_bands(tiles, tile_px, 1, cell=cell, tile=tile)
 
 
 def with_halo_bands(
@@ -277,59 +201,62 @@ def with_halo_bands(
     cell: str = "cell",
     tile: str = "tile",
 ) -> DataFrame:
-    """``with_halo_strips`` generalized to a ``width``-px halo — the
-    exchange layer for kernels whose support radius exceeds 1 px
-    (bounded-radius proximity, morphology, wide convolutions). Each
-    tile ships its full payload only to itself; each side neighbor
-    receives the ``width`` edge rows/columns it reads, each diagonal
-    neighbor the ``width``×``width`` corner block. Exchange bytes ≈
-    raster + 4·w·t + 4·w² per tile instead of 9× the raster.
+    """Band-projected ring-1 halo — the exchange layer for kernels of
+    support radius ``width`` (3×3 DEM kernels at w=1, bounded-radius
+    proximity, morphology, wide convolutions). Each tile ships its
+    full payload only to itself; each side neighbor receives the
+    ``width`` edge rows/columns it reads, each diagonal neighbor the
+    ``width``×``width`` corner block. Exchange bytes ≈ raster +
+    4·w·t + 4·w² per tile instead of 9× the raster.
 
-    Output contract matches ``with_halo_strips``: (target_cell, dx,
-    dy, payload) with dx/dy the CONTRIBUTING tile's offset relative to
-    the target; band payloads are row-major C-order slices of the
+    Input rows: (cell:long, tile:binary raw u8 tile_px²) — the payload
+    column name is ``tile`` (parameter; extra input columns are
+    dropped). Output columns: ``target_cell``, ``dx``/``dy`` (offset
+    of the CONTRIBUTING tile relative to the target, as in
+    ``with_halo``) and ``payload``: row-major C-order slices of the
     source tile (north/south bands: (w, t); west/east bands: (t, w);
     corners: (w, w)), so the assembler can ``reshape`` without
     transposes. ``width == tile_px`` degrades gracefully to full-tile
-    shipping (the slices cover the whole array). Poison rows ship NULL
-    bands and the raw payload at (0,0), exactly like the strip path.
+    shipping (the slices cover the whole array).
+
+    Plan shape: one narrow Arrow hop (band extraction over the tile
+    column only — the cell stays in the JVM), a JVM explode over the 9
+    offsets with a CASE payload pick, then the one re-key shuffle.
+
+    Poison policy: a NULL/corrupt tile still produces its 9 output
+    rows with NULL band payloads (and its original payload at (0,0)),
+    so downstream assemblers can count bad contributions and flag a
+    corrupt CENTER.
 
     ``width`` must be ≤ ``tile_px``: a wider kernel needs ring-2+
-    halos — re-tile coarser instead (the same answer the DEM halo
-    docs give), so the constraint is validated, not silently clipped.
+    halos — re-tile coarser instead, so the constraint is validated,
+    not silently clipped.
     """
     t, w = int(tile_px), int(width)
     if not 1 <= w <= t:
         raise ValueError(f"halo width {w} outside [1, tile_px={t}]")
-    if w == 1:
-        return with_halo_strips(tiles, t, cell=cell, tile=tile)
+    names = ("_r0", "_rl", "_c0", "_cl", "_b00", "_b0l", "_bl0", "_bll")
 
-    def _extract(batches):
-        for pdf in batches:
-            n = len(pdf)
-            cols: dict[str, list] = {k: [None] * n for k in
-                                     ("_r0", "_rl", "_c0", "_cl",
-                                      "_b00", "_b0l", "_bl0", "_bll")}
-            for i, raw in enumerate(pdf["tile"]):
-                try:
-                    arr = np.frombuffer(bytes(raw), np.uint8).reshape(t, t)
-                except Exception:
-                    continue  # bands stay NULL; (0,0) ships the raw payload
-                cols["_r0"][i] = arr[:w].tobytes()
-                cols["_rl"][i] = arr[t - w:].tobytes()
-                cols["_c0"][i] = np.ascontiguousarray(arr[:, :w]).tobytes()
-                cols["_cl"][i] = np.ascontiguousarray(arr[:, t - w:]).tobytes()
-                cols["_b00"][i] = np.ascontiguousarray(arr[:w, :w]).tobytes()
-                cols["_b0l"][i] = np.ascontiguousarray(arr[:w, t - w:]).tobytes()
-                cols["_bl0"][i] = np.ascontiguousarray(arr[t - w:, :w]).tobytes()
-                cols["_bll"][i] = np.ascontiguousarray(arr[t - w:, t - w:]).tobytes()
-            yield pd.DataFrame({cell: pdf[cell], "tile": pdf["tile"], **cols})
+    @F.pandas_udf("struct<" + ",".join(f"{k}:binary" for k in names) + ">")
+    def _bands(col: pd.Series) -> pd.DataFrame:
+        import numpy as np
 
-    stripped = tiles.select(F.col(cell).alias(cell), F.col(tile).alias("tile")).mapInPandas(
-        _extract,
-        f"{cell} long, tile binary, _r0 binary, _rl binary, _c0 binary, "
-        "_cl binary, _b00 binary, _b0l binary, _bl0 binary, _bll binary",
-    )
+        rows = []
+        for raw in col:
+            try:
+                arr = np.frombuffer(bytes(raw), np.uint8).reshape(t, t)
+            except (TypeError, ValueError):  # NULL or wrong-length tile
+                rows.append((None,) * 8)  # (0,0) still ships the raw payload
+                continue
+            rows.append(tuple(np.ascontiguousarray(s).tobytes() for s in (
+                arr[:w], arr[t - w:], arr[:, :w], arr[:, t - w:],
+                arr[:w, :w], arr[:w, t - w:], arr[t - w:, :w], arr[t - w:, t - w:],
+            )))
+        return pd.DataFrame(rows, columns=list(names), dtype=object)
+
+    stripped = tiles.select(
+        F.col(cell).alias(cell), F.col(tile).alias("tile")
+    ).withColumn("_s", _bands(F.col("tile"))).select(cell, "tile", "_s.*")
 
     z = F.shiftright(F.col(cell), 52)
     x = F.shiftright(F.col(cell), 26) % F.lit(1 << 26)

@@ -271,10 +271,13 @@ def audio_features(audio: DataFrame, id_col: str = "audio_id", bytes_col: str = 
                     rows.append((rid, n, rate, sq, rms, peak, True))
                 except Exception:
                     rows.append((rid, None, None, None, None, None, False))
+            # object columns: a poison row's None must not widen the
+            # int64 sums of its batch to float64 (see phash_images)
             yield pd.DataFrame(
                 rows,
                 columns=["audio_id", "n_samples", "sample_rate", "sq_sum",
                          "rms", "peak", "ok"],
+                dtype=object,
             )
 
     return audio.mapInPandas(_run, AUDIO_SCHEMA)
@@ -388,7 +391,10 @@ def phash_images(
                 rows.append((phash64_np(codecs.decode(bytes(b))), True))
             except Exception:
                 rows.append((None, False))
-        return pd.DataFrame(rows, columns=["phash", "ph_ok"])
+        # object columns keep exact Python ints beside a poison row's
+        # None; a numeric frame would widen phash to float64 and round
+        # every hash above 2**53 in the batch
+        return pd.DataFrame(rows, columns=["phash", "ph_ok"], dtype=object)
 
     return images.withColumn("_p", _ph(F.col(bytes_col))).select(
         F.col(id_col), F.col("_p.phash").alias("phash"), F.col("_p.ph_ok").alias("ph_ok")

@@ -35,6 +35,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..core import mvtcodec
+from ._groups import run_grouped
 
 FEATURES_SCHEMA = (
     "z int, tx long, ty long, layer string, fid long, geom_type string, "
@@ -169,34 +170,32 @@ def encode_tiles_proto(layers: DataFrame) -> DataFrame:
     the engine's canonical string rendering."""
     from ..core import mvtproto
 
-    def _encode(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        z, tx, ty = int(key[0]), int(key[1]), int(key[2])
-        lrs = []
-        for r in pdf.sort_values("layer").itertuples():
-            lrs.append(
-                {
-                    "name": str(r.layer),
-                    "extent": int(r.extent),
-                    "version": 2,
-                    "keys": list(r.keys),
-                    "values": [("string", str(v)) for v in r.values],
-                    "features": [
-                        {
-                            "id": int(f["id"]),
-                            "tags": np.asarray(list(f["tags"]), np.uint64),
-                            "geom_type": int(f["geom_type"]),
-                            "geometry": np.asarray(list(f["geometry"]), np.uint64),
-                        }
-                        for f in r.features
-                    ],
-                }
-            )
-        return pd.DataFrame(
-            {"z": [z], "tx": [tx], "ty": [ty], "data": [mvtproto.encode_tile(lrs)]}
-        )
+    def _encode(key, g):
+        order = sorted(range(len(g["layer"])), key=lambda i: g["layer"][i])
+        lrs = [
+            {
+                "name": str(g["layer"][i]),
+                "extent": int(g["extent"][i]),
+                "version": 2,
+                "keys": list(g["keys"][i]),
+                "values": [("string", str(v)) for v in g["values"][i]],
+                "features": [
+                    {
+                        "id": int(f["id"]),
+                        "tags": np.asarray(list(f["tags"]), np.uint64),
+                        "geom_type": int(f["geom_type"]),
+                        "geometry": np.asarray(list(f["geometry"]), np.uint64),
+                    }
+                    for f in g["features"][i]
+                ],
+            }
+            for i in order
+        ]
+        return [(*key, mvtproto.encode_tile(lrs))]
 
-    return layers.groupBy("z", "tx", "ty").applyInPandas(
-        _encode, "z int, tx long, ty long, data binary"
+    return run_grouped(
+        layers, ["z", "tx", "ty"], ["layer", "extent", "keys", "values", "features"],
+        _encode, "z int, tx long, ty long, data binary",
     )
 
 
@@ -316,16 +315,20 @@ def encode_layers(
     tile sink writes with, so encode feeds the writer shuffle-free."""
     import json
 
-    def _encode(key, pdf):
-        z, tx, ty, layer = int(key[0]), int(key[1]), int(key[2]), str(key[3])
-        keys = sorted({k for props in pdf["props"] for k in (props or {})})
-        vals = sorted({v for props in pdf["props"] for v in (props or {}).values()})
+    def _encode(key, g):
+        z, tx, ty, layer = *key[:3], str(key[3])
+        props_l = [dict(p or ()) for p in g["props"]]
+        keys = sorted({k for props in props_l for k in props})
+        vals = sorted({v for props in props_l for v in props.values()})
         kidx = {k: i for i, k in enumerate(keys)}
         vidx = {v: i for i, v in enumerate(vals)}
         feats = []
-        for r in pdf.itertuples():
-            gt = _TYPE_IDS[r.geom_type]
-            geom = json.loads(r.geom_json)
+        # features in data order (fid first), never shuffle-arrival order
+        rows = sorted(zip(g["fid"], g["geom_type"], g["geom_json"], props_l),
+                      key=lambda r: (r[0], r[1], r[2], sorted(r[3].items())))
+        for fid, geom_type, geom_json, props in rows:
+            gt = _TYPE_IDS[geom_type]
+            geom = json.loads(geom_json)
             if gt == mvtcodec.GEOM_POLYGON:
                 # polygons→rings; decode closed the rings — encode wants open
                 rings = [np.asarray(ring)[:-1] for poly in geom for ring in poly]
@@ -335,17 +338,15 @@ def encode_layers(
             tparts = mvtcodec.world_to_tile(parts, z, tx, ty, extent, world)
             stream = mvtcodec.encode_geometry(gt, tparts)
             tags = []
-            for k, v in sorted((r.props or {}).items()):
+            for k, v in sorted(props.items()):
                 tags.extend((kidx[k], vidx[v]))
             feats.append(
-                {"id": int(r.fid), "tags": tags, "geom_type": gt,
+                {"id": int(fid), "tags": tags, "geom_type": gt,
                  "geometry": stream.tolist()}
             )
-        return pd.DataFrame(
-            [(z, tx, ty, layer, extent, keys, vals, feats)],
-            columns=["z", "tx", "ty", "layer", "extent", "keys", "values", "features"],
-        )
+        return [(z, tx, ty, layer, extent, keys, vals, feats)]
 
-    return features.groupBy("z", "tx", "ty", "layer").applyInPandas(
-        _encode, LAYERS_SCHEMA
+    return run_grouped(
+        features, ["z", "tx", "ty", "layer"],
+        ["fid", "geom_type", "geom_json", "props"], _encode, LAYERS_SCHEMA,
     )

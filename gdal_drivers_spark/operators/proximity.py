@@ -37,11 +37,9 @@ dataset the utilities consume); tile/cell conventions follow
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from gdal_drivers_spark.operators.halo import with_halo_bands
+from gdal_drivers_spark.operators.halo import halo_window, run_halo
 
 _OUT_SCHEMA = (
     "cell long, dist2 binary, n_reached long, d2_sum long, "
@@ -71,7 +69,10 @@ def proximity(
       rule: its row survives with NULL ``dist2``, never kills the
       stage);
     - ``n_bad_nbrs``: corrupt neighbor bands treated as target-free
-      (counted, not fatal).
+      (counted, not fatal). Duplicate contributions (a duplicated
+      input cell) keep the lexicographically smaller payload and are
+      counted here too (``halo.parse_halo``), so the output never
+      depends on shuffle order.
     """
     t, r = int(tile_px), int(max_dist)
     if not 1 <= r <= t:
@@ -89,54 +90,21 @@ def proximity(
         if ddx * ddx + ddy * ddy <= r * r
     ]
 
-    def _kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        kc = int(key[0])
-        tgt = np.zeros((t + 2 * w, t + 2 * w), bool)
-        center = None
-        center_row, bad_nbrs = False, 0
-        for dxv, dyv, payload in zip(pdf["dx"], pdf["dy"], pdf["payload"]):
-            dxv, dyv = int(dxv), int(dyv)
-            if dxv == 0 and dyv == 0:
-                center_row = True
-                try:
-                    center = np.frombuffer(bytes(payload), np.uint8).reshape(t, t)
-                except Exception:
-                    pass  # poison center: flagged below
-                continue
-            shape = (
-                (w, w) if dxv and dyv else (t, w) if dxv else (w, t)
-            )
-            try:
-                band = np.frombuffer(bytes(payload), np.uint8).reshape(shape)
-            except Exception:
-                bad_nbrs += 1
-                continue
-            y0 = 0 if dyv < 0 else w + t if dyv > 0 else w
-            x0 = 0 if dxv < 0 else w + t if dxv > 0 else w
-            tgt[y0:y0 + shape[0], x0:x0 + shape[1]] = band == tv
-        cols = ["cell", "dist2", "n_reached", "d2_sum", "px_ok", "n_bad_nbrs"]
-        if center is None:
-            if not center_row:
-                # sparse neighbor group — the target cell holds no tile
-                return pd.DataFrame([], columns=cols)
+    def _kernel(kc, contrib, n_bad):
+        if (0, 0) not in contrib:
             # poison center: flagged row, never a stage kill
-            return pd.DataFrame([(kc, None, 0, 0, False, bad_nbrs)], columns=cols)
-        tgt[w:w + t, w:w + t] = center == tv
+            return [(kc, None, 0, 0, False, n_bad - 1)]
+        win = halo_window(contrib, t, w, -1)
+        tgt = (win == tv) & (win >= 0)
         d2 = np.full((t, t), cap, np.int64)
         for ddx, ddy, dd in offs:
             sl = tgt[w + ddy:w + ddy + t, w + ddx:w + ddx + t]
             np.minimum(d2, np.where(sl, dd, cap), out=d2)
         n_reached = int((d2 <= r * r).sum())
-        return pd.DataFrame(
-            [(kc, d2.astype("<u2").tobytes(), n_reached,
-              int(d2.sum()), True, bad_nbrs)],
-            columns=cols,
-        )
+        return [(kc, d2.astype("<u2").tobytes(), n_reached,
+                 int(d2.sum()), True, n_bad)]
 
-    halo = with_halo_bands(
-        tiles.select(cell, tile_col), t, w, cell=cell, tile=tile_col
-    )
-    return halo.groupBy("target_cell").applyInPandas(_kernel, _OUT_SCHEMA)
+    return run_halo(tiles, t, w, _OUT_SCHEMA, _kernel, cell=cell, tile=tile_col)
 
 
 _FILL_SCHEMA = (
@@ -169,8 +137,9 @@ def fillnodata(
     visited in (d², Δy, Δx) order, so the first valid hit IS the
     min-gpid nearest valid — O(w²) vectorized passes, no per-pixel
     Python. Valid pixels pass through byte-untouched. Poison rules
-    match proximity (corrupt center → flagged row with NULL payload;
-    corrupt neighbor band → treated all-nodata, counted)."""
+    and the duplicate rule match proximity (corrupt center → flagged
+    row with NULL payload; corrupt neighbor band → treated all-nodata,
+    counted)."""
     t, r = int(tile_px), int(max_dist)
     if not 1 <= r <= t:
         raise ValueError(f"max_dist {r} outside [1, tile_px={t}]")
@@ -184,36 +153,11 @@ def fillnodata(
         if 0 < ddx * ddx + ddy * ddy <= r * r
     )
 
-    def _kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        kc = int(key[0])
-        vals = np.full((t + 2 * w, t + 2 * w), nd, np.int64)
-        center = None
-        center_row, bad_nbrs = False, 0
-        for dxv, dyv, payload in zip(pdf["dx"], pdf["dy"], pdf["payload"]):
-            dxv, dyv = int(dxv), int(dyv)
-            if dxv == 0 and dyv == 0:
-                center_row = True
-                try:
-                    center = np.frombuffer(bytes(payload), np.uint8).reshape(t, t)
-                except Exception:
-                    pass
-                continue
-            shape = (w, w) if dxv and dyv else (t, w) if dxv else (w, t)
-            try:
-                band = np.frombuffer(bytes(payload), np.uint8).reshape(shape)
-            except Exception:
-                bad_nbrs += 1
-                continue
-            y0 = 0 if dyv < 0 else w + t if dyv > 0 else w
-            x0 = 0 if dxv < 0 else w + t if dxv > 0 else w
-            vals[y0:y0 + shape[0], x0:x0 + shape[1]] = band
-        cols = ["cell", "tile", "n_filled", "n_unfilled", "px_ok", "n_bad_nbrs"]
-        if center is None:
-            if not center_row:
-                return pd.DataFrame([], columns=cols)
-            return pd.DataFrame([(kc, None, 0, 0, False, bad_nbrs)], columns=cols)
-        vals[w:w + t, w:w + t] = center
-        out = center.astype(np.int64).copy()
+    def _kernel(kc, contrib, n_bad):
+        if (0, 0) not in contrib:
+            return [(kc, None, 0, 0, False, n_bad - 1)]
+        vals = halo_window(contrib, t, w, nd)
+        out = vals[w:w + t, w:w + t].copy()
         hole = out == nd
         unfilled = hole.copy()
         for _, ddy, ddx in offs:
@@ -224,13 +168,7 @@ def fillnodata(
             out[hit] = nb[hit]
             unfilled &= ~hit
         n_filled = int((hole & ~unfilled).sum())
-        return pd.DataFrame(
-            [(kc, out.astype(np.uint8).tobytes(), n_filled,
-              int(unfilled.sum()), True, bad_nbrs)],
-            columns=cols,
-        )
+        return [(kc, out.astype(np.uint8).tobytes(), n_filled,
+                 int(unfilled.sum()), True, n_bad)]
 
-    halo = with_halo_bands(
-        tiles.select(cell, tile_col), t, w, cell=cell, tile=tile_col
-    )
-    return halo.groupBy("target_cell").applyInPandas(_kernel, _FILL_SCHEMA)
+    return run_halo(tiles, t, w, _FILL_SCHEMA, _kernel, cell=cell, tile=tile_col)

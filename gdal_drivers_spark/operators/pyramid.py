@@ -24,6 +24,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gdal_drivers_spark.operators._groups import run_grouped
+
 PYRAMID_SCHEMA = "cell long, band int, tile binary, ts int"
 
 
@@ -46,22 +48,18 @@ def rollup_tiles_one_level(tiles: DataFrame, agg: str = "mean") -> DataFrame:
     2×2 and placed into its quadrant (missing children stay 0 — the
     nodata-black convention of the mask driver).
 
-    Plan shape (r06): one hash repartition on the parent key — the
-    same exchange the old ``groupBy`` paid — then ONE ``mapInPandas``
-    over each partition with a pandas groupby loop inside. The old
-    ``applyInPandas`` form paid ~1.2 ms of per-GROUP Arrow/pandas
-    machinery (measured r06: a trivial group fn cost 1.65 s on the
-    1024-group bench level vs 0.45 s for the bare shuffle); driving
-    the same per-group body from one in-partition groupby cuts that
-    to ~0.1 ms/group. Per-group math and output rows are unchanged."""
+    Plan shape: one ``groupBy(parent cell, band)`` exchange and one
+    grouped Arrow kernel per parent (``_groups.run_grouped``), so a
+    task holds one group — at most four child tiles — at a time."""
 
-    def _roll_group(pcell, band, pdf: pd.DataFrame):
-        ts = int(pdf["ts"].iloc[0])
+    def _roll(key, g):
+        pcell, band = key
+        ts = g["ts"][0]
         out = np.zeros((ts, ts), np.float64)
         half = ts // 2
-        for r in pdf.itertuples():
-            child = np.frombuffer(r.tile, np.uint8).reshape(r.ts, r.ts).astype(np.float64)
-            blocks = child.reshape(r.ts // 2, 2, r.ts // 2, 2)
+        for cell, tile, cts in zip(g["cell"], g["tile"], g["ts"]):
+            child = np.frombuffer(tile, np.uint8).reshape(cts, cts).astype(np.float64)
+            blocks = child.reshape(cts // 2, 2, cts // 2, 2)
             if agg == "mean":
                 small = blocks.mean(axis=(1, 3))
             elif agg == "max":
@@ -73,7 +71,7 @@ def rollup_tiles_one_level(tiles: DataFrame, agg: str = "mean") -> DataFrame:
                 # categorical-raster overview where mean would invent
                 # labels that exist nowhere in the input
                 b4 = blocks.transpose(0, 2, 1, 3).reshape(
-                    r.ts // 2, r.ts // 2, 4)
+                    cts // 2, cts // 2, 4)
                 best_score = np.full(b4.shape[:2], -1.0)
                 best_val = np.zeros(b4.shape[:2])
                 for i in range(4):
@@ -86,34 +84,15 @@ def rollup_tiles_one_level(tiles: DataFrame, agg: str = "mean") -> DataFrame:
                 small = best_val
             else:
                 small = blocks.min(axis=(1, 3))
-            cx = (r.cell >> 26) & ((1 << 26) - 1)
-            cy = r.cell & ((1 << 26) - 1)
+            cx = (cell >> 26) & ((1 << 26) - 1)
+            cy = cell & ((1 << 26) - 1)
             qx, qy = cx & 1, cy & 1
             out[qy * half : (qy + 1) * half, qx * half : (qx + 1) * half] = small
-        return (
-            pcell,
-            band,
-            np.rint(out).clip(0, 255).astype(np.uint8).tobytes(),
-            ts,
-        )
+        return [(pcell, band, np.rint(out).clip(0, 255).astype(np.uint8).tobytes(), ts)]
 
-    def _roll_part(batches):
-        pdfs = list(batches)
-        if not pdfs:
-            return
-        pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
-        rows = [
-            _roll_group(int(pcell), int(band), g)
-            for (pcell, band), g in pdf.groupby(
-                ["_p", "band"], sort=False, dropna=False
-            )
-        ]
-        yield pd.DataFrame(rows, columns=["cell", "band", "tile", "ts"])
-
-    return (
-        tiles.withColumn("_p", parent_cell_col())
-        .repartition("_p", "band")
-        .mapInPandas(_roll_part, PYRAMID_SCHEMA)
+    return run_grouped(
+        tiles.withColumn("_p", parent_cell_col()), ["_p", "band"],
+        ["cell", "tile", "ts"], _roll, PYRAMID_SCHEMA,
     )
 
 
@@ -322,22 +301,19 @@ def retile(
             yield pd.DataFrame(
                 out, columns=["ocell", "ox", "oy", "fw", "fh", "frag", "bad"])
 
-    def _assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        kc = int(key[0])
-        if pdf["bad"].any():
-            return pd.DataFrame([(kc, None, -1, False)],
-                                columns=["cell", "tile", "n_src", "ok"])
+    def _assemble(key, g):
+        kc = key[0]
+        if any(g["bad"]):
+            return [(kc, None, -1, False)]
         img = np.full((to, to), nd, np.uint8)
-        for r in pdf.itertuples():
-            fr = np.frombuffer(bytes(r.frag), np.uint8).reshape(r.fh, r.fw)
-            img[r.oy:r.oy + r.fh, r.ox:r.ox + r.fw] = fr
-        return pd.DataFrame(
-            [(kc, img.tobytes(), len(pdf), True)],
-            columns=["cell", "tile", "n_src", "ok"])
+        for ox, oy, fw, fh, frag in zip(g["ox"], g["oy"], g["fw"], g["fh"], g["frag"]):
+            img[oy:oy + fh, ox:ox + fw] = np.frombuffer(frag, np.uint8).reshape(fh, fw)
+        return [(kc, img.tobytes(), len(g["frag"]), True)]
 
     frags = tiles.select(cell, tile_col).mapInPandas(_slice, frag_schema)
-    assembled = frags.groupBy("ocell").applyInPandas(
-        _assemble, "cell long, tile binary, n_src long, ok boolean")
+    assembled = run_grouped(
+        frags, ["ocell"], ["ox", "oy", "fw", "fh", "frag", "bad"], _assemble,
+        "cell long, tile binary, n_src long, ok boolean")
     spark = tiles.sparkSession
     universe = spark.range(ow * ohn).select(
         (

@@ -8,8 +8,9 @@ tile, paint the quads intersecting it into a zeroed u8 tile — white
 
 Distributed shape: each quad is exploded to the tiles it intersects
 (JVM-side sequence/explode — the constraint prune as join selectivity),
-then ``groupBy(tile).applyInPandas`` does vectorized rect fills. There
-is no per-pixel Python: one numpy slice assignment per quad.
+then one grouped Arrow kernel per tile (``_groups.run_grouped``) does
+vectorized rect fills. There is no per-pixel Python: one numpy slice
+assignment per quad.
 
 Vectorize is the inverse pass (the reference reads masks; writing them
 back requires the quadtree encoding of ``mask.cpp:266-308``): each tile
@@ -23,6 +24,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from gdal_drivers_spark.operators._groups import run_grouped
 
 WHITE, GRAY, BLACK = 255, 128, 0
 _VAL = {"white": WHITE, "gray": GRAY, "black": BLACK}
@@ -78,23 +81,23 @@ def rasterize_quads(quads: DataFrame, depth: int, tile_px: int = 256) -> DataFra
         )
     )
 
-    def _paint(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        tx, ty = int(key[0]), int(key[1])
+    def _paint(key, g):
+        tx, ty = key
         ox, oy = tx * tile_px, ty * tile_px
         tile = np.zeros((tile_px, tile_px), np.uint8)
         # paint gray first so white wins where both touch a boundary
-        pdf = pdf.assign(vv=pdf["value"].map(_VAL)).sort_values("vv")
-        for r in pdf.itertuples():
-            x0 = max(int(r.ux0) - ox, 0)
-            y0 = max(int(r.uy0) - oy, 0)
-            x1 = min(int(r.ux1) - ox, tile_px)
-            y1 = min(int(r.uy1) - oy, tile_px)
-            tile[y0:y1, x0:x1] = r.vv
-        return pd.DataFrame(
-            {"tx": [tx], "ty": [ty], "tile": [tile.tobytes()], "ts": [tile_px]}
-        )
+        quads = sorted(zip([_VAL.get(v, BLACK) for v in g["value"]],
+                           g["ux0"], g["uy0"], g["ux1"], g["uy1"]))
+        for vv, ux0, uy0, ux1, uy1 in quads:
+            x0 = max(ux0 - ox, 0)
+            y0 = max(uy0 - oy, 0)
+            x1 = min(ux1 - ox, tile_px)
+            y1 = min(uy1 - oy, tile_px)
+            tile[y0:y1, x0:x1] = vv
+        return [(tx, ty, tile.tobytes(), tile_px)]
 
-    return q.groupBy("tx", "ty").applyInPandas(_paint, RASTERIZE_SCHEMA)
+    return run_grouped(q, ["tx", "ty"], ["value", "ux0", "uy0", "ux1", "uy1"],
+                       _paint, RASTERIZE_SCHEMA)
 
 
 def _merge_quads(tile: np.ndarray, ox: int, oy: int, depth: int):
@@ -242,8 +245,8 @@ def burn_features(
         )
     )
 
-    def _kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        kc = int(key[0])
+    def _kernel(key, g):
+        kc = key[0]
         tx = (kc >> 26) & ((1 << 26) - 1)
         ty = kc & ((1 << 26) - 1)
         x0, y0 = tx * t, ty * t
@@ -253,18 +256,15 @@ def burn_features(
         # break DUPLICATE fids by shuffle arrival order, making the
         # last-wins result partitioning-dependent; the full data key
         # pins it for any input
-        order = np.lexsort((
-            pdf["_by1"].to_numpy(), pdf["_bx1"].to_numpy(),
-            pdf["_by0"].to_numpy(), pdf["_bx0"].to_numpy(),
-            pdf["_v"].to_numpy(), pdf["_fid"].to_numpy(),
-        ))
+        order = np.lexsort(tuple(np.asarray(g[c]) for c in (
+            "_by1", "_bx1", "_by0", "_bx0", "_v", "_fid")))
         for i in order:  # ascending fid: later paints over earlier
-            r = np.asarray([[p[0], p[1]] for p in pdf["_ring"].iloc[i]], np.float64)
+            r = np.asarray([[p[0], p[1]] for p in g["_ring"][i]], np.float64)
             # restrict the PIP to the ring-bbox ∩ tile pixel window
-            cx0 = max(int(np.floor(pdf["_bx0"].iloc[i])) - x0, 0)
-            cx1 = min(int(np.ceil(pdf["_bx1"].iloc[i])) - x0, t)
-            cy0 = max(int(np.floor(pdf["_by0"].iloc[i])) - y0, 0)
-            cy1 = min(int(np.ceil(pdf["_by1"].iloc[i])) - y0, t)
+            cx0 = max(int(np.floor(g["_bx0"][i])) - x0, 0)
+            cx1 = min(int(np.ceil(g["_bx1"][i])) - x0, t)
+            cy0 = max(int(np.floor(g["_by0"][i])) - y0, 0)
+            cy1 = min(int(np.ceil(g["_by1"][i])) - y0, t)
             if cx0 >= cx1 or cy0 >= cy1:
                 continue
             wx = np.arange(cx0, cx1)[None, :] + x0 + 0.5
@@ -274,22 +274,18 @@ def burn_features(
                 wx.repeat(wh, axis=0).ravel(),
                 wy.repeat(ww, axis=1).ravel(), r,
             ).reshape(wh, ww)
-            v = int(pdf["_v"].iloc[i]) & 0xFF
+            v = int(g["_v"][i]) & 0xFF
             sl = np.s_[cy0:cy1, cx0:cx1]
             img[sl][inside] = v
             burned[sl] |= inside
+        n = len(g["_fid"])
         if emit_mask:
-            return pd.DataFrame(
-                [(kc, img.tobytes(), burned.astype(np.uint8).tobytes(),
-                  int(burned.sum()), len(pdf))],
-                columns=["cell", "raster", "mask", "n_burned", "n_features"],
-            )
-        return pd.DataFrame(
-            [(kc, img.tobytes(), int(burned.sum()), len(pdf))],
-            columns=["cell", "raster", "n_burned", "n_features"],
-        )
+            return [(kc, img.tobytes(), burned.astype(np.uint8).tobytes(),
+                     int(burned.sum()), n)]
+        return [(kc, img.tobytes(), int(burned.sum()), n)]
 
-    painted = f.groupBy("cell").applyInPandas(
+    painted = run_grouped(
+        f, ["cell"], ["_fid", "_ring", "_v", "_bx0", "_bx1", "_by0", "_by1"],
         _kernel, BURN_MASK_SCHEMA if emit_mask else BURN_SCHEMA)
     spark = features.sparkSession
     universe = spark.range(gw * gh).select(

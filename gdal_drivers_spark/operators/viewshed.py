@@ -34,9 +34,10 @@ driver read path (python/gdaldriversmodule.cpp:205-225)."""
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from gdal_drivers_spark.operators._groups import run_grouped
 
 _OUT_SCHEMA = (
     "oid long, vis binary, n_window long, n_eval long, n_visible long"
@@ -106,25 +107,19 @@ def viewshed(
                            F.col(tile_col).alias("_tile")), "cell", "left")
     )
 
-    def _kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        ko = int(key[0])
-        ox = int(pdf["_px"].iloc[0])
-        oy = int(pdf["_py"].iloc[0])
-        cols = ["oid", "vis", "n_window", "n_eval", "n_visible"]
+    def _kernel(key, g):
+        ko = key[0]
+        ox, oy = int(g["_px"][0]), int(g["_py"][0])
+        poison = [(ko, None, -1, -1, -1)]
         if not (0 <= ox < gw * t and 0 <= oy < gh * t):
-            return pd.DataFrame([(ko, None, -1, -1, -1)], columns=cols)
+            return poison
         # assemble the window; -1 marks out-of-grid / missing-tile px
         win = np.full((side, side), -1, np.int64)
-        for i in range(len(pdf)):
-            buf = pdf["_tile"].iloc[i]
+        for kc, buf in zip(g["cell"], g["_tile"]):
             if buf is None:
                 continue
-            buf = bytes(buf)
             if len(buf) != t * t:
-                return pd.DataFrame([(ko, None, -1, -1, -1)],
-                                    columns=["oid", "vis", "n_window",
-                                             "n_eval", "n_visible"])
-            kc = int(pdf["cell"].iloc[i])
+                return poison
             tx = (kc >> 26) & ((1 << 26) - 1)
             ty = kc & ((1 << 26) - 1)
             img = np.frombuffer(buf, np.uint8).astype(np.int64).reshape(t, t)
@@ -136,10 +131,7 @@ def viewshed(
             win[gy0 - (oy - r):gy1 - (oy - r), gx0 - (ox - r):gx1 - (ox - r)] = \
                 img[gy0 - ty * t:gy1 - ty * t, gx0 - tx * t:gx1 - tx * t]
         if win[r, r] < 0:
-            # observer pixel not covered by any tile: poison
-            return pd.DataFrame([(ko, None, -1, -1, -1)],
-                                columns=["oid", "vis", "n_window",
-                                         "n_eval", "n_visible"])
+            return poison  # observer pixel not covered by any tile
         h0 = int(win[r, r]) + oh
         vis = np.zeros((side, side), np.uint8)
         vis[r, r] = 1
@@ -165,12 +157,10 @@ def viewshed(
                 if not ((hi - h0) * n >= (int(ht) - h0) * ii).any():
                     vis[b + r, a + r] = 1
         n_window = int((win >= 0).sum())
-        return pd.DataFrame(
-            [(ko, vis.tobytes(), n_window, n_eval, int(vis.sum()))],
-            columns=["oid", "vis", "n_window", "n_eval", "n_visible"],
-        )
+        return [(ko, vis.tobytes(), n_window, n_eval, int(vis.sum()))]
 
-    computed = scattered.groupBy("_oid").applyInPandas(_kernel, _OUT_SCHEMA)
+    computed = run_grouped(
+        scattered, ["_oid"], ["_px", "_py", "cell", "_tile"], _kernel, _OUT_SCHEMA)
     # far-away observers (no kernel row — n_window IS NULL) get the
     # honest all-zero raster; NULL vis stays reserved for POISON rows,
     # which DO have a kernel row (counts -1)

@@ -22,12 +22,12 @@ problem is solved by the join fan-out, not by padding.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..core import codecs
 from ..core.geometry import gt_invert, gt_orthogonal
+from ._groups import run_grouped
 
 WARP_SCHEMA = "ocx long, ocy long, tile binary, ts int, n_src int"
 WARP_MASK_SCHEMA = WARP_SCHEMA + ", mask binary"
@@ -370,13 +370,11 @@ def warp_tiles(
     sgt = tuple(float(v) for v in src_gt)
     dgt = tuple(float(v) for v in dst_gt)
 
-    def _warp(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        ocx, ocy = int(key[0]), int(key[1])
+    def _warp(key, g):
+        ocx, ocy = key
         # assemble the needed source window from contributed tiles
-        scxs = pdf["scx"].to_numpy()
-        scys = pdf["scy"].to_numpy()
-        c0, c1 = int(scxs.min()), int(scxs.max())
-        r0, r1 = int(scys.min()), int(scys.max())
+        c0, c1 = min(g["scx"]), max(g["scx"])
+        r0, r1 = min(g["scy"]), max(g["scy"])
         win_w = (c1 - c0 + 1) * tile_px
         win_h = (r1 - r0 + 1) * tile_px
         # win carries values (NaN where no tile pasted), Mw carries
@@ -386,19 +384,19 @@ def warp_tiles(
         # source masks refine Mw only when with_mask asked for them.
         win = np.full((win_h, win_w), np.nan)
         Mw = np.zeros((win_h, win_w), np.float64)
-        for r in pdf.itertuples():
-            dec = codecs.decode(bytes(r.tile))
+        masks = g.get("mask") or [None] * len(g["tile"])
+        for scx, scy, raw, rm in zip(g["scx"], g["scy"], g["tile"], masks):
+            dec = codecs.decode(raw)
             if band >= dec.shape[2]:
                 raise ValueError(
                     f"warp band={band} but source tile has {dec.shape[2]} band(s)"
                 )
             img = dec[:, :, band].astype(np.float64)
-            oy = (int(r.scy) - r0) * tile_px
-            ox = (int(r.scx) - c0) * tile_px
+            oy = (scy - r0) * tile_px
+            ox = (scx - c0) * tile_px
             win[oy : oy + img.shape[0], ox : ox + img.shape[1]] = img
             mpatch = np.ones(img.shape, np.float64)
             if with_mask:
-                rm = getattr(r, "mask", None)
                 if rm is not None:
                     mpatch = (
                         np.frombuffer(bytes(rm), np.uint8).reshape(img.shape) > 0
@@ -725,14 +723,15 @@ def warp_tiles(
                                 ok_px, v_lo + frac * (v_hi - v_lo), 0.0)
         out = np.where(valid, out, nodata)
         tile = np.clip(np.rint(out), 0, 255).astype(np.uint8)
-        row = {
-            "ocx": [ocx], "ocy": [ocy],
-            "tile": [tile.tobytes()], "ts": [tile_px], "n_src": [len(pdf)],
-        }
+        row = (ocx, ocy, tile.tobytes(), tile_px, len(g["tile"]))
         if with_mask:
-            row["mask"] = [(valid.astype(np.uint8) * 255).tobytes()]
-        return pd.DataFrame(row)
+            row += ((valid.astype(np.uint8) * 255).tobytes(),)
+        return [row]
 
-    return joined.groupBy("ocx", "ocy").applyInPandas(
-        _warp, WARP_MASK_SCHEMA if with_mask else WARP_SCHEMA
+    cols = ["scx", "scy", "tile"]
+    if with_mask and "mask" in joined.columns:
+        cols.append("mask")
+    return run_grouped(
+        joined, ["ocx", "ocy"], cols, _warp,
+        WARP_MASK_SCHEMA if with_mask else WARP_SCHEMA,
     )

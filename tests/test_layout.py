@@ -61,10 +61,11 @@ def test_unbucketed_join_shuffles_both_sides(spark, tmp_path, no_broadcast):
 
 def test_bucketed_blend_has_no_exchange(spark):
     """The 100 TB blend contract: over a table bucketed by the blend's
-    grouping keys (cell, band), the grouped Arrow UDAF's clustering
-    requirement is satisfied by the bucketing — ZERO exchanges; the
-    whole mosaic runs scan → applyInPandas with no shuffle. Control:
-    the same data unbucketed shuffles once."""
+    grouping keys (cell, band), the grouped Arrow kernel's clustering
+    requirement (``_groups.run_grouped`` keeps the ``groupBy``) is
+    satisfied by the bucketing — ZERO exchanges; the whole mosaic runs
+    scan → FlatMapGroupsInArrow with no shuffle. Control: the same
+    data unbucketed shuffles once."""
     import pandas as pd
 
     from gdal_drivers_spark.core import codecs

@@ -144,3 +144,45 @@ def test_fillnodata_matches_scalar_nearest_valid(spark):
             assert row["n_filled"] == int(((src == 0) & ~un).sum())
             assert row["n_unfilled"] == int(un.sum())
     assert exp_unfilled.sum() > 0  # the wide hole survived
+
+
+@pytest.mark.parametrize("op", ["proximity", "fillnodata"])
+def test_duplicate_cell_is_deterministic(spark, op):
+    """A duplicated input cell (malformed upstream union) resolves by
+    the shared halo rule: the lexicographically smaller payload wins
+    for the tile and for every band it ships, whatever the shuffle
+    order — identical at 1 and 4 input partitions, and equal to the
+    output with the larger payload removed."""
+    from gdal_drivers_spark.operators.proximity import fillnodata
+
+    rng = np.random.default_rng(35)
+    full = np.where(rng.random((W, W)) < 0.05, 7, 200).astype(np.uint8)
+    dup = _cell(1, 1)
+    hi = full[T:2 * T, T:2 * T].copy()
+    hi[0, 0] = 255  # larger payload than the real tile
+    rows = [(_cell(tx, ty), full[ty * T:(ty + 1) * T, tx * T:(tx + 1) * T].tobytes())
+            for tx in range(GRID) for ty in range(GRID)]
+    clean = spark.createDataFrame(pd.DataFrame(rows, columns=["cell", "tile"]))
+    dirty = spark.createDataFrame(
+        pd.DataFrame(rows + [(dup, hi.tobytes())], columns=["cell", "tile"]))
+
+    def run(df):
+        out = (proximity(df, T, 7, 3) if op == "proximity"
+               else fillnodata(df, T, 7, 3))
+        return {r["cell"]: r for r in out.collect()}
+
+    ref = run(clean)
+    payload = "dist2" if op == "proximity" else "tile"
+    for parts in (1, 4):
+        got = run(dirty.repartition(parts))
+        assert set(got) == set(ref)
+        for c, r in ref.items():
+            assert got[c][payload] == r[payload], (parts, c)
+            # the duplicate counts as bad wherever it contributed
+            assert got[c]["n_bad_nbrs"] == (1 if c == dup or _near(c, dup) else 0)
+
+
+def _near(a, b):
+    ax, ay = (a >> 26) & ((1 << 26) - 1), a & ((1 << 26) - 1)
+    bx, by = (b >> 26) & ((1 << 26) - 1), b & ((1 << 26) - 1)
+    return max(abs(ax - bx), abs(ay - by)) == 1
