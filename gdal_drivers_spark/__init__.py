@@ -29,6 +29,7 @@ stays JVM-side for Catalyst/Tungsten.
 
 from __future__ import annotations
 
+import hashlib
 import os
 import zipfile
 
@@ -42,28 +43,36 @@ TILE = 256
 
 def package_zip() -> str:
     """Zip this package for shipping to executors (the ``spark-submit
-    --py-files`` artifact). Rebuilt when any source file is newer."""
+    --py-files`` artifact). The zip is named by a sha256 over the
+    sorted relative paths and bytes of the package's ``.py`` files, so
+    a session ships exactly the code of the checkout it runs from, and
+    checkouts with identical sources share one zip. It is built only
+    when no file of that name exists yet."""
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    out = os.path.join("/tmp", f"gdal_drivers_spark-{__version__}.zip")
-    srcs = []
+    srcs = {}
     for root, _, files in os.walk(pkg_dir):
-        srcs += [os.path.join(root, f) for f in files if f.endswith(".py")]
-    if not os.path.exists(out) or os.path.getmtime(out) < max(map(os.path.getmtime, srcs)):
-        # pid-unique staging file: concurrent sessions (pytest + bench +
-        # a checker run on one host) each rebuild on a source change,
-        # and a SHARED .tmp lets one builder truncate another's
-        # half-written zip before the atomic rename — executors then
-        # ModuleNotFoundError on a corrupt archive
+        for f in files:
+            if f.endswith(".py"):
+                path = os.path.join(root, f)
+                with open(path, "rb") as fh:
+                    srcs[os.path.relpath(path, pkg_dir)] = fh.read()
+    digest = hashlib.sha256()
+    for rel in sorted(srcs):
+        digest.update(f"{rel}\0{len(srcs[rel])}\0".encode())
+        digest.update(srcs[rel])
+    out = os.path.join(
+        "/tmp", f"gdal_drivers_spark-{__version__}-{digest.hexdigest()[:16]}.zip"
+    )
+    if not os.path.exists(out):
+        # pid-unique staging file: concurrent sessions on one host may
+        # build the same zip, and a SHARED .tmp lets one builder
+        # truncate another's half-written zip before the atomic rename
+        # — executors then ModuleNotFoundError on a corrupt archive
         tmp = f"{out}.{os.getpid()}.tmp"
         try:
             with zipfile.ZipFile(tmp, "w") as z:
-                for s in srcs:
-                    z.write(
-                        s,
-                        os.path.join(
-                            "gdal_drivers_spark", os.path.relpath(s, pkg_dir)
-                        ),
-                    )
+                for rel in sorted(srcs):
+                    z.writestr(os.path.join("gdal_drivers_spark", rel), srcs[rel])
             os.replace(tmp, out)
         finally:
             if os.path.exists(tmp):

@@ -256,8 +256,9 @@ def gunzip_sniff(blob: bytes) -> bytes | None:
     policy for every caller: non-gzip bytes pass through verbatim,
     corrupt gzip returns None (callers map None to their sentinel —
     empty payload, status code, dropped row). Shared by
-    operators/lookup, sources/remote and engine.TileArchive so the
-    behavior can't drift.
+    sources/mbtiles.gunzip_col (lookup.fetch_tiles,
+    read_mbtiles_features) and sources/remote so the behavior can't
+    drift.
 
     Sniffs the full TWO-byte gzip magic (1f 8b) — a raw payload that
     merely starts with 0x1f must pass through, not be destroyed.

@@ -1,29 +1,12 @@
-"""Engine facade — the public fluent API (the analogue of the
-reference's Python binding surface: open → read() / warp()
-(``/root/reference/gdal-drivers/python/gdaldriversmodule.cpp:249-276``),
-plus the engine's own pipeline verbs).
-
-    from gdal_drivers_spark.engine import Engine
-
-    eng = Engine(spark)
-    assigned = eng.images(df).assign(z=8)          # footprint → cells
-    joined   = assigned.join_boundaries(bounds)    # + exact refine
-    counts   = joined.rollup_regions()
-    blended  = eng.tiles(contribs).blend(overlap=0.01, nodata=0)
-
-Every verb returns a new wrapper over a lazy DataFrame (``.df`` to
-escape into raw Spark). Config objects are plain dicts — the job-spec
-analogue of the reference's INI configs (solid.cpp:176-205); ``to_ini``
-renders them for lineage records (writeConfig, solid.cpp:53-88).
+"""Job-spec configs as INI text — the analogue of the reference's
+INI job specs (solid.cpp:176-205). Config objects are plain dicts;
+``to_ini`` renders one for lineage records (writeConfig,
+solid.cpp:53-88) and ``from_ini`` parses it back, round-trip exact.
 """
 
 from __future__ import annotations
 
 import re
-
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 _INT_RE = re.compile(r"^[+-]?\d+$")
 _FLOAT_RE = re.compile(r"^[+-]?(\d+\.\d*|\.\d+|\d+)([eE][+-]?\d+)?$")
@@ -101,666 +84,3 @@ def from_ini(text: str) -> dict[str, dict]:
         else:
             out[section][k.strip()] = _scalar(v)
     return out
-
-
-class ImageSet:
-    def __init__(self, spark: SparkSession, df: DataFrame):
-        self.spark = spark
-        self.df = df
-
-    def decode(self) -> "ImageSet":
-        from .operators.decode import decode_stats
-
-        return ImageSet(self.spark, decode_stats(self.df))
-
-    def assign(self, z: int) -> "Assignments":
-        from .operators.assign import assign_tiles
-
-        return Assignments(self.spark, assign_tiles(self.df, z), z)
-
-    def features(self, bins: int = 16) -> DataFrame:
-        """Histogram feature-extract (multimodal.image_features)."""
-        from .operators.multimodal import image_features
-
-        return image_features(self.df, bins)
-
-    def phash_near_dups(self, max_dist: int = 3, n_bands: int = 4) -> DataFrame:
-        """Perceptual-hash Hamming near-dup pairs (dedup.phash_near_dup)."""
-        from .operators.dedup import phash_near_dup
-
-        return phash_near_dup(self.df, max_dist=max_dist, n_bands=n_bands)
-
-    def phashes(self) -> DataFrame:
-        """REAL perceptual hashes from pixels (DCT pHash,
-        multimodal.phash_images) — feed to phash_near_dup when the
-        table's phash column is absent or untrusted."""
-        from .operators.multimodal import phash_images
-
-        return phash_images(self.df)
-
-    def resize(self, out_w: int, out_h: int) -> "ImageSet":
-        from .operators.multimodal import resize_images
-
-        return ImageSet(self.spark, resize_images(self.df, out_w, out_h))
-
-    def equalize(self) -> "ImageSet":
-        """Per-image histogram equalization (r05,
-        multimodal.equalize_images — gdalenhance -equalize)."""
-        from .operators.multimodal import equalize_images
-
-        return ImageSet(self.spark, equalize_images(self.df))
-
-    def scale(self, src=None, dst=(0, 255)) -> "ImageSet":
-        """Linear contrast stretch (r05, multimodal.scale_images —
-        gdal_translate -scale)."""
-        from .operators.multimodal import scale_images
-
-        return ImageSet(self.spark, scale_images(self.df, src=src, dst=dst))
-
-    def quantize(self, palette=None) -> "ImageSet":
-        """Palette quantization (r05, multimodal.rgb2pct — rgb2pct.py);
-        default palette = the distributed median-cut build over THIS
-        corpus (gdal's default behavior)."""
-        from .operators.multimodal import build_palette_median_cut, rgb2pct
-
-        pal = build_palette_median_cut(self.df) if palette is None else palette
-        return ImageSet(self.spark, rgb2pct(self.df, pal))
-
-    def calc(self, others: dict, expr: str) -> "ImageSet":
-        """Band algebra with this set as operand "A" (r05,
-        calc.band_calc — gdal_calc.py). ``others`` maps further
-        operand names to ImageSets or DataFrames."""
-        from .operators.calc import band_calc
-
-        if "A" in others:
-            raise ValueError(
-                "operand 'A' is this ImageSet — name the others B, C, …")
-        frames = {"A": self.df}
-        for k, v in others.items():
-            frames[k] = v.df if isinstance(v, ImageSet) else v
-        return ImageSet(self.spark, band_calc(frames, expr))
-
-    def pansharpen(self, pan, weights=(1, 1, 1)) -> "ImageSet":
-        """Weighted-Brovey fusion against a pan ImageSet/DataFrame
-        (r05, multimodal.pansharpen — gdal_pansharpen.py)."""
-        from .operators.multimodal import pansharpen
-
-        p = pan.df if isinstance(pan, ImageSet) else pan
-        return ImageSet(self.spark, pansharpen(self.df, p, weights=weights))
-
-    def tindex(self) -> DataFrame:
-        """Footprint index rows (r05, tindex.tile_index — gdaltindex);
-        derives footprints from the phash column first."""
-        from .operators.assign import with_footprint
-        from .operators.tindex import tile_index
-
-        return tile_index(with_footprint(self.df))
-
-
-class Assignments:
-    def __init__(self, spark: SparkSession, df: DataFrame, z: int):
-        self.spark = spark
-        self.df = df
-        self.z = z
-
-    def join_boundaries(self, boundaries: DataFrame, broadcast: bool = True) -> "Assignments":
-        from .operators.spatial_join import cell_join
-
-        return Assignments(self.spark, cell_join(self.df, boundaries, broadcast), self.z)
-
-    def split_skew(self, threshold: int, max_rounds: int = 4) -> "Assignments":
-        from .plans.skew import split_hot_cells
-
-        return Assignments(
-            self.spark, split_hot_cells(self.df, threshold, max_rounds), self.z
-        )
-
-    def rollup_regions(self, region_col: str = "region") -> DataFrame:
-        return self.df.groupBy(region_col).agg(
-            F.count("*").alias("n_assign"),
-            F.approx_count_distinct("image_id").alias("n_images_approx"),
-        )
-
-    def census(self) -> DataFrame:
-        from .plans.skew import cell_census
-
-        return cell_census(self.df)
-
-
-class TileSet:
-    def __init__(self, spark: SparkSession, df: DataFrame):
-        self.spark = spark
-        self.df = df
-
-    def blend(self, tile_px: int = 256, overlap: float = 0.0, nodata=None, out_dtype="u8") -> DataFrame:
-        from .operators.blend import blend_tiles
-
-        return blend_tiles(self.df, tile_px, overlap, nodata, out_dtype)
-
-    def pyramid(self, from_level: int, to_level: int = 0, agg: str = "mean"):
-        from .operators.pyramid import build_pyramid
-
-        return build_pyramid(self.df, from_level, to_level, agg)
-
-    def update_pyramid(self, levels: dict, agg: str = "mean"):
-        """Incremental overview maintenance (r05): apply THIS TileSet's
-        tiles as the leaf delta to an existing pyramid and recompute
-        only the changed cells' ancestors — pyramid.update_pyramid
-        (mirrors how ``pyramid()`` uses self.df as the leaves)."""
-        from .operators.pyramid import update_pyramid
-
-        return update_pyramid(levels, self.df, agg)
-
-    def with_halo(self, ring: int = 1) -> DataFrame:
-        from .operators.halo import with_halo
-
-        return with_halo(self.df, ring=ring)
-
-    def with_halo_strips(self, tile_px: int) -> DataFrame:
-        """Strip-projected ring-1 halo (r03 scale path for 3×3 kernels
-        — exchange ≈ raster bytes, not 9×; halo.with_halo_strips)."""
-        from .operators.halo import with_halo_strips
-
-        return with_halo_strips(self.df, tile_px)
-
-    def convolve3x3(self, tile_px: int) -> DataFrame:
-        """Seam-exact cross-tile 3×3 box mean (halo.halo_convolve)."""
-        from .operators.halo import halo_convolve
-
-        return halo_convolve(self.df, tile_px)
-
-    def hillshade(self, tile_px: int, azimuth_deg: float = 315.0,
-                  altitude_deg: float = 45.0, z_factor: float = 1.0) -> DataFrame:
-        """gdaldem-style hillshade over tiles (dem.hillshade)."""
-        from .operators.dem import hillshade
-
-        return hillshade(self.df, tile_px, azimuth_deg=azimuth_deg,
-                         altitude_deg=altitude_deg, z_factor=z_factor)
-
-    def horn_gradients(self, tile_px: int) -> DataFrame:
-        """Exact integer Horn gradient summaries (dem.horn_gradients)."""
-        from .operators.dem import horn_gradients
-
-        return horn_gradients(self.df, tile_px)
-
-    def slope_aspect(self, tile_px: int, z_factor: float = 1.0) -> DataFrame:
-        """gdaldem slope + aspect tiles (dem.slope_aspect)."""
-        from .operators.dem import slope_aspect
-
-        return slope_aspect(self.df, tile_px, z_factor=z_factor)
-
-    def polygonize(self, tile_px: int, grid_wh: tuple, **kw) -> DataFrame:
-        """Global equal-value raster components (r05,
-        polygonize.polygonize) — gdal_polygonize distributed: local
-        labels + seam equivalences + hash-min CC."""
-        from .operators.polygonize import polygonize
-
-        return polygonize(self.df, tile_px, grid_wh, **kw)
-
-    def sieve(self, tile_px: int, grid_wh: tuple, threshold: int, **kw) -> DataFrame:
-        """Merge components under threshold px into their largest-
-        boundary neighbor (r05, polygonize.sieve) — gdal_sieve."""
-        from .operators.polygonize import sieve
-
-        return sieve(self.df, tile_px, grid_wh, threshold, **kw)
-
-    def contour_census(self, tile_px: int, levels: list, grid_wh: tuple) -> DataFrame:
-        """Marching-squares contour topology census per tile per level
-        (r05, dem.contour_case_census) — gdal_contour's exact skeleton."""
-        from .operators.dem import contour_case_census
-
-        return contour_case_census(self.df, tile_px, levels, grid_wh)
-
-    def color_relief(self, ramp: list, **kw) -> DataFrame:
-        """Piecewise-linear elevation→RGB ramp per pixel (r05,
-        dem.color_relief) — gdaldem color-relief."""
-        from .operators.dem import color_relief
-
-        return color_relief(self.df, ramp, **kw)
-
-    def terrain_indices(self, tile_px: int) -> DataFrame:
-        """Exact-integer gdaldem terrain trio — TRI (Wilson×8 /
-        Riley²), TPI×8, roughness — per tile, seam-exact via the
-        strip halo (r05, dem.terrain_indices)."""
-        from .operators.dem import terrain_indices
-
-        return terrain_indices(self.df, tile_px)
-
-    def roughness(self, tile_px: int) -> DataFrame:
-        """Per-pixel roughness raster (max−min of each 3×3 window),
-        seam-exact (r05, dem.roughness_tiles)."""
-        from .operators.dem import roughness_tiles
-
-        return roughness_tiles(self.df, tile_px)
-
-    def zonal(self, zones: DataFrame, **kw) -> DataFrame:
-        """Per-zone pixel statistics (zonal.zonal_stats) — stat rows
-        shuffle, pixels never."""
-        from .operators.zonal import zonal_stats
-
-        return zonal_stats(self.df, zones, **kw)
-
-    def zonal_histogram(self, zones: DataFrame, **kw) -> DataFrame:
-        """Per-zone class histogram for categorical rasters (r05,
-        zonal.zonal_histogram) — count rows shuffle, pixels never."""
-        from .operators.zonal import zonal_histogram
-
-        return zonal_histogram(self.df, zones, **kw)
-
-    def zonal_mode(self, zones: DataFrame, **kw) -> DataFrame:
-        """Majority class per zone, ties → lowest value (r05,
-        zonal.zonal_mode)."""
-        from .operators.zonal import zonal_mode
-
-        return zonal_mode(self.df, zones, **kw)
-
-    def _payload_col(self) -> str:
-        """TileSet frames carry their raster bytes as either ``tile``
-        (pyramid/DEM convention) or ``raster`` (mosaic convention);
-        facade verbs adapt instead of forcing a rename."""
-        return "tile" if "tile" in self.df.columns else "raster"
-
-    def cutline(self, ring, tile_px: int, **kw) -> "TileSet":
-        """Mask to a cutline polygon (r05, cutline.cutline_crop —
-        gdalwarp -cutline); only ring-boundary tiles pay per-pixel."""
-        from .operators.cutline import cutline_crop
-
-        kw.setdefault("raster", self._payload_col())
-        return TileSet(self.spark, cutline_crop(self.df, ring, tile_px, **kw))
-
-    def burn(self, features: DataFrame, tile_px: int, z: int,
-             grid_wh: tuple, **kw) -> "TileSet":
-        """Burn vector features INTO this mosaic (r05,
-        rasterize.burn_into — gdal_rasterize's in-place mode: burned
-        pixels take the feature value, the rest keep this set's
-        pixels)."""
-        from .operators.rasterize import burn_into
-
-        kw.setdefault("tile_col", self._payload_col())
-        return TileSet(self.spark,
-                       burn_into(self.df, features, tile_px, z, grid_wh, **kw))
-
-    def retile(self, t_in: int, t_out: int, z: int, grid_wh: tuple,
-               **kw) -> "TileSet":
-        """Re-cut to a new tile size (r05, pyramid.retile —
-        gdal_retile.py); raster bytes shuffle exactly once."""
-        from .operators.pyramid import retile
-
-        kw.setdefault("tile_col", self._payload_col())
-        return TileSet(self.spark,
-                       retile(self.df, t_in, t_out, z, grid_wh, **kw))
-
-    def viewshed(self, observers: DataFrame, tile_px: int, z: int,
-                 grid_wh: tuple, radius: int, **kw) -> DataFrame:
-        """Per-observer visibility (r05, viewshed.viewshed —
-        gdal_viewshed); shuffle ships observer windows, not rasters."""
-        from .operators.viewshed import viewshed
-
-        kw.setdefault("tile_col", self._payload_col())
-        return viewshed(observers, self.df, tile_px, z, grid_wh, radius, **kw)
-
-    def contour_polygons(self, levels: list, tile_px: int,
-                         grid_wh: tuple, **kw) -> DataFrame:
-        """Fixed-level band polygons (r05, polygonize.contour_polygons
-        — gdal_contour -p)."""
-        from .operators.polygonize import contour_polygons
-
-        kw.setdefault("tile_col", self._payload_col())
-        return contour_polygons(self.df, levels, tile_px, grid_wh, **kw)
-
-    def to_xyz(self, tile_px: int, **kw) -> DataFrame:
-        """Point export (r05, zonal.to_xyz — gdal2xyz.py);
-        ``skip_value=`` drops nodata at the source."""
-        from .operators.zonal import to_xyz
-
-        kw.setdefault("tile_col", self._payload_col())
-        return to_xyz(self.df, tile_px, **kw)
-
-
-class EmbeddingSet:
-    """Fluent surface over the similarity operators for a corpus
-    DataFrame of (id, vector) — the ANN half of the training-data
-    pipeline (U4 API shape)."""
-
-    def __init__(self, spark: SparkSession, df: DataFrame, id_col: str = "vec_id",
-                 vec_col: str = "embedding"):
-        self.spark = spark
-        self.df = df
-        self._id, self._vec = id_col, vec_col
-
-    def _corpus(self):
-        from pyspark.sql import functions as F
-
-        return self.df.select(
-            F.col(self._id).alias("cid"), F.col(self._vec).alias("cvec")
-        )
-
-    def topk(self, queries: DataFrame, k: int = 5) -> DataFrame:
-        """Exact integer-dot top-k. queries: (qid, qvec)."""
-        from .operators.similarity import brute_topk
-
-        return brute_topk(queries, self._corpus(), k=k)
-
-    def cosine_topk(self, queries: DataFrame, k: int = 5) -> DataFrame:
-        from .operators.similarity import cosine_topk
-
-        return cosine_topk(queries, self._corpus(), k=k)
-
-    def lsh_topk(self, queries: DataFrame, dim: int, k: int = 5, **kw) -> DataFrame:
-        from .operators.similarity import lsh_topk
-
-        return lsh_topk(queries, self._corpus(), dim=dim, k=k, **kw)
-
-    def ivf_topk(self, queries: DataFrame, stride: int = 64, k: int = 5,
-                 nprobe: int = 2) -> DataFrame:
-        """IVF-Flat with data-derived centroids (every ``stride``-th
-        vector by id — deterministic, no RNG)."""
-        from pyspark.sql import functions as F
-
-        from .operators.similarity import ivf_topk
-
-        from pyspark.sql import Window
-
-        # hash-sampled centroids (≈1/stride of the corpus), NOT
-        # id % stride == 0: a corpus whose ids contain no stride
-        # multiples (ids 1..50, stride 64) would otherwise yield zero
-        # centroids and silently return no neighbors (ADVICE r01).
-        # xxhash64 sampling is deterministic, distribution-independent,
-        # and needs no global sort; list_ids come from a window over
-        # the SAMPLED subset only (small — centroids must fit a
-        # broadcast anyway). Tiny corpora where the hash selects
-        # nothing fall back to the min-id vector as the one centroid.
-        sampled = self.df.filter(F.xxhash64(F.col(self._id)) % stride == 0)
-        if sampled.limit(1).count() == 0:
-            sampled = self.df.orderBy(F.col(self._id)).limit(1)
-        w = Window.orderBy(F.col(self._id))
-        cents = sampled.select(
-            (F.row_number().over(w) - 1).cast("long").alias("list_id"),
-            F.col(self._vec).alias("center"),
-        )
-        return ivf_topk(queries, self._corpus(), cents, k=k, nprobe=nprobe)
-
-    def knn_graph(self, dim: int, k: int = 5, **kw) -> DataFrame:
-        """Corpus self-kNN graph via shuffle-join LSH (r04 — no
-        broadcast of either side, self-edges excluded;
-        similarity.knn_graph)."""
-        from .operators.similarity import knn_graph
-
-        return knn_graph(self._corpus(), dim=dim, k=k, **kw)
-
-    def build_ivf_index(self, centroids: DataFrame, table: str, path: str,
-                        buckets: int = 16, codewords: list | None = None,
-                        m: int = 8, residual: bool = True) -> DataFrame:
-        """Index-build half of the ANN serving path (r04): assign (and,
-        with ``codewords``, PQ-encode) the corpus and persist it
-        bucketed by list_id; returns the read-back index frame for the
-        ``lists=``/``encoded=`` query-time arguments."""
-        from .operators.similarity import (
-            ivf_assign, ivfpq_encode, read_ivf_index, write_ivf_index,
-        )
-
-        idx = (
-            ivf_assign(self._corpus(), centroids)
-            if codewords is None
-            else ivfpq_encode(self._corpus(), centroids, codewords, m,
-                              residual=residual)
-        )
-        write_ivf_index(idx, table, path, buckets)
-        return read_ivf_index(self.spark, table)
-
-    def append_to_index(self, centroids: DataFrame, table: str,
-                        codewords: list | None = None, m: int = 8,
-                        residual: bool = True) -> DataFrame:
-        """Incremental append (r05): assign/encode ONLY this set's
-        vectors and append them into the persisted bucketed index —
-        the continuous-ingest maintenance verb (the base index files
-        are never rewritten). Returns the read-back union frame."""
-        from .operators.similarity import (
-            append_to_ivf_index, ivf_assign, ivfpq_encode, read_ivf_index,
-        )
-
-        delta = (
-            ivf_assign(self._corpus(), centroids)
-            if codewords is None
-            else ivfpq_encode(self._corpus(), centroids, codewords, m,
-                              residual=residual)
-        )
-        append_to_ivf_index(delta, table)
-        return read_ivf_index(self.spark, table)
-
-    def stream_into_index(self, stream: DataFrame, centroids: DataFrame,
-                          writer, checkpoint_dir: str):
-        """Continuous index ingest (r05): per-epoch delta assignment
-        committed through the exactly-once checkpointed sink (see
-        streaming.checkpointed.start_index_ingest); serve the result
-        with ``streaming.checkpointed.read_stream_index``. The id and
-        vector column names of THIS set apply to the stream."""
-        from .streaming.checkpointed import start_index_ingest
-
-        return start_index_ingest(
-            stream, centroids, writer, checkpoint_dir,
-            cid=self._id, cvec=self._vec,
-        )
-
-    def train_ivf(self, n_lists: int = 16, iters: int = 2) -> DataFrame:
-        """Lloyd-trained IVF centroids (deterministic distributed
-        k-means, similarity.ivf_train) — feed the result to
-        ``operators.similarity.ivf_topk`` for better list balance than
-        the hash-sampled default."""
-        from .operators.similarity import ivf_train
-
-        return ivf_train(self._corpus(), n_lists=n_lists, iters=iters)
-
-    def near_dups(self, threshold: int, **kw) -> DataFrame:
-        from .operators.similarity import near_dup_pairs
-
-        return near_dup_pairs(self._corpus(), threshold, **kw)
-
-    def pq_codewords(self, ncodes: int = 16) -> list:
-        """Deterministic PQ codebook from the corpus (spread-hash
-        sample, similarity.pq_codewords_from_sample)."""
-        from .operators.similarity import pq_codewords_from_sample
-
-        return pq_codewords_from_sample(self._corpus(), ncodes)
-
-    def pq_topk(self, queries: DataFrame, codewords: list, m: int,
-                k: int = 5) -> DataFrame:
-        """PQ-compressed ADC top-k (zero-shuffle encode + m-lookup
-        scoring — similarity.pq_encode/pq_topk)."""
-        from .operators.similarity import pq_encode, pq_topk
-
-        enc = pq_encode(self._corpus(), codewords, m)
-        return pq_topk(queries, enc, codewords, m, k=k)
-
-    def ivfpq_codewords(self, centroids: DataFrame, ncodes: int = 16) -> list:
-        """Deterministic RESIDUAL PQ codebook (r04 — the codebook
-        ``ivfpq_topk``'s default residual encoding expects;
-        similarity.ivfpq_codewords_from_sample)."""
-        from .operators.similarity import ivfpq_codewords_from_sample
-
-        return ivfpq_codewords_from_sample(self._corpus(), centroids, ncodes)
-
-    def ivfpq_topk(self, queries: DataFrame, centroids: DataFrame,
-                   codewords: list, m: int, k: int = 5,
-                   nprobe: int = 2, residual: bool = True) -> DataFrame:
-        """IVF-PQ composition (probe reduction × code compression;
-        r04: residual encoding by default — pair with
-        ``ivfpq_codewords``, or pass ``residual=False`` with a raw
-        ``pq_codewords`` codebook)."""
-        from .operators.similarity import ivfpq_topk
-
-        return ivfpq_topk(queries, self._corpus(), centroids, codewords,
-                          m, k=k, nprobe=nprobe, residual=residual)
-
-
-class Engine:
-    def __init__(self, spark: SparkSession):
-        from . import _ship
-
-        self.spark = _ship(spark)
-
-    def images(self, df: DataFrame) -> ImageSet:
-        return ImageSet(self.spark, df)
-
-    def tiles(self, df: DataFrame) -> TileSet:
-        return TileSet(self.spark, df)
-
-    def embeddings(self, df: DataFrame, id_col: str = "vec_id",
-                   vec_col: str = "embedding") -> EmbeddingSet:
-        return EmbeddingSet(self.spark, df, id_col, vec_col)
-
-    def synthetic_images(self, n: int) -> ImageSet:
-        from .sources.synth import images_df
-
-        return ImageSet(self.spark, images_df(self.spark, n))
-
-    def solid(self, width: int, height: int, bands, tile_px: int = 256) -> TileSet:
-        from .operators.solid import solid_tiles
-
-        return TileSet(self.spark, solid_tiles(self.spark, width, height, bands, tile_px))
-
-    def warp(self, src_tiles: DataFrame, src_gt, dst_gt, dst_shape, **kw) -> DataFrame:
-        from .operators.warp import warp_tiles
-
-        return warp_tiles(src_tiles, src_gt, dst_gt, dst_shape, **kw)
-
-    def open_mbtiles(self, paths) -> "TileArchive":
-        """The reference user's entry point (``gdal.Open("x.mbtiles/
-        z-x-y")`` family, mbtiles.cpp:128-225 + mvt.cpp:732-770) —
-        whole archives as DataFrames instead of one tile per Open."""
-        if isinstance(paths, str):
-            paths = [paths]
-        return TileArchive(self.spark, paths)
-
-    def documents(self, df: DataFrame, id_col: str = "doc_id") -> "DocumentSet":
-        return DocumentSet(self.spark, df, id_col)
-
-    def events(self, df: DataFrame, ts_col: str = "ts",
-               key_col: str = "user_id") -> "EventSet":
-        return EventSet(self.spark, df, ts_col, key_col)
-
-
-class TileArchive:
-    """Fluent surface over real MBTiles archives: the scan, the
-    metadata, and the straight-through protobuf feature decode."""
-
-    def __init__(self, spark: SparkSession, paths: list[str]):
-        self.spark = spark
-        self.paths = paths
-
-    def tiles(self) -> DataFrame:
-        from .sources.mbtiles import read_mbtiles
-
-        return read_mbtiles(self.spark, self.paths)
-
-    def metadata(self) -> DataFrame:
-        from .sources.mbtiles import read_metadata
-
-        return read_metadata(self.spark, self.paths)
-
-    def features(self, world=(0.0, 0.0, 1.0, 1.0), gunzip: bool = True) -> DataFrame:
-        """Archive → decoded MVT features (typed props included): the
-        full reference read pipeline as one verb. Gzip-sniffed per tile
-        (mbtiles.cpp:214-224) before the protobuf parse."""
-
-        from .operators.mvt import decode_features_proto
-
-        t = self.tiles().select(
-            F.col("zoom").cast("int").alias("z"), F.col("x").alias("tx"),
-            F.col("y").alias("ty"), F.col("tile_data").alias("data"),
-        )
-        if gunzip:
-
-            @F.pandas_udf("binary")
-            def _gz(blobs: pd.Series) -> pd.Series:
-                from .core.codecs import gunzip_sniff
-
-                # poison payload → b"" → proto decode yields 0 rows
-                return pd.Series([gunzip_sniff(b) or b"" for b in blobs])
-
-            t = t.withColumn("data", _gz(F.col("data")))
-        return decode_features_proto(t, world=world)
-
-
-class DocumentSet:
-    """Fluent surface over the text-curation operators."""
-
-    def __init__(self, spark: SparkSession, df: DataFrame, id_col: str = "doc_id"):
-        self.spark = spark
-        self.df = df
-        self._id = id_col
-
-    def quality(self) -> DataFrame:
-        from .operators.text import token_stats
-
-        return token_stats(self.df, self._id)
-
-    def languages(self) -> DataFrame:
-        from .operators.text import lang_id
-
-        return lang_id(self.df, self._id)
-
-    def keywords(self, k: int = 3) -> DataFrame:
-        from .operators.text import tfidf_topk
-
-        return tfidf_topk(self.df, self._id, k=k)
-
-    def dup_clusters(self, **kw) -> DataFrame:
-        from .operators.dedup import dup_clusters
-
-        return dup_clusters(self.df, self._id, **kw)
-
-    def deduped(self, **kw) -> DataFrame:
-        """The curation ACTION: drop every near-duplicate except its
-        cluster representative (left-anti join against non-rep cluster
-        members — singletons untouched)."""
-        clusters = self.dup_clusters(**kw)
-        losers = clusters.filter(F.col(self._id) != F.col("cluster_rep")).select(
-            self._id
-        )
-        return self.df.join(losers, self._id, "left_anti")
-
-    def sample(self, rate_permille: int) -> DataFrame:
-        from .operators.sample import hash_sample
-
-        return hash_sample(self.df, rate_permille, self._id)
-
-
-class EventSet:
-    """Fluent surface over the temporal operators: windowed rollups,
-    sessionization, as-of enrichment, interval tagging — the event/
-    telemetry half of a training-data pipeline (click streams, error
-    markers, quality windows)."""
-
-    def __init__(self, spark: SparkSession, df: DataFrame,
-                 ts_col: str = "ts", key_col: str = "user_id"):
-        self.spark = spark
-        self.df = df
-        self._ts, self._key = ts_col, key_col
-
-    def windowed(self, window_s: int = 300) -> DataFrame:
-        from .streaming.events import windowed_event_counts
-
-        return windowed_event_counts(self.df, window_s=window_s)
-
-    def sessions(self, gap_s: int = 1800) -> DataFrame:
-        from .streaming.sessionize import sessionize_batch
-
-        return sessionize_batch(self.df, gap_s=gap_s)
-
-    def asof(self, right: DataFrame, right_ts: str, payload: list[str],
-             tolerance=None) -> DataFrame:
-        """Each event gains the latest ``right`` row at or before its
-        timestamp for the same key (point-in-time enrichment)."""
-        from .operators.asof import asof_join
-
-        return asof_join(self.df, right, on=self._key, left_ts=self._ts,
-                         right_ts=right_ts, payload=payload,
-                         tolerance=tolerance)
-
-    def in_intervals(self, intervals: DataFrame, point_col: str,
-                     start_col: str, end_col: str, bin_width: int) -> DataFrame:
-        from .operators.intervals import interval_join
-
-        return interval_join(self.df, intervals, point_col, start_col,
-                             end_col, bin_width)

@@ -440,3 +440,15 @@ def dup_clusters(
             "cluster_size",
         )
     )
+
+
+def drop_near_dups(df: DataFrame, id_col: str, **kw) -> DataFrame:
+    """The curation action over ``dup_clusters`` (``kw`` goes to it):
+    keep each cluster's representative and every singleton, drop the
+    other members with one left-anti join."""
+    losers = (
+        dup_clusters(df, id_col, **kw)
+        .filter(F.col(id_col) != F.col("cluster_rep"))
+        .select(id_col)
+    )
+    return df.join(losers, id_col, "left_anti")

@@ -8,7 +8,7 @@ distributed keyed join:
 - **TMS row flip** ``row = max − row`` (``mbtiles.cpp:154-155``);
 - the SQLite point lookup (``mbtiles.cpp:166-183``) → equi-join on
   (zoom, x, row) — a broadcast-hash join for small request sets;
-- gzip sniff (first byte 0x1f) + gunzip (``mbtiles.cpp:214-224``) in
+- gzip sniff (magic 1f 8b) + gunzip (``mbtiles.cpp:214-224``) in
   an Arrow-batched decode (F11);
 - missing tile → no row (empty result, not an error —
   ``mbtiles.cpp:188-192``): inner join semantics.
@@ -16,10 +16,10 @@ distributed keyed join:
 
 from __future__ import annotations
 
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..sources.mbtiles import gunzip_col
 
 PATH_RE = r"^(\d+)-(\d+)-(\d+)$"
 
@@ -59,17 +59,7 @@ def fetch_tiles(requests: DataFrame, store: DataFrame) -> DataFrame:
         ["zoom", "x", "tms_y"],
         "inner",
     )
-
-    @F.pandas_udf("binary")
-    def _gunzip(blobs: pd.Series) -> pd.Series:
-        from ..core.codecs import gunzip_sniff
-
-        # corrupt gzip → empty payload, never a stage failure (one
-        # shared poison policy, core/codecs.gunzip_sniff)
-        out = [gunzip_sniff(b) or b"" for b in blobs]
-        return pd.Series(out)
-
-    return joined.withColumn("tile_data", _gunzip(F.col("tile_data")))
+    return joined.withColumn("tile_data", gunzip_col(F.col("tile_data")))
 
 
 def sample_points(

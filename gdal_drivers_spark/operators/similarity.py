@@ -498,7 +498,12 @@ def ivf_assign(
     list_id; a malformed vector (NULL, wrong length, NULL element —
     every dot NULL) gets the SMALLEST list_id (the old all-NULL
     ``max_by`` tie-break); a malformed centroid never wins; empty
-    centroids → empty output (the old inner join)."""
+    centroids → empty output (the old inner join). A NULL list id
+    raises ``ValueError``.
+
+    Eager: every call ``collect()``s the centroid table once, when the
+    plan is built — reuse the returned frame rather than calling this
+    again per action."""
     c = corpus.select(F.col(cid).alias("_cid"), quantize(F.col(cvec)).alias("_cv"))
     cent_rows = centroids.select(
         F.col(list_col).alias("_lid"), quantize(F.col("center")).alias("_ctv")
@@ -511,6 +516,8 @@ def ivf_assign(
             "_cv",
         ).filter(F.lit(False))
 
+    if any(r["_lid"] is None for r in cent_rows):
+        raise ValueError(f"ivf_assign: centroid column {list_col!r} holds a NULL list id")
     # centroids grouped by length; only a centroid of the vector's own
     # length (and with no NULL components) yields a non-NULL dot
     min_lid = min(int(r["_lid"]) for r in cent_rows)

@@ -1,7 +1,7 @@
-"""Per-partition lineage records + counters.
+"""Per-partition lineage records + observed counts.
 
 Every partition of a tracked stage emits one lineage row (partition id,
-row count, key range, content checksum) alongside accumulator counters —
+row count, key range, content checksum) alongside observed counts —
 the audit trail that makes a 10^12-row job debuggable and the resume
 decision (plans/checkpoint.py) verifiable. The reference's analogue is
 its structured error/warning channel (``mvt.cpp:262-287``
@@ -12,8 +12,9 @@ Implementation: ``mapInPandas`` pass-through that also yields side rows
 is not possible (one schema per stream), so lineage is a *parallel*
 aggregation over the same partitioning: ``spark_partition_id()`` +
 groupBy — zero extra shuffle when the input is already partitioned, one
-cheap key-only shuffle otherwise. Counters use SparkContext
-accumulators (exactly-once only on result stages — documented caveat).
+cheap key-only shuffle otherwise. Row counts come from ``observed``: a
+``pyspark.sql.Observation`` read from the metrics of one action's plan,
+not an accumulator bumped inside Python tasks.
 """
 
 from __future__ import annotations
@@ -88,8 +89,7 @@ def bucket_lineage_records(df: DataFrame, key: str, n_buckets: int = 64) -> Data
 def observed(df: DataFrame, key: str, name: str = "lineage"):
     """Attach row/null-key counters to ``df`` via
     ``pyspark.sql.Observation`` — collected by the FIRST action on the
-    returned frame itself, zero extra scans (the exactly-once
-    complement to the at-least-once accumulator ``Counters``).
+    returned frame itself, with zero extra scans.
     Returns ``(df_with_observation, observation)``;
     ``observation.get`` then yields ``{"rows": n, "null_keys": n}``."""
     from pyspark.sql import Observation
@@ -102,19 +102,3 @@ def observed(df: DataFrame, key: str, name: str = "lineage"):
     )
     return out, obs
 
-
-class Counters:
-    """Named accumulator bundle for pipeline metrics (rows decoded,
-    rows rejected, tiles painted, …)."""
-
-    def __init__(self, spark, *names: str):
-        self._acc = {n: spark.sparkContext.accumulator(0) for n in names}
-
-    def add(self, name: str, v: int = 1):
-        self._acc[name].add(int(v))
-
-    def value(self, name: str) -> int:
-        return self._acc[name].value
-
-    def snapshot(self) -> dict[str, int]:
-        return {n: a.value for n, a in self._acc.items()}

@@ -18,7 +18,8 @@ Row conventions preserved from the reference:
   - the stored row is TMS (bottom-up); the XYZ row ``y = 2^z − 1 −
     tms_row`` is emitted alongside (flip at ``mbtiles.cpp:154-155``);
   - payloads are returned verbatim (gzip sniff happens downstream,
-    ``mbtiles.cpp:214-224`` → lookup.fetch_tiles / gunzip_tiles).
+    ``mbtiles.cpp:214-224`` → ``gunzip_col``, used by
+    ``read_mbtiles_features`` and lookup.fetch_tiles).
 """
 
 from __future__ import annotations
@@ -26,7 +27,7 @@ from __future__ import annotations
 import sqlite3
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 TILES_SCHEMA = (
@@ -154,6 +155,35 @@ def read_metadata(spark: SparkSession, paths: list[str]) -> DataFrame:
             yield pd.DataFrame(rows, columns=["archive", "key", "value"])
 
     return pdf_paths.mapInPandas(_meta, "archive string, key string, value string")
+
+
+def gunzip_col(col: Column) -> Column:
+    """The ``mbtiles.cpp:214-224`` gzip sniff over a binary column
+    (``core.codecs.gunzip_sniff``): gzip payloads come back inflated,
+    anything else verbatim, and corrupt gzip as ``b""`` — an empty
+    payload that decodes to zero rows, never a stage failure."""
+
+    @F.pandas_udf("binary")
+    def _gunzip(blobs: pd.Series) -> pd.Series:
+        from ..core.codecs import gunzip_sniff
+
+        return pd.Series([gunzip_sniff(b) or b"" for b in blobs])
+
+    return _gunzip(col)
+
+
+def read_mbtiles_features(spark: SparkSession, paths: list[str] | DataFrame) -> DataFrame:
+    """Archives → decoded MVT features, typed props included: the
+    reference's whole read path (``gdal.Open("x.mbtiles/z-x-y")``,
+    mbtiles.cpp:128-225 + mvt.cpp:732-770) over every tile at once —
+    scan, gzip sniff, protobuf decode."""
+    from ..operators.mvt import decode_features_proto
+
+    tiles = read_mbtiles(spark, paths).select(
+        F.col("zoom").alias("z"), F.col("x").alias("tx"), F.col("y").alias("ty"),
+        gunzip_col(F.col("tile_data")).alias("data"),
+    )
+    return decode_features_proto(tiles)
 
 
 def write_mbtiles(path: str, rows, metadata: dict | None = None) -> None:

@@ -113,22 +113,24 @@ def test_reserved_names_rejected(frames):
 
 
 def test_engine_events_facade(spark):
-    """EventSet: windows / sessions / asof / in_intervals off one
-    handle, consistent with the bare operators."""
-    from gdal_drivers_spark.engine import Engine
+    """The temporal operators compose over one events table: windows,
+    sessions, as-of enrichment and interval tagging."""
+    from gdal_drivers_spark.operators.intervals import interval_join
+    from gdal_drivers_spark.streaming.events import windowed_event_counts
+    from gdal_drivers_spark.streaming.sessionize import sessionize_batch
 
     ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    es = Engine(spark).events(ev)
-    assert es.windowed().count() > 0
-    assert es.sessions().count() > 0
+    assert windowed_event_counts(ev).count() > 0
+    assert sessionize_batch(ev).count() > 0
     right = ev.filter("event_type = 'error'").select(
         "user_id", "ts", F.col("event_id").alias("marker_id")
     )
-    joined = es.asof(right, right_ts="ts", payload=["marker_id"])
+    joined = asof_join(ev, right, on="user_id", left_ts="ts", right_ts="ts",
+                       payload=["marker_id"])
     assert joined.count() == ev.count()
     iv = spark.createDataFrame([(1, 0, 100)], "iid long, lo long, hi long")
-    pts = es.df.select("event_id", F.round(F.col("value") * 100).cast("long").alias("v"))
-    tagged = Engine(spark).events(pts).in_intervals(iv, "v", "lo", "hi", bin_width=64)
+    pts = ev.select("event_id", F.round(F.col("value") * 100).cast("long").alias("v"))
+    tagged = interval_join(pts, iv, "v", "lo", "hi", bin_width=64)
     assert tagged.count() > 0
 
 

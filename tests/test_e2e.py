@@ -2,7 +2,7 @@
 distributed synthesis → Arrow-batch decode → tile assignment →
 per-partition lineage → checkpointed batch write — killed mid-job and
 resumed, with the resumed output byte-identical to a clean run and the
-lineage/counter evidence intact (BASELINE.json north_rule: "resumable
+lineage/observed-count evidence intact (BASELINE.json north_rule: "resumable
 from checkpoint with per-partition lineage + metrics")."""
 
 import pytest
@@ -11,32 +11,28 @@ from pyspark.sql import functions as F
 from gdal_drivers_spark.operators.assign import assign_tiles
 from gdal_drivers_spark.operators.decode import decode_stats
 from gdal_drivers_spark.plans.checkpoint import CheckpointedWriter
-from gdal_drivers_spark.plans.lineage import Counters, lineage_records
+from gdal_drivers_spark.plans.lineage import lineage_records, observed
 from gdal_drivers_spark.sources import synth
 
 N_IMAGES = 400
 Z = 5
 
 
-def _assignments(spark, counters: Counters | None = None):
-    images = synth.images_df(spark, N_IMAGES, partitions=8)
-    if counters is not None:
-        def bump(it):
-            for pdf in it:
-                counters.add("images", len(pdf))
-                yield pdf
-
-        images = images.mapInPandas(bump, synth.IMAGES_SCHEMA)
+def _assignments(spark):
+    """The pipeline's assignments, and an Observation counting the
+    synthesized images that enter it."""
+    images, seen = observed(
+        synth.images_df(spark, N_IMAGES, partitions=8), "image_id", name="images"
+    )
     decoded = decode_stats(images)
     assigned = assign_tiles(decoded.filter("dec_ok"), z=Z)
     return assigned.select(
         "image_id", "cell", (F.col("cell") % 8).alias("batch")
-    )
+    ), seen
 
 
 def test_image_pipeline_kill_resume_and_lineage(spark, tmp_path):
-    counters = Counters(spark, "images")
-    assigned = _assignments(spark, counters)
+    assigned, seen = _assignments(spark)
 
     # --- clean run
     clean_dir = str(tmp_path / "clean")
@@ -47,9 +43,8 @@ def test_image_pipeline_kill_resume_and_lineage(spark, tmp_path):
         for r in w_clean.read_committed().select("image_id", "cell").collect()
     )
     assert len(clean) > N_IMAGES / 2  # every image covers ≥1 cell
-    # counters saw every synthesized image at least once (re-executions
-    # under Spark retries/multiple actions can only increase the count)
-    assert counters.value("images") >= N_IMAGES
+    # the write saw every synthesized image exactly once
+    assert seen.get["rows"] == N_IMAGES
 
     # --- killed run: injected failure after 3 committed batches
     crash_dir = str(tmp_path / "crash")

@@ -1,12 +1,27 @@
-"""Facade smoke for the round-5 utility verbs: every ImageSet/TileSet
-verb drives its operator end-to-end and composes with BOTH payload
-column conventions ("tile" and "raster") — the column-name adaptation
-is what an AnalysisException regression would break."""
+"""Smoke for the round-5 utility operators: each runs end-to-end, and
+each tile operator composes with BOTH payload column conventions
+("tile" and "raster") through its column-name parameter — the
+adaptation an AnalysisException regression would break."""
 
 import numpy as np
 import pandas as pd
 
-from gdal_drivers_spark.engine import Engine
+from gdal_drivers_spark.operators.assign import with_footprint
+from gdal_drivers_spark.operators.calc import band_calc
+from gdal_drivers_spark.operators.cutline import cutline_crop
+from gdal_drivers_spark.operators.multimodal import (
+    build_palette_median_cut,
+    equalize_images,
+    pansharpen,
+    rgb2pct,
+    scale_images,
+)
+from gdal_drivers_spark.operators.polygonize import contour_polygons
+from gdal_drivers_spark.operators.pyramid import retile
+from gdal_drivers_spark.operators.rasterize import burn_into
+from gdal_drivers_spark.operators.tindex import tile_index
+from gdal_drivers_spark.operators.viewshed import viewshed
+from gdal_drivers_spark.operators.zonal import to_xyz
 from gdal_drivers_spark.sources import synth
 
 
@@ -17,21 +32,20 @@ def _tiles(spark, col):
 
 
 def test_imageset_utility_verbs(spark):
-    eng = Engine(spark)
-    imgs = eng.images(synth.images_df(spark, 24))
-    assert imgs.equalize().df.filter("ok").count() == 24
-    assert imgs.scale(dst=(10, 200)).df.filter("ok").count() == 24
-    assert imgs.quantize().df.filter("ok").count() == 24  # median-cut default
-    assert imgs.calc({"B": imgs}, "A + B // 2").df.filter("ok").count() == 24
-    idx = imgs.tindex()
+    imgs = synth.images_df(spark, 24)
+    assert equalize_images(imgs).filter("ok").count() == 24
+    assert scale_images(imgs, dst=(10, 200)).filter("ok").count() == 24
+    pal = build_palette_median_cut(imgs)  # median-cut over this corpus
+    assert rgb2pct(imgs, pal).filter("ok").count() == 24
+    assert band_calc({"A": imgs, "B": imgs}, "A + B // 2").filter("ok").count() == 24
+    idx = tile_index(with_footprint(imgs))
     assert idx.count() == 24 and idx.filter("ok").count() == 24
     # pansharpen: 3-band vs 3-band pan is a grid mismatch -> poison rows
-    ps = imgs.pansharpen(imgs)
-    assert ps.df.count() == 24 and ps.df.filter("NOT ok").count() == 24
+    ps = pansharpen(imgs, imgs)
+    assert ps.count() == 24 and ps.filter("NOT ok").count() == 24
 
 
 def test_tileset_utility_verbs_both_payload_columns(spark):
-    eng = Engine(spark)
     ring = [[5, 3], [58, 13], [40, 62], [9, 50]]
     fdf = spark.createDataFrame(
         pd.DataFrame([(1, [[3.0, 2.0], [40.0, 6.0], [30.0, 37.0],
@@ -41,18 +55,18 @@ def test_tileset_utility_verbs_both_payload_columns(spark):
     obs = spark.createDataFrame(
         pd.DataFrame([(1, 20, 20)], columns=["oid", "px", "py"]))
     for col in ("raster", "tile"):
-        ts = eng.tiles(_tiles(spark, col))
-        assert ts.cutline(ring, 16).df.count() == 16, col
-        assert ts.retile(16, 32, 4, (4, 4)).df.count() == 4, col
-        assert ts.burn(fdf, 16, 4, (4, 4)).df.filter("ok").count() == 16, col
-        row = ts.viewshed(obs, 16, 4, (4, 4), 8).collect()[0]
+        ts = _tiles(spark, col)
+        assert cutline_crop(ts, ring, 16, raster=col).count() == 16, col
+        assert retile(ts, 16, 32, 4, (4, 4), tile_col=col).count() == 4, col
+        burned = burn_into(ts, fdf, 16, 4, (4, 4), tile_col=col)
+        assert burned.filter("ok").count() == 16, col
+        row = viewshed(obs, ts, 16, 4, (4, 4), 8, tile_col=col).collect()[0]
         assert row["n_visible"] == row["n_eval"], col  # flat field
-        assert ts.contour_polygons([128], 16, (4, 4)).count() == 1, col
+        assert contour_polygons(ts, [128], 16, (4, 4), tile_col=col).count() == 1, col
 
 
 def test_tileset_to_xyz_verb(spark):
-    eng = Engine(spark)
     for col in ("raster", "tile"):
-        ts = eng.tiles(_tiles(spark, col))
-        assert ts.to_xyz(16).count() == 16 * 256, col       # full export
-        assert ts.to_xyz(16, skip_value=9).count() == 0, col  # all skipped
+        ts = _tiles(spark, col)
+        assert to_xyz(ts, 16, tile_col=col).count() == 16 * 256, col       # full export
+        assert to_xyz(ts, 16, tile_col=col, skip_value=9).count() == 0, col  # all skipped

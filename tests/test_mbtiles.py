@@ -16,6 +16,7 @@ from gdal_drivers_spark.operators.mvt import decode_features_proto
 from gdal_drivers_spark.sources.mbtiles import (
     fetch_one,
     read_mbtiles,
+    read_mbtiles_features,
     read_metadata,
     write_mbtiles,
 )
@@ -217,10 +218,8 @@ def test_proto_sink_roundtrip(spark):
 
 
 def test_engine_open_mbtiles_features(spark, tmp_path):
-    """Engine.open_mbtiles(...).features(): the one-verb reference read
-    path — archive → gunzip → protobuf decode → typed features."""
-    from gdal_drivers_spark.engine import Engine
-
+    """read_mbtiles_features: the reference read path in one call —
+    archive → gunzip → protobuf decode → typed features."""
     path = str(tmp_path / "e.mbtiles")
     blob = mvtproto.encode_tile(
         [{"name": "l", "extent": 256, "version": 2,
@@ -231,24 +230,23 @@ def test_engine_open_mbtiles_features(spark, tmp_path):
     )
     write_mbtiles(path, [(1, 0, 0, gzip.compress(blob, mtime=0))],
                   metadata={"format": "pbf"})
-    eng = Engine(spark)
-    arch = eng.open_mbtiles(path)
-    assert {r.key: r.value for r in arch.metadata().collect()} == {"format": "pbf"}
-    feats = arch.features().collect()
+    meta = read_metadata(spark, [path]).collect()
+    assert {r.key: r.value for r in meta} == {"format": "pbf"}
+    feats = read_mbtiles_features(spark, [path]).collect()
     assert len(feats) == 1
     r = feats[0]
     assert r.fid == 3 and r.props_typed["n"]["i"] == 42 and r.geom_type == "point"
 
 
 def test_engine_documents_deduped(spark):
-    """DocumentSet.deduped(): keeps cluster representatives and
-    singletons, drops the other near-dup members."""
-    from gdal_drivers_spark.engine import Engine
+    """drop_near_dups: keeps cluster representatives and singletons,
+    drops the other near-dup members."""
+    from gdal_drivers_spark.operators.dedup import drop_near_dups
 
     base = "one two three four five six seven eight nine ten " * 4
     rows = [(1, base), (2, base), (3, "unrelated content entirely " * 8)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = Engine(spark).documents(df).deduped()
+    out = drop_near_dups(df, "doc_id")
     assert sorted(r.doc_id for r in out.collect()) == [1, 3]
 
 

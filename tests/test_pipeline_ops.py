@@ -371,20 +371,22 @@ def test_near_dup_default_is_pruned_with_recall(spark):
 
 
 def test_embedding_set_ivf_non_contiguous_ids(spark):
-    """ADVICE r01: EmbeddingSet.ivf_topk must return neighbors even
-    when no corpus id is a stride multiple (ids 1..50, stride 64)."""
+    """ADVICE r01: IVF top-k over sampled centroids must return
+    neighbors even when no corpus id is a multiple of the sampling
+    stride (ids 1..50): ivf_train(iters=0) samples by spread hash."""
     import numpy as np
 
-    from gdal_drivers_spark.engine import EmbeddingSet
+    from gdal_drivers_spark.operators.similarity import ivf_topk, ivf_train
 
     rng = np.random.default_rng(5)
     vecs = [(i, [float(x) for x in rng.normal(0, 1, 8)]) for i in range(1, 51)]
     df = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
-    es = EmbeddingSet(spark, df, id_col="vec_id", vec_col="embedding")
+    corpus = df.select(F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec"))
     qs = df.filter(F.col("vec_id") == 7).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
-    got = es.ivf_topk(qs, stride=64, k=3, nprobe=2).collect()
+    cents = ivf_train(corpus, n_lists=1, iters=0)
+    got = ivf_topk(qs, corpus, cents, k=3, nprobe=2).collect()
     assert len(got) > 0  # previously: silently empty
 
 
@@ -716,25 +718,28 @@ def test_ivfpq_recall_and_probe_discipline(spark):
 
 
 def test_embeddingset_pq_facade(spark):
-    """r03 facade verbs: EmbeddingSet.pq_codewords/pq_topk/ivfpq_topk
-    delegate to the PQ operators unchanged."""
-    from gdal_drivers_spark.engine import Engine
+    """r03: the PQ codebook sampler, PQ top-k and residual IVF-PQ top-k
+    compose over the real embeddings table."""
+    from gdal_drivers_spark.operators.similarity import (
+        ivfpq_codewords_from_sample, ivfpq_topk, pq_codewords_from_sample,
+        pq_encode, pq_topk,
+    )
 
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    es = Engine(spark).embeddings(emb)
-    cw = es.pq_codewords(ncodes=8)
+    corpus = emb.select(F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec"))
+    cw = pq_codewords_from_sample(corpus, ncodes=8)
     assert len(cw) == 8 and len(cw[0]) == 64
     qs = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
-    out = es.pq_topk(qs, cw, m=8, k=3).collect()
+    out = pq_topk(qs, pq_encode(corpus, cw, m=8), cw, m=8, k=3).collect()
     assert len(out) == 9 and all(r["rank"] <= 3 for r in out)
     cents = emb.filter(F.col("vec_id") % 64 == 0).select(
         (F.col("vec_id") / 64).cast("long").alias("list_id"),
         F.col("embedding").alias("center"),
     )
-    rcw = es.ivfpq_codewords(cents, ncodes=8)
-    out2 = es.ivfpq_topk(qs, cents, rcw, m=8, k=3).collect()
+    rcw = ivfpq_codewords_from_sample(corpus, cents, ncodes=8)
+    out2 = ivfpq_topk(qs, corpus, cents, rcw, m=8, k=3).collect()
     assert len(out2) == 9
 
 
@@ -943,17 +948,16 @@ def test_knn_graph_no_broadcast_plan_and_recall(spark):
     assert len(got_mp & brute) / len(brute) >= recall
 
 def test_embeddingset_knn_graph_and_index_facade(spark, tmp_path):
-    """r04 facade verbs: EmbeddingSet.knn_graph and build_ivf_index
-    delegate to the operators unchanged (IVF-Flat and IVF-PQ index
-    forms both servable)."""
-    from gdal_drivers_spark.engine import Engine
+    """r04: the self-kNN graph, and both persisted index forms
+    (IVF-Flat and IVF-PQ) built, read back and served."""
     from gdal_drivers_spark.operators.similarity import (
-        ivfpq_codewords_from_sample, ivfpq_topk, ivf_topk,
+        ivf_assign, ivf_topk, ivfpq_codewords_from_sample, ivfpq_encode,
+        ivfpq_topk, knn_graph, read_ivf_index, write_ivf_index,
     )
 
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    es = Engine(spark).embeddings(emb)
-    g = es.knn_graph(dim=64, k=2, n_tables=2)
+    corpus = emb.select(F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec"))
+    g = knn_graph(corpus, dim=64, k=2, n_tables=2)
     rows = g.collect()
     assert rows and all(r["qid"] != r["cid"] and r["rank"] <= 2 for r in rows)
 
@@ -964,30 +968,35 @@ def test_embeddingset_knn_graph_and_index_facade(spark, tmp_path):
     qs = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
-    lists = es.build_ivf_index(cents, "t_es_ivf", str(tmp_path / "es_ivf"), buckets=4)
+    write_ivf_index(ivf_assign(corpus, cents), "t_es_ivf",
+                    str(tmp_path / "es_ivf"), buckets=4)
+    lists = read_ivf_index(spark, "t_es_ivf")
     out = ivf_topk(qs, None, cents, k=3, lists=lists).collect()
     assert len(out) == 9
-    cw = ivfpq_codewords_from_sample(
-        emb.select(F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec")),
-        cents, ncodes=8)
-    enc = es.build_ivf_index(cents, "t_es_ivfpq", str(tmp_path / "es_ivfpq"),
-                             buckets=4, codewords=cw, m=8)
+    cw = ivfpq_codewords_from_sample(corpus, cents, ncodes=8)
+    write_ivf_index(ivfpq_encode(corpus, cents, cw, m=8), "t_es_ivfpq",
+                    str(tmp_path / "es_ivfpq"), buckets=4)
+    enc = read_ivf_index(spark, "t_es_ivfpq")
     out2 = ivfpq_topk(qs, None, cents, cw, m=8, k=3, encoded=enc).collect()
     assert len(out2) == 9
 
 def test_embeddingset_append_and_stream_facade(spark, tmp_path):
-    """r05 facade verbs: EmbeddingSet.append_to_index appends only the
-    delta set into a persisted index (served union == one-shot build),
-    and stream_into_index wires a stream through the exactly-once
-    index-ingest sink with the set's own column names."""
+    """r05: appending only a delta into a persisted index serves the
+    same union as a one-shot build, and a stream through the
+    exactly-once index-ingest sink, with its own column names, assigns
+    like the batch operator."""
     import glob
     import os
     import shutil
 
-    from gdal_drivers_spark.engine import Engine
-    from gdal_drivers_spark.operators.similarity import ivf_assign, ivf_topk
+    from gdal_drivers_spark.operators.similarity import (
+        append_to_ivf_index, ivf_assign, ivf_topk, read_ivf_index,
+        write_ivf_index,
+    )
     from gdal_drivers_spark.plans.checkpoint import CheckpointedWriter
-    from gdal_drivers_spark.streaming.checkpointed import read_stream_index
+    from gdal_drivers_spark.streaming.checkpointed import (
+        read_stream_index, start_index_ingest,
+    )
 
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     cents = emb.filter(F.col("vec_id") % 64 == 0).select(
@@ -996,18 +1005,20 @@ def test_embeddingset_append_and_stream_facade(spark, tmp_path):
     )
     base = emb.filter(F.col("vec_id") % 4 != 0)
     delta = emb.filter(F.col("vec_id") % 4 == 0)
-    eng = Engine(spark)
-    eng.embeddings(base).build_ivf_index(
-        cents, "t_es_app", str(tmp_path / "es_app"), buckets=4)
-    lists = eng.embeddings(delta).append_to_index(cents, "t_es_app")
+
+    def _corpus(df):
+        return df.select(F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec"))
+
+    write_ivf_index(ivf_assign(_corpus(base), cents), "t_es_app",
+                    str(tmp_path / "es_app"), buckets=4)
+    append_to_ivf_index(ivf_assign(_corpus(delta), cents), "t_es_app")
+    lists = read_ivf_index(spark, "t_es_app")
 
     qs = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
-    corpus = emb.select(F.col("vec_id").alias("cid"),
-                        F.col("embedding").alias("cvec"))
     got = sorted(map(tuple, ivf_topk(qs, None, cents, k=3, lists=lists).collect()))
-    exp = sorted(map(tuple, ivf_topk(qs, corpus, cents, k=3).collect()))
+    exp = sorted(map(tuple, ivf_topk(qs, _corpus(emb), cents, k=3).collect()))
     assert got == exp and len(got) == 9
 
     # streaming verb: two epochs through the manifest sink, custom cols
@@ -1020,8 +1031,8 @@ def test_embeddingset_append_and_stream_facade(spark, tmp_path):
     w = CheckpointedWriter(spark, str(tmp_path / "sidx"))
     stream = (spark.readStream.schema(delta.select("vec_id", "embedding").schema)
               .option("maxFilesPerTrigger", 1).parquet(sd))
-    eng.embeddings(delta).stream_into_index(
-        stream, cents, w, str(tmp_path / "ck")).awaitTermination()
+    start_index_ingest(stream, cents, w, str(tmp_path / "ck"),
+                       cid="vec_id", cvec="embedding").awaitTermination()
     srows = sorted(map(tuple, read_stream_index(w)
                        .select("vec_id", "list_id").collect()))
     brows = sorted(map(tuple, ivf_assign(delta, cents, cid="vec_id",
@@ -1231,6 +1242,19 @@ def test_ivf_assign_edge_semantics(spark):
     got = {r["cid"]: r["list_id"] for r in ivf_assign(corpus, cents).collect()}
     assert got == {1: 3, 2: 3, 3: 3, 4: 3, 5: 3, 6: 3, 7: 5}
     assert ivf_assign(corpus, cents.filter(F.lit(False))).count() == 0
+
+
+def test_ivf_assign_null_list_id_is_a_clear_error(spark):
+    """A NULL centroid list id has no list to assign into: ivf_assign
+    names the column instead of failing inside its min()."""
+    from gdal_drivers_spark.operators.similarity import ivf_assign
+
+    cents = spark.createDataFrame(
+        [(None, [1.0, 0.0]), (5, [0.0, 1.0])], "list_id long, center array<double>"
+    )
+    corpus = spark.createDataFrame([(1, [2.0, 1.0])], "cid long, cvec array<double>")
+    with pytest.raises(ValueError, match="list_id"):
+        ivf_assign(corpus, cents)
 
 
 def test_lsh_bucket_kernel_parity_poison(spark):

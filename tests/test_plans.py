@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from gdal_drivers_spark.core import qcell
 from gdal_drivers_spark.plans.checkpoint import CheckpointedWriter
-from gdal_drivers_spark.plans.lineage import Counters, lineage_records
+from gdal_drivers_spark.plans.lineage import lineage_records
 from gdal_drivers_spark.plans.skew import (
     cell_census,
     hot_cells,
@@ -87,20 +87,6 @@ def test_lineage_checksum_order_insensitive(spark):
     tot_b = b.agg(F.sum("n_rows"), F.expr("bit_xor(checksum)")).collect()[0]
     assert tot_a == tot_b
     assert tot_a[0] == 1000
-
-
-def test_counters(spark):
-    c = Counters(spark, "decoded", "rejected")
-    df = spark.range(100)
-
-    def bump(it):
-        for pdf in it:
-            c.add("decoded", len(pdf))
-            yield pdf
-
-    df.mapInPandas(bump, "id long").count()
-    assert c.value("decoded") == 100
-    assert c.snapshot()["rejected"] == 0
 
 
 def test_bucket_lineage_engine_portable(spark):

@@ -30,3 +30,32 @@ def test_spark_submit_py_files_flagship():
     res = json.loads(line)
     assert res["rows"] == 8
     assert res["regions"] == [f"r{i}" for i in range(8)]
+
+
+def test_package_zip_ships_the_running_checkout(tmp_path):
+    """A second checkout with one edited file gets its own zip, and
+    that zip holds the edited bytes — never the other checkout's code."""
+    import sys
+    import zipfile
+
+    import gdal_drivers_spark as g
+
+    shutil.copytree(os.path.join(REPO, "gdal_drivers_spark"),
+                    tmp_path / "gdal_drivers_spark",
+                    ignore=shutil.ignore_patterns("__pycache__"))
+    edited = tmp_path / "gdal_drivers_spark" / "engine.py"
+    edited.write_bytes(edited.read_bytes() + b"# edited copy\n")
+    out = subprocess.run(
+        [sys.executable, "-c",
+         "import gdal_drivers_spark as g; print(g.package_zip())"],
+        capture_output=True, text=True, timeout=120, cwd=tmp_path,
+        env={**os.environ, "PYTHONPATH": str(tmp_path)},
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    copy_zip = out.stdout.strip().splitlines()[-1]
+    try:
+        assert copy_zip != g.package_zip()
+        with zipfile.ZipFile(copy_zip) as z:
+            assert z.read("gdal_drivers_spark/engine.py") == edited.read_bytes()
+    finally:
+        os.unlink(copy_zip)

@@ -1,5 +1,5 @@
 """Warp resample, solid constant raster, mask file codec, halo join,
-engine facade — parity vs scalar oracles."""
+operator compositions — parity vs scalar oracles."""
 
 import numpy as np
 import pandas as pd
@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from gdal_drivers_spark.core import codecs, maskfile, qcell
-from gdal_drivers_spark.engine import Engine, to_ini
+from gdal_drivers_spark.engine import to_ini
 from gdal_drivers_spark.operators.halo import with_halo
 from gdal_drivers_spark.operators.solid import (
     constant_tile,
@@ -187,54 +187,60 @@ def test_halo_join_fanout(spark):
     assert (0, 0) in by_target[int(qcell.pack(3, 1, 1))]
 
 
-# --------------------------------------------------------------- engine
+# ------------------------------------------------------- compositions
 
 def test_engine_fluent_pipeline(spark):
-    eng = Engine(spark)
-    imgs = eng.synthetic_images(64)
-    assigned = imgs.assign(z=5)
-    census = assigned.census().collect()
-    assert sum(r["count"] for r in census) == assigned.df.count()
+    from gdal_drivers_spark.operators.assign import assign_tiles
+    from gdal_drivers_spark.plans.skew import cell_census
+
+    assigned = assign_tiles(synth.images_df(spark, 64), z=5)
+    census = cell_census(assigned).collect()
+    assert sum(r["count"] for r in census) == assigned.count()
     ini = to_ini({"z": 5, "bands": [1, 2]})
     assert "[job]" in ini and "z = 5" in ini
 
 
 def test_engine_image_pipeline_ops(spark):
-    """Facade: features / resize / phash near-dups compose off ImageSet."""
-    eng = Engine(spark)
-    imgs = eng.synthetic_images(32)
-    feats = imgs.features(bins=16).collect()
+    """features / resize / phash near-dups compose over one image set."""
+    from gdal_drivers_spark.operators.dedup import phash_near_dup
+    from gdal_drivers_spark.operators.multimodal import image_features, resize_images
+
+    imgs = synth.images_df(spark, 32)
+    feats = image_features(imgs, bins=16).collect()
     assert len(feats) == 32
     # histogram mass = pixels × channels (feat is channel-concatenated)
     assert all(
         sum(r["feat"]) == r["n_pixels"] * (len(r["feat"]) // 16) for r in feats
     )
-    small = imgs.resize(8, 8)
-    got = small.df.select("w", "h").distinct().collect()
+    small = resize_images(imgs, 8, 8)
+    got = small.select("w", "h").distinct().collect()
     assert [(r["w"], r["h"]) for r in got] == [(8, 8)]
-    pairs = imgs.phash_near_dups()  # splitmix phashes: no near pairs expected
+    pairs = phash_near_dup(imgs)  # splitmix phashes: no near pairs expected
     assert pairs.count() == 0  # exactness proven in test_pipeline_ops/oracle
 
 
 def test_engine_embeddings_facade(spark):
-    """EmbeddingSet: exact / cosine / IVF top-k all rank the query's
-    own vector first when it queries its own corpus."""
-    from pyspark.sql import functions as F
+    """Exact / cosine / IVF top-k all rank the query's own vector first
+    when it queries its own corpus."""
+    from gdal_drivers_spark.operators.similarity import (
+        brute_topk, cosine_topk, ivf_topk, ivf_train,
+    )
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    es = Engine(spark).embeddings(emb)
+    corpus = emb.select(F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec"))
     qs = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
-    for out in (es.topk(qs, k=3), es.cosine_topk(qs, k=3), es.ivf_topk(qs, k=3)):
+    cents = ivf_train(corpus, n_lists=8, iters=0)
+    for out in (brute_topk(qs, corpus, k=3), cosine_topk(qs, corpus, k=3),
+                ivf_topk(qs, corpus, cents, k=3)):
         rank1 = {r["qid"]: r["cid"] for r in out.collect() if r["rank"] == 1}
         assert len(rank1) == 5 and all(rank1[q] == q for q in rank1)
 
 
 def test_engine_solid_and_blend(spark):
-    eng = Engine(spark)
-    tiles = eng.solid(128, 128, [(42, "u8")], tile_px=64)
-    assert tiles.df.count() == 4
+    tiles = solid_tiles(spark, 128, 128, [(42, "u8")], tile_px=64)
+    assert tiles.count() == 4
 
 
 def test_warp_cover_is_distributed_no_localtablescan(spark):
@@ -436,10 +442,12 @@ def test_warp_utm_to_webmercator_composed(spark):
 
 
 def test_engine_tileset_dem_zonal_verbs(spark):
-    """r03 facade verbs: TileSet.hillshade/horn_gradients/convolve3x3/
-    with_halo_strips/zonal delegate to the operators unchanged."""
+    """r03: hillshade / horn_gradients / halo_convolve /
+    with_halo_strips / zonal_stats over one small tile set."""
     from gdal_drivers_spark.core import qcell
-    from gdal_drivers_spark.operators.dem import hillshade_np
+    from gdal_drivers_spark.operators.dem import hillshade, hillshade_np, horn_gradients
+    from gdal_drivers_spark.operators.halo import halo_convolve, with_halo_strips
+    from gdal_drivers_spark.operators.zonal import zonal_stats
 
     t = 8
     rng = np.random.default_rng(21)
@@ -448,13 +456,12 @@ def test_engine_tileset_dem_zonal_verbs(spark):
         pd.DataFrame([(int(qcell.pack(2, 0, 0)), img.tobytes())],
                      columns=["cell", "tile"])
     )
-    ts = Engine(spark).tiles(tiles)
-    hs = ts.hillshade(t).collect()
+    hs = hillshade(tiles, t).collect()
     assert (np.frombuffer(bytes(hs[0]["tile"]), np.uint8).reshape(t, t)
             == hillshade_np(img)).all()
-    assert ts.horn_gradients(t).collect()[0]["n_px"] == t * t
-    assert len(ts.convolve3x3(t).collect()) == 1
-    assert ts.with_halo_strips(t).count() == 4  # self + 3 in-bounds neighbors
+    assert horn_gradients(tiles, t).collect()[0]["n_px"] == t * t
+    assert len(halo_convolve(tiles, t).collect()) == 1
+    assert with_halo_strips(tiles, t).count() == 4  # self + 3 in-bounds neighbors
     # zonal goes through the codec registry (magic sniff) — encoded
     # payloads, unlike the DEM ops' raw elevation bytes
     enc = spark.createDataFrame(
@@ -465,7 +472,7 @@ def test_engine_tileset_dem_zonal_verbs(spark):
     zones = spark.createDataFrame(
         pd.DataFrame([(int(qcell.pack(2, 0, 0)), "za")], columns=["cell", "zone"])
     )
-    z = Engine(spark).tiles(enc).zonal(zones).collect()
+    z = zonal_stats(enc, zones).collect()
     assert z[0]["zone"] == "za" and z[0]["n_px"] == t * t
 
 
