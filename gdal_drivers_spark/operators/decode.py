@@ -73,7 +73,11 @@ def decode_stats(images: DataFrame, bytes_col: str = "bytes", fmt_col: str = "fm
     # projection and evaluate the decode UDF TWICE — the r05 bench plan
     # showed two ArrowEvalPython nodes, i.e. every image decoded twice.
     # Values are unaffected; the flag only forbids duplicating or
-    # reordering the (expensive) evaluation.
+    # reordering the (expensive) evaluation. It also blocks pushdown of
+    # ANY later filter below this projection, including filters on
+    # source or partition columns that could prune the scan: callers
+    # should filter those columns BEFORE decode_stats, or every row is
+    # decoded. Pinned by test_poison::test_decode_stats_filter_decodes_once.
     dec = _decode.asNondeterministic()
     return images.withColumn("_d", dec(F.col(bytes_col), F.col(fmt_col))).select(
         "*", "_d.*"

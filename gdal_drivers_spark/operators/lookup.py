@@ -72,7 +72,6 @@ def sample_points(
     px: str = "px",
     py: str = "py",
     grid_origin: tuple = (0, 0),
-    broadcast_points: bool = True,
 ) -> DataFrame:
     """gdallocationinfo, set-at-a-time: sample the pixel value under
     each point of ``points`` (global integer pixel coords ``px``/
@@ -84,8 +83,7 @@ def sample_points(
     byte extraction is ``conv(hex(substring(tile, off, 1)), 16, 10)``
     — one whole-stage-codegen projection, no Python worker, no Arrow
     hop; the only exchange is the point⇄tile equi-join on the cell id
-    (points broadcast by default; ``broadcast_points=False`` for bulk
-    sampling lets AQE pick SMJ — the r04 large-|Q| rule). Points
+    (points broadcast). Points
     outside the tile grid or on a missing tile produce NO row (inner
     join — gdallocationinfo prints "outside raster"; set-at-a-time
     the analogue is absence, same rule as ``fetch_tiles``); a
@@ -110,9 +108,7 @@ def sample_points(
             + F.col("_tx") * F.lit(1 << 26) + F.col("_ty"),
         )
     )
-    if broadcast_points:
-        pts = F.broadcast(pts)
-    joined = pts.join(
+    joined = F.broadcast(pts).join(
         tiles.select(F.col(cell).alias("_cell"), F.col(tile_col).alias("_tile")),
         "_cell",
     )

@@ -1,6 +1,7 @@
 """Similarity search over embedding columns (array<float>).
 
-Two paths, both standard at scale:
+Each function has one plan, chosen by the shape of its inputs — there
+are no join-shape flags. The paths, all standard at scale:
 
 - **brute-force top-k** (the exactness baseline): query×corpus dot
   products as JVM-side higher-order functions (``zip_with`` +
@@ -16,7 +17,13 @@ Two paths, both standard at scale:
   (here: deterministic pseudo-hyperplanes from fixed integer seeds —
   no runtime RNG) bucket the corpus; queries probe their own bucket ±
   multiprobe flips. Approximate: recall measured against brute force
-  in tests, not hash-matched against an oracle.
+  in tests, not hash-matched against an oracle. Two shapes, two
+  functions: ``lsh_topk`` serves a small query batch (queries
+  broadcast), ``knn_graph`` builds the corpus self-kNN graph (ids-only
+  shuffle join on the bucket, no broadcast).
+
+- **IVF / PQ / IVF-PQ** (the index paths): inverted-list probing and
+  product-quantized codes, probe side broadcast.
 
 - **embedding near-dup pairs**: all corpus pairs above an integer dot
   threshold — exact (for the oracle) via a self-join pruned by LSH
@@ -63,6 +70,19 @@ def dot_int(a, b):
     )
 
 
+def _rank_topk(scored: DataFrame, k: int, score: str, qid: str, cid: str) -> DataFrame:
+    """Per-query top-k of ``scored`` (``_qid``, ``_cid``, ``score``):
+    ``row_number`` over (score desc, cid asc), rank ≤ k — the one
+    ranking rule every top-k here and its SQL oracle share. Output:
+    (qid, cid, score, rank)."""
+    w = Window.partitionBy("_qid").orderBy(F.desc(score), F.col("_cid"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(F.col("_qid").alias(qid), F.col("_cid").alias(cid), score, "rank")
+    )
+
+
 def brute_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -79,12 +99,7 @@ def brute_topk(
     scored = c.join(F.broadcast(q), F.col("_qid").isNotNull()).select(
         "_qid", "_cid", dot_int(F.col("_qv"), F.col("_cv")).alias("dot_q")
     )
-    w = Window.partitionBy("_qid").orderBy(F.desc("dot_q"), F.col("_cid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(F.col("_qid").alias(qid), F.col("_cid").alias(cid), "dot_q", "rank")
-    )
+    return _rank_topk(scored, k, "dot_q", qid, cid)
 
 
 def _plane_sign(vec_q, plane: int, dim: int):
@@ -220,6 +235,32 @@ def _lsh_buckets_udf(dim: int, n_planes: int, n_tables: int):
     return _buckets
 
 
+def _lsh_base(df: DataFrame, id_col: str, vec_col: str, alias_id: str,
+              alias_vec: str, buckets_udf) -> DataFrame:
+    """(id, quantized vec, ``_bs`` = every table's bucket): one scan and
+    one Arrow hop for all tables (``_lsh_buckets_udf``, bit-identical
+    to ``lsh_bucket``)."""
+    return df.select(
+        F.col(id_col).alias(alias_id), quantize(F.col(vec_col)).alias(alias_vec)
+    ).select(alias_id, alias_vec, buckets_udf(F.col(alias_vec)).alias("_bs"))
+
+
+def _by_table(base: DataFrame, *keep: str) -> DataFrame:
+    """``keep`` plus one (``_t``, ``_b``) row per table membership — a
+    JVM posexplode of ``_bs``; ``_t`` is the table index."""
+    return base.select(*keep, F.posexplode("_bs").alias("_t", "_b"))
+
+
+def _multiprobe(side: DataFrame, n_planes: int) -> DataFrame:
+    """Radius-1 multiprobe: every (``_t``, ``_b``) row also probes the
+    ``n_planes`` buckets one sign flip away."""
+    flips = [F.col("_b").bitwiseXOR(F.lit(1 << i)).cast("long") for i in range(n_planes)]
+    return side.select(
+        *[c for c in side.columns if c != "_b"],
+        F.explode(F.array(F.col("_b"), *flips)).alias("_b"),
+    )
+
+
 def lsh_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -232,29 +273,14 @@ def lsh_topk(
     cvec: str = "cvec",
     probe_bits: int = 0,
     n_tables: int = 4,
-    broadcast_queries: bool = True,
-    exclude_self: bool = False,
-    self_join: bool = False,
 ) -> DataFrame:
-    """Approximate top-k: score only same-bucket candidates. Recall is
-    a test property (vs brute_topk), not a parity contract.
+    """Approximate top-k serving: score only same-bucket candidates.
+    Recall is a test property (vs brute_topk), not a parity contract.
 
-    ``self_join=True`` declares that ``queries`` IS ``corpus`` (the
-    kNN-graph case): the quantized+bucketed base is then built ONCE and
-    materialized (``localCheckpoint`` — the LSH index you would persist
-    anyway at 10⁹ vectors), and both join sides and both score-time
-    vector frames derive from it. Without it the planner computes the
-    bucket kernel once per side and re-quantizes per attach frame —
-    four scans of the same input (r06).
-
-    ``broadcast_queries`` (r04, VERDICT #3): the default broadcasts the
-    (small) query side — right for query serving, fatal when
-    queries == corpus (kNN-graph construction: the broadcast is the
-    whole ×n_tables×(1+probes) exploded corpus). ``False`` drops the
-    hint so Catalyst/AQE plans a shuffle join on the (table, bucket)
-    equi-key — both sides partition by the same key, no replication.
-    ``exclude_self`` removes qid == cid pairs before ranking (a graph
-    wants neighbors, not the trivial self-edge).
+    Plan shape: the (small) query side is broadcast, so the corpus is
+    scored in its own map stage and never shuffles before the per-pair
+    rollup. For queries == corpus use ``knn_graph``, whose broadcast
+    side would otherwise be the whole ×n_tables exploded corpus.
 
     Two standard recall levers, composable:
     - ``n_tables`` (OR-amplification, the default lever): L
@@ -269,111 +295,17 @@ def lsh_topk(
       candidates."""
     n_tables = max(1, n_tables)
     buckets_udf = _lsh_buckets_udf(dim, n_planes, n_tables)
-
-    def side(df, id_col, vec_col, alias_id, alias_vec):
-        # r06 (guide §4.2, §2.3): ONE scan + one Arrow hop computing
-        # every table's bucket (exact int64 matmul, bit-identical to
-        # lsh_bucket — see _lsh_buckets_udf) + a JVM posexplode,
-        # replacing the L-way union that re-scanned the input and
-        # re-ran L×n_planes interpreted folds per row. _t is the array
-        # position — exactly the old union's lit(t).
-        base = df.select(
-            F.col(id_col).alias(alias_id),
-            quantize(F.col(vec_col)).alias(alias_vec),
-        ).select(
-            alias_id, alias_vec,
-            buckets_udf(F.col(alias_vec)).alias("_bs"),
-        )
-        return base.select(
-            alias_id, alias_vec, F.posexplode("_bs").alias("_t", "_b")
-        )
-
-    qv_frame = cv_frame = None
-    if self_join:
-        base = corpus.select(
-            F.col(cid).alias("_cid"), quantize(F.col(cvec)).alias("_cv")
-        ).select(
-            "_cid", "_cv", buckets_udf(F.col("_cv")).alias("_bs")
-        ).localCheckpoint(eager=True)
-        c = base.select("_cid", "_cv", F.posexplode("_bs").alias("_t", "_b"))
-        q = c.select(
-            F.col("_cid").alias("_qid"), F.col("_cv").alias("_qv"), "_t", "_b"
-        )
-        qv_frame = base.select(
-            F.col("_cid").alias("_qid"), F.col("_cv").alias("_qv")
-        )
-        cv_frame = base.select("_cid", "_cv")
-    else:
-        q = side(queries, qid, qvec, "_qid", "_qv")
+    q = _by_table(_lsh_base(queries, qid, qvec, "_qid", "_qv", buckets_udf), "_qid", "_qv")
     if probe_bits >= 1:
-        q = q.select(
-            "_qid",
-            "_qv",
-            "_t",
-            F.explode(
-                F.array(
-                    F.col("_b"),
-                    *[
-                        F.col("_b").bitwiseXOR(F.lit(1 << i)).cast("long")
-                        for i in range(n_planes)
-                    ],
-                )
-            ).alias("_b"),
-        )
-    if not self_join:
-        c = side(corpus, cid, cvec, "_cid", "_cv")
-    if broadcast_queries:
-        # serving shape: queries broadcast, the corpus is scored in its
-        # own map stage and never shuffles before the per-pair rollup
-        scored = c.join(F.broadcast(q), ["_t", "_b"]).select(
-            "_qid", "_cid", dot_int(F.col("_qv"), F.col("_cv")).alias("dot_q")
-        )
-        if exclude_self:
-            scored = scored.filter(F.col("_qid") != F.col("_cid"))
-        # a pair found in several tables scores identically each time —
-        # collapse before ranking so row_number sees one row per candidate
-        scored = scored.groupBy("_qid", "_cid").agg(F.max("dot_q").alias("dot_q"))
-    else:
-        # self-join / bulk shape (r06, guide §8 "decide with small
-        # rows, move payloads once"): the (table, bucket) equi-join
-        # carries ONLY ids — a hot bucket's |q_b|·|c_b| pair blow-up is
-        # 16-byte rows, not vector payloads — then pairs are DEDUPED
-        # across tables (distinct on skinny keys, map-side partial agg)
-        # BEFORE any dim-length arithmetic, and vectors are attached
-        # once per distinct pair. At r05 the old shape scored every
-        # occurrence first: 3.1 M interpreted dots on the bench corpus
-        # for 1.96 M distinct pairs, with both vector payloads riding
-        # the bucket join. No broadcast hint anywhere — Catalyst/AQE
-        # plan shuffle joins on the equi-keys (the knn_graph
-        # no-broadcast contract).
-        cand = (
-            c.select("_cid", "_t", "_b")
-            .join(q.select("_qid", "_t", "_b"), ["_t", "_b"])
-            .select("_qid", "_cid")
-        )
-        if exclude_self:
-            cand = cand.filter(F.col("_qid") != F.col("_cid"))
-        cand = cand.distinct()
-        if qv_frame is None:
-            qv_frame = queries.select(
-                F.col(qid).alias("_qid"), quantize(F.col(qvec)).alias("_qv")
-            )
-            cv_frame = corpus.select(
-                F.col(cid).alias("_cid"), quantize(F.col(cvec)).alias("_cv")
-            )
-        scored = (
-            cand.join(qv_frame, "_qid")
-            .join(cv_frame, "_cid")
-            .select(
-                "_qid", "_cid", dot_int(F.col("_qv"), F.col("_cv")).alias("dot_q")
-            )
-        )
-    w = Window.partitionBy("_qid").orderBy(F.desc("dot_q"), F.col("_cid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(F.col("_qid").alias(qid), F.col("_cid").alias(cid), "dot_q", "rank")
+        q = _multiprobe(q, n_planes)
+    c = _by_table(_lsh_base(corpus, cid, cvec, "_cid", "_cv", buckets_udf), "_cid", "_cv")
+    scored = c.join(F.broadcast(q), ["_t", "_b"]).select(
+        "_qid", "_cid", dot_int(F.col("_qv"), F.col("_cv")).alias("dot_q")
     )
+    # a pair found in several tables scores identically each time —
+    # collapse before ranking so row_number sees one row per candidate
+    scored = scored.groupBy("_qid", "_cid").agg(F.max("dot_q").alias("dot_q"))
+    return _rank_topk(scored, k, "dot_q", qid, cid)
 
 
 def knn_graph(
@@ -389,19 +321,51 @@ def knn_graph(
     """Corpus self-kNN via LSH — the kNN-GRAPH construction shape
     (dedup graphs, clustering seeds): queries = corpus, so NEITHER
     side may broadcast (at 10⁹ vectors the broadcast side would be the
-    whole ×n_tables exploded corpus). Compiles to a shuffle join on
-    the (table, bucket) equi-key — both sides hash-partition the same
-    way, cost Σ per-bucket |q_b|·|c_b| like every other bucketed pair
-    generator in the engine. Self-edges excluded. Output:
+    whole ×n_tables exploded corpus). Self-edges excluded. Output:
     (qid, cid, dot_q, rank ≤ k) — qid ranges over the corpus ids.
     Deterministic plane family → bit-exact SQL oracle (``knn_graph``);
-    recall vs brute force is the pytest property (VERDICT r03 #5)."""
-    q = corpus.select(F.col(cid).alias("_gq"), F.col(cvec).alias("_gv"))
-    return lsh_topk(
-        q, corpus, dim, k=k, n_planes=n_planes, n_tables=n_tables,
-        probe_bits=probe_bits, qid="_gq", qvec="_gv", cid=cid, cvec=cvec,
-        broadcast_queries=False, exclude_self=True, self_join=True,
-    ).withColumnRenamed("_gq", "qid")
+    recall vs brute force is the pytest property (VERDICT r03 #5).
+
+    Plan shape (decide with small rows, move payloads once): the
+    quantized+bucketed corpus is built ONCE and materialized, and both
+    join sides and both score-time vector frames derive from it. The
+    (table, bucket) equi-join carries ONLY
+    ids — a hot bucket's |q_b|·|c_b| pair blow-up is 16-byte rows,
+    not vector payloads — and Catalyst/AQE plan it as a shuffle join
+    (both sides hash-partition the same way, cost Σ per-bucket
+    |q_b|·|c_b|).
+    Pairs are deduped across tables (``distinct`` on skinny keys,
+    map-side partial agg) BEFORE any dim-length arithmetic, and
+    vectors are attached once per distinct pair.
+
+    Preconditions:
+    - ``cid`` must be unique. Vectors are attached by joining on the
+      id, so a duplicated id re-expands a distinct pair into duplicate
+      ranked rows (``lsh_topk``'s per-pair ``max`` collapse has no such
+      failure).
+    - The base is ``localCheckpoint``ed when the plan is built (an
+      eager job). Its blocks live only on executors: losing an executor
+      fails the job, with no lineage to recompute them from."""
+    n_tables = max(1, n_tables)
+    base = _lsh_base(
+        corpus, cid, cvec, "_cid", "_cv", _lsh_buckets_udf(dim, n_planes, n_tables)
+    ).localCheckpoint(eager=True)
+    c = _by_table(base, "_cid")
+    q = c.select(F.col("_cid").alias("_qid"), "_t", "_b")
+    if probe_bits >= 1:
+        q = _multiprobe(q, n_planes)
+    pairs = (
+        c.join(q, ["_t", "_b"])
+        .select("_qid", "_cid")
+        .filter(F.col("_qid") != F.col("_cid"))
+        .distinct()
+    )
+    scored = (
+        pairs.join(base.select(F.col("_cid").alias("_qid"), F.col("_cv").alias("_qv")), "_qid")
+        .join(base.select("_cid", "_cv"), "_cid")
+        .select("_qid", "_cid", dot_int(F.col("_qv"), F.col("_cv")).alias("dot_q"))
+    )
+    return _rank_topk(scored, k, "dot_q", "qid", cid)
 
 
 def ivf_train(
@@ -724,9 +688,9 @@ def read_ivf_index(spark, table: str | None = None, path: str | None = None) -> 
     The index's residual flag is resolved HERE, once per read — from
     the ``gds.residual`` table property (one catalog RPC, no job) when
     reading a table, else one aggregate over the boolean column — and
-    cached on the returned frame, so ``ivfpq_topk``'s default
-    ``check_residual=True`` costs a hot serving loop nothing (the
-    pre-r05 behavior re-scanned the whole index every call)."""
+    cached on the returned frame, so ``ivfpq_topk``'s residual check
+    costs a hot serving loop nothing (the pre-r05 behavior re-scanned
+    the whole index every call)."""
     if (table is None) == (path is None):
         raise ValueError("read_ivf_index takes exactly one of table= or path=")
     df = spark.table(table) if table is not None else spark.read.parquet(path)
@@ -744,6 +708,23 @@ def read_ivf_index(spark, table: str | None = None, path: str | None = None) -> 
     return df
 
 
+def _probe_lists(
+    queries: DataFrame, centroids: DataFrame, nprobe: int, qid: str, qvec: str
+) -> DataFrame:
+    """Each query's ``nprobe`` nearest IVF lists by quantized dot to the
+    broadcast centroid table, ties → smaller list id:
+    (``_qid``, ``_qv``, ``_lid``, ``_d`` = dot(q, centroid), ``_pr``)."""
+    cents = centroids.select(
+        F.col("list_id").alias("_lid"), quantize(F.col("center")).alias("_ctv")
+    )
+    q = queries.select(F.col(qid).alias("_qid"), quantize(F.col(qvec)).alias("_qv"))
+    qscored = q.join(F.broadcast(cents), F.lit(True)).select(
+        "_qid", "_qv", "_lid", dot_int(F.col("_qv"), F.col("_ctv")).alias("_d")
+    )
+    wq = Window.partitionBy("_qid").orderBy(F.desc("_d"), F.col("_lid"))
+    return qscored.withColumn("_pr", F.row_number().over(wq)).filter(F.col("_pr") <= nprobe)
+
+
 def ivf_topk(
     queries: DataFrame,
     corpus: DataFrame | None,
@@ -755,7 +736,6 @@ def ivf_topk(
     qvec: str = "qvec",
     cvec: str = "cvec",
     lists: DataFrame | None = None,
-    broadcast_probes: bool = True,
 ) -> DataFrame:
     """IVF-Flat approximate top-k: corpus is bucketed into inverted
     lists (``ivf_assign``); each query probes its ``nprobe`` nearest
@@ -771,14 +751,9 @@ def ivf_topk(
     the corpus — ``corpus`` may then be None. The convenience default
     (lists=None) assigns in-line.
 
-    ``broadcast_probes`` (VERDICT r04 #2, the lsh_topk
-    ``broadcast_queries`` fix applied here): the default broadcasts
-    the probe frame — right for serving batches, where it is
-    |Q|·nprobe rows carrying one quantized query vector each. A BULK
-    re-scoring run with |Q| ~ 10⁸ explodes that broadcast exactly the
-    way lsh_topk's query side did pre-r04; pass ``False`` to drop the
-    hint so Catalyst/AQE plans a shuffle join on the ``list_id``
-    equi-key (both sides hash-partition the same way)."""
+    The probe frame — |Q|·nprobe rows carrying one quantized query
+    vector each — is broadcast, the serving shape: the lists side is
+    scored in its own map stage."""
     if lists is None:
         if corpus is None:
             raise ValueError("ivf_topk needs either corpus or a prebuilt lists index")
@@ -787,29 +762,13 @@ def ivf_topk(
         missing = {cid, "list_id", "_cv"} - set(lists.columns)
         if missing:
             raise ValueError(f"prebuilt lists index lacks columns {sorted(missing)}")
-    cents = centroids.select(
-        F.col("list_id").alias("_lid"), quantize(F.col("center")).alias("_ctv")
+    probes = _probe_lists(queries, centroids, nprobe, qid, qvec).select(
+        "_qid", "_qv", F.col("_lid").alias("list_id")
     )
-    q = queries.select(F.col(qid).alias("_qid"), quantize(F.col(qvec)).alias("_qv"))
-    qscored = q.join(F.broadcast(cents), F.lit(True)).select(
-        "_qid", "_qv", "_lid", dot_int(F.col("_qv"), F.col("_ctv")).alias("_d")
-    )
-    wq = Window.partitionBy("_qid").orderBy(F.desc("_d"), F.col("_lid"))
-    probes = (
-        qscored.withColumn("_pr", F.row_number().over(wq))
-        .filter(F.col("_pr") <= nprobe)
-        .select("_qid", "_qv", F.col("_lid").alias("list_id"))
-    )
-    probe_side = F.broadcast(probes) if broadcast_probes else probes
-    scored = lists.join(probe_side, "list_id").select(
+    scored = lists.join(F.broadcast(probes), "list_id").select(
         "_qid", F.col(cid).alias("_cid"), dot_int(F.col("_qv"), F.col("_cv")).alias("dot_q")
     )
-    w = Window.partitionBy("_qid").orderBy(F.desc("dot_q"), F.col("_cid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(F.col("_qid").alias(qid), F.col("_cid").alias(cid), "dot_q", "rank")
-    )
+    return _rank_topk(scored, k, "dot_q", qid, cid)
 
 
 def near_dup_pairs(
@@ -878,12 +837,7 @@ def cosine_topk(
     # (≤2⁵³), so the oracle contract is unchanged where it applied
     cos = F.col("_dot") / F.sqrt(F.col("_n1").cast("double") * F.col("_n2").cast("double"))
     scored = scored.withColumn("cos_q6", F.round(cos * 1e6).cast("long"))
-    w = Window.partitionBy("_qid").orderBy(F.desc("cos_q6"), F.col("_cid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(F.col("_qid").alias(qid), F.col("_cid").alias(cid), "cos_q6", "rank")
-    )
+    return _rank_topk(scored, k, "cos_q6", qid, cid)
 
 
 # ------------------------------------------------------------------ PQ
@@ -1074,11 +1028,22 @@ def pq_topk(
     scored = encoded.join(F.broadcast(q), F.col("_qid").isNotNull()).select(
         "_qid", F.col(cid).alias("_cid"), score.alias("adc_q")
     )
-    w = Window.partitionBy("_qid").orderBy(F.desc("adc_q"), F.col("_cid"))
+    return _rank_topk(scored, k, "adc_q", qid, cid)
+
+
+def _residual_frame(
+    corpus: DataFrame, centroids: DataFrame, cid: str, cvec: str
+) -> DataFrame:
+    """(cid, list_id, ``_r`` = x − centroid(list)): one ``ivf_assign``
+    pass + a broadcast join of the quantized centroids, exact ints."""
+    cents = centroids.select(F.col("list_id"), quantize(F.col("center")).alias("_ctv"))
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(F.col("_qid").alias(qid), F.col("_cid").alias(cid), "adc_q", "rank")
+        ivf_assign(corpus, centroids, cid=cid, cvec=cvec)
+        .join(F.broadcast(cents), "list_id")
+        .select(
+            F.col(cid), "list_id",
+            F.zip_with(F.col("_cv"), F.col("_ctv"), lambda a, b: a - b).alias("_r"),
+        )
     )
 
 
@@ -1105,32 +1070,21 @@ def ivfpq_encode(
     re-joined broadcast (tiny), so the encode still adds no shuffle
     beyond the assignment's one row per vector. ``codewords`` must
     then quantize residuals (``ivfpq_codewords_from_sample``)."""
-    assigned = ivf_assign(corpus, centroids, cid=cid, cvec=cvec)
     codes_udf = _pq_codes_udf(codewords, m)
     # the `_residual` literal rides along (constant-folded, RLE'd on
     # disk) so a PERSISTED index remembers which scoring decomposition
     # its codes expect — ivfpq_topk(encoded=...) refuses a mismatch
     # instead of silently mis-ranking (r04 review)
     if not residual:
-        return assigned.select(
+        return ivf_assign(corpus, centroids, cid=cid, cvec=cvec).select(
             F.col(cid), "list_id",
             codes_udf(F.col("_cv")).alias("codes"),
             F.lit(False).alias("_residual"),
         )
-    cents = centroids.select(
-        F.col("list_id"), quantize(F.col("center")).alias("_ctv")
-    )
-    return (
-        assigned.join(F.broadcast(cents), "list_id")
-        .select(
-            F.col(cid), "list_id",
-            F.zip_with(F.col("_cv"), F.col("_ctv"), lambda a, b: a - b).alias("_r"),
-        )
-        .select(
-            F.col(cid), "list_id",
-            codes_udf(F.col("_r")).alias("codes"),
-            F.lit(True).alias("_residual"),
-        )
+    return _residual_frame(corpus, centroids, cid, cvec).select(
+        F.col(cid), "list_id",
+        codes_udf(F.col("_r")).alias("codes"),
+        F.lit(True).alias("_residual"),
     )
 
 
@@ -1145,15 +1099,10 @@ def ivfpq_codewords_from_sample(
     residuals (x − assigned centroid, exact ints) of the ``ncodes``
     corpus vectors with the smallest engine-portable spread hash —
     the residual-space analogue of ``pq_codewords_from_sample``."""
-    assigned = ivf_assign(corpus, centroids, cid=cid, cvec=cvec)
-    cents = centroids.select(F.col("list_id"), quantize(F.col("center")).alias("_ctv"))
     spread = _spread_key(cid)
     rows = (
-        assigned.join(F.broadcast(cents), "list_id")
-        .select(
-            F.zip_with(F.col("_cv"), F.col("_ctv"), lambda a, b: a - b).alias("_r"),
-            spread.alias("_h"), F.col(cid).alias("_cid"),
-        )
+        _residual_frame(corpus, centroids, cid, cvec)
+        .select("_r", spread.alias("_h"), F.col(cid).alias("_cid"))
         .orderBy("_h", "_cid")
         .limit(ncodes)
         .collect()
@@ -1175,8 +1124,6 @@ def ivfpq_topk(
     cvec: str = "cvec",
     encoded: DataFrame | None = None,
     residual: bool = True,
-    broadcast_probes: bool = True,
-    check_residual: bool = True,
 ) -> DataFrame:
     """IVF-PQ — the standard composition at 10^12 vectors (Jégou et
     al. 2011): inverted-list probe reduction (IVF) × memory/arithmetic
@@ -1196,16 +1143,10 @@ def ivfpq_topk(
     without re-scanning or re-quantizing the corpus; ``corpus`` may
     then be None. The flag compatibility of a passed index is
     aggregate-validated (min==max of ``_residual`` — a heterogeneous
-    union/append is refused, ADVICE r04); ``check_residual=False``
-    skips that one extra job for hot serving loops whose index was
-    already validated at ``write_ivf_index``/``append_to_ivf_index``
-    time.
+    union/append is refused, ADVICE r04).
 
-    ``broadcast_probes=False`` (VERDICT r04 #2): as in ``ivf_topk`` —
-    drop the probe-side broadcast hint for bulk |Q| so AQE plans a
-    shuffle join on ``list_id``; the PQ probe rows additionally carry
-    the m×ncodes ADC tables, which makes the broadcast blow-up
-    earlier.
+    The probe frame (|Q|·nprobe rows, each carrying its m×ncodes ADC
+    tables) is broadcast, as in ``ivf_topk``.
 
     Deterministic exact integer arithmetic end-to-end → closed-form
     SQL oracle (``ann_ivfpq``); recall vs brute force is the pytest
@@ -1222,56 +1163,37 @@ def ivfpq_topk(
         missing = {cid, "list_id", "codes"} - set(encoded.columns)
         if missing:
             raise ValueError(f"prebuilt encoded index lacks columns {sorted(missing)}")
-        if check_residual:
-            # refuse an index whose codes were built under the OTHER
-            # scoring decomposition — the mismatch would mis-rank
-            # silently (raw codes + centroid offset, or vice versa).
-            # Aggregate-validated: a mixed-flag union/append raises
-            # inside _residual_flag (ADVICE r04 — the old sampled
-            # .first() let heterogeneous indexes through). The flag
-            # resolved by read_ivf_index (table property — no job) is
-            # honored when present, and an aggregate result is cached
-            # on the frame, so a serving loop reusing one index frame
-            # pays at most one validation job, not one per call.
-            flag = getattr(encoded, "_gds_residual_flag", _UNSET)
-            if flag is _UNSET:
-                flag = _residual_flag(encoded)
-                encoded._gds_residual_flag = flag
-            if flag is not None and flag != residual:
-                raise ValueError(
-                    f"encoded index was built with residual={flag} but "
-                    f"ivfpq_topk was called with residual={residual}"
-                )
-    cents = centroids.select(
-        F.col("list_id").alias("_lid"), quantize(F.col("center")).alias("_ctv")
-    )
-    q = queries.select(F.col(qid).alias("_qid"), quantize(F.col(qvec)).alias("_qv"))
-    qscored = q.join(F.broadcast(cents), F.lit(True)).select(
-        "_qid", "_qv", "_lid", dot_int(F.col("_qv"), F.col("_ctv")).alias("_d")
-    )
-    wq = Window.partitionBy("_qid").orderBy(F.desc("_d"), F.col("_lid"))
-    probes = (
-        qscored.withColumn("_pr", F.row_number().over(wq))
-        .filter(F.col("_pr") <= nprobe)
-        .select(
-            "_qid",
-            F.col("_lid").alias("list_id"),
-            F.col("_d"),
-            _pq_tables_expr(F.col("_qv"), codewords, m).alias("_tab"),
-        )
+        # refuse an index whose codes were built under the OTHER
+        # scoring decomposition — the mismatch would mis-rank
+        # silently (raw codes + centroid offset, or vice versa).
+        # Aggregate-validated: a mixed-flag union/append raises
+        # inside _residual_flag (ADVICE r04 — the old sampled
+        # .first() let heterogeneous indexes through). The flag
+        # resolved by read_ivf_index (table property — no job) is
+        # honored when present, and an aggregate result is cached
+        # on the frame, so a serving loop reusing one index frame
+        # pays at most one validation job, not one per call.
+        flag = getattr(encoded, "_gds_residual_flag", _UNSET)
+        if flag is _UNSET:
+            flag = _residual_flag(encoded)
+            encoded._gds_residual_flag = flag
+        if flag is not None and flag != residual:
+            raise ValueError(
+                f"encoded index was built with residual={flag} but "
+                f"ivfpq_topk was called with residual={residual}"
+            )
+    probes = _probe_lists(queries, centroids, nprobe, qid, qvec).select(
+        "_qid",
+        F.col("_lid").alias("list_id"),
+        F.col("_d"),
+        _pq_tables_expr(F.col("_qv"), codewords, m).alias("_tab"),
     )
     adc = _pq_adc_score(F.col("codes"), F.col("_tab"))
     score = (F.col("_d") + adc) if residual else adc
-    probe_side = F.broadcast(probes) if broadcast_probes else probes
-    scored = encoded.join(probe_side, "list_id").select(
+    scored = encoded.join(F.broadcast(probes), "list_id").select(
         "_qid", F.col(cid).alias("_cid"), score.alias("adc_q"),
     )
-    w = Window.partitionBy("_qid").orderBy(F.desc("adc_q"), F.col("_cid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(F.col("_qid").alias(qid), F.col("_cid").alias(cid), "adc_q", "rank")
-    )
+    return _rank_topk(scored, k, "adc_q", qid, cid)
 
 
 def ivfpq_train(
@@ -1294,17 +1216,9 @@ def ivfpq_train(
     Lloyd (``pq_train``) over it. Same bounded-driver contract: only
     the m·ncodes·d codebook leaves the cluster. Feed the result to
     ``ivfpq_encode``/``ivfpq_topk`` with ``residual=True``."""
-    cents = centroids.select(F.col("list_id"), quantize(F.col("center")).alias("_ctv"))
-    res = (
-        ivf_assign(corpus, centroids, cid=cid, cvec=cvec)
-        .join(F.broadcast(cents), "list_id")
-        .select(
-            F.col(cid),
-            F.transform(
-                F.zip_with(F.col("_cv"), F.col("_ctv"), lambda a, b: a - b),
-                lambda v: v.cast("double") / 10000.0,
-            ).alias(cvec),
-        )
+    res = _residual_frame(corpus, centroids, cid, cvec).select(
+        F.col(cid),
+        F.transform(F.col("_r"), lambda v: v.cast("double") / 10000.0).alias(cvec),
     )
     return pq_train(res, ncodes=ncodes, m=m, iters=iters, cid=cid, cvec=cvec)
 

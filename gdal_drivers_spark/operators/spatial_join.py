@@ -37,19 +37,16 @@ def bbox_overlap_cond(a: str = "", b: str = "b"):
 def cell_join(
     assignments: DataFrame,
     boundaries: DataFrame,
-    broadcast_boundaries: bool = True,
     refine: bool = True,
 ) -> DataFrame:
     """Join tile assignments (cell, x0..y1, …) with a boundary table
     (cell, x0..y1 renamed bx0..by1, attrs…) on the cell id, then exact
-    bbox refine. Broadcast the boundary side when small (4^z rows)."""
+    bbox refine. The boundary side is broadcast (small: ≤ 4^z rows)."""
     b = boundaries
     for col in ("x0", "y0", "x1", "y1"):
         if col in b.columns:
             b = b.withColumnRenamed(col, "b" + col)
-    if broadcast_boundaries:
-        b = F.broadcast(b)
-    j = assignments.join(b, "cell", "inner")
+    j = assignments.join(F.broadcast(b), "cell", "inner")
     if refine and {"bx0", "by0", "bx1", "by1"}.issubset(set(b.columns)):
         j = j.filter(
             (F.col("x0") < F.col("bx1"))

@@ -32,6 +32,19 @@ def test_corrupt_images_flagged_not_fatal(spark):
     assert got["ok2"]["dec_c"] == 2
 
 
+def test_decode_stats_filter_decodes_once(spark):
+    """``decode_stats(df).filter("dec_ok")`` evaluates the decode UDF
+    once: the filter on a decoded column must not be pushed below the
+    projection as a second copy of the UDF (one ArrowEvalPython)."""
+    good = codecs.encode_png(pattern(8, 8, 1, 7))
+    df = spark.createDataFrame(pd.DataFrame(
+        [("ok", good, "png"), ("bad", b"", "png")], columns=["image_id", "bytes", "fmt"]))
+    out = decode_stats(df).filter("dec_ok")
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1, plan
+    assert [r["image_id"] for r in out.collect()] == ["ok"]
+
+
 def _poison_images(spark):
     good = codecs.encode_raw(pattern(32, 32, 1, 7))
     rows = [

@@ -33,6 +33,28 @@ def test_no_pandas_grouped_map_left():
     assert hits == []
 
 
+def test_no_join_shape_flags():
+    """A plan is chosen from the inputs, not from a caller flag: no
+    public operator takes a join-shape (broadcast hint, self-join) or
+    validation-skip parameter."""
+    import importlib
+    import inspect
+    import pkgutil
+
+    from gdal_drivers_spark import operators
+
+    flags = re.compile(r"^(broadcast_\w+|self_join|exclude_self|check_residual)$")
+    hits = []
+    for info in pkgutil.iter_modules(operators.__path__):
+        mod = importlib.import_module(f"{operators.__name__}.{info.name}")
+        for name, fn in inspect.getmembers(mod, inspect.isfunction):
+            if name.startswith("_") or fn.__module__ != mod.__name__:
+                continue
+            hits += [f"{info.name}.{name}({p})"
+                     for p in inspect.signature(fn).parameters if flags.match(p)]
+    assert hits == []
+
+
 def _raster(n, seed):
     return np.random.default_rng(seed).integers(0, 256, (n * T, n * T), dtype=np.uint8)
 

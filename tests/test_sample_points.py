@@ -74,9 +74,3 @@ def test_sample_points_plan_is_jvm_only(spark):
     plan = sample_points(pts, tiles, T, 4)._jdf.queryExecution().executedPlan().toString()
     assert "Python" not in plan and "Arrow" not in plan
     assert "BroadcastHashJoin" in plan
-    # bulk path: no broadcast hint on the point side
-    plan2 = (
-        sample_points(pts, tiles, T, 4, broadcast_points=False)
-        ._jdf.queryExecution().optimizedPlan().toString()
-    )
-    assert "ResolvedHint" not in plan2
