@@ -3,10 +3,13 @@
 The reference serves overviews from shallower quadtree depths
 (``/root/reference/gdal-drivers/mask.cpp:170-174``, ``199-211``) and by
 halving constant rasters until smaller than a tile
-(``solid.cpp:352-369``). Distributed equivalent: level z−1 is a
-``groupBy(parent_cell)`` aggregation of level z — iterated down to
-level 0, each step one shuffle whose key is the parent cell (the same
-shape as ``cube``/``rollup`` but over the quadtree hierarchy).
+(``solid.cpp:352-369``). Distributed equivalent: the levels are rolled
+up in strides of up to ``STRIDE`` levels. One stride is ONE grouped
+kernel keyed on (ancestor at the stride's top level, band): it receives
+the ≤ 4^STRIDE tiles of a subtree and computes every level of the
+stride in numpy, rounding each level to u8 before the next, exactly as
+a chain of one-level rollups would. A pyramid of depth d takes
+⌈d/STRIDE⌉ shuffles, not d.
 
 Two rollup kinds:
 - pixel tiles: 4 child tiles → one parent tile, 2×2 mean downsample
@@ -19,26 +22,142 @@ Two rollup kinds:
 
 from __future__ import annotations
 
+from functools import reduce
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gdal_drivers_spark.core import qcell
 from gdal_drivers_spark.operators._groups import run_grouped
 
 PYRAMID_SCHEMA = "cell long, band int, tile binary, ts int"
+# Levels per grouped kernel: a group holds ≤ 4**STRIDE leaves, 64 tiles
+# (4 MB) at 256 px u8.
+STRIDE = 3
 
 
-def parent_cell_col(cell="cell"):
-    """Parent of a packed cell, as JVM Column arithmetic (z−1, x/2, y/2)."""
-    z = F.shiftright(F.col(cell), 52)
-    x = F.shiftright(F.col(cell), 26) % F.lit(1 << 26)
-    y = F.col(cell) % F.lit(1 << 26)
+def _ancestor_col(up: int = 1):
+    """Ancestor ``up`` levels above the packed ``cell``, as JVM Column
+    arithmetic (z−up, x>>up, y>>up); the default is the parent."""
+    z = F.shiftright(F.col("cell"), 52)
+    x = F.shiftright(F.col("cell"), 26) % F.lit(1 << 26)
+    y = F.col("cell") % F.lit(1 << 26)
     return (
-        (z - 1) * F.lit(1 << 52)
-        + F.shiftright(x, 1) * F.lit(1 << 26)
-        + F.shiftright(y, 1)
+        (z - up) * F.lit(1 << 52)
+        + F.shiftright(x, up) * F.lit(1 << 26)
+        + F.shiftright(y, up)
     )
+
+
+def _downsample(tile: bytes, ts: int, agg: str) -> np.ndarray:
+    """One ts×ts u8 child → its (ts/2)² float64 2×2-block aggregate."""
+    h = ts // 2
+    blocks = np.frombuffer(tile, np.uint8).reshape(ts, ts).astype(np.float64).reshape(h, 2, h, 2)
+    if agg == "mean":
+        return blocks.mean(axis=(1, 3))
+    if agg == "max":
+        return blocks.max(axis=(1, 3))
+    if agg == "mode":
+        # majority vote of each 2×2 block, ties → LOWEST value (GDAL's
+        # mode-overview rule; same count·256+(255−v) argmax encoding as
+        # warp's mode kernel) — the categorical-raster overview where
+        # mean would invent labels that exist nowhere in the input
+        b4 = blocks.transpose(0, 2, 1, 3).reshape(h, h, 4)
+        best_score = np.full((h, h), -1.0)
+        best_val = np.zeros((h, h))
+        for i in range(4):
+            vi = b4[:, :, i]
+            score = (b4 == vi[:, :, None]).sum(axis=2) * 256.0 + (255.0 - vi)
+            upd = score > best_score
+            best_score = np.where(upd, score, best_score)
+            best_val = np.where(upd, vi, best_val)
+        return best_val
+    return blocks.min(axis=(1, 3))
+
+
+def _parent_tile(pcell: int, band: int, tiles: dict, agg: str) -> tuple:
+    """``(ts, tile)`` of parent ``pcell`` from its children in ``tiles``
+    (``cell → (ts, tile)``); each child is downsampled 2×2 into its
+    quadrant, missing children stay 0 (the nodata-black convention of
+    the mask driver), and the result is rounded to u8."""
+    kids = {q: tiles[c] for q, c in enumerate(qcell.children(pcell).tolist()) if c in tiles}
+    sizes = sorted({ts for ts, _ in kids.values()})
+    if len(sizes) > 1:
+        raise ValueError(
+            f"pyramid parent cell {pcell} (band {band}) has children of "
+            f"tile sizes {sizes[0]} and {sizes[1]}")
+    ts = sizes[0]
+    h = ts // 2
+    out = np.zeros((ts, ts), np.float64)
+    for q, (_, tile) in kids.items():  # quadrants in qcell.children order
+        qx, qy = q & 1, q >> 1
+        out[qy * h:(qy + 1) * h, qx * h:(qx + 1) * h] = _downsample(tile, ts, agg)
+    return ts, np.rint(out).clip(0, 255).astype(np.uint8).tobytes()
+
+
+def _stride(new: DataFrame, stored: list, up: int, agg: str, emit_new: bool) -> DataFrame:
+    """One grouped kernel per (ancestor ``up`` levels above ``new``,
+    band). ``new`` holds the changed tiles of the stride's bottom level;
+    a cell carried twice resolves to its greatest ``(ts, tile)``
+    version. ``stored`` is ``[(levels above the root, frame)]``: stored
+    tiles that complete the changed parents (unchanged siblings, and
+    old versions that ``new`` or a recomputed tile replaces). The
+    kernel recomputes every ancestor of a changed tile over ``up``
+    levels and emits them (plus the resolved ``new`` rows if
+    ``emit_new``) as ``PYRAMID_SCHEMA`` rows."""
+    def tagged(df, k, is_new):
+        return df.select(_ancestor_col(k).alias("_r"), "band", "cell", "tile", "ts",
+                         F.lit(is_new).alias("_new"))
+
+    def _roll(key, g):
+        band = key[1]
+        tiles, changed = {}, {}
+        for cell, tile, ts, is_new in zip(g["cell"], g["tile"], g["ts"], g["_new"]):
+            if not is_new:
+                tiles[cell] = (ts, tile)
+            elif cell not in changed or (ts, tile) > changed[cell]:
+                changed[cell] = (ts, tile)
+        out = [(c, band, tile, ts) for c, (ts, tile) in changed.items()] if emit_new else []
+        for _ in range(up):
+            tiles.update(changed)
+            parents = sorted({int(qcell.parent(c)) for c in changed})
+            changed = {p: _parent_tile(p, band, tiles, agg) for p in parents}
+            out += [(c, band, tile, ts) for c, (ts, tile) in changed.items()]
+        return out
+
+    src = reduce(DataFrame.unionByName,
+                 [tagged(new, up, True)] + [tagged(df, k, False) for k, df in stored])
+    return run_grouped(src, ["_r", "band"], ["cell", "tile", "ts", "_new"], _roll,
+                       PYRAMID_SCHEMA)
+
+
+def _level(frame: DataFrame, z: int) -> DataFrame:
+    return frame.filter(F.shiftright(F.col("cell"), 52) == z)
+
+
+def _strides(new: DataFrame, from_level: int, to_level: int, agg: str,
+             stored: dict | None = None, keys: DataFrame | None = None):
+    """Roll ``new`` (leaves at ``from_level``) up to ``to_level`` in
+    ⌈depth/STRIDE⌉ chained strides; yields ``(levels, frame)`` per
+    stride. With ``stored`` (the persisted ``{level: frame}``), ``new``
+    is a delta: each stride also reads the stored children of every
+    changed parent, found by a broadcast semi-join of the parent against
+    ``keys`` (``_kc``/``_kb``: changed cells at every level), and the
+    first stride emits the resolved delta leaves too."""
+    bottom, emit_new = from_level, stored is not None
+    while bottom > to_level or emit_new:
+        top = max(to_level, bottom - STRIDE)
+        sides = [] if stored is None else [
+            (z - top, stored[z].join(
+                keys, (_ancestor_col() == F.col("_kc")) & (F.col("band") == F.col("_kb")),
+                "left_semi"))
+            for z in range(bottom, top, -1)
+        ]
+        frame = _stride(new, sides, bottom - top, agg, emit_new)
+        yield range(bottom if emit_new else bottom - 1, top - 1, -1), frame
+        new, bottom, emit_new = _level(frame, top), top, False
 
 
 def rollup_tiles_one_level(tiles: DataFrame, agg: str = "mean") -> DataFrame:
@@ -46,119 +165,36 @@ def rollup_tiles_one_level(tiles: DataFrame, agg: str = "mean") -> DataFrame:
 
     Each parent group holds ≤4 child tiles; each child is downsampled
     2×2 and placed into its quadrant (missing children stay 0 — the
-    nodata-black convention of the mask driver).
+    nodata-black convention of the mask driver). Children of one parent
+    must share a tile size (``ValueError`` naming the parent otherwise).
 
-    Plan shape: one ``groupBy(parent cell, band)`` exchange and one
-    grouped Arrow kernel per parent (``_groups.run_grouped``), so a
-    task holds one group — at most four child tiles — at a time."""
-
-    def _roll(key, g):
-        pcell, band = key
-        ts = g["ts"][0]
-        out = np.zeros((ts, ts), np.float64)
-        half = ts // 2
-        for cell, tile, cts in zip(g["cell"], g["tile"], g["ts"]):
-            child = np.frombuffer(tile, np.uint8).reshape(cts, cts).astype(np.float64)
-            blocks = child.reshape(cts // 2, 2, cts // 2, 2)
-            if agg == "mean":
-                small = blocks.mean(axis=(1, 3))
-            elif agg == "max":
-                small = blocks.max(axis=(1, 3))
-            elif agg == "mode":
-                # majority vote of each 2×2 block, ties → LOWEST value
-                # (GDAL's mode-overview rule; same count·256+(255−v)
-                # argmax encoding as warp's mode kernel) — the
-                # categorical-raster overview where mean would invent
-                # labels that exist nowhere in the input
-                b4 = blocks.transpose(0, 2, 1, 3).reshape(
-                    cts // 2, cts // 2, 4)
-                best_score = np.full(b4.shape[:2], -1.0)
-                best_val = np.zeros(b4.shape[:2])
-                for i in range(4):
-                    vi = b4[:, :, i]
-                    cnt = (b4 == vi[:, :, None]).sum(axis=2)
-                    score = cnt * 256.0 + (255.0 - vi)
-                    upd = score > best_score
-                    best_score = np.where(upd, score, best_score)
-                    best_val = np.where(upd, vi, best_val)
-                small = best_val
-            else:
-                small = blocks.min(axis=(1, 3))
-            cx = (cell >> 26) & ((1 << 26) - 1)
-            cy = cell & ((1 << 26) - 1)
-            qx, qy = cx & 1, cy & 1
-            out[qy * half : (qy + 1) * half, qx * half : (qx + 1) * half] = small
-        return [(pcell, band, np.rint(out).clip(0, 255).astype(np.uint8).tobytes(), ts)]
-
-    return run_grouped(
-        tiles.withColumn("_p", parent_cell_col()), ["_p", "band"],
-        ["cell", "tile", "ts"], _roll, PYRAMID_SCHEMA,
-    )
+    Plan shape: the one-level stride — one ``groupBy(parent cell,
+    band)`` exchange and one grouped Arrow kernel per parent
+    (``_groups.run_grouped``), so a task holds one group at a time."""
+    return _stride(tiles, [], 1, agg, False)
 
 
 def build_pyramid(tiles: DataFrame, from_level: int, to_level: int = 0, agg: str = "mean"):
-    """All levels from_level−1 … to_level. Returns dict level → DataFrame.
-    Each level is computed from the previous (persist between steps when
-    iterating over large inputs — caller's choice)."""
+    """All levels from_level−1 … to_level. Returns dict level → DataFrame
+    (``from_level`` maps to ``tiles``). Each value is a level filter of
+    its stride's output, so a caller that writes the union of several
+    levels shuffles the leaves once per stride and re-runs the stride's
+    kernel per level over the reused shuffle."""
     levels = {from_level: tiles}
-    cur = tiles
-    for z in range(from_level - 1, to_level - 1, -1):
-        cur = rollup_tiles_one_level(cur, agg)
-        levels[z] = cur
+    for zs, frame in _strides(tiles, from_level, to_level, agg):
+        levels.update({z: _level(frame, z) for z in zs})
     return levels
 
 
-def _pyramid_steps(levels: dict[int, DataFrame], delta: DataFrame, agg: str):
-    """Shared core of the incremental-maintenance pair: walk from the
-    leaf level down, yielding ``(level, changed_tiles, merged_level)``
-    where ``changed_tiles`` is the delta (at the leaf) or the
-    recomputed ancestor tiles, and ``merged_level`` is the full level
-    after replacement (broadcast anti-join — the base level is scanned
-    once, never shuffled; the rollup's groupBy shuffles only the
-    affected parents' ≤ 4·|delta| children)."""
-    from_level = max(levels)
-    to_level = min(levels)
-    # deterministic within-delta resolution: a delta carrying two
-    # versions of one (cell, band) — e.g. one streaming epoch batching
-    # several source files — would otherwise write the same parent
-    # quadrant twice with shuffle-order picking the winner. Rule: the
-    # lexicographically greatest (ts, tile) version wins.
-    delta = (
-        delta.groupBy("cell", "band")
-        .agg(F.max(F.struct("ts", "tile")).alias("_v"))
-        .select("cell", "band", F.col("_v.tile").alias("tile"), F.col("_v.ts").alias("ts"))
-    )
-    changed = delta.select("cell", "band").distinct()
-    merged = (
-        levels[from_level]
-        .join(F.broadcast(changed), ["cell", "band"], "left_anti")
-        .unionByName(delta)
-    )
-    yield from_level, delta, merged
-    cur, cur_changed = merged, changed
-    for z in range(from_level - 1, to_level - 1, -1):
-        parent_changed = cur_changed.select(
-            parent_cell_col().alias("cell"), "band"
-        ).distinct()
-        # all 4 children of every affected parent — unchanged siblings
-        # included, so the recomputed parent tile is complete
-        kids = cur.join(
-            F.broadcast(
-                parent_changed.select(
-                    F.col("cell").alias("_pc"), F.col("band").alias("_pb")
-                )
-            ),
-            (parent_cell_col() == F.col("_pc")) & (F.col("band") == F.col("_pb")),
-            "left_semi",
-        )
-        recomputed = rollup_tiles_one_level(kids, agg)
-        merged_z = (
-            levels[z]
-            .join(F.broadcast(parent_changed), ["cell", "band"], "left_anti")
-            .unionByName(recomputed)
-        )
-        yield z, recomputed, merged_z
-        cur, cur_changed = merged_z, parent_changed
+def _changed_keys(delta: DataFrame, depth: int) -> DataFrame:
+    """Broadcast key frame ``(_kc, _kb)``: every delta cell and all its
+    ancestors ``depth`` levels up (a packed cell carries its level, so
+    one frame keys every level). Not deduplicated: a semi/anti join does
+    not care, and a ``distinct`` would cost a shuffle."""
+    return F.broadcast(delta.select(
+        F.explode(F.array(*[_ancestor_col(k) for k in range(depth + 1)])).alias("_kc"),
+        F.col("band").alias("_kb"),
+    ))
 
 
 def update_pyramid(
@@ -166,21 +202,37 @@ def update_pyramid(
 ) -> dict[int, DataFrame]:
     """Incremental overview maintenance: apply a delta of leaf tiles
     (replacements and/or brand-new cells) and recompute ONLY the
-    ancestors of changed cells, level by level.
+    ancestors of changed cells.
 
     The reference rebuilds overviews whole (mask.cpp:170-174 derives
     every shallower depth from the full quadtree); at 100 TB a few
     thousand changed tiles must not trigger a full-pyramid rebuild.
-    Per level the work is O(|delta|) Python — see ``_pyramid_steps``
-    for the plan shape. Deletions are out of scope (tiles are
-    immutable snapshots; drop + rebuild the subtree for that).
+    Plan shape: one broadcast key frame (the delta's cells and all
+    their ancestors) drives both the semi-joins that fetch the stored
+    siblings of every changed parent and each level's ``left_anti``
+    replacement, so Spark plans one broadcast and reuses it; the delta
+    plus those siblings go through one subtree kernel per stride (see
+    ``_strides``), which also resolves a delta carrying two versions of
+    one (cell, band): the greatest ``(ts, tile)`` wins. The stored
+    levels are scanned, never shuffled. Deletions are out of scope
+    (tiles are immutable snapshots; drop + rebuild the subtree for
+    that).
 
     ``levels`` is ``{level: DataFrame}`` as returned by
     :func:`build_pyramid` (or read back from a persisted store);
     ``delta`` carries leaf tiles at ``max(levels)``. Returns the same
     dict shape with every level updated.
     """
-    return {z: merged for z, _, merged in _pyramid_steps(levels, delta, agg)}
+    from_level, to_level = max(levels), min(levels)
+    keys = _changed_keys(delta, from_level - to_level)
+    out = {}
+    for zs, frame in _strides(delta, from_level, to_level, agg, levels, keys):
+        for z in zs:
+            out[z] = levels[z].join(
+                keys, (F.col("cell") == F.col("_kc")) & (F.col("band") == F.col("_kb")),
+                "left_anti",
+            ).unionByName(_level(frame, z))
+    return out
 
 
 def pyramid_delta(
@@ -191,13 +243,13 @@ def pyramid_delta(
     commit unit for log-structured pyramid maintenance (streaming
     ingest commits these rows per epoch; readers resolve latest
     version per tile), sized O(|delta|·depth) regardless of corpus."""
-    out = None
-    for z, ch, _ in _pyramid_steps(levels, delta, agg):
-        f = ch.select(
-            F.lit(z).cast("int").alias("level"), "cell", "band", "tile", "ts"
-        )
-        out = f if out is None else out.unionByName(f)
-    return out
+    from_level, to_level = max(levels), min(levels)
+    keys = _changed_keys(delta, from_level - to_level)
+    frames = [f for _, f in _strides(delta, from_level, to_level, agg, levels, keys)]
+    return reduce(DataFrame.unionByName, frames).select(
+        F.shiftright(F.col("cell"), 52).cast("int").alias("level"),
+        "cell", "band", "tile", "ts",
+    )
 
 
 def rollup_tristate(quads: DataFrame) -> DataFrame:

@@ -12,6 +12,7 @@ spark-submit so the --py-files shipping path is what executors use.
 """
 
 import json
+import os
 import sys
 
 from pyspark.sql import SparkSession
@@ -20,7 +21,7 @@ spark = SparkSession.builder.appName("gdal_drivers_spark_submit").getOrCreate()
 spark.sparkContext.setLogLevel("ERROR")
 
 # the package arrives via --py-files; __spark_entry__ rides alongside
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as entry_mod  # noqa: E402
 
 rows = entry_mod.entry(spark).collect()

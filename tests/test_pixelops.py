@@ -284,6 +284,79 @@ def test_update_pyramid_matches_full_rebuild(spark):
     assert (int(qcell.pack(2, 2, 2)), 0) in got_by_level[2]
 
 
+def _tiles_by_key(frames):
+    """{(cell, band): tile} over the union of pyramid frames (a packed
+    cell carries its level, so keys of different levels never clash)."""
+    from functools import reduce
+
+    rows = reduce(lambda a, b: a.unionByName(b),
+                  [f.select("cell", "band", "tile") for f in frames]).collect()
+    out = {(r["cell"], r["band"]): bytes(r["tile"]) for r in rows}
+    assert len(out) == len(rows), "a (cell, band) was emitted twice"
+    return out
+
+
+@pytest.mark.parametrize("agg", ["mean", "min", "max", "mode"])
+def test_pyramid_deeper_than_one_stride_matches_one_level_chain(spark, agg):
+    """Build and update from z=8 to 0 — three chained strides — equal
+    the iterated one-level rollup over the merged leaves at every
+    level. The delta carries a duplicate row, two brand-new cells (new
+    ancestors at every level) and replacements under different stride
+    roots; 2 bands."""
+    ts, schema = 4, "cell long, band int, tile binary, ts int"
+    rng = np.random.default_rng(37)
+
+    def tile():
+        return rng.choice(np.array([0, 40, 41, 128, 200, 255], np.uint8), (ts, ts)).tobytes()
+
+    keys = {(int(x), int(y), int(b)) for x, y, b in zip(
+        rng.integers(0, 32, 60), rng.integers(0, 32, 60), rng.integers(0, 2, 60))}
+    base_rows = [(int(qcell.pack(8, x, y)), b, tile(), ts) for x, y, b in sorted(keys)[:40]]
+    old = [base_rows[i] for i in (0, 13, 27, 39)]
+    delta_rows = [(c, b, tile(), ts) for c, b, _, _ in old]
+    delta_rows.append((old[0][0], old[0][1], tile(), ts))          # duplicate (cell, band)
+    delta_rows += [(int(qcell.pack(8, 40, 50)), 0, tile(), ts),    # brand-new cells
+                   (int(qcell.pack(8, 200, 3)), 1, tile(), ts)]
+    # replacements under more than one z=5 root (the first stride's top)
+    assert len({(int(x) >> 3, int(y) >> 3) for _, x, y in (qcell.unpack(c) for c, *_ in old)}) > 1
+    resolved = {}
+    for c, b, t, s in delta_rows:  # the greatest (ts, tile) version wins
+        if (c, b) not in resolved or (s, t) > resolved[c, b][:2]:
+            resolved[c, b] = (s, t, c, b)
+    merged = {(c, b): (c, b, t, s) for c, b, t, s in base_rows}
+    merged.update({k: (c, b, t, s) for k, (s, t, c, b) in resolved.items()})
+    merged_rows = list(merged.values())
+
+    expect, cur = {}, spark.createDataFrame(merged_rows, schema)
+    expect.update(_tiles_by_key([cur]))
+    for _ in range(8):
+        cur = spark.createDataFrame(rollup_tiles_one_level(cur, agg).collect(), schema)
+        expect.update(_tiles_by_key([cur]))
+
+    built = build_pyramid(spark.createDataFrame(merged_rows, schema), 8, 0, agg)
+    assert sorted(built) == list(range(9))
+    assert _tiles_by_key(built.values()) == expect
+
+    base = build_pyramid(spark.createDataFrame(base_rows, schema), 8, 0, agg)
+    updated = update_pyramid(base, spark.createDataFrame(delta_rows, schema), agg)
+    assert sorted(updated) == list(range(9))
+    assert _tiles_by_key(updated.values()) == expect
+
+
+@pytest.mark.parametrize("order", [1, -1])
+def test_pyramid_mixed_tile_sizes_under_one_parent_raise(spark, order):
+    """Children of one parent with different tile sizes fail with a
+    ValueError naming the parent and both sizes, whatever the arrival
+    order of the children."""
+    rows = [(int(qcell.pack(4, 0, 0)), 0, bytes(64), 8),
+            (int(qcell.pack(4, 1, 0)), 0, bytes(16), 4)][::order]
+    tiles = spark.createDataFrame(rows, "cell long, band int, tile binary, ts int").coalesce(1)
+    pcell = int(qcell.pack(3, 0, 0))
+    with pytest.raises(Exception, match=rf"ValueError: pyramid parent cell {pcell} "
+                                        r"\(band 0\) has children of tile sizes 4 and 8"):
+        build_pyramid(tiles, 4, 3)[3].collect()
+
+
 def test_tristate_rollup_relational(spark):
     rows = [
         (2, 0, 0, "white"), (2, 1, 0, "white"), (2, 0, 1, "white"), (2, 1, 1, "white"),

@@ -107,6 +107,49 @@ def _pyramid(spark):
     return df, rollup_tiles_one_level
 
 
+LEAF = "cell long, band int, tile binary, ts int"
+
+
+def _leaf_rows(seed):
+    """A 6×6 block of z=4 leaves under four z=1 stride roots."""
+    full = _raster(6, seed)
+    return [(int(qcell.pack(4, 5 + tx, 5 + ty)), 0,
+             full[ty * T:(ty + 1) * T, tx * T:(tx + 1) * T].tobytes(), T)
+            for tx in range(6) for ty in range(6)]
+
+
+def _union(levels):
+    from functools import reduce
+
+    return reduce(lambda a, b: a.unionByName(b), levels.values())
+
+
+def _build(spark):
+    from gdal_drivers_spark.operators.pyramid import build_pyramid
+
+    return spark.createDataFrame(_leaf_rows(9), LEAF), lambda d: _union(
+        {z: f for z, f in build_pyramid(d, 4, 1).items() if z < 4})
+
+
+def _update_fixture(spark):
+    """Stored levels 4..1 and a delta of three replaced leaves, one of
+    them carried twice."""
+    from gdal_drivers_spark.operators.pyramid import build_pyramid
+
+    levels = build_pyramid(spark.createDataFrame(_leaf_rows(9), LEAF), 4, 1)
+    cells = {int(qcell.pack(4, x, y)) for x, y in ((5, 5), (7, 9), (10, 10))}
+    rows = [r for r in _leaf_rows(10) if r[0] in cells]
+    rows.append((rows[0][0], 0, rows[0][2][::-1], T))
+    return levels, spark.createDataFrame(rows, LEAF)
+
+
+def _update(spark):
+    from gdal_drivers_spark.operators.pyramid import update_pyramid
+
+    levels, delta = _update_fixture(spark)
+    return delta, lambda d: _union(update_pyramid(levels, d))
+
+
 def _warp(spark):
     from gdal_drivers_spark.operators.warp import warp_tiles
 
@@ -162,7 +205,8 @@ def _mvt(spark):
 
 FAMILIES = {
     "dem_halo": _dem, "proximity": _proximity, "blend": _blend,
-    "pyramid_rollup": _pyramid, "warp": _warp, "gridding": _gridding,
+    "pyramid_rollup": _pyramid, "pyramid_build": _build, "pyramid_update": _update,
+    "warp": _warp, "gridding": _gridding,
     "rasterize_burn": _burn, "mvt_encode": _mvt,
 }
 
@@ -187,3 +231,29 @@ def test_runner_output_is_layout_invariant(spark, family):
     assert first, "fixture produced no output"
     for layout, rows in results.items():
         assert rows == first, layout
+
+
+def test_update_pyramid_plans_one_broadcast(spark, tmp_path):
+    """The union of every updated level (what a caller writes), against
+    a persisted store, runs one broadcast of the changed-cell key
+    frame, reused by every semi- and anti-join, and no sort-merge
+    join."""
+    from pyspark.sql import functions as F
+
+    from gdal_drivers_spark.operators.pyramid import update_pyramid
+
+    built, delta = _update_fixture(spark)
+    store = str(tmp_path / "store")
+    _union({z: f.withColumn("level", F.lit(z)) for z, f in built.items()}).write.parquet(store)
+    stored = spark.read.parquet(store)
+    levels = {z: stored.filter(F.col("level") == z).drop("level") for z in built}
+    out = _union(update_pyramid(levels, delta))
+    out.collect()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    plan = plan.split("== Initial Plan ==")[0]
+    exchanges = [line for line in plan.splitlines()
+                 if "BroadcastExchange" in line and "ReusedExchange" not in line]
+    assert len(exchanges) == 1, plan
+    assert "ReusedExchange" in plan, plan
+    assert "SortMergeJoin" not in plan, plan
