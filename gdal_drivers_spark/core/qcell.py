@@ -12,11 +12,12 @@ Semantics mirror the reference's two addressing schemes:
 Two cell representations:
 
 ``pack(z, x, y)``
-    A single int64 join key ``(z << 52) | (x << 26) | y`` (z ≤ 26 —
-    4 per-axis resolution of ~1.5e-8 of the world, far below any pixel
-    grid we serve). This is *pure integer arithmetic*, expressible
-    identically in Spark SQL and ANSI SQL (DuckDB oracle), so the
-    distributed join key and the correctness oracle can never drift.
+    A single int64 join key ``(z << 52) | (x << 26) | y`` with
+    ``z ≤ 26``: 26 bits per axis, a per-axis resolution of 2^-26
+    (~1.5e-8) of the world, far below any pixel grid we serve. This is
+    *pure integer arithmetic*, expressible identically in Spark SQL and
+    ANSI SQL (DuckDB oracle), so the distributed join key and the
+    correctness oracle can never drift.
 
 ``morton(x, y)``
     Bit-interleaved Z-order value used for storage layout (partition
@@ -24,12 +25,28 @@ Two cell representations:
     into the same parquet row groups, the distributed analogue of the
     reference's quadtree constraint prune).
 
-All functions are numpy-vectorized; scalars work too (numpy scalar out).
+This is the ONE module that knows the packed layout; every operator
+builds and reads cell ids through it. Three forms:
+
+- numpy (vectorized; a scalar in gives a numpy scalar out): ``pack``,
+  ``unpack``, ``parent``, ``children``, ``neighbors``, ``tms_flip``,
+  ``morton``/``unmorton`` and :class:`Grid`;
+- plain Python ints for grouped kernels: ``unpack_int``, so no 0-d
+  numpy value reaches a kernel's output row;
+- Spark Columns (JVM arithmetic, whole-stage codegen): ``pack_col``,
+  ``unpack_col``, ``level_col``, ``ancestor_col``, ``cell_of_col`` and
+  ``cover_cols`` (the unit world's ``Grid.cell_of``/``cover_ranges``),
+  plus two frame shapes built on them: ``grid_cells`` (the dense cell
+  universe of a tile grid) and ``explode_ranges`` (inclusive index
+  ranges → one row per packed cell). ``pack_sql`` is the same packing
+  as SQL text.
 """
 
 from __future__ import annotations
 
 import numpy as np
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 Z_SHIFT = 52
 X_SHIFT = 26
@@ -49,6 +66,12 @@ def pack(z, x, y):
 def unpack(cell):
     """Inverse of :func:`pack` → (z, x, y)."""
     cell = np.asarray(cell, np.int64)
+    return cell >> Z_SHIFT, (cell >> X_SHIFT) & _MASK26, cell & _MASK26
+
+
+def unpack_int(cell) -> tuple[int, int, int]:
+    """Scalar :func:`unpack` → plain Python ints (z, x, y)."""
+    cell = int(cell)
     return cell >> Z_SHIFT, (cell >> X_SHIFT) & _MASK26, cell & _MASK26
 
 
@@ -190,3 +213,87 @@ class Grid:
 
 
 UNIT = Grid()
+
+
+# ------------------------------------------------- Spark Column forms
+
+def _col(c) -> Column:
+    return F.col(c) if isinstance(c, str) else c
+
+
+def pack_col(z, x: Column, y: Column) -> Column:
+    """:func:`pack` as a Column, ``z·2^52 + x·2^26 + y`` (``z`` an int
+    or a Column)."""
+    zc = z if isinstance(z, Column) else F.lit(int(z))
+    return (
+        zc.cast("long") * F.lit(1 << Z_SHIFT)
+        + x.cast("long") * F.lit(1 << X_SHIFT)
+        + y.cast("long")
+    )
+
+
+def level_col(cell) -> Column:
+    """The level z of a packed cell (a column name or a Column)."""
+    return F.shiftright(_col(cell), Z_SHIFT)
+
+
+def unpack_col(cell) -> tuple[Column, Column, Column]:
+    """:func:`unpack` as Columns (z, x, y)."""
+    c = _col(cell)
+    return level_col(c), F.shiftright(c, X_SHIFT) % F.lit(1 << X_SHIFT), c % F.lit(1 << X_SHIFT)
+
+
+def ancestor_col(cell, up: int = 1) -> Column:
+    """The ancestor ``up`` levels higher (z−up, x>>up, y>>up) — the
+    Column form of ``up`` chained :func:`parent` calls."""
+    z, x, y = unpack_col(cell)
+    return pack_col(z - up, F.shiftright(x, up), F.shiftright(y, up))
+
+
+def _floor_index(c: str, n: int) -> Column:
+    return F.greatest(F.lit(0), F.least(F.lit(n - 1), F.floor(F.col(c) * n))).cast("long")
+
+
+def cell_of_col(z: int, px: str, py: str) -> Column:
+    """The level-z cell containing unit-world point (px, py), clamped at
+    the world edge — the Column form of ``UNIT.cell_of``."""
+    n = 1 << z
+    return pack_col(z, _floor_index(px, n), _floor_index(py, n))
+
+
+def cover_cols(z: int, x0="x0", y0="y0", x1="x1", y1="y1") -> dict[str, Column]:
+    """Inclusive covering cell-index ranges ``cx0, cy0, cx1, cy1`` of a
+    half-open unit-world bbox at level z — the Column form of
+    ``UNIT.cover_ranges``."""
+    n = 1 << z
+
+    def hi(c, lo_col):
+        h = F.greatest(F.lit(0), F.least(F.lit(n - 1), F.ceil(F.col(c) * n) - 1)).cast("long")
+        return F.greatest(h, lo_col)
+
+    cx0, cy0 = _floor_index(x0, n), _floor_index(y0, n)
+    return {"cx0": cx0, "cy0": cy0, "cx1": hi(x1, cx0), "cy1": hi(y1, cy0)}
+
+
+def grid_cells(spark: SparkSession, z: int, gw: int, gh: int) -> DataFrame:
+    """Every level-z cell of a ``gw``×``gh`` tile grid anchored at the
+    origin, one ``cell`` column (row-major: x = id % gw, y = id / gw) —
+    the dense universe a sparse tile result is left-joined onto."""
+    return spark.range(gw * gh).select(
+        pack_col(z, F.col("id") % gw, (F.col("id") / gw).cast("long")).alias("cell")
+    )
+
+
+def explode_ranges(
+    df: DataFrame, z: int, xs: tuple, ys: tuple, x: str = "_tx", y: str = "_ty", cell: str = "cell"
+) -> DataFrame:
+    """One row per cell of the inclusive index ranges ``xs`` × ``ys``
+    (``(lo, hi)`` Column pairs) at level z: adds ``x``, ``y`` and the
+    packed ``cell``. A narrow JVM ``sequence`` + ``explode``. Spark's
+    ``sequence(lo, hi)`` counts DOWN when lo > hi, so callers clamp the
+    ranges and drop rows whose envelope misses the grid first."""
+    return (
+        df.withColumn(x, F.explode(F.sequence(*xs)))
+        .withColumn(y, F.explode(F.sequence(*ys)))
+        .withColumn(cell, pack_col(z, F.col(x), F.col(y)))
+    )

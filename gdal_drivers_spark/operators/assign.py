@@ -16,22 +16,14 @@ footprint distribution), which Catalyst pipelines into the next join.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..core.qcell import X_SHIFT, Z_SHIFT
+from ..core.qcell import cover_cols, explode_ranges
+# bench.py and __spark_entry__.py import pack_cell from here
+from ..core.qcell import pack_col as pack_cell  # noqa: F401
 
 MAX_SPAN = 1.0 / 64  # synthetic footprint max width/height (fraction of world)
-
-
-def pack_cell(z: Column | int, x: Column, y: Column) -> Column:
-    """(z << 52) | (x << 26) | y as a Column — matches core.qcell.pack."""
-    zc = F.lit(z) if isinstance(z, int) else z
-    return (
-        zc.cast("long") * F.lit(1 << Z_SHIFT)
-        + x.cast("long") * F.lit(1 << X_SHIFT)
-        + y.cast("long")
-    )
 
 
 def with_footprint(df: DataFrame, phash: str = "phash") -> DataFrame:
@@ -53,36 +45,19 @@ def with_footprint(df: DataFrame, phash: str = "phash") -> DataFrame:
     )
 
 
-def cover_bounds(z: int, x0="x0", y0="y0", x1="x1", y1="y1") -> dict[str, Column]:
-    """Inclusive covering cell-index ranges of a half-open unit-world
-    bbox at level z — Column mirror of core.qcell.Grid.cover_ranges."""
-    n = 1 << z
-
-    def lo(c):
-        return F.greatest(F.lit(0), F.least(F.lit(n - 1), F.floor(F.col(c) * n))).cast("long")
-
-    def hi(c, lo_col):
-        h = F.greatest(F.lit(0), F.least(F.lit(n - 1), F.ceil(F.col(c) * n) - 1)).cast("long")
-        return F.greatest(h, lo_col)
-
-    cx0, cy0 = lo(x0), lo(y0)
-    return {"cx0": cx0, "cy0": cy0, "cx1": hi(x1, cx0), "cy1": hi(y1, cy0)}
-
-
 def explode_cells(df: DataFrame, z: int) -> DataFrame:
     """Fan each footprint row out to one row per covering cell. Narrow
     (no shuffle): sequence+explode inside one codegen stage."""
-    b = cover_bounds(z)
-    return (
+    b = cover_cols(z)
+    bounded = (
         df.withColumn("_cx0", b["cx0"])
         .withColumn("_cy0", b["cy0"])
         .withColumn("_cx1", b["cx1"])
         .withColumn("_cy1", b["cy1"])
-        .withColumn("cx", F.explode(F.sequence("_cx0", "_cx1")))
-        .withColumn("cy", F.explode(F.sequence("_cy0", "_cy1")))
-        .withColumn("cell", pack_cell(z, F.col("cx"), F.col("cy")))
-        .drop("_cx0", "_cy0", "_cx1", "_cy1")
     )
+    return explode_ranges(
+        bounded, z, (F.col("_cx0"), F.col("_cx1")), (F.col("_cy0"), F.col("_cy1")), "cx", "cy"
+    ).drop("_cx0", "_cy0", "_cx1", "_cy1")
 
 
 def assign_tiles(images: DataFrame, z: int) -> DataFrame:

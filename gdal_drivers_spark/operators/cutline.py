@@ -33,6 +33,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gdal_drivers_spark.core import qcell
 from gdal_drivers_spark.core.geometry import points_in_polygon
 
 _OUT_SCHEMA = "cell long, raster binary, n_kept long, boundary boolean"
@@ -63,8 +64,7 @@ def cutline_crop(
     edges = np.stack([r, np.roll(r, -1, axis=0)], axis=1)  # (N, 2, 2)
     ring_c = r  # closure constants, shipped once per task
 
-    tx = F.shiftright(F.col("cell"), 26) % F.lit(1 << 26)
-    ty = F.col("cell") % F.lit(1 << 26)
+    _, tx, ty = qcell.unpack_col("cell")
     disjoint = (
         (tx * t >= F.lit(maxx)) | ((tx + 1) * t <= F.lit(minx))
         | (ty * t >= F.lit(maxy)) | ((ty + 1) * t <= F.lit(miny))
@@ -89,7 +89,7 @@ def cutline_crop(
             out = []
             for row in pdf.itertuples():
                 cell = int(row.cell)
-                ctx, cty = (cell >> 26) & ((1 << 26) - 1), cell & ((1 << 26) - 1)
+                _, ctx, cty = qcell.unpack_int(cell)
                 x0, y0 = ctx * t, cty * t
                 raw = getattr(row, raster)
                 if raw is None:

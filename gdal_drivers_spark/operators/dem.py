@@ -34,6 +34,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gdal_drivers_spark.core import qcell
 from gdal_drivers_spark.operators.halo import run_halo
 
 
@@ -435,8 +436,7 @@ def contour_case_census(
     def _census(kc, P, n_bad):
         if P is None:
             return [(kc, L, 0, 0, 0, n_bad) for L in lv]
-        tx = (kc >> 26) & ((1 << 26) - 1)
-        ty = kc & ((1 << 26) - 1)
+        _, tx, ty = qcell.unpack_int(kc)
         # square corners: TL = tile pixel (r, c), BR = (r+1, c+1) — the
         # +1 row/col reads the halo strip for the tile's last column/row
         tl = P[1 : t + 1, 1 : t + 1]

@@ -42,6 +42,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gdal_drivers_spark.core import qcell
 from gdal_drivers_spark.operators._groups import run_grouped
 
 _OUT_SCHEMA = "cell long, raster binary, n_points long, n_filled long"
@@ -55,7 +56,7 @@ def _scatter(
     contains it (JVM explode; out-of-grid keys dropped)."""
     t, r = int(tile_px), int(radius)
     gw, gh = int(grid_wh[0]), int(grid_wh[1])
-    return (
+    gated = (
         points.select(
             F.col(pid).alias("_pid"), F.col(px).alias("_px"),
             F.col(py).alias("_py"), F.col(val).alias("_v"),
@@ -71,25 +72,13 @@ def _scatter(
             (F.col("_px") + r >= 0) & (F.col("_px") - r <= gw * t - 1)
             & (F.col("_py") + r >= 0) & (F.col("_py") - r <= gh * t - 1)
         )
-        .withColumn(
-            "_tx",
-            F.explode(F.sequence(
-                F.greatest(F.expr(f"(_px - {r}) div {t}"), F.lit(0)),
-                F.least(F.expr(f"(_px + {r}) div {t}"), F.lit(gw - 1)),
-            )),
-        )
-        .withColumn(
-            "_ty",
-            F.explode(F.sequence(
-                F.greatest(F.expr(f"(_py - {r}) div {t}"), F.lit(0)),
-                F.least(F.expr(f"(_py + {r}) div {t}"), F.lit(gh - 1)),
-            )),
-        )
-        .withColumn(
-            "cell",
-            F.lit(int(z) << 52).cast("long")
-            + F.col("_tx") * F.lit(1 << 26) + F.col("_ty"),
-        )
+    )
+    return qcell.explode_ranges(
+        gated, z,
+        (F.greatest(F.expr(f"(_px - {r}) div {t}"), F.lit(0)),
+         F.least(F.expr(f"(_px + {r}) div {t}"), F.lit(gw - 1))),
+        (F.greatest(F.expr(f"(_py - {r}) div {t}"), F.lit(0)),
+         F.least(F.expr(f"(_py + {r}) div {t}"), F.lit(gh - 1))),
     )
 
 
@@ -109,13 +98,7 @@ def _grid(
         raise ValueError(f"radius {radius} must be >= 1")
     scattered = _scatter(points, t, z, radius, grid_wh, px, py, val, pid)
     computed = run_grouped(scattered, ["cell"], ["_pid", "_px", "_py", "_v"], kernel, _OUT_SCHEMA)
-    spark = points.sparkSession
-    universe = spark.range(gw * gh).select(
-        (
-            F.lit(int(z) << 52).cast("long")
-            + (F.col("id") % gw) * F.lit(1 << 26) + (F.col("id") / gw).cast("long")
-        ).alias("cell")
-    )
+    universe = qcell.grid_cells(points.sparkSession, z, gw, gh)
     empty = bytes([nodata]) * (t * t)
     return universe.join(computed, "cell", "left").select(
         "cell",
@@ -144,8 +127,7 @@ def grid_nearest(
 
     def _kernel(key, g):
         kc = key[0]
-        tx = (kc >> 26) & ((1 << 26) - 1)
-        ty = kc & ((1 << 26) - 1)
+        _, tx, ty = qcell.unpack_int(kc)
         gx = np.arange(t)[None, :] + tx * t
         gy = np.arange(t)[:, None] + ty * t
         best = np.full((t, t), cap, np.int64)
@@ -197,8 +179,7 @@ def grid_datametrics(
 
     def _kernel(key, g):
         kc = key[0]
-        tx = (kc >> 26) & ((1 << 26) - 1)
-        ty = kc & ((1 << 26) - 1)
+        _, tx, ty = qcell.unpack_int(kc)
         gx = np.arange(t)[None, :] + tx * t
         gy = np.arange(t)[:, None] + ty * t
         cnt = np.zeros((t, t), np.int64)
@@ -221,13 +202,7 @@ def grid_datametrics(
 
     scattered = _scatter(points, t, z, r, grid_wh, px, py, val, pid)
     computed = run_grouped(scattered, ["cell"], ["_px", "_py", "_v"], _kernel, _METRICS_SCHEMA)
-    spark = points.sparkSession
-    universe = spark.range(gw * gh).select(
-        (
-            F.lit(int(z) << 52).cast("long")
-            + (F.col("id") % gw) * F.lit(1 << 26) + (F.col("id") / gw).cast("long")
-        ).alias("cell")
-    )
+    universe = qcell.grid_cells(points.sparkSession, z, gw, gh)
     zeros = bytes(t * t)
     empty = bytes([int(nodata) & 0xFF]) * (t * t)
     return universe.join(computed, "cell", "left").select(
@@ -262,8 +237,7 @@ def grid_idw(
 
     def _kernel(key, g):
         kc = key[0]
-        tx = (kc >> 26) & ((1 << 26) - 1)
-        ty = kc & ((1 << 26) - 1)
+        _, tx, ty = qcell.unpack_int(kc)
         gx = np.arange(t)[None, :] + tx * t
         gy = np.arange(t)[:, None] + ty * t
         wsum = np.zeros((t, t), np.float64)

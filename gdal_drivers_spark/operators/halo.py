@@ -26,6 +26,10 @@ Two fan-out strategies:
   the 9× of the full re-key — the difference between "works" and
   "doesn't" at 100 TB of DEM). ``with_halo_strips`` is its w=1 case.
 
+Both run the same re-key (``_rekey``): the offset explode, the
+neighbor cell read and packed through ``core.qcell``'s Column forms,
+and the domain-edge drop.
+
 The consuming side is shared too: :func:`run_halo` runs one kernel per
 target tile over the contributions :func:`parse_halo` validated, so
 the poison and duplicate rules below hold for every halo operator.
@@ -39,6 +43,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gdal_drivers_spark.core import qcell
 from gdal_drivers_spark.operators._groups import run_grouped
 
 
@@ -155,11 +160,22 @@ def with_halo(tiles: DataFrame, cell: str = "cell", ring: int = 1) -> DataFrame:
     relative to the target, in [-ring, ring]), plus all input columns.
     ``groupBy('target_cell')`` then sees each tile with its halo.
     """
-    z = F.shiftright(F.col(cell), 52)
-    x = F.shiftright(F.col(cell), 26) % F.lit(1 << 26)
-    y = F.col(cell) % F.lit(1 << 26)
-    n = F.expr(f"shiftleft(CAST(1 AS BIGINT), CAST(shiftright({cell}, 52) AS INT))")
-    out = (
+    return (
+        _rekey(tiles, cell, ring)
+        # offset of the CONTRIBUTING tile relative to the target
+        .withColumn("dx", -F.col("_dx"))
+        .withColumn("dy", -F.col("_dy"))
+        .drop("_dx", "_dy", "_tx", "_ty")
+    )
+
+
+def _rekey(tiles: DataFrame, cell: str, ring: int) -> DataFrame:
+    """Each row once per in-domain cell within Chebyshev distance
+    ``ring`` of its ``cell``: the offset ``_dx``/``_dy`` (target minus
+    source), the target's ``_tx``/``_ty`` and ``target_cell``."""
+    z, x, y = qcell.unpack_col(cell)
+    n = F.call_function("shiftleft", F.lit(1).cast("long"), z.cast("int"))  # 2^z cells per axis
+    return (
         tiles.withColumn("_dx", F.explode(F.sequence(F.lit(-ring), F.lit(ring))))
         .withColumn("_dy", F.explode(F.sequence(F.lit(-ring), F.lit(ring))))
         .withColumn("_tx", x + F.col("_dx"))
@@ -167,16 +183,8 @@ def with_halo(tiles: DataFrame, cell: str = "cell", ring: int = 1) -> DataFrame:
         # bounds clamp semantics per mbtiles.cpp:146-152: out-of-domain
         # neighbors are dropped, not wrapped
         .filter((F.col("_tx") >= 0) & (F.col("_tx") < n) & (F.col("_ty") >= 0) & (F.col("_ty") < n))
-        .withColumn(
-            "target_cell",
-            z * F.lit(1 << 52) + F.col("_tx") * F.lit(1 << 26) + F.col("_ty"),
-        )
-        # offset of the CONTRIBUTING tile relative to the target
-        .withColumn("dx", -F.col("_dx"))
-        .withColumn("dy", -F.col("_dy"))
-        .drop("_dx", "_dy", "_tx", "_ty")
+        .withColumn("target_cell", qcell.pack_col(z, F.col("_tx"), F.col("_ty")))
     )
-    return out
 
 
 def with_halo_strips(
@@ -258,10 +266,6 @@ def with_halo_bands(
         F.col(cell).alias(cell), F.col(tile).alias("tile")
     ).withColumn("_s", _bands(F.col("tile"))).select(cell, "tile", "_s.*")
 
-    z = F.shiftright(F.col(cell), 52)
-    x = F.shiftright(F.col(cell), 26) % F.lit(1 << 26)
-    y = F.col(cell) % F.lit(1 << 26)
-    n = F.expr(f"shiftleft(CAST(1 AS BIGINT), CAST(shiftright({cell}, 52) AS INT))")
     dx, dy = -F.col("_dx"), -F.col("_dy")  # contribution offset rel. target
     payload = (
         F.when((dx == 0) & (dy == 0), F.col("tile"))
@@ -274,17 +278,9 @@ def with_halo_bands(
         .when((dx == -1) & (dy == 1), F.col("_b0l"))
         .otherwise(F.col("_b00"))  # (1, 1)
     )
-    return (
-        stripped.withColumn("_dx", F.explode(F.sequence(F.lit(-1), F.lit(1))))
-        .withColumn("_dy", F.explode(F.sequence(F.lit(-1), F.lit(1))))
-        .withColumn("_tx", x + F.col("_dx"))
-        .withColumn("_ty", y + F.col("_dy"))
-        # same out-of-domain drop semantics as with_halo
-        .filter((F.col("_tx") >= 0) & (F.col("_tx") < n) & (F.col("_ty") >= 0) & (F.col("_ty") < n))
-        .select(
-            (z * F.lit(1 << 52) + F.col("_tx") * F.lit(1 << 26) + F.col("_ty")).alias("target_cell"),
-            dx.cast("int").alias("dx"),
-            dy.cast("int").alias("dy"),
-            payload.alias("payload"),
-        )
+    return _rekey(stripped, cell, 1).select(
+        "target_cell",
+        dx.cast("int").alias("dx"),
+        dy.cast("int").alias("dy"),
+        payload.alias("payload"),
     )

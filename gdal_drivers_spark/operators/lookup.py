@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..core import qcell
 from ..sources.mbtiles import gunzip_col
 
 PATH_RE = r"^(\d+)-(\d+)-(\d+)$"
@@ -102,11 +103,7 @@ def sample_points(
             & (F.col("_tx") >= 0) & (F.col("_tx") < n)
             & (F.col("_ty") >= 0) & (F.col("_ty") < n)
         )
-        .withColumn(
-            "_cell",
-            F.lit(int(z) << 52).cast("long")
-            + F.col("_tx") * F.lit(1 << 26) + F.col("_ty"),
-        )
+        .withColumn("_cell", qcell.pack_col(z, F.col("_tx"), F.col("_ty")))
     )
     joined = F.broadcast(pts).join(
         tiles.select(F.col(cell).alias("_cell"), F.col(tile_col).alias("_tile")),

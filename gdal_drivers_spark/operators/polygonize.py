@@ -42,6 +42,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gdal_drivers_spark.core import qcell
 from gdal_drivers_spark.operators.dedup import connected_components
 
 
@@ -115,9 +116,8 @@ def _polygonize_parts(
         for pdf in batches:
             srows = []
             for row in pdf.itertuples():
-                kc = int(getattr(row, cell))
-                tx = ((kc >> 26) & ((1 << 26) - 1)) - ox
-                ty = (kc & ((1 << 26) - 1)) - oy
+                _, tx, ty = qcell.unpack_int(getattr(row, cell))
+                tx, ty = tx - ox, ty - oy
                 if not (0 <= tx < gw and 0 <= ty < gh):
                     raise ValueError(
                         f"tile ({tx + ox}, {ty + oy}) outside the declared "
@@ -480,9 +480,8 @@ def sieve_apply(
         .groupBy("_tx", "_ty")
         .agg(F.collect_list(F.struct("node", "new_value")).alias("_patch"))
     )
-    tagged = tiles.withColumn(
-        "_tx", (F.shiftright(F.col(cell), 26) % F.lit(1 << 26)) - ox
-    ).withColumn("_ty", (F.col(cell) % F.lit(1 << 26)) - oy)
+    _, cx, cy = qcell.unpack_col(cell)
+    tagged = tiles.withColumn("_tx", cx - ox).withColumn("_ty", cy - oy)
     joined = tagged.join(F.broadcast(changed), ["_tx", "_ty"], "left").select(
         cell, tile_col, "_tx", "_ty", "_patch"
     )

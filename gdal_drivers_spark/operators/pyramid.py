@@ -38,19 +38,6 @@ PYRAMID_SCHEMA = "cell long, band int, tile binary, ts int"
 STRIDE = 3
 
 
-def _ancestor_col(up: int = 1):
-    """Ancestor ``up`` levels above the packed ``cell``, as JVM Column
-    arithmetic (z−up, x>>up, y>>up); the default is the parent."""
-    z = F.shiftright(F.col("cell"), 52)
-    x = F.shiftright(F.col("cell"), 26) % F.lit(1 << 26)
-    y = F.col("cell") % F.lit(1 << 26)
-    return (
-        (z - up) * F.lit(1 << 52)
-        + F.shiftright(x, up) * F.lit(1 << 26)
-        + F.shiftright(y, up)
-    )
-
-
 def _downsample(tile: bytes, ts: int, agg: str) -> np.ndarray:
     """One ts×ts u8 child → its (ts/2)² float64 2×2-block aggregate."""
     h = ts // 2
@@ -108,8 +95,8 @@ def _stride(new: DataFrame, stored: list, up: int, agg: str, emit_new: bool) -> 
     levels and emits them (plus the resolved ``new`` rows if
     ``emit_new``) as ``PYRAMID_SCHEMA`` rows."""
     def tagged(df, k, is_new):
-        return df.select(_ancestor_col(k).alias("_r"), "band", "cell", "tile", "ts",
-                         F.lit(is_new).alias("_new"))
+        return df.select(qcell.ancestor_col("cell", k).alias("_r"), "band", "cell", "tile",
+                         "ts", F.lit(is_new).alias("_new"))
 
     def _roll(key, g):
         band = key[1]
@@ -134,7 +121,7 @@ def _stride(new: DataFrame, stored: list, up: int, agg: str, emit_new: bool) -> 
 
 
 def _level(frame: DataFrame, z: int) -> DataFrame:
-    return frame.filter(F.shiftright(F.col("cell"), 52) == z)
+    return frame.filter(qcell.level_col("cell") == z)
 
 
 def _strides(new: DataFrame, from_level: int, to_level: int, agg: str,
@@ -151,7 +138,7 @@ def _strides(new: DataFrame, from_level: int, to_level: int, agg: str,
         top = max(to_level, bottom - STRIDE)
         sides = [] if stored is None else [
             (z - top, stored[z].join(
-                keys, (_ancestor_col() == F.col("_kc")) & (F.col("band") == F.col("_kb")),
+                keys, (qcell.ancestor_col("cell") == F.col("_kc")) & (F.col("band") == F.col("_kb")),
                 "left_semi"))
             for z in range(bottom, top, -1)
         ]
@@ -192,7 +179,7 @@ def _changed_keys(delta: DataFrame, depth: int) -> DataFrame:
     one frame keys every level). Not deduplicated: a semi/anti join does
     not care, and a ``distinct`` would cost a shuffle."""
     return F.broadcast(delta.select(
-        F.explode(F.array(*[_ancestor_col(k) for k in range(depth + 1)])).alias("_kc"),
+        F.explode(F.array(*[qcell.ancestor_col("cell", k) for k in range(depth + 1)])).alias("_kc"),
         F.col("band").alias("_kb"),
     ))
 
@@ -247,7 +234,7 @@ def pyramid_delta(
     keys = _changed_keys(delta, from_level - to_level)
     frames = [f for _, f in _strides(delta, from_level, to_level, agg, levels, keys)]
     return reduce(DataFrame.unionByName, frames).select(
-        F.shiftright(F.col("cell"), 52).cast("int").alias("level"),
+        qcell.level_col("cell").cast("int").alias("level"),
         "cell", "band", "tile", "ts",
     )
 
@@ -325,9 +312,7 @@ def retile(
         for pdf in batches:
             out = []
             for r in pdf.itertuples():
-                kc = int(getattr(r, cell))
-                tx = (kc >> 26) & ((1 << 26) - 1)
-                ty = kc & ((1 << 26) - 1)
+                _, tx, ty = qcell.unpack_int(getattr(r, cell))
                 gx0, gy0 = tx * ti, ty * ti
                 raw = getattr(r, tile_col)
                 buf = b"" if raw is None else bytes(raw)
@@ -342,7 +327,7 @@ def retile(
                         iy1 = min(gy0 + ti, (oty + 1) * to)
                         if ix0 >= ix1 or iy0 >= iy1:
                             continue
-                        oc = (int(z) << 52) + (otx << 26) + oty
+                        oc = int(qcell.pack(z, otx, oty))
                         if bad:
                             out.append((oc, 0, 0, 0, 0, b"", True))
                             continue
@@ -366,13 +351,7 @@ def retile(
     assembled = run_grouped(
         frags, ["ocell"], ["ox", "oy", "fw", "fh", "frag", "bad"], _assemble,
         "cell long, tile binary, n_src long, ok boolean")
-    spark = tiles.sparkSession
-    universe = spark.range(ow * ohn).select(
-        (
-            F.lit(int(z) << 52).cast("long")
-            + (F.col("id") % ow) * F.lit(1 << 26) + (F.col("id") / ow).cast("long")
-        ).alias("cell")
-    )
+    universe = qcell.grid_cells(tiles.sparkSession, z, ow, ohn)
     empty = bytes([nd]) * (to * to)
     return universe.join(assembled, "cell", "left").select(
         "cell",

@@ -25,6 +25,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gdal_drivers_spark.core import qcell
 from gdal_drivers_spark.operators._groups import run_grouped
 
 WHITE, GRAY, BLACK = 255, 128, 0
@@ -207,7 +208,7 @@ def burn_features(
 
     xs = F.transform(F.col(ring), lambda p: p[0])
     ys = F.transform(F.col(ring), lambda p: p[1])
-    f = (
+    gated = (
         features.filter(F.size(F.col(ring)) >= 3)
         .select(
             F.col(fid).alias("_fid"), F.col(ring).alias("_ring"),
@@ -224,31 +225,18 @@ def burn_features(
             (F.col("_bx1") >= 0) & (F.col("_bx0") <= F.lit(gw * t - 1))
             & (F.col("_by1") >= 0) & (F.col("_by0") <= F.lit(gh * t - 1))
         )
-        .withColumn(
-            "_tx",
-            F.explode(F.sequence(
-                F.greatest(F.floor(F.col("_bx0") / t), F.lit(0)).cast("long"),
-                F.least(F.floor(F.col("_bx1") / t), F.lit(gw - 1)).cast("long"),
-            )),
-        )
-        .withColumn(
-            "_ty",
-            F.explode(F.sequence(
-                F.greatest(F.floor(F.col("_by0") / t), F.lit(0)).cast("long"),
-                F.least(F.floor(F.col("_by1") / t), F.lit(gh - 1)).cast("long"),
-            )),
-        )
-        .withColumn(
-            "cell",
-            F.lit(int(z) << 52).cast("long")
-            + F.col("_tx") * F.lit(1 << 26) + F.col("_ty"),
-        )
+    )
+    f = qcell.explode_ranges(
+        gated, z,
+        (F.greatest(F.floor(F.col("_bx0") / t), F.lit(0)).cast("long"),
+         F.least(F.floor(F.col("_bx1") / t), F.lit(gw - 1)).cast("long")),
+        (F.greatest(F.floor(F.col("_by0") / t), F.lit(0)).cast("long"),
+         F.least(F.floor(F.col("_by1") / t), F.lit(gh - 1)).cast("long")),
     )
 
     def _kernel(key, g):
         kc = key[0]
-        tx = (kc >> 26) & ((1 << 26) - 1)
-        ty = kc & ((1 << 26) - 1)
+        _, tx, ty = qcell.unpack_int(kc)
         x0, y0 = tx * t, ty * t
         img = np.full((t, t), nd, np.uint8)
         burned = np.zeros((t, t), bool)
@@ -287,13 +275,7 @@ def burn_features(
     painted = run_grouped(
         f, ["cell"], ["_fid", "_ring", "_v", "_bx0", "_bx1", "_by0", "_by1"],
         _kernel, BURN_MASK_SCHEMA if emit_mask else BURN_SCHEMA)
-    spark = features.sparkSession
-    universe = spark.range(gw * gh).select(
-        (
-            F.lit(int(z) << 52).cast("long")
-            + (F.col("id") % gw) * F.lit(1 << 26) + (F.col("id") / gw).cast("long")
-        ).alias("cell")
-    )
+    universe = qcell.grid_cells(features.sparkSession, z, gw, gh)
     empty = bytes([nd]) * (t * t)
     cols = [
         F.coalesce("raster", F.lit(empty)).alias("raster"),

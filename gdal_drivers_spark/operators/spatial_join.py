@@ -18,7 +18,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..core import geometry
+from ..core import geometry, qcell
 
 
 def bbox_overlap_cond(a: str = "", b: str = "b"):
@@ -75,9 +75,6 @@ def pip_join(
     blender.cpp:590-600). Polygon vertex data rides inside the UDF
     closure — broadcast once per executor, not per row.
     """
-    from ..core.qcell import pack as qpack
-    from ..core.qcell import UNIT
-
     # build (cell -> polygon candidates) on the driver: polygons are the
     # small dimension side (the reference's boundary layers)
     cand_rows = []
@@ -88,22 +85,14 @@ def pip_join(
         rings[pid] = ring
         bx0, by0 = ring.min(axis=0)
         bx1, by1 = ring.max(axis=0)
-        cx0, cy0, cx1, cy1 = (int(v) for v in UNIT.cover_ranges(z, bx0, by0, bx1, by1))
+        cx0, cy0, cx1, cy1 = (int(v) for v in qcell.UNIT.cover_ranges(z, bx0, by0, bx1, by1))
         for cx in range(cx0, cx1 + 1):
             for cy in range(cy0, cy1 + 1):
-                cand_rows.append((int(qpack(z, cx, cy)), pid))
+                cand_rows.append((int(qcell.pack(z, cx, cy)), pid))
     spark = points.sparkSession
     cand = spark.createDataFrame(pd.DataFrame(cand_rows, columns=["cell", "poly_id"]))
 
-    n = 1 << z
-    pts = points.withColumn(
-        "cell",
-        (
-            F.lit(z).cast("long") * F.lit(1 << 52)
-            + F.greatest(F.lit(0), F.least(F.lit(n - 1), F.floor(F.col(px) * n))).cast("long") * F.lit(1 << 26)
-            + F.greatest(F.lit(0), F.least(F.lit(n - 1), F.floor(F.col(py) * n))).cast("long")
-        ),
-    )
+    pts = points.withColumn("cell", qcell.cell_of_col(z, px, py))
     joined = pts.join(F.broadcast(cand), "cell", "inner")
 
     @F.pandas_udf("boolean")

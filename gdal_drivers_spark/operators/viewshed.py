@@ -37,6 +37,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gdal_drivers_spark.core import qcell
 from gdal_drivers_spark.operators._groups import run_grouped
 
 _OUT_SCHEMA = (
@@ -83,29 +84,14 @@ def viewshed(
         (F.col("_px") + r >= 0) & (F.col("_px") - r <= gw * t - 1)
         & (F.col("_py") + r >= 0) & (F.col("_py") - r <= gh * t - 1)
     )
-    scattered = (
-        touching.withColumn(
-            "_tx",
-            F.explode(F.sequence(
-                F.greatest(F.expr(f"(_px - {r}) div {t}"), F.lit(0)),
-                F.least(F.expr(f"(_px + {r}) div {t}"), F.lit(gw - 1)),
-            )),
-        )
-        .withColumn(
-            "_ty",
-            F.explode(F.sequence(
-                F.greatest(F.expr(f"(_py - {r}) div {t}"), F.lit(0)),
-                F.least(F.expr(f"(_py + {r}) div {t}"), F.lit(gh - 1)),
-            )),
-        )
-        .withColumn(
-            "cell",
-            F.lit(int(z) << 52).cast("long")
-            + F.col("_tx") * F.lit(1 << 26) + F.col("_ty"),
-        )
-        .join(tiles.select(F.col(cell).alias("cell"),
-                           F.col(tile_col).alias("_tile")), "cell", "left")
-    )
+    scattered = qcell.explode_ranges(
+        touching, z,
+        (F.greatest(F.expr(f"(_px - {r}) div {t}"), F.lit(0)),
+         F.least(F.expr(f"(_px + {r}) div {t}"), F.lit(gw - 1))),
+        (F.greatest(F.expr(f"(_py - {r}) div {t}"), F.lit(0)),
+         F.least(F.expr(f"(_py + {r}) div {t}"), F.lit(gh - 1))),
+    ).join(tiles.select(F.col(cell).alias("cell"),
+                        F.col(tile_col).alias("_tile")), "cell", "left")
 
     def _kernel(key, g):
         ko = key[0]
@@ -120,8 +106,7 @@ def viewshed(
                 continue
             if len(buf) != t * t:
                 return poison
-            tx = (kc >> 26) & ((1 << 26) - 1)
-            ty = kc & ((1 << 26) - 1)
+            _, tx, ty = qcell.unpack_int(kc)
             img = np.frombuffer(buf, np.uint8).astype(np.int64).reshape(t, t)
             # overlap of this tile with the window in global coords
             gx0, gx1 = max(tx * t, ox - r), min((tx + 1) * t, ox + r + 1)

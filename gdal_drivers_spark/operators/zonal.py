@@ -32,6 +32,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..core import qcell
+
 _STAT_SCHEMA = "n_px long, px_sum long, px_min long, px_max long, px_ok boolean"
 
 
@@ -340,8 +342,7 @@ def to_xyz(
                     out.append(pd.DataFrame(
                         {"gx": [-1], "gy": [-1], "v": [-1]}))
                     continue
-                tx = (kc >> 26) & ((1 << 26) - 1)
-                ty = kc & ((1 << 26) - 1)
+                _, tx, ty = qcell.unpack_int(kc)
                 v = np.frombuffer(buf, np.uint8).astype(np.int64)
                 gx = (np.arange(t)[None, :] + tx * t).repeat(t, 0).ravel()
                 gy = (np.arange(t)[:, None] + ty * t).repeat(t, 1).ravel()

@@ -25,6 +25,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..core import qcell
+
 
 def cell_census(df: DataFrame, cell: str = "cell") -> DataFrame:
     """Per-cell row counts (the skew detector)."""
@@ -84,9 +86,7 @@ def split_hot_cells(
         hot = hot_cells(cur, threshold, cell)
         if len(hot.take(1)) == 0:
             break
-        z = F.shiftright(F.col(cell), 52)
-        x = F.shiftright(F.col(cell), 26) % F.lit(1 << 26)
-        y = F.col(cell) % F.lit(1 << 26)
+        z, x, y = qcell.unpack_col(cell)
         # child index from the row's position within the cell: use the
         # footprint center (x0..x1 columns) when present, else hash
         if {"x0", "x1", "y0", "y1"}.issubset(set(cur.columns)):
@@ -98,11 +98,7 @@ def split_hot_cells(
         else:
             cx2 = (F.abs(F.xxhash64(*[c for c in cur.columns if c != cell])) % 2).cast("int")
             cy2 = (F.abs(F.xxhash64(F.lit(1), *[c for c in cur.columns if c != cell])) % 2).cast("int")
-        child = (
-            (z + 1) * F.lit(1 << 52)
-            + (x * 2 + cx2) * F.lit(1 << 26)
-            + (y * 2 + cy2)
-        )
+        child = qcell.pack_col(z + 1, x * 2 + cx2, y * 2 + cy2)
         marked = cur.join(F.broadcast(hot.withColumn("_hot", F.lit(True))), cell, "left")
         cur = marked.withColumn(
             cell, F.when(F.col("_hot").isNotNull(), child).otherwise(F.col(cell))

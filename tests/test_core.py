@@ -1,4 +1,5 @@
-"""M0 property suite (SURVEY.md §5.3) — pure-python core, no Spark.
+"""M0 property suite (SURVEY.md §5.3) — pure-python core; Spark only
+where a Column form of the cell codec is checked against it.
 
 Oracles here are deliberately *independent* reimplementations (scalar
 loops / closed forms), not calls into the vectorized engine code.
@@ -83,6 +84,86 @@ def test_cover_ranges_matches_pointwise():
             lo, hi = cx / n, (cx + 1) / n
             covered = (lo < x1) and (x0 < hi)
             assert (cx0 <= cx <= cx1) == covered, (x0, x1, cx)
+
+
+@st.composite
+def _cell_zxy(draw):
+    z = draw(st.integers(0, 26))
+    return z, draw(st.integers(0, (1 << z) - 1)), draw(st.integers(0, (1 << z) - 1))
+
+
+# edges: the root, level 1 and the deepest level, at the 0 and 2^z - 1 bounds
+_EDGE_CELLS = {(z, x, y) for z in (0, 1, 26) for x in (0, (1 << z) - 1) for y in (0, (1 << z) - 1)}
+_UNIT_PT = st.floats(-0.25, 1.25, allow_nan=False)
+
+
+@settings(max_examples=4, deadline=None)
+@given(st.lists(st.tuples(_cell_zxy(), _UNIT_PT, _UNIT_PT, _UNIT_PT, _UNIT_PT), min_size=1, max_size=40))
+def test_column_codec_matches_numpy(spark, sampled):
+    """The Spark Column forms of the cell codec agree with the numpy and
+    int forms and with ``pack_sql``, in one job: pack (Column and int
+    level), unpack, level, every ancestor up to the root, and the
+    unit-world cell of a point and cover ranges of a bbox at z=8."""
+    from pyspark.sql import functions as F
+
+    rows = [(z, x, y, px, py, min(px, qx), min(py, qy), max(px, qx), max(py, qy))
+            for (z, x, y), px, py, qx, qy in sampled]
+    rows += [(z, x, y, 0.0, 1.0, 0.0, 0.0, 1.0, 1.0) for z, x, y in sorted(_EDGE_CELLS)]
+    df = spark.createDataFrame(
+        rows, "z long, x long, y long, px double, py double, "
+              "x0 double, y0 double, x1 double, y1 double")
+    cell = qcell.pack_col(F.col("z"), F.col("x"), F.col("y"))
+    uz, ux, uy = qcell.unpack_col("cell")
+    cover = qcell.cover_cols(8)
+    got = df.withColumn("cell", cell).select(
+        "z", "x", "y", "px", "py", "x0", "y0", "x1", "y1", "cell",
+        F.expr(qcell.pack_sql("z", "x", "y")).alias("sql"),
+        qcell.pack_col(26, F.col("x"), F.col("y")).alias("at26"),
+        F.array(uz, ux, uy).alias("zxy"),
+        qcell.level_col("cell").alias("level"),
+        F.array(*[F.when(F.col("z") >= k, qcell.ancestor_col("cell", k)) for k in range(27)])
+        .alias("anc"),
+        qcell.cell_of_col(8, "px", "py").alias("of8"),
+        F.array(cover["cx0"], cover["cy0"], cover["cx1"], cover["cy1"]).alias("cover8"),
+    ).collect()
+    assert len(got) == len(rows)
+    for r in got:
+        c = int(qcell.pack(r["z"], r["x"], r["y"]))
+        assert r["cell"] == r["sql"] == c
+        assert r["at26"] == int(qcell.pack(26, r["x"], r["y"]))
+        assert r["zxy"] == [int(v) for v in qcell.unpack(c)] == list(qcell.unpack_int(c))
+        assert r["level"] == r["z"]
+        want, a = [], c
+        for _ in range(r["z"] + 1):
+            want.append(a)
+            a = int(qcell.parent(a))
+        assert r["anc"] == want + [None] * (27 - len(want))
+        assert r["of8"] == int(qcell.UNIT.cell_of(8, r["px"], r["py"]))
+        assert r["cover8"] == [int(v) for v in qcell.UNIT.cover_ranges(
+            8, r["x0"], r["y0"], r["x1"], r["y1"])]
+
+
+def test_halo_rekeys_match_qcell_neighbors(spark):
+    """``with_halo(ring=1)`` and ``with_halo_bands`` share one re-key:
+    both emit, per source tile, itself and its in-domain ring-1
+    neighbors as targets with the source's offset (dx, dy), the set
+    ``qcell.neighbors`` gives — at z=1 and at a z=3 corner, edge and
+    interior tile."""
+    from gdal_drivers_spark.operators.halo import with_halo, with_halo_bands
+
+    sources = [(1, 1, 0), (3, 7, 7), (3, 0, 3), (3, 4, 5)]  # every domain edge is hit
+    tiles = spark.createDataFrame(
+        [(int(qcell.pack(*s)), bytes(4)) for s in sources], "cell long, tile binary")
+    want = set()
+    for z, sx, sy in sources:
+        for t in [int(qcell.pack(z, sx, sy))] + qcell.neighbors(qcell.pack(z, sx, sy), 1).tolist():
+            _, tx, ty = qcell.unpack_int(t)
+            want.add((t, sx - tx, sy - ty))
+    assert len(want) == 4 + 4 + 6 + 9  # self and neighbors: z=1, corner, edge, interior
+    for out in (with_halo(tiles, ring=1), with_halo_bands(tiles, 2, 1)):
+        got = [(r["target_cell"], r["dx"], r["dy"]) for r in out.collect()]
+        assert len(got) == len(set(got))
+        assert set(got) == want
 
 
 # -------------------------------------------------------------- codecs

@@ -160,7 +160,9 @@ def test_lsh_bucket_dim768_no_int32_overflow(spark):
         return b
 
     expected = {i: py_bucket(vecs[i]) for i in range(len(vecs))}
-    prev = spark.conf.get("spark.sql.ansi.enabled", "false")
+    # the effective value: for an unset key, get(key, default) returns
+    # the default argument, and restoring that would leak into later tests
+    prev = spark.conf.get("spark.sql.ansi.enabled")
     spark.conf.set("spark.sql.ansi.enabled", "true")
     try:
         got = {
@@ -171,6 +173,9 @@ def test_lsh_bucket_dim768_no_int32_overflow(spark):
         }
     finally:
         spark.conf.set("spark.sql.ansi.enabled", prev)
+    # restored to the effective value a fresh session of this app reads
+    fresh = spark.newSession().conf.get("spark.sql.ansi.enabled")
+    assert spark.conf.get("spark.sql.ansi.enabled") == prev == fresh
     assert got == expected
     assert len(set(got.values())) > 2
 

@@ -18,19 +18,34 @@ PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
 T = 8
 
 
+def _package_hits(pattern: str, skip: tuple = ()) -> list:
+    """``file:line`` of every line of the package's ``.py`` files (bar
+    ``skip``, paths relative to the package) matching ``pattern``."""
+    hits = []
+    for root, _, files in os.walk(PKG):
+        for f in files:
+            p = os.path.join(root, f)
+            if f.endswith(".py") and os.path.relpath(p, PKG) not in skip:
+                for i, line in enumerate(open(p, encoding="utf-8"), 1):
+                    if re.search(pattern, line):
+                        hits.append(f"{os.path.relpath(p, PKG)}:{i}")
+    return hits
+
+
 def test_no_pandas_grouped_map_left():
     """Grouped kernels run one way: no ``applyInPandas(`` anywhere in
     the package (``applyInPandasWithState`` is the streaming state API,
     a different operator)."""
-    hits = []
-    for root, _, files in os.walk(PKG):
-        for f in files:
-            if f.endswith(".py"):
-                p = os.path.join(root, f)
-                for i, line in enumerate(open(p, encoding="utf-8"), 1):
-                    if re.search(r"applyInPandas\(", line):
-                        hits.append(f"{os.path.relpath(p, PKG)}:{i}")
-    assert hits == []
+    assert _package_hits(r"applyInPandas\(") == []
+
+
+def test_cell_layout_lives_in_qcell():
+    """One packed-cell codec: outside ``core/qcell.py`` no module spells
+    the ``(z << 52) | (x << 26) | y`` layout as shifts; cell ids are
+    built and read through ``core.qcell``'s numpy, int and Column
+    forms."""
+    layout = r"(<<|>>)\s*(52|26)\b|shiftright\(.*?,\s*(52|26)\s*\)"
+    assert _package_hits(layout, skip=(os.path.join("core", "qcell.py"),)) == []
 
 
 def test_no_join_shape_flags():
