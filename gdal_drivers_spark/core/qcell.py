@@ -31,8 +31,8 @@ builds and reads cell ids through it. Three forms:
 - numpy (vectorized; a scalar in gives a numpy scalar out): ``pack``,
   ``unpack``, ``parent``, ``children``, ``neighbors``, ``tms_flip``,
   ``morton``/``unmorton`` and :class:`Grid`;
-- plain Python ints for grouped kernels: ``unpack_int``, so no 0-d
-  numpy value reaches a kernel's output row;
+- plain Python ints for grouped kernels: ``pack_int`` and
+  ``unpack_int``, so no 0-d numpy value reaches a kernel's output row;
 - Spark Columns (JVM arithmetic, whole-stage codegen): ``pack_col``,
   ``unpack_col``, ``level_col``, ``ancestor_col``, ``cell_of_col`` and
   ``cover_cols`` (the unit world's ``Grid.cell_of``/``cover_ranges``),
@@ -67,6 +67,11 @@ def unpack(cell):
     """Inverse of :func:`pack` → (z, x, y)."""
     cell = np.asarray(cell, np.int64)
     return cell >> Z_SHIFT, (cell >> X_SHIFT) & _MASK26, cell & _MASK26
+
+
+def pack_int(z, x, y) -> int:
+    """Scalar :func:`pack` on plain Python ints."""
+    return (int(z) << Z_SHIFT) | (int(x) << X_SHIFT) | int(y)
 
 
 def unpack_int(cell) -> tuple[int, int, int]:
@@ -261,18 +266,18 @@ def cell_of_col(z: int, px: str, py: str) -> Column:
     return pack_col(z, _floor_index(px, n), _floor_index(py, n))
 
 
-def cover_cols(z: int, x0="x0", y0="y0", x1="x1", y1="y1") -> dict[str, Column]:
-    """Inclusive covering cell-index ranges ``cx0, cy0, cx1, cy1`` of a
-    half-open unit-world bbox at level z — the Column form of
-    ``UNIT.cover_ranges``."""
+def cover_cols(z: int) -> dict[str, Column]:
+    """Inclusive covering cell-index ranges ``cx0, cy0, cx1, cy1`` of the
+    half-open unit-world bbox in columns ``x0, y0, x1, y1`` at level z —
+    the Column form of ``UNIT.cover_ranges``."""
     n = 1 << z
 
     def hi(c, lo_col):
         h = F.greatest(F.lit(0), F.least(F.lit(n - 1), F.ceil(F.col(c) * n) - 1)).cast("long")
         return F.greatest(h, lo_col)
 
-    cx0, cy0 = _floor_index(x0, n), _floor_index(y0, n)
-    return {"cx0": cx0, "cy0": cy0, "cx1": hi(x1, cx0), "cy1": hi(y1, cy0)}
+    cx0, cy0 = _floor_index("x0", n), _floor_index("y0", n)
+    return {"cx0": cx0, "cy0": cy0, "cx1": hi("x1", cx0), "cy1": hi("y1", cy0)}
 
 
 def grid_cells(spark: SparkSession, z: int, gw: int, gh: int) -> DataFrame:
@@ -285,7 +290,7 @@ def grid_cells(spark: SparkSession, z: int, gw: int, gh: int) -> DataFrame:
 
 
 def explode_ranges(
-    df: DataFrame, z: int, xs: tuple, ys: tuple, x: str = "_tx", y: str = "_ty", cell: str = "cell"
+    df: DataFrame, z: int, xs: tuple, ys: tuple, x: str = "_tx", y: str = "_ty"
 ) -> DataFrame:
     """One row per cell of the inclusive index ranges ``xs`` × ``ys``
     (``(lo, hi)`` Column pairs) at level z: adds ``x``, ``y`` and the
@@ -295,5 +300,5 @@ def explode_ranges(
     return (
         df.withColumn(x, F.explode(F.sequence(*xs)))
         .withColumn(y, F.explode(F.sequence(*ys)))
-        .withColumn(cell, pack_col(z, F.col(x), F.col(y)))
+        .withColumn("cell", pack_col(z, F.col(x), F.col(y)))
     )

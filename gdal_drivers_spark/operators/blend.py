@@ -75,14 +75,18 @@ def blend_tiles(
         # dtype domain exactly solid.cpp:408-440; anything else raises
         raise ValueError(f"unsupported dtype {out_dtype!r} (solid.cpp:437-439)")
     np_dtype = _DTYPES[out_dtype]
+    gx0, gy0, gx1, gy1 = grid.x0, grid.y0, grid.x1, grid.y1
 
     def _blend(key, g):
         cell, band = key
         n_rows = len(g["tile"])
         # world extents of this cell (drives pixel-center coordinates)
-        x0, y0, _, _ = grid.cell_extents(cell)
-        n = 1 << unpack_int(cell)[0]
-        cw, ch = (grid.x1 - grid.x0) / n, (grid.y1 - grid.y0) / n
+        z, cx, cy = unpack_int(cell)
+        n = 1 << z
+        cw = (gx1 - gx0) / n
+        ch = (gy1 - gy0) / n
+        x0 = gx0 + cx * cw
+        y0 = gy0 + cy * ch
         # pixel centers (+0.5 — blender.cpp:593)
         pxs = x0 + (np.arange(tile_px) + 0.5) * (cw / tile_px)
         pys = y0 + (np.arange(tile_px) + 0.5) * (ch / tile_px)

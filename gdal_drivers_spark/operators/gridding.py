@@ -89,23 +89,27 @@ def _grid(
     radius: int,
     grid_wh: tuple,
     kernel,
+    schema: str,
+    defaults: dict,
     px: str, py: str, val: str, pid: str,
-    nodata: int,
 ) -> DataFrame:
-    t = int(tile_px)
+    """Scatter, run ``kernel`` per tile (rows shaped like ``schema``),
+    then left-join the dense cell universe so every grid cell has a
+    row; each ``defaults`` column is coalesced to its value where no
+    point reached the tile."""
     gw, gh = int(grid_wh[0]), int(grid_wh[1])
     if not 1 <= int(radius):
         raise ValueError(f"radius {radius} must be >= 1")
-    scattered = _scatter(points, t, z, radius, grid_wh, px, py, val, pid)
-    computed = run_grouped(scattered, ["cell"], ["_pid", "_px", "_py", "_v"], kernel, _OUT_SCHEMA)
+    scattered = _scatter(points, tile_px, z, radius, grid_wh, px, py, val, pid)
+    computed = run_grouped(scattered, ["cell"], ["_pid", "_px", "_py", "_v"], kernel, schema)
     universe = qcell.grid_cells(points.sparkSession, z, gw, gh)
-    empty = bytes([nodata]) * (t * t)
     return universe.join(computed, "cell", "left").select(
-        "cell",
-        F.coalesce("raster", F.lit(empty)).alias("raster"),
-        F.coalesce("n_points", F.lit(0)).alias("n_points"),
-        F.coalesce("n_filled", F.lit(0)).alias("n_filled"),
+        "cell", *[F.coalesce(c, F.lit(v)).alias(c) for c, v in defaults.items()]
     )
+
+
+def _raster_defaults(t: int, nodata: int) -> dict:
+    return {"raster": bytes([nodata]) * (t * t), "n_points": 0, "n_filled": 0}
 
 
 def grid_nearest(
@@ -143,7 +147,8 @@ def grid_nearest(
         n_filled = int((best <= r * r).sum())
         return [(kc, bestv.tobytes(), len(pids), n_filled)]
 
-    return _grid(points, t, z, r, grid_wh, _kernel, px, py, val, pid, nodata)
+    return _grid(points, t, z, r, grid_wh, _kernel, _OUT_SCHEMA,
+                 _raster_defaults(t, nodata), px, py, val, pid)
 
 
 _METRICS_SCHEMA = (
@@ -173,9 +178,6 @@ def grid_datametrics(
     and 0 in count. Exact integer arithmetic end-to-end → closed-form
     SQL oracle, unlike the FP idw kernel."""
     t, r = int(tile_px), int(radius)
-    gw, gh = int(grid_wh[0]), int(grid_wh[1])
-    if not 1 <= r:
-        raise ValueError(f"radius {radius} must be >= 1")
 
     def _kernel(key, g):
         kc = key[0]
@@ -200,20 +202,11 @@ def grid_datametrics(
         return [(kc, out_cnt.tobytes(), out_min.tobytes(), out_max.tobytes(),
                  out_rng.tobytes(), len(g["_v"]), int(filled.sum()))]
 
-    scattered = _scatter(points, t, z, r, grid_wh, px, py, val, pid)
-    computed = run_grouped(scattered, ["cell"], ["_px", "_py", "_v"], _kernel, _METRICS_SCHEMA)
-    universe = qcell.grid_cells(points.sparkSession, z, gw, gh)
-    zeros = bytes(t * t)
     empty = bytes([int(nodata) & 0xFF]) * (t * t)
-    return universe.join(computed, "cell", "left").select(
-        "cell",
-        F.coalesce("count", F.lit(zeros)).alias("count"),
-        F.coalesce("vmin", F.lit(empty)).alias("vmin"),
-        F.coalesce("vmax", F.lit(empty)).alias("vmax"),
-        F.coalesce("vrange", F.lit(empty)).alias("vrange"),
-        F.coalesce("n_points", F.lit(0)).alias("n_points"),
-        F.coalesce("n_filled", F.lit(0)).alias("n_filled"),
-    )
+    defaults = {"count": bytes(t * t), "vmin": empty, "vmax": empty, "vrange": empty,
+                "n_points": 0, "n_filled": 0}
+    return _grid(points, t, z, r, grid_wh, _kernel, _METRICS_SCHEMA, defaults,
+                 px, py, val, pid)
 
 
 def grid_idw(
@@ -271,4 +264,5 @@ def grid_idw(
         n_filled = int((reach | on_pt).sum())
         return [(kc, outv.tobytes(), len(pids), n_filled)]
 
-    return _grid(points, t, z, r, grid_wh, _kernel, px, py, val, pid, nodata)
+    return _grid(points, t, z, r, grid_wh, _kernel, _OUT_SCHEMA,
+                 _raster_defaults(t, nodata), px, py, val, pid)

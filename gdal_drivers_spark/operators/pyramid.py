@@ -327,7 +327,7 @@ def retile(
                         iy1 = min(gy0 + ti, (oty + 1) * to)
                         if ix0 >= ix1 or iy0 >= iy1:
                             continue
-                        oc = int(qcell.pack(z, otx, oty))
+                        oc = qcell.pack_int(z, otx, oty)
                         if bad:
                             out.append((oc, 0, 0, 0, 0, b"", True))
                             continue

@@ -88,7 +88,7 @@ def pip_join(
         cx0, cy0, cx1, cy1 = (int(v) for v in qcell.UNIT.cover_ranges(z, bx0, by0, bx1, by1))
         for cx in range(cx0, cx1 + 1):
             for cy in range(cy0, cy1 + 1):
-                cand_rows.append((int(qcell.pack(z, cx, cy)), pid))
+                cand_rows.append((qcell.pack_int(z, cx, cy), pid))
     spark = points.sparkSession
     cand = spark.createDataFrame(pd.DataFrame(cand_rows, columns=["cell", "poly_id"]))
 

@@ -102,8 +102,9 @@ _UNIT_PT = st.floats(-0.25, 1.25, allow_nan=False)
 def test_column_codec_matches_numpy(spark, sampled):
     """The Spark Column forms of the cell codec agree with the numpy and
     int forms and with ``pack_sql``, in one job: pack (Column and int
-    level), unpack, level, every ancestor up to the root, and the
-    unit-world cell of a point and cover ranges of a bbox at z=8."""
+    level, and ``pack_int``), unpack, level, every ancestor up to the
+    root, and the unit-world cell of a point and cover ranges of a bbox
+    at z=8."""
     from pyspark.sql import functions as F
 
     rows = [(z, x, y, px, py, min(px, qx), min(py, qy), max(px, qx), max(py, qy))
@@ -129,7 +130,7 @@ def test_column_codec_matches_numpy(spark, sampled):
     assert len(got) == len(rows)
     for r in got:
         c = int(qcell.pack(r["z"], r["x"], r["y"]))
-        assert r["cell"] == r["sql"] == c
+        assert r["cell"] == r["sql"] == c == qcell.pack_int(r["z"], r["x"], r["y"])
         assert r["at26"] == int(qcell.pack(26, r["x"], r["y"]))
         assert r["zxy"] == [int(v) for v in qcell.unpack(c)] == list(qcell.unpack_int(c))
         assert r["level"] == r["z"]
