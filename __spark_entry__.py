@@ -62,13 +62,13 @@ _ORDERS_FOOTPRINT_SQL = """
 def _assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Footprints exploded to covering cells (tile assignment, S5/J1):
     narrow sequence+explode, no shuffle, all codegen."""
-    from gdal_drivers_spark.operators.assign import pack_cell
+    from gdal_drivers_spark.core.qcell import pack_col
 
     fp = _orders_footprints(spark, sf_dir)
     return (
         fp.withColumn("cx", F.explode(F.sequence("cx0", "cx1")))
         .withColumn("cy", F.explode(F.sequence("cy0", "cy1")))
-        .withColumn("cell", pack_cell(Z_ASSIGN, F.col("cx"), F.col("cy")))
+        .withColumn("cell", pack_col(Z_ASSIGN, F.col("cx"), F.col("cy")))
     )
 
 
@@ -96,21 +96,12 @@ def q_cell_join_region(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J1/P3: cell equi-join against the boundary table (region attr =
     r(x+y)%8, FIXTURES.md §2), grouped by region. The boundary side is
     a broadcast (4^z rows)."""
-    from gdal_drivers_spark.operators.assign import pack_cell
+    from gdal_drivers_spark.sources.synth import region_boundaries
 
-    n = 1 << Z_ASSIGN
-    bounds = (
-        spark.range(n * n)
-        .select(
-            (F.col("id").cast("long") / n).cast("long").alias("bx"),
-            (F.col("id") % n).alias("by"),
-        )
-        .withColumn("cell", pack_cell(Z_ASSIGN, F.col("bx"), F.col("by")))
-        .withColumn("region", F.concat(F.lit("r"), ((F.col("bx") + F.col("by")) % 8)))
-    )
+    bounds = region_boundaries(spark, Z_ASSIGN, 8)
     a = _assigned(spark, sf_dir)
     return (
-        a.join(F.broadcast(bounds.select("cell", "region")), "cell", "inner")
+        a.join(F.broadcast(bounds), "cell", "inner")
         .groupBy("region")
         .agg(
             F.count("*").alias("n_assign"),
@@ -2225,7 +2216,7 @@ def q_skew_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     (¼ of all orders land in z=4 cell (3,3)) exceeds the threshold and
     descends one level, children routed by footprint midpoint; the
     census after splitting is the oracle-checked output."""
-    from gdal_drivers_spark.operators.assign import pack_cell
+    from gdal_drivers_spark.core.qcell import pack_col
     from gdal_drivers_spark.plans.skew import split_hot_cells
 
     o = spark.read.parquet(f"{sf_dir}/orders.parquet")
@@ -2246,7 +2237,7 @@ def q_skew_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     df = o.select(
         k.alias("k"),
-        pack_cell(4, cx, cy).alias("cell"),
+        pack_col(4, cx, cy).alias("cell"),
         midx.alias("x0"), midy.alias("y0"), midx.alias("x1"), midy.alias("y1"),
     )
     # threshold: hot cell (~n/4 rows) splits once; its 4 children
@@ -3624,7 +3615,7 @@ def q_halo_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W1 (2-D halo exchange): supplier-derived tiles at z=4 re-keyed
     to their ≤8 in-bounds neighbors (with_halo), rolled up per target
     cell — the distributed sliding-window support of blender.cpp:601-624."""
-    from gdal_drivers_spark.operators.assign import pack_cell
+    from gdal_drivers_spark.core.qcell import pack_col
     from gdal_drivers_spark.operators.halo import with_halo
 
     s = spark.read.parquet(f"{sf_dir}/supplier.parquet")
@@ -3636,7 +3627,7 @@ def q_halo_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("tx", "ty")
         .agg(F.min("payload").alias("payload"))
-        .select(pack_cell(4, F.col("tx"), F.col("ty")).alias("cell"), "payload")
+        .select(pack_col(4, F.col("tx"), F.col("ty")).alias("cell"), "payload")
     )
     h = with_halo(tiles, ring=1)
     return (
@@ -6697,9 +6688,9 @@ def entry(spark: SparkSession) -> DataFrame:
     _ship(spark)
     import pandas as pd
 
-    from gdal_drivers_spark.operators.assign import assign_tiles, pack_cell
+    from gdal_drivers_spark.operators.assign import assign_tiles
     from gdal_drivers_spark.operators.decode import decode_stats
-    from gdal_drivers_spark.sources.synth import IMAGES_SCHEMA, gen_images_pdf
+    from gdal_drivers_spark.sources.synth import IMAGES_SCHEMA, gen_images_pdf, region_boundaries
 
     sf_dir = "/root/testdata/sf0.001"
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select("o_orderkey")
@@ -6713,18 +6704,7 @@ def entry(spark: SparkSession) -> DataFrame:
     images = orders.mapInPandas(gen, IMAGES_SCHEMA)
     decoded = decode_stats(images)
     assigned = assign_tiles(decoded, z=Z_ASSIGN)
-
-    n = 1 << Z_ASSIGN
-    bounds = (
-        spark.range(n * n)
-        .select(
-            (F.col("id").cast("long") / n).cast("long").alias("bx"),
-            (F.col("id") % n).alias("by"),
-        )
-        .withColumn("cell", pack_cell(Z_ASSIGN, F.col("bx"), F.col("by")))
-        .withColumn("region", F.concat(F.lit("r"), ((F.col("bx") + F.col("by")) % 8)))
-        .select("cell", "region")
-    )
+    bounds = region_boundaries(spark, Z_ASSIGN, 8)
     return (
         assigned.join(F.broadcast(bounds), "cell", "inner")
         .groupBy("region")

@@ -76,7 +76,8 @@ def _flagship(spark, sf_dir: str, mult: int = 1):
     the only correct shape at 10^12 rows."""
     from pyspark.sql import functions as F
 
-    from gdal_drivers_spark.operators.assign import explode_cells, pack_cell, with_footprint
+    from gdal_drivers_spark.operators.assign import explode_cells, with_footprint
+    from gdal_drivers_spark.sources.synth import region_boundaries
 
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select("o_orderkey")
     orders = orders.repartition(CPUS * 3)
@@ -93,18 +94,7 @@ def _flagship(spark, sf_dir: str, mult: int = 1):
         ).alias("phash"),
     )
     assigned = explode_cells(with_footprint(imgs), Z_BENCH)
-    n = 1 << Z_BENCH
-    bounds = (
-        spark.range(n * n)
-        .select(
-            (F.col("id").cast("long") / n).cast("long").alias("bx"),
-            (F.col("id") % n).alias("by"),
-        )
-        .select(
-            pack_cell(Z_BENCH, F.col("bx"), F.col("by")).alias("cell"),
-            F.concat(F.lit("r"), ((F.col("bx") + F.col("by")) % 64)).alias("region"),
-        )
-    )
+    bounds = region_boundaries(spark, Z_BENCH, 64)
     joined = assigned.join(F.broadcast(bounds), "cell", "inner")
     agg = joined.groupBy("region").agg(
         F.count("*").alias("n_assign"), F.approx_count_distinct("k").alias("n_images")
@@ -620,9 +610,8 @@ def stress() -> dict:
     # flagship: count the JOINED assignments (the flagship action,
     # minus the driver-side rollup collect so count() is the measure)
     def build_flagship(mult):
-        from gdal_drivers_spark.operators.assign import (
-            explode_cells, pack_cell, with_footprint,
-        )
+        from gdal_drivers_spark.operators.assign import explode_cells, with_footprint
+        from gdal_drivers_spark.sources.synth import region_boundaries
 
         orders = spark.read.parquet(f"{SF_DIR}/orders.parquet").select("o_orderkey")
         orders = orders.repartition(CPUS * 3).withColumn(
@@ -634,14 +623,7 @@ def stress() -> dict:
              + (F.col("o_orderkey") % F.lit(1024)) * F.lit(1 << 40)).alias("phash"),
         )
         assigned = explode_cells(with_footprint(imgs), Z_BENCH)
-        n = 1 << Z_BENCH
-        bounds = spark.range(n * n).select(
-            (F.col("id").cast("long") / n).cast("long").alias("bx"),
-            (F.col("id") % n).alias("by"),
-        ).select(
-            pack_cell(Z_BENCH, F.col("bx"), F.col("by")).alias("cell"),
-            F.concat(F.lit("r"), ((F.col("bx") + F.col("by")) % 64)).alias("region"),
-        )
+        bounds = region_boundaries(spark, Z_BENCH, 64)
         return assigned.join(F.broadcast(bounds), "cell", "inner")
 
     case("flagship_join", 256, 1024, build_flagship, "join_rows")

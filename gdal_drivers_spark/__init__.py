@@ -83,12 +83,12 @@ def package_zip() -> str:
 def get_spark(
     app: str = "gdal_drivers_spark",
     cores: int | None = None,
-    shuffle_partitions: int | None = None,
 ) -> SparkSession:
     """Session tuned for the engine: AQE on, Arrow on, shuffle partitions
-    sized to parallelism (not the 200 default, which over-partitions
-    local mode and under-partitions a 1000-executor cluster — on a real
-    cluster set ``spark.sql.shuffle.partitions`` ≈ 2-3× total cores).
+    sized to parallelism, ``max(cores, 8)`` (not the 200 default, which
+    over-partitions local mode and under-partitions a 1000-executor
+    cluster — on a real cluster set ``spark.sql.shuffle.partitions``
+    ≈ 2-3× total cores).
 
     Defaults come from the machine: ``local[n]`` over the CPUs this
     process may run on, and a driver heap of half the physical RAM —
@@ -98,11 +98,10 @@ def get_spark(
     cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
     heap = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or f"{ram // 2 >> 20}m"
-    sp = shuffle_partitions or max(cores, 8)
     return _ship(
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app)
-        .config("spark.sql.shuffle.partitions", str(sp))
+        .config("spark.sql.shuffle.partitions", str(max(cores, 8)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

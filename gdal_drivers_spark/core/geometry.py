@@ -26,30 +26,6 @@ EPS = 1e-4  # the reference's ~equality epsilon (blender.cpp:120-131)
 
 # ------------------------------------------------------------ rects
 
-def rect_intersect(a, b):
-    """Intersection of two rect arrays (x0,y0,x1,y1) → rect, possibly empty."""
-    ax0, ay0, ax1, ay1 = a
-    bx0, by0, bx1, by1 = b
-    return (
-        np.maximum(ax0, bx0),
-        np.maximum(ay0, by0),
-        np.minimum(ax1, bx1),
-        np.minimum(ay1, by1),
-    )
-
-
-def rect_nonempty(r):
-    x0, y0, x1, y1 = r
-    return (x1 > x0) & (y1 > y0)
-
-
-def rects_overlap(ax0, ay0, ax1, ay1, bx0, by0, bx1, by1):
-    """Half-open bbox overlap predicate — the Locator ROI test
-    (blender.cpp:226-238); also the exact-refine stage after the
-    cell equi-join."""
-    return (ax0 < bx1) & (bx0 < ax1) & (ay0 < by1) & (by0 < ay1)
-
-
 def points_in_rect(px, py, x0, y0, x1, y1):
     """Half-open containment of points (pixel centers already offset by
     +0.5 by the caller — blender.cpp:593 convention)."""
@@ -169,8 +145,3 @@ def gt_orthogonal(gt) -> bool:
 def gt_resolution(gt):
     """(hypot(gt1,gt4), hypot(gt2,gt5)) — blender.cpp:141-151."""
     return float(np.hypot(gt[1], gt[4])), float(np.hypot(gt[2], gt[5]))
-
-
-def approx_equal(a, b, eps: float = EPS):
-    """|a−b| < eps (blender.cpp:120-131)."""
-    return np.abs(np.asarray(a) - np.asarray(b)) < eps

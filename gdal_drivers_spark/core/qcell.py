@@ -101,10 +101,10 @@ def children(cell):
     return pack(np.asarray(z)[..., None] + 1, cx, cy)
 
 
-def neighbors(cell, ring: int = 1, clamp: bool = True):
+def neighbors(cell, ring: int = 1):
     """Cells of the square ring at Chebyshev distance ``ring`` (plus the
-    center for ring 0). Out-of-domain cells are dropped when ``clamp``
-    (bounds per mbtiles.cpp:146-152: valid range [0, 2^z - 1]).
+    center for ring 0). Out-of-domain cells are dropped (bounds per
+    mbtiles.cpp:146-152: valid range [0, 2^z - 1]).
 
     Scalar cell in → 1-D int64 array of cells out.
     """
@@ -116,9 +116,8 @@ def neighbors(cell, ring: int = 1, clamp: bool = True):
     dx, dy = np.meshgrid(dd, dd)
     on_ring = np.maximum(np.abs(dx), np.abs(dy)) == ring
     nx, ny = x + dx[on_ring], y + dy[on_ring]
-    if clamp:
-        keep = (nx >= 0) & (nx < n) & (ny >= 0) & (ny < n)
-        nx, ny = nx[keep], ny[keep]
+    keep = (nx >= 0) & (nx < n) & (ny >= 0) & (ny < n)
+    nx, ny = nx[keep], ny[keep]
     return pack(np.full(nx.shape, z), nx, ny)
 
 

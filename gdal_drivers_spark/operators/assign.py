@@ -20,17 +20,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..core.qcell import cover_cols, explode_ranges
-# bench.py and __spark_entry__.py import pack_cell from here
-from ..core.qcell import pack_col as pack_cell  # noqa: F401
 
 MAX_SPAN = 1.0 / 64  # synthetic footprint max width/height (fraction of world)
 
 
-def with_footprint(df: DataFrame, phash: str = "phash") -> DataFrame:
+def with_footprint(df: DataFrame) -> DataFrame:
     """Derive the deterministic unit-world footprint from ``phash`` —
     identical arithmetic to sources.synth.footprint_of (power-of-two
     divisions ⇒ bit-identical doubles in numpy / Spark / DuckDB)."""
-    h = F.col(phash)
+    h = F.col("phash")
     fx = (h % F.lit(1 << 20)).cast("double") / F.lit(float(1 << 20))
     fy = (F.shiftright(h, 20) % F.lit(1 << 20)).cast("double") / F.lit(float(1 << 20))
     fw = ((F.shiftright(h, 40) % F.lit(1024)).cast("double") + F.lit(1.0)) / F.lit(1024.0)

@@ -163,11 +163,9 @@ def mosaic_lastwins(
     tiles: DataFrame,
     tile_px: int,
     nodata: int = 0,
-    cell: str = "cell",
-    src: str = "src_id",
-    raster: str = "raster",
 ) -> DataFrame:
-    """gdal_merge.py / gdalbuildvrt composition: sources paint in
+    """gdal_merge.py / gdalbuildvrt composition over (cell, src_id,
+    raster) rows: sources paint in
     ``src_id`` order and a LATER source overrides an earlier one
     wherever its pixel is not ``nodata`` — no weighting, no feather
     (that is ``blend_tiles``); pixels every source leaves at nodata
@@ -200,7 +198,7 @@ def mosaic_lastwins(
         return [(kc, img.tobytes(), int((img != nd).sum()), len(srcs))]
 
     return run_grouped(
-        tiles.select(F.col(cell).alias("cell"), F.col(src).alias("_src"),
-                     F.col(raster).alias("_raster")),
+        tiles.select(F.col("cell").alias("cell"), F.col("src_id").alias("_src"),
+                     F.col("raster").alias("_raster")),
         ["cell"], ["_src", "_raster"], _kernel, MOSAIC_SCHEMA,
     )

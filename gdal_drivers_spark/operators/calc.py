@@ -118,15 +118,13 @@ CALC_SCHEMA = "image_id string, bytes binary, w int, h int, fmt string, ok boole
 def band_calc(
     frames: dict[str, DataFrame],
     expr: str,
-    id_col: str = "image_id",
-    bytes_col: str = "bytes",
-    fmt_col: str = "fmt",
 ) -> DataFrame:
     """Evaluate ``expr`` over the aligned rasters of ``frames`` (name →
-    DataFrame, names as used in the expression, e.g. {"A": dsm, "B":
-    dtm}). Inner-join on ``id_col`` (an image absent from any operand
-    frame produces no output row — gdal_calc requires all inputs), one
-    Arrow kernel, saturating-u8 output. Shape/band mismatch between
+    DataFrame of (image_id, bytes, fmt), names as used in the
+    expression, e.g. {"A": dsm, "B": dtm}). Inner-join on ``image_id``
+    (an image absent from any operand frame produces no output row —
+    gdal_calc requires all inputs), one Arrow kernel, saturating-u8
+    output. Shape/band mismatch between
     operands or an undecodable operand poisons the ROW (bytes NULL,
     ok false), never the stage."""
     if not frames:
@@ -140,9 +138,9 @@ def band_calc(
     joined = None
     for name in names:
         side = frames[name].select(
-            F.col(id_col).alias("_id"),
-            F.col(bytes_col).alias(f"_b_{name}"),
-            F.col(fmt_col).alias(f"_f_{name}"),
+            F.col("image_id").alias("_id"),
+            F.col("bytes").alias(f"_b_{name}"),
+            F.col("fmt").alias(f"_f_{name}"),
         )
         joined = side if joined is None else joined.join(side, "_id", "inner")
 

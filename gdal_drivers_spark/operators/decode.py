@@ -30,8 +30,9 @@ DECODE_STATS_SCHEMA = (
 )
 
 
-def decode_stats(images: DataFrame, bytes_col: str = "bytes", fmt_col: str = "fmt") -> DataFrame:
-    """Decode every image and append pixel statistics columns.
+def decode_stats(images: DataFrame) -> DataFrame:
+    """Decode every image (``bytes``, ``fmt``) and append pixel
+    statistics columns.
 
     Mirrors the reference's read path end state: pixels materialized
     per block, here reduced to stats so the operator composes into
@@ -79,12 +80,6 @@ def decode_stats(images: DataFrame, bytes_col: str = "bytes", fmt_col: str = "fm
     # should filter those columns BEFORE decode_stats, or every row is
     # decoded. Pinned by test_poison::test_decode_stats_filter_decodes_once.
     dec = _decode.asNondeterministic()
-    return images.withColumn("_d", dec(F.col(bytes_col), F.col(fmt_col))).select(
+    return images.withColumn("_d", dec(F.col("bytes"), F.col("fmt"))).select(
         "*", "_d.*"
     ).drop("_d")
-
-
-def decode_pixels_pdf(pdf: pd.DataFrame, bytes_col: str = "bytes") -> list[np.ndarray]:
-    """Driver/worker helper: decode a pandas batch to a list of arrays
-    (used by operators that need actual pixels, e.g. blend halos)."""
-    return [codecs.decode(bytes(b)) for b in pdf[bytes_col]]

@@ -31,9 +31,10 @@ from pyspark.sql import DataFrame, Window, functions as F
 MERSENNE31 = 2147483647
 
 
-def tokens_col(text: str = "text"):
-    """Whitespace tokens of trimmed lowercase text (deterministic)."""
-    return F.split(F.trim(F.lower(F.col(text))), r"\s+")
+def tokens_col():
+    """Whitespace tokens of the trimmed lowercase ``text`` column
+    (deterministic)."""
+    return F.split(F.trim(F.lower(F.col("text"))), r"\s+")
 
 
 def _hash32(col):
@@ -41,9 +42,9 @@ def _hash32(col):
     return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
 
 
-def with_shingles(df: DataFrame, text: str = "text", k: int = 3) -> DataFrame:
-    """Word k-shingles as hashed int64s (distinct per doc)."""
-    toks = tokens_col(text)
+def with_shingles(df: DataFrame, k: int = 3) -> DataFrame:
+    """Word k-shingles of ``text`` as hashed int64s (distinct per doc)."""
+    toks = tokens_col()
     n = F.size(toks)
     sh = F.transform(
         F.sequence(F.lit(0), F.greatest(n - k, F.lit(0))),
@@ -135,11 +136,11 @@ def release_caches() -> None:
             pass
 
 
-def minhash_signature(df: DataFrame, n_hashes: int = 16, text: str = "text", k: int = 3) -> DataFrame:
+def minhash_signature(df: DataFrame, n_hashes: int = 16, k: int = 3) -> DataFrame:
     """Append ``sig`` — array of n MinHash values: min over shingles of
     (a_i·h + b_i) mod M31 with fixed odd multipliers (a_i = 2i+3,
     b_i = 5i+1); h < 2^32 keeps products well inside int64."""
-    d = with_shingles(_ensure_parallelism(df), text, k)
+    d = with_shingles(_ensure_parallelism(df), k)
     sig = F.transform(
         F.sequence(F.lit(0), F.lit(n_hashes - 1)),
         lambda i: F.array_min(
@@ -203,13 +204,13 @@ def lsh_candidate_pairs(
     )
 
 
-def simhash(df: DataFrame, id_col: str, text: str = "text", bits: int = 32) -> DataFrame:
+def simhash(df: DataFrame, id_col: str, bits: int = 32) -> DataFrame:
     """SimHash per doc: bit b set iff Σ_tokens (±1 by bit b of the token
     hash) > 0. Fully relational (explode → groupBy(doc,bit) → groupBy
     doc), identical shape to the SQL oracle."""
     tok = _ensure_parallelism(df).select(
         F.col(id_col),
-        F.explode(tokens_col(text)).alias("_t"),
+        F.explode(tokens_col()).alias("_t"),
     ).withColumn("_h", _hash32(F.col("_t")))
     bitrows = tok.select(
         id_col, "_h", F.explode(F.sequence(F.lit(0), F.lit(bits - 1))).alias("_b")
@@ -247,7 +248,6 @@ def phash_near_dup(
     max_dist: int = 3,
     n_bands: int = 4,
     id_col: str = "image_id",
-    phash_col: str = "phash",
     max_bucket: int | None = 10_000,
 ) -> DataFrame:
     """Perceptual-hash near-duplicate pairs: (id1 < id2, hamming dist ≤
@@ -270,7 +270,7 @@ def phash_near_dup(
     assert n_bands > max_dist, "pigeonhole needs n_bands > max_dist"
     band_bits = 64 // n_bands
     mask = (1 << band_bits) - 1
-    b = df.select(F.col(id_col).alias("_id"), F.col(phash_col).alias("_p"))
+    b = df.select(F.col(id_col).alias("_id"), F.col("phash").alias("_p"))
     banded = b.select(
         "_id",
         "_p",
@@ -320,11 +320,9 @@ def phash_near_dup(
 
 def connected_components(
     edges: DataFrame,
-    id1: str = "id1",
-    id2: str = "id2",
     max_iter: int = 50,
 ) -> DataFrame:
-    """Duplicate CLUSTERS from candidate pairs: connected components by
+    """Duplicate CLUSTERS from (id1, id2) candidate pairs: connected components by
     iterative hash-min label propagation. Returns (node:long,
     component:long) with component = min node id in the component.
 
@@ -343,7 +341,7 @@ def connected_components(
     spark = edges.sparkSession
     # undirected: both directions, plus self-loops so isolated label
     # updates keep every node present
-    e = edges.select(F.col(id1).alias("src"), F.col(id2).alias("dst"))
+    e = edges.select(F.col("id1").alias("src"), F.col("id2").alias("dst"))
     sym = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     sym = sym.localCheckpoint(eager=True)
     labels = (
@@ -411,7 +409,6 @@ def connected_components(
 def dup_clusters(
     df: DataFrame,
     id_col: str,
-    text: str = "text",
     n_hashes: int = 16,
     n_bands: int = 4,
     k: int = 3,
@@ -421,8 +418,8 @@ def dup_clusters(
     candidate pairs → (optional) exact-Jaccard edge filter → connected
     components → (id, cluster_rep, cluster_size). Docs with no
     near-dup partner are absent (singletons need no curation action)."""
-    shingled = with_shingles(df, text=text, k=k)
-    sigs = minhash_signature(df, n_hashes=n_hashes, text=text, k=k)
+    shingled = with_shingles(df, k=k)
+    sigs = minhash_signature(df, n_hashes=n_hashes, k=k)
     pairs = lsh_candidate_pairs(sigs, id_col, n_hashes=n_hashes, bands=n_bands)
     if min_jaccard is not None:
         # exact_jaccard emits integer jaccard_pct (0-100); min_jaccard

@@ -83,14 +83,13 @@ def _assemble_padded(contrib: dict, t: int) -> np.ndarray | None:
     return P
 
 
-def _run_padded(tiles: DataFrame, t: int, cell: str, schema: str, kernel) -> DataFrame:
+def _run_padded(tiles: DataFrame, t: int, schema: str, kernel) -> DataFrame:
     """The DEM plan: one strip-halo exchange, then ``kernel(kc, P,
     n_bad)`` once per tile with its padded window (``P`` None for a
     poison center — callers emit a flagged row, never kill the stage)."""
     return run_halo(
         tiles, t, 1, schema,
         lambda kc, contrib, n_bad: kernel(kc, _assemble_padded(contrib, t), n_bad),
-        cell=cell,
     )
 
 
@@ -109,7 +108,7 @@ def _horn_pq8(P: np.ndarray, t: int) -> tuple[np.ndarray, np.ndarray]:
     return (c + 2 * f + i) - (a + 2 * d + g), (g + 2 * h + i) - (a + 2 * b + c)
 
 
-def horn_gradients(tiles: DataFrame, tile_px: int, cell: str = "cell") -> DataFrame:
+def horn_gradients(tiles: DataFrame, tile_px: int) -> DataFrame:
     """Per-tile EXACT integer Horn gradient summary:
     (cell, n_px, p8_sum, q8_sum, p8_abs_sum, q8_abs_sum). The seam- and
     clamp-sensitive part of the DEM pipeline, fully oracle-checkable.
@@ -124,7 +123,7 @@ def horn_gradients(tiles: DataFrame, tile_px: int, cell: str = "cell") -> DataFr
                  int(np.abs(p8).sum()), int(np.abs(q8).sum()), n_bad)]
 
     return _run_padded(
-        tiles, t, cell,
+        tiles, t,
         "cell long, n_px long, p8_sum long, q8_sum long, "
         "p8_abs_sum long, q8_abs_sum long, n_bad long",
         _grad,
@@ -188,7 +187,6 @@ def _shade_multi(p8: np.ndarray, q8: np.ndarray, altitude_deg: float,
 def hillshade(
     tiles: DataFrame,
     tile_px: int,
-    cell: str = "cell",
     azimuth_deg: float = 315.0,
     altitude_deg: float = 45.0,
     z_factor: float = 1.0,
@@ -212,7 +210,7 @@ def hillshade(
         return [(kc, out.tobytes(), int(out.sum(dtype=np.int64)), n_bad)]
 
     return _run_padded(
-        tiles, t, cell, "cell long, tile binary, hs_sum long, n_bad long", _hs)
+        tiles, t, "cell long, tile binary, hs_sum long, n_bad long", _hs)
 
 
 def hillshade_np(elev: np.ndarray, azimuth_deg=315.0, altitude_deg=45.0,
@@ -253,7 +251,7 @@ def _slope_aspect(p8: np.ndarray, q8: np.ndarray, z_factor: float) -> tuple[np.n
 
 
 def slope_aspect(
-    tiles: DataFrame, tile_px: int, cell: str = "cell", z_factor: float = 1.0
+    tiles: DataFrame, tile_px: int, z_factor: float = 1.0
 ) -> DataFrame:
     """gdaldem slope + aspect over tiles (same strip-projected halo and
     poison policy as hillshade; seam-exact vs the whole-raster
@@ -269,7 +267,7 @@ def slope_aspect(
         return [(kc, slope.tobytes(), aspect.tobytes(), n_bad)]
 
     return _run_padded(
-        tiles, t, cell,
+        tiles, t,
         "cell long, slope_tile binary, aspect_tile binary, n_bad long", _sa)
 
 
@@ -298,7 +296,7 @@ def _terrain_px(P: np.ndarray, t: int):
     return tri_w8, tri_r2, tpi8, rough
 
 
-def terrain_indices(tiles: DataFrame, tile_px: int, cell: str = "cell") -> DataFrame:
+def terrain_indices(tiles: DataFrame, tile_px: int) -> DataFrame:
     """Per-tile EXACT integer summaries of the gdaldem terrain trio
     (TRI / TPI / roughness) — completes the gdaldem family next to
     slope/aspect/hillshade. Same plan as horn_gradients: one
@@ -317,7 +315,7 @@ def terrain_indices(tiles: DataFrame, tile_px: int, cell: str = "cell") -> DataF
                  int(rough.sum()), int(rough.max()), n_bad)]
 
     return _run_padded(
-        tiles, t, cell,
+        tiles, t,
         "cell long, n_px long, tri_w8_sum long, tri_r2_sum long, "
         "tpi8_sum long, tpi8_abs_sum long, rough_sum long, rough_max long, "
         "n_bad long",
@@ -325,7 +323,7 @@ def terrain_indices(tiles: DataFrame, tile_px: int, cell: str = "cell") -> DataF
     )
 
 
-def roughness_tiles(tiles: DataFrame, tile_px: int, cell: str = "cell") -> DataFrame:
+def roughness_tiles(tiles: DataFrame, tile_px: int) -> DataFrame:
     """Per-pixel roughness RASTER (max−min of each 3×3 window) — the
     one gdaldem terrain index whose exact value fits the u8 payload
     (≤255 for u8 DEMs), so it ships as tiles like hillshade. Seam-
@@ -338,14 +336,12 @@ def roughness_tiles(tiles: DataFrame, tile_px: int, cell: str = "cell") -> DataF
         rough = _terrain_px(P, t)[3]
         return [(kc, rough.astype(np.uint8).tobytes(), n_bad)]
 
-    return _run_padded(tiles, t, cell, "cell long, tile binary, n_bad long", _r)
+    return _run_padded(tiles, t, "cell long, tile binary, n_bad long", _r)
 
 
 def color_relief(
     tiles: DataFrame,
     ramp: list,
-    cell: str = "cell",
-    tile_col: str = "tile",
 ) -> DataFrame:
     """gdaldem color-relief: map every elevation through a piecewise-linear
     RGB ramp (``ramp`` = sorted [(elev, (r, g, b)), …] — the parsed
@@ -396,8 +392,8 @@ def color_relief(
             out.append((planes[0], planes[1], planes[2], True))
         return pd.DataFrame(out, columns=["r", "g", "b", "ok"])
 
-    other = [c for c in tiles.columns if c != tile_col]
-    return tiles.withColumn("_c", _relief(F.col(tile_col))).select(
+    other = [c for c in tiles.columns if c != "tile"]
+    return tiles.withColumn("_c", _relief(F.col("tile"))).select(
         *other, "_c.r", "_c.g", "_c.b", F.col("_c.ok").alias("ok")
     )
 
@@ -407,7 +403,6 @@ def contour_case_census(
     tile_px: int,
     levels: list,
     grid_wh: tuple,
-    cell: str = "cell",
 ) -> DataFrame:
     """gdal_contour's topology, distributed and exactly checkable:
     marching-squares case census per tile per contour level.
@@ -459,7 +454,7 @@ def contour_case_census(
         return rows
 
     return _run_padded(
-        tiles, t, cell,
+        tiles, t,
         "cell long, level double, n_squares long, n_segments long, "
         "case_sum long, n_bad long",
         _census,

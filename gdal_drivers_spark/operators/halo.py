@@ -93,8 +93,7 @@ def halo_window(contrib: dict, t: int, w: int, fill: int) -> np.ndarray:
 
 
 def run_halo(
-    tiles: DataFrame, tile_px: int, width: int, schema: str, kernel,
-    cell: str = "cell", tile: str = "tile",
+    tiles: DataFrame, tile_px: int, width: int, schema: str, kernel
 ) -> DataFrame:
     """One ``with_halo_bands`` exchange, then ``kernel(kc, contrib,
     n_bad)`` once per target cell that holds a tile row (``contrib``
@@ -106,11 +105,11 @@ def run_halo(
         contrib, n_bad, center_row = parse_halo(g["dx"], g["dy"], g["payload"], t, w)
         return kernel(key[0], contrib, n_bad) if center_row else []
 
-    h = with_halo_bands(tiles, t, w, cell=cell, tile=tile)
+    h = with_halo_bands(tiles, t, w)
     return run_grouped(h, ["target_cell"], ["dx", "dy", "payload"], _k, schema)
 
 
-def halo_convolve(tiles: DataFrame, tile_px: int, cell: str = "cell") -> DataFrame:
+def halo_convolve(tiles: DataFrame, tile_px: int) -> DataFrame:
     """Cross-tile 3×3 box-mean — the halo join's pixel use case (the
     sliding spatial window of ``blender.cpp:601-624`` generalized to
     neighbor-PIXEL kernels). Each target cell's group receives its own
@@ -148,10 +147,10 @@ def halo_convolve(tiles: DataFrame, tile_px: int, cell: str = "cell") -> DataFra
         out = np.rint(acc / np.maximum(cnt, 1.0)).astype(np.uint8)
         return [(kc, out.tobytes(), n_bad)]
 
-    return run_halo(tiles, t, 1, "cell long, tile binary, n_bad long", _conv, cell=cell)
+    return run_halo(tiles, t, 1, "cell long, tile binary, n_bad long", _conv)
 
 
-def with_halo(tiles: DataFrame, cell: str = "cell", ring: int = 1) -> DataFrame:
+def with_halo(tiles: DataFrame, ring: int = 1) -> DataFrame:
     """Re-key each tile row to itself and its in-bounds neighbor cells
     within Chebyshev distance ``ring``.
 
@@ -161,7 +160,7 @@ def with_halo(tiles: DataFrame, cell: str = "cell", ring: int = 1) -> DataFrame:
     ``groupBy('target_cell')`` then sees each tile with its halo.
     """
     return (
-        _rekey(tiles, cell, ring)
+        _rekey(tiles, ring)
         # offset of the CONTRIBUTING tile relative to the target
         .withColumn("dx", -F.col("_dx"))
         .withColumn("dy", -F.col("_dy"))
@@ -169,11 +168,11 @@ def with_halo(tiles: DataFrame, cell: str = "cell", ring: int = 1) -> DataFrame:
     )
 
 
-def _rekey(tiles: DataFrame, cell: str, ring: int) -> DataFrame:
+def _rekey(tiles: DataFrame, ring: int) -> DataFrame:
     """Each row once per in-domain cell within Chebyshev distance
     ``ring`` of its ``cell``: the offset ``_dx``/``_dy`` (target minus
     source), the target's ``_tx``/``_ty`` and ``target_cell``."""
-    z, x, y = qcell.unpack_col(cell)
+    z, x, y = qcell.unpack_col("cell")
     n = F.call_function("shiftleft", F.lit(1).cast("long"), z.cast("int"))  # 2^z cells per axis
     return (
         tiles.withColumn("_dx", F.explode(F.sequence(F.lit(-ring), F.lit(ring))))
@@ -187,9 +186,7 @@ def _rekey(tiles: DataFrame, cell: str, ring: int) -> DataFrame:
     )
 
 
-def with_halo_strips(
-    tiles: DataFrame, tile_px: int, cell: str = "cell", tile: str = "tile"
-) -> DataFrame:
+def with_halo_strips(tiles: DataFrame, tile_px: int, tile: str = "tile") -> DataFrame:
     """Strip-projected ring-1 halo for 3×3 kernels: ``with_halo_bands``
     at width 1. Each side neighbor receives the 1-px edge strip it
     reads (payload index = the coordinate that varies along the shared
@@ -199,14 +196,13 @@ def with_halo_strips(
     This projection is LOSSLESS for the DEM assembler including its
     corner-fallback chain (a missing diagonal falls back to a side
     neighbor's corner pixel — always an element of that side's strip)."""
-    return with_halo_bands(tiles, tile_px, 1, cell=cell, tile=tile)
+    return with_halo_bands(tiles, tile_px, 1, tile=tile)
 
 
 def with_halo_bands(
     tiles: DataFrame,
     tile_px: int,
     width: int,
-    cell: str = "cell",
     tile: str = "tile",
 ) -> DataFrame:
     """Band-projected ring-1 halo — the exchange layer for kernels of
@@ -263,8 +259,8 @@ def with_halo_bands(
         return pd.DataFrame(rows, columns=list(names), dtype=object)
 
     stripped = tiles.select(
-        F.col(cell).alias(cell), F.col(tile).alias("tile")
-    ).withColumn("_s", _bands(F.col("tile"))).select(cell, "tile", "_s.*")
+        F.col("cell").alias("cell"), F.col(tile).alias("tile")
+    ).withColumn("_s", _bands(F.col("tile"))).select("cell", "tile", "_s.*")
 
     dx, dy = -F.col("_dx"), -F.col("_dy")  # contribution offset rel. target
     payload = (
@@ -278,7 +274,7 @@ def with_halo_bands(
         .when((dx == -1) & (dy == 1), F.col("_b0l"))
         .otherwise(F.col("_b00"))  # (1, 1)
     )
-    return _rekey(stripped, cell, 1).select(
+    return _rekey(stripped, 1).select(
         "target_cell",
         dx.cast("int").alias("dx"),
         dy.cast("int").alias("dy"),

@@ -34,15 +34,9 @@ def knn_join(
     k: int,
     z: int,
     coord_span: int,
-    qid: str = "qid",
-    pid: str = "pid",
-    qx: str = "qx",
-    qy: str = "qy",
-    px: str = "px",
-    py: str = "py",
-    max_ring: int | None = None,
 ) -> DataFrame:
-    """Exact kNN of each query row against the points table.
+    """Exact kNN of each query row (qid, qx, qy) against the points
+    table (pid, px, py).
 
     Coordinates are integers in [0, coord_span). Cells are the level-z
     grid over that span (cell side = coord_span >> z must divide
@@ -53,28 +47,27 @@ def knn_join(
     n = 1 << z
     side = coord_span // n
     assert side * n == coord_span, "coord_span must be a multiple of 2^z"
-    max_ring = max_ring if max_ring is not None else n  # full sweep worst case
 
     pts = points.select(
-        F.col(pid).alias("_pid"),
-        F.col(px).alias("_px"),
-        F.col(py).alias("_py"),
-        (F.col(px).cast("long") / side).cast("long").alias("_pcx"),
-        (F.col(py).cast("long") / side).cast("long").alias("_pcy"),
+        F.col("pid").alias("_pid"),
+        F.col("px").alias("_px"),
+        F.col("py").alias("_py"),
+        (F.col("px").cast("long") / side).cast("long").alias("_pcx"),
+        (F.col("py").cast("long") / side).cast("long").alias("_pcy"),
     )
     qry = queries.select(
-        F.col(qid).alias("_qid"),
-        F.col(qx).alias("_qx"),
-        F.col(qy).alias("_qy"),
-        (F.col(qx).cast("long") / side).cast("long").alias("_qcx"),
-        (F.col(qy).cast("long") / side).cast("long").alias("_qcy"),
+        F.col("qid").alias("_qid"),
+        F.col("qx").alias("_qx"),
+        F.col("qy").alias("_qy"),
+        (F.col("qx").cast("long") / side).cast("long").alias("_qcx"),
+        (F.col("qy").cast("long") / side).cast("long").alias("_qcy"),
     )
 
     pending = qry
     collected = None
     ring = 1
     while True:
-        ring = min(ring, max_ring)
+        ring = min(ring, n)
         # explode pending queries to all cells within Chebyshev distance ring
         cand_cells = (
             pending.withColumn(
@@ -134,8 +127,7 @@ def knn_join(
         done_ids = stats.filter(
             (F.col("_got") >= k) & (F.col("_worst") < F.lit(guarantee))
         ).select("_qid")
-        full_sweep = ring >= max_ring or (2 * ring + 1) >= 2 * n
-        if full_sweep:
+        if ring >= n:  # the ring covers the whole grid
             done = topk
             pending = None
         else:
@@ -149,8 +141,8 @@ def knn_join(
         ring *= 2
 
     return collected.select(
-        F.col("_qid").alias(qid),
-        F.col("_pid").alias(pid),
+        F.col("_qid").alias("qid"),
+        F.col("_pid").alias("pid"),
         "dist2",
         "rank",
     )

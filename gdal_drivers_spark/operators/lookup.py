@@ -25,14 +25,14 @@ from ..sources.mbtiles import gunzip_col
 PATH_RE = r"^(\d+)-(\d+)-(\d+)$"
 
 
-def parse_requests(paths: DataFrame, col: str = "path") -> DataFrame:
-    """'z-x-y' strings → typed (zoom,x,y) with bounds validation.
+def parse_requests(paths: DataFrame) -> DataFrame:
+    """'z-x-y' ``path`` strings → typed (zoom,x,y) with bounds validation.
     Malformed or out-of-bounds paths are dropped (the reference raises
     per request; set-at-a-time the analogue is filtering, with a
     'rejected' side channel available via the inverse filter)."""
-    p = paths.withColumn("_z", F.regexp_extract(F.col(col), PATH_RE, 1)) \
-        .withColumn("_x", F.regexp_extract(F.col(col), PATH_RE, 2)) \
-        .withColumn("_y", F.regexp_extract(F.col(col), PATH_RE, 3))
+    p = paths.withColumn("_z", F.regexp_extract(F.col("path"), PATH_RE, 1)) \
+        .withColumn("_x", F.regexp_extract(F.col("path"), PATH_RE, 2)) \
+        .withColumn("_y", F.regexp_extract(F.col("path"), PATH_RE, 3))
     return (
         p.filter((F.col("_z") != "") & (F.col("_x") != "") & (F.col("_y") != ""))
         .select(
@@ -68,10 +68,6 @@ def sample_points(
     tiles: DataFrame,
     tile_px: int,
     z: int,
-    cell: str = "cell",
-    tile_col: str = "tile",
-    px: str = "px",
-    py: str = "py",
     grid_origin: tuple = (0, 0),
 ) -> DataFrame:
     """gdallocationinfo, set-at-a-time: sample the pixel value under
@@ -96,21 +92,21 @@ def sample_points(
     ox, oy = int(grid_origin[0]), int(grid_origin[1])
     n = 1 << int(z)
     pts = (
-        points.withColumn("_tx", F.expr(f"({px} div {t}) + {ox}"))
-        .withColumn("_ty", F.expr(f"({py} div {t}) + {oy}"))
+        points.withColumn("_tx", F.expr(f"(px div {t}) + {ox}"))
+        .withColumn("_ty", F.expr(f"(py div {t}) + {oy}"))
         .filter(
-            (F.col(px) >= 0) & (F.col(py) >= 0)
+            (F.col("px") >= 0) & (F.col("py") >= 0)
             & (F.col("_tx") >= 0) & (F.col("_tx") < n)
             & (F.col("_ty") >= 0) & (F.col("_ty") < n)
         )
         .withColumn("_cell", qcell.pack_col(z, F.col("_tx"), F.col("_ty")))
     )
     joined = F.broadcast(pts).join(
-        tiles.select(F.col(cell).alias("_cell"), F.col(tile_col).alias("_tile")),
+        tiles.select(F.col("cell").alias("_cell"), F.col("tile").alias("_tile")),
         "_cell",
     )
     # 1-based substring; one byte → 2 hex chars → base-16 parse
-    off = F.expr(f"({py} % {t}) * {t} + ({px} % {t})")
+    off = F.expr(f"(py % {t}) * {t} + (px % {t})")
     val = F.conv(F.hex(F.substring(F.col("_tile"), off + F.lit(1), 1)), 16, 10)
     out_cols = [c for c in points.columns]
     return joined.select(

@@ -245,9 +245,9 @@ AUDIO_SCHEMA = (
 )
 
 
-def audio_features(audio: DataFrame, id_col: str = "audio_id", bytes_col: str = "bytes") -> DataFrame:
-    """Audio feature-extract over PCM WAV payloads (decode_wav —
-    from-scratch RIFF reader, no external codec): per clip n_samples
+def audio_features(audio: DataFrame) -> DataFrame:
+    """Audio feature-extract over (audio_id, bytes) PCM WAV payloads
+    (decode_wav — from-scratch RIFF reader, no external codec): per clip n_samples
     (frames), sample_rate, exact integer sum-of-squares, rms (ONE IEEE
     expression ``sqrt(sq_sum/n)`` over exact ints — oracle-exact) and
     peak |amplitude|. Channels fold into the frame stats (standard
@@ -260,9 +260,9 @@ def audio_features(audio: DataFrame, id_col: str = "audio_id", bytes_col: str = 
         for pdf in batches:
             rows = []
             for r in pdf.itertuples():
-                rid = getattr(r, id_col)
+                rid = r.audio_id
                 try:
-                    arr, rate, _ = decode_wav(bytes(getattr(r, bytes_col)))
+                    arr, rate, _ = decode_wav(bytes(r.bytes))
                     flat = arr.astype(np.int64).ravel()
                     n = arr.shape[0]
                     sq = int((flat * flat).sum())
@@ -288,12 +288,9 @@ PATCHES_SCHEMA = (
 )
 
 
-def patch_grid(
-    images: DataFrame, patch: int, stride: int | None = None
-) -> DataFrame:
+def patch_grid(images: DataFrame, patch: int) -> DataFrame:
     """Vision-training prep: cut each image into a grid of
-    ``patch``×``patch`` crops at ``stride`` spacing (default
-    non-overlapping). One input row fans out to its full patch set in
+    non-overlapping ``patch``×``patch`` crops. One input row fans out to its full patch set in
     one Arrow batch — a narrow map, no shuffle; the patch fan-out is
     the vision analogue of the tile explode in assign. Partial edge
     windows are dropped (only full patches are emitted, the standard
@@ -302,7 +299,6 @@ def patch_grid(
     Poison policy: a NULL/corrupt payload emits ONE flagged row
     (py=px=-1, ok=false) — distinct from a valid too-small image (zero
     patches, silent) and never a stage kill."""
-    stride = stride or patch
 
     def _run(batches):
         import numpy as np
@@ -325,11 +321,11 @@ def patch_grid(
                     oks.append(False)
                     continue
                 H, W = img.shape[0], img.shape[1]
-                for py in range((H - patch) // stride + 1 if H >= patch else 0):
-                    for px in range((W - patch) // stride + 1 if W >= patch else 0):
+                for py in range(H // patch):
+                    for px in range(W // patch):
                         crop = img[
-                            py * stride : py * stride + patch,
-                            px * stride : px * stride + patch,
+                            py * patch : py * patch + patch,
+                            px * patch : px * patch + patch,
                         ]
                         ids.append(r.image_id)
                         pys.append(py)
@@ -369,12 +365,10 @@ def phash64_np(img: np.ndarray) -> int:
     return int(bits)
 
 
-def phash_images(
-    images: DataFrame, id_col: str = "image_id", bytes_col: str = "bytes"
-) -> DataFrame:
+def phash_images(images: DataFrame) -> DataFrame:
     """pixels → 64-bit perceptual hash, one Arrow hop (the real-image
     replacement for the synthesized ``phash`` column of the input-hint
-    schema). Output: (id_col, phash, ph_ok). Poison policy as
+    schema). Output: (image_id, phash, ph_ok). Poison policy as
     everywhere: a corrupt/NULL payload flags its row, never the stage.
     Compose with ``dedup.phash_near_dup`` for banded Hamming near-dup
     pairs — decode → hash → band join, pixels never shuffle. Poison
@@ -396,8 +390,8 @@ def phash_images(
         # every hash above 2**53 in the batch
         return pd.DataFrame(rows, columns=["phash", "ph_ok"], dtype=object)
 
-    return images.withColumn("_p", _ph(F.col(bytes_col))).select(
-        F.col(id_col), F.col("_p.phash").alias("phash"), F.col("_p.ph_ok").alias("ph_ok")
+    return images.withColumn("_p", _ph(F.col("bytes"))).select(
+        F.col("image_id"), F.col("_p.phash").alias("phash"), F.col("_p.ph_ok").alias("ph_ok")
     )
 
 
@@ -675,7 +669,6 @@ def pansharpen(
     ms: DataFrame,
     pan: DataFrame,
     weights: tuple = (1, 1, 1),
-    id_col: str = "image_id",
 ) -> DataFrame:
     """gdal_pansharpen.py — weighted Brovey. Pinned EXACT-INTEGER
     rule (gdal_pansharpen computes in float; the engine pins so output
@@ -694,10 +687,10 @@ def pansharpen(
     wa = np.asarray(w, np.int64)
 
     joined = ms.select(
-        F.col(id_col).alias("_id"), F.col("bytes").alias("_mb"),
+        F.col("image_id").alias("_id"), F.col("bytes").alias("_mb"),
         F.col("fmt").alias("_mf"),
     ).join(
-        pan.select(F.col(id_col).alias("_id"), F.col("bytes").alias("_pb"),
+        pan.select(F.col("image_id").alias("_id"), F.col("bytes").alias("_pb"),
                    F.col("fmt").alias("_pf")),
         "_id", "inner",
     )

@@ -94,7 +94,6 @@ def _polygonize_parts(
     tiles: DataFrame,
     tile_px: int,
     grid_wh: tuple,
-    cell: str,
     tile_col: str,
     grid_origin: tuple,
     max_iter: int,
@@ -116,7 +115,7 @@ def _polygonize_parts(
         for pdf in batches:
             srows = []
             for row in pdf.itertuples():
-                _, tx, ty = qcell.unpack_int(getattr(row, cell))
+                _, tx, ty = qcell.unpack_int(row.cell)
                 tx, ty = tx - ox, ty - oy
                 if not (0 <= tx < gw and 0 <= ty < gh):
                     raise ValueError(
@@ -242,7 +241,6 @@ def polygonize(
     tiles: DataFrame,
     tile_px: int,
     grid_wh: tuple,
-    cell: str = "cell",
     tile_col: str = "tile",
     grid_origin: tuple = (0, 0),
     max_iter: int = 50,
@@ -266,7 +264,7 @@ def polygonize(
     if connectivity not in (4, 8):
         raise ValueError(f"connectivity must be 4 or 8, got {connectivity}")
     raw, summaries, n_bad, _, labels = _polygonize_parts(
-        tiles, tile_px, grid_wh, cell, tile_col, grid_origin, max_iter,
+        tiles, tile_px, grid_wh, tile_col, grid_origin, max_iter,
         connectivity=connectivity,
     )
     out = (
@@ -288,17 +286,13 @@ def polygonize(
     return out.unionByName(poison)
 
 
-def _sieve_remap(
-    tiles, tile_px, grid_wh, threshold, cell, tile_col, grid_origin,
-    max_iter, max_remap,
-):
+def _sieve_remap(tiles, tile_px, grid_wh, threshold, grid_origin, max_iter, max_remap):
     """Shared back half of the sieve pair: polygonize parts →
     component stats → root-level adjacency → small-component targets →
     driver-side transitive/cycle compression. Returns
     (raw, summaries, n_bad, node_root, comp, flat_remap)."""
     raw, summaries, n_bad, grouped, labels = _polygonize_parts(
-        tiles, tile_px, grid_wh, cell, tile_col, grid_origin, max_iter,
-        adjacency=True,
+        tiles, tile_px, grid_wh, "tile", grid_origin, max_iter, adjacency=True,
     )
     node_root = (
         summaries.select("node")
@@ -373,8 +367,6 @@ def sieve(
     tile_px: int,
     grid_wh: tuple,
     threshold: int,
-    cell: str = "cell",
-    tile_col: str = "tile",
     grid_origin: tuple = (0, 0),
     max_iter: int = 50,
     max_remap: int = 1_000_000,
@@ -398,8 +390,7 @@ def sieve(
     operation. A small component with NO neighbor (single-component
     raster) survives unchanged."""
     _raw, _summ, n_bad, _nr, comp, flat = _sieve_remap(
-        tiles, tile_px, grid_wh, threshold, cell, tile_col, grid_origin,
-        max_iter, max_remap,
+        tiles, tile_px, grid_wh, threshold, grid_origin, max_iter, max_remap,
     )
     spark = tiles.sparkSession
     remap_df = spark.createDataFrame(
@@ -430,8 +421,6 @@ def sieve_apply(
     tile_px: int,
     grid_wh: tuple,
     threshold: int,
-    cell: str = "cell",
-    tile_col: str = "tile",
     grid_origin: tuple = (0, 0),
     max_iter: int = 50,
     max_remap: int = 1_000_000,
@@ -454,8 +443,7 @@ def sieve_apply(
     ox, oy = int(grid_origin[0]), int(grid_origin[1])
     W = gw * t
     _raw, summaries, _n_bad, node_root, comp, flat = _sieve_remap(
-        tiles, tile_px, grid_wh, threshold, cell, tile_col, grid_origin,
-        max_iter, max_remap,
+        tiles, tile_px, grid_wh, threshold, grid_origin, max_iter, max_remap,
     )
     spark = tiles.sparkSession
     remap_df = spark.createDataFrame(
@@ -480,10 +468,10 @@ def sieve_apply(
         .groupBy("_tx", "_ty")
         .agg(F.collect_list(F.struct("node", "new_value")).alias("_patch"))
     )
-    _, cx, cy = qcell.unpack_col(cell)
+    _, cx, cy = qcell.unpack_col("cell")
     tagged = tiles.withColumn("_tx", cx - ox).withColumn("_ty", cy - oy)
     joined = tagged.join(F.broadcast(changed), ["_tx", "_ty"], "left").select(
-        cell, tile_col, "_tx", "_ty", "_patch"
+        "cell", "tile", "_tx", "_ty", "_patch"
     )
 
     def relabel(batches):
@@ -525,7 +513,6 @@ def contour_polygons(
     levels: list[int],
     tile_px: int,
     grid_wh: tuple,
-    cell: str = "cell",
     tile_col: str = "tile",
     grid_origin: tuple = (0, 0),
     max_iter: int = 50,
@@ -558,21 +545,21 @@ def contour_polygons(
             for r in pdf.itertuples():
                 raw = getattr(r, tile_col)
                 if raw is None:  # upstream poison row: polygonize owns it
-                    out.append((getattr(r, cell), None))
+                    out.append((r.cell, None))
                     continue
                 buf = bytes(raw)
                 if len(buf) != t * t:
-                    out.append((getattr(r, cell), buf))  # polygonize flags it
+                    out.append((r.cell, buf))  # polygonize flags it
                     continue
                 img = np.frombuffer(buf, np.uint8)
-                out.append((getattr(r, cell),
+                out.append((r.cell,
                             np.searchsorted(lva, img, side="right")
                             .astype(np.uint8).tobytes()))
-            yield pd.DataFrame(out, columns=[cell, tile_col])
+            yield pd.DataFrame(out, columns=["cell", tile_col])
 
-    banded = tiles.select(cell, tile_col).mapInPandas(
-        _band, f"{cell} long, {tile_col} binary")
-    comp = polygonize(banded, t, grid_wh, cell, tile_col, grid_origin,
+    banded = tiles.select("cell", tile_col).mapInPandas(
+        _band, f"cell long, {tile_col} binary")
+    comp = polygonize(banded, t, grid_wh, tile_col, grid_origin,
                       max_iter, connectivity=connectivity)
     arr = F.array(*[F.lit(x).cast("long") for x in lv])
     band = F.col("value")

@@ -52,8 +52,6 @@ def proximity(
     tile_px: int,
     target_value: int,
     max_dist: int,
-    cell: str = "cell",
-    tile_col: str = "tile",
 ) -> DataFrame:
     """Per-pixel squared distance to the nearest ``target_value``
     pixel within ``max_dist`` (Euclidean, exact integer). Output one
@@ -104,7 +102,7 @@ def proximity(
         return [(kc, d2.astype("<u2").tobytes(), n_reached,
                  int(d2.sum()), True, n_bad)]
 
-    return run_halo(tiles, t, w, _OUT_SCHEMA, _kernel, cell=cell, tile=tile_col)
+    return run_halo(tiles, t, w, _OUT_SCHEMA, _kernel)
 
 
 _FILL_SCHEMA = (
@@ -118,8 +116,6 @@ def fillnodata(
     tile_px: int,
     nodata: int,
     max_dist: int,
-    cell: str = "cell",
-    tile_col: str = "tile",
 ) -> DataFrame:
     """gdal_fillnodata.py's job — patch nodata holes from surrounding
     valid pixels — distributed with the same bounded-radius discipline
@@ -171,4 +167,4 @@ def fillnodata(
         return [(kc, out.astype(np.uint8).tobytes(), n_filled,
                  int(unfilled.sum()), True, n_bad)]
 
-    return run_halo(tiles, t, w, _FILL_SCHEMA, _kernel, cell=cell, tile=tile_col)
+    return run_halo(tiles, t, w, _FILL_SCHEMA, _kernel)

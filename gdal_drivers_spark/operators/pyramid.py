@@ -275,7 +275,6 @@ def retile(
     t_out: int,
     z: int,
     grid_wh: tuple,
-    cell: str = "cell",
     tile_col: str = "tile",
     nodata: int = 0,
 ) -> DataFrame:
@@ -312,7 +311,7 @@ def retile(
         for pdf in batches:
             out = []
             for r in pdf.itertuples():
-                _, tx, ty = qcell.unpack_int(getattr(r, cell))
+                _, tx, ty = qcell.unpack_int(r.cell)
                 gx0, gy0 = tx * ti, ty * ti
                 raw = getattr(r, tile_col)
                 buf = b"" if raw is None else bytes(raw)
@@ -347,7 +346,7 @@ def retile(
             img[oy:oy + fh, ox:ox + fw] = np.frombuffer(frag, np.uint8).reshape(fh, fw)
         return [(kc, img.tobytes(), len(g["frag"]), True)]
 
-    frags = tiles.select(cell, tile_col).mapInPandas(_slice, frag_schema)
+    frags = tiles.select("cell", tile_col).mapInPandas(_slice, frag_schema)
     assembled = run_grouped(
         frags, ["ocell"], ["ox", "oy", "fw", "fh", "frag", "bad"], _assemble,
         "cell long, tile binary, n_src long, ok boolean")

@@ -173,9 +173,6 @@ def burn_features(
     tile_px: int,
     z: int,
     grid_wh: tuple,
-    fid: str = "fid",
-    ring: str = "ring",
-    burn: str = "v",
     init: int = 0,
     emit_mask: bool = False,
 ) -> DataFrame:
@@ -197,7 +194,7 @@ def burn_features(
     raster size, the same envelope argument as the gridding kernels.
 
     ``features``: (fid long, ring array<array<double>> [[x,y],…] in
-    global pixel units, burn int). Degenerate rings (<3 points) are
+    global pixel units, v int burn value). Degenerate rings (<3 points) are
     dropped with the same prune as empty bboxes (gdal_rasterize skips
     unpaintable geometries)."""
     from gdal_drivers_spark.core.geometry import points_in_polygon
@@ -206,13 +203,13 @@ def burn_features(
     gw, gh = int(grid_wh[0]), int(grid_wh[1])
     nd = int(init) & 0xFF
 
-    xs = F.transform(F.col(ring), lambda p: p[0])
-    ys = F.transform(F.col(ring), lambda p: p[1])
+    xs = F.transform(F.col("ring"), lambda p: p[0])
+    ys = F.transform(F.col("ring"), lambda p: p[1])
     gated = (
-        features.filter(F.size(F.col(ring)) >= 3)
+        features.filter(F.size(F.col("ring")) >= 3)
         .select(
-            F.col(fid).alias("_fid"), F.col(ring).alias("_ring"),
-            F.col(burn).alias("_v"),
+            F.col("fid").alias("_fid"), F.col("ring").alias("_ring"),
+            F.col("v").alias("_v"),
             F.array_min(xs).alias("_bx0"), F.array_max(xs).alias("_bx1"),
             F.array_min(ys).alias("_by0"), F.array_max(ys).alias("_by1"),
         )
@@ -295,10 +292,6 @@ def burn_into(
     tile_px: int,
     z: int,
     grid_wh: tuple,
-    fid: str = "fid",
-    ring: str = "ring",
-    burn: str = "v",
-    cell: str = "cell",
     tile_col: str = "raster",
 ) -> DataFrame:
     """gdal_rasterize's actual mode of use: burn features INTO an
@@ -312,15 +305,13 @@ def burn_into(
     falls OUTSIDE the declared (z, grid_wh) universe also poisons —
     a silent drop would replace the whole mosaic when z is wrong."""
     t = int(tile_px)
-    painted = burn_features(
-        features, t, z, grid_wh, fid=fid, ring=ring, burn=burn,
-        emit_mask=True)
+    painted = burn_features(features, t, z, grid_wh, emit_mask=True)
     # FULL outer: a base tile whose cell is absent from the declared
     # universe (wrong z / outside grid_wh) must surface as a poison
     # row, not silently vanish from the composite (polygonize raises
     # for the analogous mis-declared grid)
     joined = painted.join(
-        base.select(F.col(cell).alias("cell"), F.col(tile_col).alias("_base")),
+        base.select(F.col("cell").alias("cell"), F.col(tile_col).alias("_base")),
         "cell", "full",
     )
 

@@ -38,8 +38,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
 
-def _spread_key(cid: str):
-    """Engine-portable deterministic spread hash over an id column —
+def _spread_key():
+    """Engine-portable deterministic spread hash over the ``cid`` column —
     the shared no-RNG sampler behind ivf_train init and both codebook
     samplers (factored r04: three copies had drifted into existence).
     Integer-castable ids use the `_mix` the SQL oracles replay;
@@ -48,9 +48,9 @@ def _spread_key(cid: str):
     lexicographic head."""
     from gdal_drivers_spark.operators.sample import _mix
 
-    key_long = F.expr(f"try_cast({cid} AS BIGINT)")
+    key_long = F.expr("try_cast(cid AS BIGINT)")
     return F.when(key_long.isNotNull(), _mix(key_long)).otherwise(
-        F.pmod(F.xxhash64(F.col(cid)), F.lit(1 << 32))
+        F.pmod(F.xxhash64(F.col("cid")), F.lit(1 << 32))
     )
 
 
@@ -70,7 +70,7 @@ def dot_int(a, b):
     )
 
 
-def _rank_topk(scored: DataFrame, k: int, score: str, qid: str, cid: str) -> DataFrame:
+def _rank_topk(scored: DataFrame, k: int, score: str) -> DataFrame:
     """Per-query top-k of ``scored`` (``_qid``, ``_cid``, ``score``):
     ``row_number`` over (score desc, cid asc), rank ≤ k — the one
     ranking rule every top-k here and its SQL oracle share. Output:
@@ -79,7 +79,7 @@ def _rank_topk(scored: DataFrame, k: int, score: str, qid: str, cid: str) -> Dat
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select(F.col("_qid").alias(qid), F.col("_cid").alias(cid), score, "rank")
+        .select(F.col("_qid").alias("qid"), F.col("_cid").alias("cid"), score, "rank")
     )
 
 
@@ -87,19 +87,15 @@ def brute_topk(
     queries: DataFrame,
     corpus: DataFrame,
     k: int = 5,
-    qid: str = "qid",
-    cid: str = "cid",
-    qvec: str = "qvec",
-    cvec: str = "cvec",
 ) -> DataFrame:
     """Exact top-k by quantized dot product, ties by cid. Queries are
     broadcast (the small side); corpus never shuffles before scoring."""
-    q = queries.select(F.col(qid).alias("_qid"), quantize(F.col(qvec)).alias("_qv"))
-    c = corpus.select(F.col(cid).alias("_cid"), quantize(F.col(cvec)).alias("_cv"))
+    q = queries.select(F.col("qid").alias("_qid"), quantize(F.col("qvec")).alias("_qv"))
+    c = corpus.select(F.col("cid").alias("_cid"), quantize(F.col("cvec")).alias("_cv"))
     scored = c.join(F.broadcast(q), F.col("_qid").isNotNull()).select(
         "_qid", "_cid", dot_int(F.col("_qv"), F.col("_cv")).alias("dot_q")
     )
-    return _rank_topk(scored, k, "dot_q", qid, cid)
+    return _rank_topk(scored, k, "dot_q")
 
 
 def _plane_sign(vec_q, plane: int, dim: int):
@@ -267,10 +263,6 @@ def lsh_topk(
     dim: int,
     k: int = 5,
     n_planes: int = 8,
-    qid: str = "qid",
-    cid: str = "cid",
-    qvec: str = "qvec",
-    cvec: str = "cvec",
     probe_bits: int = 0,
     n_tables: int = 4,
 ) -> DataFrame:
@@ -295,17 +287,17 @@ def lsh_topk(
       candidates."""
     n_tables = max(1, n_tables)
     buckets_udf = _lsh_buckets_udf(dim, n_planes, n_tables)
-    q = _by_table(_lsh_base(queries, qid, qvec, "_qid", "_qv", buckets_udf), "_qid", "_qv")
+    q = _by_table(_lsh_base(queries, "qid", "qvec", "_qid", "_qv", buckets_udf), "_qid", "_qv")
     if probe_bits >= 1:
         q = _multiprobe(q, n_planes)
-    c = _by_table(_lsh_base(corpus, cid, cvec, "_cid", "_cv", buckets_udf), "_cid", "_cv")
+    c = _by_table(_lsh_base(corpus, "cid", "cvec", "_cid", "_cv", buckets_udf), "_cid", "_cv")
     scored = c.join(F.broadcast(q), ["_t", "_b"]).select(
         "_qid", "_cid", dot_int(F.col("_qv"), F.col("_cv")).alias("dot_q")
     )
     # a pair found in several tables scores identically each time —
     # collapse before ranking so row_number sees one row per candidate
     scored = scored.groupBy("_qid", "_cid").agg(F.max("dot_q").alias("dot_q"))
-    return _rank_topk(scored, k, "dot_q", qid, cid)
+    return _rank_topk(scored, k, "dot_q")
 
 
 def knn_graph(
@@ -315,8 +307,6 @@ def knn_graph(
     n_planes: int = 8,
     n_tables: int = 4,
     probe_bits: int = 0,
-    cid: str = "cid",
-    cvec: str = "cvec",
 ) -> DataFrame:
     """Corpus self-kNN via LSH — the kNN-GRAPH construction shape
     (dedup graphs, clustering seeds): queries = corpus, so NEITHER
@@ -348,7 +338,7 @@ def knn_graph(
       fails the job, with no lineage to recompute them from."""
     n_tables = max(1, n_tables)
     base = _lsh_base(
-        corpus, cid, cvec, "_cid", "_cv", _lsh_buckets_udf(dim, n_planes, n_tables)
+        corpus, "cid", "cvec", "_cid", "_cv", _lsh_buckets_udf(dim, n_planes, n_tables)
     ).localCheckpoint(eager=True)
     c = _by_table(base, "_cid")
     q = c.select(F.col("_cid").alias("_qid"), "_t", "_b")
@@ -365,15 +355,13 @@ def knn_graph(
         .join(base.select("_cid", "_cv"), "_cid")
         .select("_qid", "_cid", dot_int(F.col("_qv"), F.col("_cv")).alias("dot_q"))
     )
-    return _rank_topk(scored, k, "dot_q", "qid", cid)
+    return _rank_topk(scored, k, "dot_q")
 
 
 def ivf_train(
     corpus: DataFrame,
     n_lists: int,
     iters: int = 2,
-    cid: str = "cid",
-    cvec: str = "cvec",
 ) -> DataFrame:
     """Deterministic distributed k-means (Lloyd) for IVF coarse
     centroids. Init: the ``n_lists`` corpus vectors with the smallest
@@ -394,11 +382,11 @@ def ivf_train(
     one groupBy(list) of dim-component partial sums — both map-side
     combined; nothing quadratic, nothing driver-side except the
     n_lists×dim centroid table itself."""
-    spread = _spread_key(cid)
+    spread = _spread_key()
     init = (
         corpus.select(
-            F.col(cid).alias("_cid"),
-            F.col(cvec).alias("_vec"),
+            F.col("cid").alias("_cid"),
+            F.col("cvec").alias("_vec"),
             spread.alias("_h"),
         )
         .orderBy("_h", "_cid")
@@ -410,7 +398,7 @@ def ivf_train(
         F.transform(F.col("_vec"), lambda v: v.cast("double")).alias("center"),
     )
     for _ in range(max(0, iters)):
-        assigned = ivf_assign(corpus, cents, cid=cid, cvec=cvec)
+        assigned = ivf_assign(corpus, cents)
         sums = (
             assigned.select(
                 "list_id", F.posexplode(F.col("_cv")).alias("pos", "val")
@@ -442,7 +430,6 @@ def ivf_assign(
     centroids: DataFrame,
     cid: str = "cid",
     cvec: str = "cvec",
-    list_col: str = "list_id",
 ) -> DataFrame:
     """IVF coarse quantization: assign every corpus vector to its
     nearest centroid list by max quantized dot (ties → smaller centroid
@@ -470,18 +457,18 @@ def ivf_assign(
     again per action."""
     c = corpus.select(F.col(cid).alias("_cid"), quantize(F.col(cvec)).alias("_cv"))
     cent_rows = centroids.select(
-        F.col(list_col).alias("_lid"), quantize(F.col("center")).alias("_ctv")
+        F.col("list_id").alias("_lid"), quantize(F.col("center")).alias("_ctv")
     ).collect()  # bounded: n_lists × dim — the old broadcast payload
-    list_type = dict(centroids.dtypes).get(list_col, "bigint")
+    list_type = dict(centroids.dtypes).get("list_id", "bigint")
     if not cent_rows:
         return c.select(
             F.col("_cid").alias(cid),
-            F.lit(None).cast(list_type).alias(list_col),
+            F.lit(None).cast(list_type).alias("list_id"),
             "_cv",
         ).filter(F.lit(False))
 
     if any(r["_lid"] is None for r in cent_rows):
-        raise ValueError(f"ivf_assign: centroid column {list_col!r} holds a NULL list id")
+        raise ValueError("ivf_assign: centroid column 'list_id' holds a NULL list id")
     # centroids grouped by length; only a centroid of the vector's own
     # length (and with no NULL components) yields a non-NULL dot
     min_lid = min(int(r["_lid"]) for r in cent_rows)
@@ -524,7 +511,7 @@ def ivf_assign(
         return pd.Series([_row(a) for a in arrs], dtype=np.int64)
 
     return c.select(
-        F.col("_cid").alias(cid), _assign(F.col("_cv")).alias(list_col), "_cv"
+        F.col("_cid").alias(cid), _assign(F.col("_cv")).alias("list_id"), "_cv"
     )
 
 
@@ -649,7 +636,7 @@ def append_to_ivf_index(delta: DataFrame, table: str) -> None:
     )
 
 
-def index_stats(lists: DataFrame, cid: str = "cid") -> DataFrame:
+def index_stats(lists: DataFrame) -> DataFrame:
     """List-balance census of an IVF index (r05): vectors per inverted
     list plus each list's share of the corpus in ppm — the skew
     diagnosis a 10¹²-vector index serves or dies by (a hot list makes
@@ -661,7 +648,7 @@ def index_stats(lists: DataFrame, cid: str = "cid") -> DataFrame:
     INTEGER division end-to-end (ppm = n·10⁶ div total — no FP, so the
     SQL oracle is bit-exact by construction). Output:
     (list_id, n_vectors, ppm), one row per non-empty list."""
-    counts = lists.groupBy("list_id").agg(F.count(cid).alias("n_vectors"))
+    counts = lists.groupBy("list_id").agg(F.count("cid").alias("n_vectors"))
     total = counts.agg(F.sum("n_vectors").alias("_tot"))
     return (
         counts.join(F.broadcast(total), F.lit(True))
@@ -708,16 +695,14 @@ def read_ivf_index(spark, table: str | None = None, path: str | None = None) -> 
     return df
 
 
-def _probe_lists(
-    queries: DataFrame, centroids: DataFrame, nprobe: int, qid: str, qvec: str
-) -> DataFrame:
+def _probe_lists(queries: DataFrame, centroids: DataFrame, nprobe: int) -> DataFrame:
     """Each query's ``nprobe`` nearest IVF lists by quantized dot to the
     broadcast centroid table, ties → smaller list id:
     (``_qid``, ``_qv``, ``_lid``, ``_d`` = dot(q, centroid), ``_pr``)."""
     cents = centroids.select(
         F.col("list_id").alias("_lid"), quantize(F.col("center")).alias("_ctv")
     )
-    q = queries.select(F.col(qid).alias("_qid"), quantize(F.col(qvec)).alias("_qv"))
+    q = queries.select(F.col("qid").alias("_qid"), quantize(F.col("qvec")).alias("_qv"))
     qscored = q.join(F.broadcast(cents), F.lit(True)).select(
         "_qid", "_qv", "_lid", dot_int(F.col("_qv"), F.col("_ctv")).alias("_d")
     )
@@ -731,10 +716,6 @@ def ivf_topk(
     centroids: DataFrame,
     k: int = 5,
     nprobe: int = 2,
-    qid: str = "qid",
-    cid: str = "cid",
-    qvec: str = "qvec",
-    cvec: str = "cvec",
     lists: DataFrame | None = None,
 ) -> DataFrame:
     """IVF-Flat approximate top-k: corpus is bucketed into inverted
@@ -757,25 +738,23 @@ def ivf_topk(
     if lists is None:
         if corpus is None:
             raise ValueError("ivf_topk needs either corpus or a prebuilt lists index")
-        lists = ivf_assign(corpus, centroids, cid=cid, cvec=cvec)
+        lists = ivf_assign(corpus, centroids)
     else:
-        missing = {cid, "list_id", "_cv"} - set(lists.columns)
+        missing = {"cid", "list_id", "_cv"} - set(lists.columns)
         if missing:
             raise ValueError(f"prebuilt lists index lacks columns {sorted(missing)}")
-    probes = _probe_lists(queries, centroids, nprobe, qid, qvec).select(
+    probes = _probe_lists(queries, centroids, nprobe).select(
         "_qid", "_qv", F.col("_lid").alias("list_id")
     )
     scored = lists.join(F.broadcast(probes), "list_id").select(
-        "_qid", F.col(cid).alias("_cid"), dot_int(F.col("_qv"), F.col("_cv")).alias("dot_q")
+        "_qid", F.col("cid").alias("_cid"), dot_int(F.col("_qv"), F.col("_cv")).alias("dot_q")
     )
-    return _rank_topk(scored, k, "dot_q", qid, cid)
+    return _rank_topk(scored, k, "dot_q")
 
 
 def near_dup_pairs(
     corpus: DataFrame,
     threshold: int,
-    cid: str = "cid",
-    cvec: str = "cvec",
     exact: bool = False,
     dim: int = 64,
 ) -> DataFrame:
@@ -788,14 +767,14 @@ def near_dup_pairs(
     only, guarded). Recall of the default vs the exact path is asserted
     in tests/test_pipeline_ops.py."""
     if exact:
-        c = corpus.select(F.col(cid).alias("_id"), quantize(F.col(cvec)).alias("_v"))
+        c = corpus.select(F.col("cid").alias("_id"), quantize(F.col("cvec")).alias("_v"))
         a = c.select(F.col("_id").alias("id1"), F.col("_v").alias("v1"))
         b = c.select(F.col("_id").alias("id2"), F.col("_v").alias("v2"))
         j = a.join(b, on=F.lit(True)).filter(F.col("id1") < F.col("id2"))
     else:
         c = corpus.select(
-            F.col(cid).alias("_id"), quantize(F.col(cvec)).alias("_v"),
-            lsh_bucket(cvec, dim).alias("_b"),
+            F.col("cid").alias("_id"), quantize(F.col("cvec")).alias("_v"),
+            lsh_bucket("cvec", dim).alias("_b"),
         )
         a = c.select(F.col("_id").alias("id1"), F.col("_v").alias("v1"), "_b")
         b = c.select(F.col("_id").alias("id2"), F.col("_v").alias("v2"), "_b")
@@ -810,10 +789,6 @@ def cosine_topk(
     queries: DataFrame,
     corpus: DataFrame,
     k: int = 5,
-    qid: str = "qid",
-    cid: str = "cid",
-    qvec: str = "qvec",
-    cvec: str = "cvec",
 ) -> DataFrame:
     """Exact cosine top-k: dot and both squared norms are exact
     integers over the quantized vectors, so cos = dot/sqrt(n1·n2) is
@@ -821,8 +796,8 @@ def cosine_topk(
     engine, hence an exact oracle (reported as round(cos·10⁶)).
     Same plan shape as brute_topk: broadcast queries, narrow scoring,
     WindowGroupLimit top-k."""
-    q = queries.select(F.col(qid).alias("_qid"), quantize(F.col(qvec)).alias("_qv"))
-    c = corpus.select(F.col(cid).alias("_cid"), quantize(F.col(cvec)).alias("_cv"))
+    q = queries.select(F.col("qid").alias("_qid"), quantize(F.col("qvec")).alias("_qv"))
+    c = corpus.select(F.col("cid").alias("_cid"), quantize(F.col("cvec")).alias("_cv"))
     scored = c.join(F.broadcast(q), F.col("_qid").isNotNull()).select(
         "_qid",
         "_cid",
@@ -837,7 +812,7 @@ def cosine_topk(
     # (≤2⁵³), so the oracle contract is unchanged where it applied
     cos = F.col("_dot") / F.sqrt(F.col("_n1").cast("double") * F.col("_n2").cast("double"))
     scored = scored.withColumn("cos_q6", F.round(cos * 1e6).cast("long"))
-    return _rank_topk(scored, k, "cos_q6", qid, cid)
+    return _rank_topk(scored, k, "cos_q6")
 
 
 # ------------------------------------------------------------------ PQ
@@ -852,18 +827,16 @@ def cosine_topk(
 # encode→score chain has a closed-form SQL oracle.
 
 
-def pq_codewords_from_sample(
-    corpus: DataFrame, ncodes: int, cid: str = "cid", cvec: str = "cvec"
-) -> list[list[int]]:
+def pq_codewords_from_sample(corpus: DataFrame, ncodes: int) -> list[list[int]]:
     """Deterministic codebook: the ``ncodes`` corpus vectors with the
     smallest engine-portable spread hash (same no-RNG init as
     ivf_train), quantized. Returns a Python list (ncodes × dim ints) —
     the codebook is the ONLY driver-side object, bounded at
     ncodes·dim ints just like IVF's centroid table."""
-    spread = _spread_key(cid)
+    spread = _spread_key()
     rows = (
-        corpus.select(quantize(F.col(cvec)).alias("_q"), spread.alias("_h"),
-                      F.col(cid).alias("_cid"))
+        corpus.select(quantize(F.col("cvec")).alias("_q"), spread.alias("_h"),
+                      F.col("cid").alias("_cid"))
         .orderBy("_h", "_cid")
         .limit(ncodes)
         .collect()
@@ -985,8 +958,6 @@ def pq_encode(
     corpus: DataFrame,
     codewords: list[list[int]],
     m: int,
-    cid: str = "cid",
-    cvec: str = "cvec",
 ) -> DataFrame:
     """Encode every corpus vector as ``m`` sub-codes: subspace j keeps
     components [j·d, (j+1)·d) (d = dim/m) and takes the codeword with
@@ -999,8 +970,8 @@ def pq_encode(
     moves data)."""
     codes_udf = _pq_codes_udf(codewords, m)
     return corpus.select(
-        F.col(cid).alias(cid), quantize(F.col(cvec)).alias("_q")
-    ).select(F.col(cid), codes_udf(F.col("_q")).alias("codes"))
+        F.col("cid").alias("cid"), quantize(F.col("cvec")).alias("_q")
+    ).select(F.col("cid"), codes_udf(F.col("_q")).alias("codes"))
 
 
 def pq_topk(
@@ -1009,9 +980,6 @@ def pq_topk(
     codewords: list[list[int]],
     m: int,
     k: int = 5,
-    qid: str = "qid",
-    qvec: str = "qvec",
-    cid: str = "cid",
 ) -> DataFrame:
     """Asymmetric-distance (ADC) approximate top-k over PQ codes: each
     query precomputes an m×ncodes table of exact integer dots between
@@ -1022,13 +990,13 @@ def pq_topk(
     m-byte codes. Output: (qid, cid, adc_q, rank), rank ≤ k, ties by
     cid. Approximate by construction; recall is a pytest property (vs
     brute_topk), the encode→score arithmetic itself is oracle-exact."""
-    tables = _pq_tables_expr(quantize(F.col(qvec)), codewords, m)
-    q = queries.select(F.col(qid).alias("_qid"), tables.alias("_tab"))
+    tables = _pq_tables_expr(quantize(F.col("qvec")), codewords, m)
+    q = queries.select(F.col("qid").alias("_qid"), tables.alias("_tab"))
     score = _pq_adc_score(F.col("codes"), F.col("_tab"))
     scored = encoded.join(F.broadcast(q), F.col("_qid").isNotNull()).select(
-        "_qid", F.col(cid).alias("_cid"), score.alias("adc_q")
+        "_qid", F.col("cid").alias("_cid"), score.alias("adc_q")
     )
-    return _rank_topk(scored, k, "adc_q", qid, cid)
+    return _rank_topk(scored, k, "adc_q")
 
 
 def _residual_frame(
@@ -1092,17 +1060,15 @@ def ivfpq_codewords_from_sample(
     corpus: DataFrame,
     centroids: DataFrame,
     ncodes: int,
-    cid: str = "cid",
-    cvec: str = "cvec",
 ) -> list[list[int]]:
     """Deterministic RESIDUAL codebook for ``ivfpq_encode``: the
     residuals (x − assigned centroid, exact ints) of the ``ncodes``
     corpus vectors with the smallest engine-portable spread hash —
     the residual-space analogue of ``pq_codewords_from_sample``."""
-    spread = _spread_key(cid)
+    spread = _spread_key()
     rows = (
-        _residual_frame(corpus, centroids, cid, cvec)
-        .select("_r", spread.alias("_h"), F.col(cid).alias("_cid"))
+        _residual_frame(corpus, centroids, "cid", "cvec")
+        .select("_r", spread.alias("_h"), F.col("cid").alias("_cid"))
         .orderBy("_h", "_cid")
         .limit(ncodes)
         .collect()
@@ -1118,10 +1084,6 @@ def ivfpq_topk(
     m: int,
     k: int = 5,
     nprobe: int = 2,
-    qid: str = "qid",
-    cid: str = "cid",
-    qvec: str = "qvec",
-    cvec: str = "cvec",
     encoded: DataFrame | None = None,
     residual: bool = True,
 ) -> DataFrame:
@@ -1156,11 +1118,9 @@ def ivfpq_topk(
             raise ValueError(
                 "ivfpq_topk needs either corpus or a prebuilt encoded index"
             )
-        encoded = ivfpq_encode(
-            corpus, centroids, codewords, m, cid=cid, cvec=cvec, residual=residual
-        )
+        encoded = ivfpq_encode(corpus, centroids, codewords, m, residual=residual)
     else:
-        missing = {cid, "list_id", "codes"} - set(encoded.columns)
+        missing = {"cid", "list_id", "codes"} - set(encoded.columns)
         if missing:
             raise ValueError(f"prebuilt encoded index lacks columns {sorted(missing)}")
         # refuse an index whose codes were built under the OTHER
@@ -1182,7 +1142,7 @@ def ivfpq_topk(
                 f"encoded index was built with residual={flag} but "
                 f"ivfpq_topk was called with residual={residual}"
             )
-    probes = _probe_lists(queries, centroids, nprobe, qid, qvec).select(
+    probes = _probe_lists(queries, centroids, nprobe).select(
         "_qid",
         F.col("_lid").alias("list_id"),
         F.col("_d"),
@@ -1191,9 +1151,9 @@ def ivfpq_topk(
     adc = _pq_adc_score(F.col("codes"), F.col("_tab"))
     score = (F.col("_d") + adc) if residual else adc
     scored = encoded.join(F.broadcast(probes), "list_id").select(
-        "_qid", F.col(cid).alias("_cid"), score.alias("adc_q"),
+        "_qid", F.col("cid").alias("_cid"), score.alias("adc_q"),
     )
-    return _rank_topk(scored, k, "adc_q", qid, cid)
+    return _rank_topk(scored, k, "adc_q")
 
 
 def ivfpq_train(
@@ -1202,8 +1162,6 @@ def ivfpq_train(
     ncodes: int = 16,
     m: int = 8,
     iters: int = 2,
-    cid: str = "cid",
-    cvec: str = "cvec",
 ) -> list[list[int]]:
     """Lloyd-refined RESIDUAL codebooks for IVF-PQ (r04 — the training
     half of the residual design, Jégou §III): materialize the residual
@@ -1216,11 +1174,11 @@ def ivfpq_train(
     Lloyd (``pq_train``) over it. Same bounded-driver contract: only
     the m·ncodes·d codebook leaves the cluster. Feed the result to
     ``ivfpq_encode``/``ivfpq_topk`` with ``residual=True``."""
-    res = _residual_frame(corpus, centroids, cid, cvec).select(
-        F.col(cid),
-        F.transform(F.col("_r"), lambda v: v.cast("double") / 10000.0).alias(cvec),
+    res = _residual_frame(corpus, centroids, "cid", "cvec").select(
+        F.col("cid"),
+        F.transform(F.col("_r"), lambda v: v.cast("double") / 10000.0).alias("cvec"),
     )
-    return pq_train(res, ncodes=ncodes, m=m, iters=iters, cid=cid, cvec=cvec)
+    return pq_train(res, ncodes=ncodes, m=m, iters=iters)
 
 
 def pq_train(
@@ -1228,8 +1186,6 @@ def pq_train(
     ncodes: int = 16,
     m: int = 8,
     iters: int = 2,
-    cid: str = "cid",
-    cvec: str = "cvec",
 ) -> list[list[int]]:
     """Lloyd-refined PQ codebooks (per-subspace k-means, the training
     half of Jégou et al. 2011): start from the deterministic spread
@@ -1249,12 +1205,12 @@ def pq_train(
     monotone in reconstruction error on tiny fixtures (measured on the
     500-vector sf0.01 table: 0.32 sample vs 0.29 after 2 Lloyd rounds
     — within noise; the test bounds the regression)."""
-    cw = pq_codewords_from_sample(corpus, ncodes, cid, cvec)
+    cw = pq_codewords_from_sample(corpus, ncodes)
     dim = len(cw[0])
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m {m}")
     d = dim // m
-    qv = quantize(F.col(cvec))
+    qv = quantize(F.col("cvec"))
     for _ in range(max(0, iters)):
         codes_udf = _pq_codes_udf(cw, m)
         exploded = corpus.select(qv.alias("_q")).select(

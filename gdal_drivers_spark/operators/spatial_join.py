@@ -21,19 +21,6 @@ from pyspark.sql import functions as F
 from ..core import geometry, qcell
 
 
-def bbox_overlap_cond(a: str = "", b: str = "b"):
-    """Half-open bbox-overlap predicate as a Column (blender.cpp:226-238)."""
-    def c(side, name):
-        return F.col(f"{side}.{name}") if side else F.col(name)
-
-    return (
-        (c(a, "x0") < c(b, "bx1"))
-        & (c(b, "bx0") < c(a, "x1"))
-        & (c(a, "y0") < c(b, "by1"))
-        & (c(b, "by0") < c(a, "y1"))
-    )
-
-
 def cell_join(
     assignments: DataFrame,
     boundaries: DataFrame,
@@ -41,7 +28,8 @@ def cell_join(
 ) -> DataFrame:
     """Join tile assignments (cell, x0..y1, …) with a boundary table
     (cell, x0..y1 renamed bx0..by1, attrs…) on the cell id, then exact
-    bbox refine. The boundary side is broadcast (small: ≤ 4^z rows)."""
+    bbox refine, the half-open overlap predicate of blender.cpp:226-238.
+    The boundary side is broadcast (small: ≤ 4^z rows)."""
     b = boundaries
     for col in ("x0", "y0", "x1", "y1"):
         if col in b.columns:
@@ -61,10 +49,8 @@ def pip_join(
     points: DataFrame,
     polygons_pdf: pd.DataFrame,
     z: int,
-    px: str = "px",
-    py: str = "py",
 ) -> DataFrame:
-    """Point-in-polygon join: points against a small polygon table
+    """Point-in-polygon join: points (``px``, ``py``) against a small polygon table
     (driver-side pandas: id, ring as Nx2 float array, plus the covering
     cells of each polygon's bbox at level z).
 
@@ -92,7 +78,7 @@ def pip_join(
     spark = points.sparkSession
     cand = spark.createDataFrame(pd.DataFrame(cand_rows, columns=["cell", "poly_id"]))
 
-    pts = points.withColumn("cell", qcell.cell_of_col(z, px, py))
+    pts = points.withColumn("cell", qcell.cell_of_col(z, "px", "py"))
     joined = pts.join(F.broadcast(cand), "cell", "inner")
 
     @F.pandas_udf("boolean")
@@ -106,7 +92,7 @@ def pip_join(
             out[m] = geometry.points_in_polygon(x[m], y[m], rings[int(pid)])
         return pd.Series(out)
 
-    return joined.filter(_inside(F.col(px), F.col(py), F.col("poly_id")))
+    return joined.filter(_inside(F.col("px"), F.col("py"), F.col("poly_id")))
 
 
 def transform_points(

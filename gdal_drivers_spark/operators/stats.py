@@ -56,26 +56,18 @@ def approx_group_quantiles(
 
 
 def threshold_filter(
-    df: DataFrame, keys: list[str], col: str, prob: float,
-    exact: bool = True,
+    df: DataFrame, keys: list[str], col: str, prob: float
 ) -> DataFrame:
-    """Keep rows whose ``col`` is at or above their group's ``prob``
-    quantile. On the exact path (bounded group counts) the thresholds
-    are one row per group and are broadcast, so the fact side never
-    shuffles. On the approx path group cardinality is unbounded by
-    design, so the broadcast hint is OMITTED — AQE still broadcasts
-    small threshold sides at runtime, but a billion-group threshold
-    table falls back to a hash join instead of melting the driver."""
+    """Keep rows whose ``col`` is at or above their group's exact
+    ``prob`` quantile. The thresholds (bounded group counts) are one row
+    per group and are broadcast, so the fact side never shuffles."""
     if "_thr" in df.columns:
         raise ValueError("'_thr' is reserved by threshold_filter")
-    fn = group_quantiles if exact else approx_group_quantiles
-    thr = fn(df, keys, col, [prob]).select(
+    thr = group_quantiles(df, keys, col, [prob]).select(
         *keys, F.col(_qname(prob)).alias("_thr")
     )
-    if exact:
-        thr = F.broadcast(thr)
     return (
-        df.join(thr, keys)
+        df.join(F.broadcast(thr), keys)
         .filter(F.col(col) >= F.col("_thr"))
         .drop("_thr")
     )

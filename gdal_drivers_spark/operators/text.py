@@ -27,9 +27,9 @@ LANG_MARKERS = {
 }
 
 
-def token_stats(df: DataFrame, id_col: str, text: str = "text") -> DataFrame:
+def token_stats(df: DataFrame, id_col: str) -> DataFrame:
     """(id, n_tokens, n_uniq, ttr_pct, stop_pct) — exact integers."""
-    toks = tokens_col(text)
+    toks = tokens_col()
     stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
     n = F.size(toks).cast("long")
     nu = F.size(F.array_distinct(toks)).cast("long")
@@ -49,13 +49,13 @@ def token_stats(df: DataFrame, id_col: str, text: str = "text") -> DataFrame:
 BPE_PATTERN = "[a-z]+|[0-9]+|[^a-z0-9 \\t\\n]"
 
 
-def regex_token_stats(df: DataFrame, id_col: str, text: str = "text") -> DataFrame:
+def regex_token_stats(df: DataFrame, id_col: str) -> DataFrame:
     """Token counting, whitespace + BPE-ish regex (task directive):
     (id, n_ws, n_bpe, n_alpha, n_num, n_other) — all exact integers,
     all JVM-side (regexp_extract_all, codegen)."""
-    t = F.trim(F.lower(F.col(text)))
+    t = F.trim(F.lower(F.col("text")))
     ws = F.split(t, r"\s+")
-    bpe = F.expr(f"regexp_extract_all(trim(lower({text})), '{BPE_PATTERN}', 0)")
+    bpe = F.expr(f"regexp_extract_all(trim(lower(text)), '{BPE_PATTERN}', 0)")
     n_alpha = F.size(F.filter(bpe, lambda x: x.rlike("^[a-z]+$")))
     n_num = F.size(F.filter(bpe, lambda x: x.rlike("^[0-9]+$")))
     return df.select(
@@ -68,11 +68,11 @@ def regex_token_stats(df: DataFrame, id_col: str, text: str = "text") -> DataFra
     )
 
 
-def lang_id(df: DataFrame, id_col: str, text: str = "text") -> DataFrame:
+def lang_id(df: DataFrame, id_col: str) -> DataFrame:
     """Marker-vote language ID: score per language = marker-token hits
     (with multiplicity); winner by (max score, language name). Output
     (id, pred_lang, score)."""
-    toks = df.select(F.col(id_col), F.explode(tokens_col(text)).alias("_t"))
+    toks = df.select(F.col(id_col), F.explode(tokens_col()).alias("_t"))
     scores = None
     for lang, markers in sorted(LANG_MARKERS.items()):
         m = F.array(*[F.lit(w) for w in markers])
@@ -90,10 +90,10 @@ def lang_id(df: DataFrame, id_col: str, text: str = "text") -> DataFrame:
     )
 
 
-def fingerprint(df: DataFrame, id_col: str, text: str = "text") -> DataFrame:
+def fingerprint(df: DataFrame, id_col: str) -> DataFrame:
     """Content fingerprint: min/max token hash (order-insensitive,
     whitespace-robust) + token count."""
-    toks = tokens_col(text)
+    toks = tokens_col()
     hashes = F.transform(toks, _hash32)
     return df.select(
         F.col(id_col),
@@ -103,7 +103,7 @@ def fingerprint(df: DataFrame, id_col: str, text: str = "text") -> DataFrame:
     )
 
 
-def tfidf_topk(df: DataFrame, id_col: str, text: str = "text", k: int = 3) -> DataFrame:
+def tfidf_topk(df: DataFrame, id_col: str, k: int = 3) -> DataFrame:
     """Per-document top-k tokens by TF-IDF — the curation primitive for
     keyword extraction / topic sampling. Fully relational: explode →
     tf per (doc, token) → df per token → idf = ln((N+1)/(df+1)) + 1
@@ -116,7 +116,7 @@ def tfidf_topk(df: DataFrame, id_col: str, text: str = "text", k: int = 3) -> Da
     correctly-rounded IEEE, identical across engines)."""
     from pyspark.sql import Window
 
-    toks = df.select(F.col(id_col).alias("_id"), F.explode(tokens_col(text)).alias("tok"))
+    toks = df.select(F.col(id_col).alias("_id"), F.explode(tokens_col()).alias("tok"))
     tf = toks.groupBy("_id", "tok").agg(F.count("*").alias("tf"))
     # N as a 1-row broadcast joined into the plan — no driver collect,
     # no extra eager scan at plan-construction time

@@ -31,19 +31,17 @@ from pyspark.sql import functions as F
 def tile_index(
     rasters: DataFrame,
     location: str = "image_id",
-    w: str = "w",
-    h: str = "h",
-    x0: str = "x0", y0: str = "y0", x1: str = "x1", y1: str = "y1",
 ) -> DataFrame:
     """One index feature per raster: (location, corners, res_x, res_y,
-    n_px, wkt). Input must already carry footprint corners (compose
+    n_px, wkt). Input must already carry ``w``, ``h`` and the footprint
+    corners ``x0, y0, x1, y1`` (compose
     with ``assign.with_footprint`` for phash-derived footprints).
     Rows with a degenerate footprint (x1<=x0 or y1<=y0) or
     non-positive size are flagged ``ok=false`` with NULL geometry —
     gdaltindex skips unreadable rasters; set-at-a-time the row is
     flagged, never dropped, so counts reconcile."""
-    cx0, cy0, cx1, cy1 = F.col(x0), F.col(y0), F.col(x1), F.col(y1)
-    cw, ch = F.col(w).cast("long"), F.col(h).cast("long")
+    cx0, cy0, cx1, cy1 = F.col("x0"), F.col("y0"), F.col("x1"), F.col("y1")
+    cw, ch = F.col("w").cast("long"), F.col("h").cast("long")
     good = (cx1 > cx0) & (cy1 > cy0) & (cw > 0) & (ch > 0)
 
     def _pt(a: Column, b: Column) -> Column:

@@ -53,13 +53,10 @@ def viewshed(
     grid_wh: tuple,
     radius: int,
     observer_height: int = 2,
-    oid: str = "oid",
-    px: str = "px",
-    py: str = "py",
-    cell: str = "cell",
     tile_col: str = "tile",
 ) -> DataFrame:
-    """Per-observer visibility over a (cell, tile) DEM mosaic. Output:
+    """Per-observer visibility of ``observers`` (oid, px, py) over a
+    (cell, tile) DEM mosaic. Output:
     (oid, vis — (2r+1)² u8 raster row-major around the observer, 1 =
     visible / 0 = not (out-of-grid and out-of-disc pixels are 0),
     n_window = in-grid window pixels, n_eval = in-disc in-grid pixels,
@@ -74,7 +71,7 @@ def viewshed(
     side = 2 * r + 1
 
     obs = observers.select(
-        F.col(oid).alias("_oid"), F.col(px).alias("_px"), F.col(py).alias("_py")
+        F.col("oid").alias("_oid"), F.col("px").alias("_px"), F.col("py").alias("_py")
     )
     # window-intersects-grid gate: keeps the clamped sequences ascending
     # (Spark sequence(lo, hi) with lo > hi would COUNT DOWN, scattering
@@ -90,7 +87,7 @@ def viewshed(
          F.least(F.expr(f"(_px + {r}) div {t}"), F.lit(gw - 1))),
         (F.greatest(F.expr(f"(_py - {r}) div {t}"), F.lit(0)),
          F.least(F.expr(f"(_py + {r}) div {t}"), F.lit(gh - 1))),
-    ).join(tiles.select(F.col(cell).alias("cell"),
+    ).join(tiles.select(F.col("cell").alias("cell"),
                         F.col(tile_col).alias("_tile")), "cell", "left")
 
     def _kernel(key, g):

@@ -37,9 +37,7 @@ from ..core import qcell
 _STAT_SCHEMA = "n_px long, px_sum long, px_min long, px_max long, px_ok boolean"
 
 
-def tile_stats(
-    tiles: DataFrame, tile_col: str = "tile", nodata: int | None = None
-) -> DataFrame:
+def tile_stats(tiles: DataFrame, nodata: int | None = None) -> DataFrame:
     """Append per-tile pixel statistics (one Arrow hop, narrow). Tile
     payloads go through the codec registry (magic sniff), so any
     registered format works; stats are shape-agnostic. With
@@ -76,17 +74,14 @@ def tile_stats(
             rows, columns=["n_px", "px_sum", "px_min", "px_max", "px_ok"]
         )
 
-    return tiles.withColumn("_s", _stats(F.col(tile_col))).select(
-        *[c for c in tiles.columns if c != tile_col], "_s.*"
+    return tiles.withColumn("_s", _stats(F.col("tile"))).select(
+        *[c for c in tiles.columns if c != "tile"], "_s.*"
     )
 
 
 def zonal_stats(
     tiles: DataFrame,
     zones: DataFrame,
-    cell: str = "cell",
-    zone: str = "zone",
-    tile_col: str = "tile",
     nodata: int | None = None,
 ) -> DataFrame:
     """Per-zone pixel statistics: ``tiles`` (cell, tile, …) × ``zones``
@@ -96,11 +91,11 @@ def zonal_stats(
     NULL min/max/mean — never the neutral fold elements (a min>max
     pair would be fabricated data). Cells absent from the zone map
     drop out (inner join), matching rasterized-zone semantics."""
-    s = tile_stats(tiles, tile_col=tile_col, nodata=nodata)
+    s = tile_stats(tiles, nodata=nodata)
     no_px = F.col("n_px") == 0
     return (
-        s.join(zones, cell)
-        .groupBy(zone)
+        s.join(zones, "cell")
+        .groupBy("zone")
         .agg(
             F.sum(F.col("px_ok").cast("long")).alias("n_tiles"),
             F.sum((~F.col("px_ok")).cast("long")).alias("n_bad_tiles"),
@@ -118,9 +113,7 @@ def zonal_stats(
     )
 
 
-def tile_class_counts(
-    tiles: DataFrame, tile_col: str = "tile", nodata: int | None = None
-) -> DataFrame:
+def tile_class_counts(tiles: DataFrame, nodata: int | None = None) -> DataFrame:
     """Per-tile class histogram for CATEGORICAL rasters, exploded to
     relational (…, value, n_px) rows — the zonal twin of the mode
     resampling kernels (a label raster has few distinct values, so
@@ -154,9 +147,9 @@ def tile_class_counts(
             out.append([(int(v), int(n)) for v, n in zip(vals, cnts)])
         return pd.Series(out)
 
-    other = [c for c in tiles.columns if c != tile_col]
+    other = [c for c in tiles.columns if c != "tile"]
     return (
-        tiles.withColumn("_h", _counts(F.col(tile_col)))
+        tiles.withColumn("_h", _counts(F.col("tile")))
         .withColumn("px_ok", F.col("_h").isNotNull())
         # explode_outer keeps corrupt AND empty tiles as a NULL-value row
         .select(*other, "px_ok", F.explode_outer("_h").alias("_e"))
@@ -172,9 +165,6 @@ def tile_class_counts(
 def zonal_histogram(
     tiles: DataFrame,
     zones: DataFrame,
-    cell: str = "cell",
-    zone: str = "zone",
-    tile_col: str = "tile",
     nodata: int | None = None,
 ) -> DataFrame:
     """Per-zone class histogram: one row per (zone, value) with the
@@ -184,21 +174,19 @@ def zonal_histogram(
     counted as bad. Same plan discipline as zonal_stats: pixels
     reduce to per-tile class counts in one Arrow hop, only count rows
     join and shuffle."""
-    c = tile_class_counts(tiles.select(cell, tile_col), tile_col=tile_col, nodata=nodata)
+    c = tile_class_counts(tiles.select("cell", "tile"), nodata=nodata)
     # empty-but-valid tiles (all nodata) carry no class — drop their
     # NULL row so the NULL bucket counts only poison
     c = c.filter(F.col("value").isNotNull() | ~F.col("px_ok"))
-    joined = c.join(zones, cell)
-    return joined.groupBy(zone, "value").agg(
+    joined = c.join(zones, "cell")
+    return joined.groupBy("zone", "value").agg(
         F.when(F.col("value").isNull(), F.count("*"))
         .otherwise(F.sum("n_px"))
         .alias("n_px")
     )
 
 
-def raster_stats(
-    tiles: DataFrame, tile_col: str = "tile", nodata: int | None = None
-) -> DataFrame:
+def raster_stats(tiles: DataFrame, nodata: int | None = None) -> DataFrame:
     """gdalinfo -stats for the whole tiled raster: one row of
     (n_tiles, n_bad_tiles, n_px, px_min, px_max, mean, stddev) —
     GDAL's GetStatistics quartet plus the engine's poison accounting.
@@ -237,7 +225,7 @@ def raster_stats(
             columns=["n_px", "px_sum", "px_sq", "px_min", "px_max", "px_ok"],
         )
 
-    m = tiles.withColumn("_m", _mom(F.col(tile_col))).select("_m.*")
+    m = tiles.withColumn("_m", _mom(F.col("tile"))).select("_m.*")
     no_px = F.col("n_px") == 0
     mean = F.col("px_sum") / F.col("n_px")
     return (
@@ -261,9 +249,7 @@ def raster_stats(
     )
 
 
-def raster_histogram(
-    tiles: DataFrame, tile_col: str = "tile", nodata: int | None = None
-) -> DataFrame:
+def raster_histogram(tiles: DataFrame, nodata: int | None = None) -> DataFrame:
     """gdalinfo -hist: one row per pixel value with its global count
     (GDAL's exact 256-bucket histogram for Byte rasters). Pixels
     reduce to ≤256 (value, n) rows per tile in one Arrow hop
@@ -272,7 +258,7 @@ def raster_histogram(
     (value NULL, n_bad_tiles) row — poison counted, never fatal;
     values never seen simply have no row (GDAL prints 0 buckets; the
     relational form is absence)."""
-    c = tile_class_counts(tiles.select(tile_col), tile_col=tile_col, nodata=nodata)
+    c = tile_class_counts(tiles.select("tile"), nodata=nodata)
     c = c.filter(F.col("value").isNotNull() | ~F.col("px_ok"))
     return c.groupBy("value").agg(
         F.when(F.col("value").isNull(), F.count("*"))
@@ -284,9 +270,6 @@ def raster_histogram(
 def zonal_mode(
     tiles: DataFrame,
     zones: DataFrame,
-    cell: str = "cell",
-    zone: str = "zone",
-    tile_col: str = "tile",
     nodata: int | None = None,
 ) -> DataFrame:
     """Majority class per zone — ties → LOWEST value, the same rule as
@@ -297,11 +280,9 @@ def zonal_mode(
     count·256 encoding). Corrupt tiles are excluded from the vote
     (they carry no class); count them via zonal_histogram's NULL row
     if needed."""
-    hist = zonal_histogram(
-        tiles, zones, cell=cell, zone=zone, tile_col=tile_col, nodata=nodata
-    ).filter(F.col("value").isNotNull())
+    hist = zonal_histogram(tiles, zones, nodata=nodata).filter(F.col("value").isNotNull())
     score = F.struct(F.col("n_px"), (-F.col("value")).alias("neg_v"))
-    return hist.groupBy(zone).agg(
+    return hist.groupBy("zone").agg(
         F.max_by("value", score).alias("mode_value"),
         F.max_by("n_px", score).alias("n_px"),
     )
@@ -310,7 +291,6 @@ def zonal_mode(
 def to_xyz(
     tiles: DataFrame,
     tile_px: int,
-    cell: str = "cell",
     tile_col: str = "tile",
     skip_value: int | None = None,
 ) -> DataFrame:
@@ -335,7 +315,7 @@ def to_xyz(
         for pdf in batches:
             out = []
             for i in range(len(pdf)):
-                kc = int(pdf[cell].iloc[i])
+                kc = int(pdf["cell"].iloc[i])
                 raw = pdf[tile_col].iloc[i]
                 buf = b"" if raw is None else bytes(raw)
                 if len(buf) != t * t:
@@ -353,5 +333,5 @@ def to_xyz(
             yield pd.concat(out) if out else pd.DataFrame(
                 {"gx": [], "gy": [], "v": []})
 
-    return tiles.select(cell, tile_col).mapInPandas(
+    return tiles.select("cell", tile_col).mapInPandas(
         _run, "gx long, gy long, v long")

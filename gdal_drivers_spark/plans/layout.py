@@ -42,20 +42,17 @@ def write_bucketed(
     path: str,
     buckets: int,
     key: str = "cell",
-    sort: bool = True,
 ) -> None:
-    """Write ``df`` as a bucketed (and in-bucket sorted) parquet table.
+    """Write ``df`` as a bucketed and in-bucket sorted parquet table.
     Sorting by the key lets the sort-merge join skip its sort too."""
-    w = df.write.mode("overwrite").option("path", path).bucketBy(buckets, key)
-    if sort:
-        w = w.sortBy(key)
-    w.format("parquet").saveAsTable(table)
+    (df.write.mode("overwrite").option("path", path).bucketBy(buckets, key)
+     .sortBy(key).format("parquet").saveAsTable(table))
 
 
-def bucketed_join(spark: SparkSession, left: str, right: str, key: str = "cell") -> DataFrame:
-    """Join two same-bucketed tables on the bucket key — co-located,
-    shuffle-free (verify with ``df.explain``: no Exchange)."""
-    return spark.table(left).join(spark.table(right), key)
+def bucketed_join(spark: SparkSession, left: str, right: str) -> DataFrame:
+    """Join two same-bucketed tables on the ``cell`` bucket key —
+    co-located, shuffle-free (verify with ``df.explain``: no Exchange)."""
+    return spark.table(left).join(spark.table(right), "cell")
 
 
 def zorder_col(x: Column, y: Column) -> Column:

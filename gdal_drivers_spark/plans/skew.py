@@ -28,22 +28,21 @@ from pyspark.sql import DataFrame, functions as F
 from ..core import qcell
 
 
-def cell_census(df: DataFrame, cell: str = "cell") -> DataFrame:
+def cell_census(df: DataFrame) -> DataFrame:
     """Per-cell row counts (the skew detector)."""
-    return df.groupBy(cell).count()
+    return df.groupBy("cell").count()
 
 
-def hot_cells(df: DataFrame, threshold: int, cell: str = "cell") -> DataFrame:
+def hot_cells(df: DataFrame, threshold: int) -> DataFrame:
     """Cells whose row count exceeds ``threshold`` — the broadcast side
     of the salting/split decision."""
-    return cell_census(df, cell).filter(F.col("count") > threshold).select(cell)
+    return cell_census(df).filter(F.col("count") > threshold).select("cell")
 
 
 def with_salt(
     df: DataFrame,
     hot: DataFrame,
     n_salts: int = 8,
-    cell: str = "cell",
     salt_src: str | None = None,
 ) -> DataFrame:
     """Append ``salt`` ∈ [0, n_salts) for rows in hot cells (0 for the
@@ -53,7 +52,7 @@ def with_salt(
     then a second groupBy(cell) recombines."""
     assert salt_src is not None, "pass a stable row column for deterministic salting"
     marked = df.join(
-        F.broadcast(hot.withColumn("_hot", F.lit(True))), cell, "left"
+        F.broadcast(hot.withColumn("_hot", F.lit(True))), "cell", "left"
     )
     return marked.withColumn(
         "salt",
@@ -67,7 +66,6 @@ def split_hot_cells(
     assignments: DataFrame,
     threshold: int,
     max_rounds: int = 4,
-    cell: str = "cell",
 ) -> DataFrame:
     """Adaptive cell split: rows in cells heavier than ``threshold``
     descend one level (child picked by the row's own cell-fraction
@@ -83,10 +81,10 @@ def split_hot_cells(
     """
     cur = assignments
     for _ in range(max_rounds):
-        hot = hot_cells(cur, threshold, cell)
+        hot = hot_cells(cur, threshold)
         if len(hot.take(1)) == 0:
             break
-        z, x, y = qcell.unpack_col(cell)
+        z, x, y = qcell.unpack_col("cell")
         # child index from the row's position within the cell: use the
         # footprint center (x0..x1 columns) when present, else hash
         if {"x0", "x1", "y0", "y1"}.issubset(set(cur.columns)):
@@ -96,11 +94,11 @@ def split_hot_cells(
             cx2 = F.least(F.lit(1), F.greatest(F.lit(0), (F.floor(midx * n * 2) - x * 2).cast("int")))
             cy2 = F.least(F.lit(1), F.greatest(F.lit(0), (F.floor(midy * n * 2) - y * 2).cast("int")))
         else:
-            cx2 = (F.abs(F.xxhash64(*[c for c in cur.columns if c != cell])) % 2).cast("int")
-            cy2 = (F.abs(F.xxhash64(F.lit(1), *[c for c in cur.columns if c != cell])) % 2).cast("int")
+            cx2 = (F.abs(F.xxhash64(*[c for c in cur.columns if c != "cell"])) % 2).cast("int")
+            cy2 = (F.abs(F.xxhash64(F.lit(1), *[c for c in cur.columns if c != "cell"])) % 2).cast("int")
         child = qcell.pack_col(z + 1, x * 2 + cx2, y * 2 + cy2)
-        marked = cur.join(F.broadcast(hot.withColumn("_hot", F.lit(True))), cell, "left")
+        marked = cur.join(F.broadcast(hot.withColumn("_hot", F.lit(True))), "cell", "left")
         cur = marked.withColumn(
-            cell, F.when(F.col("_hot").isNotNull(), child).otherwise(F.col(cell))
+            "cell", F.when(F.col("_hot").isNotNull(), child).otherwise(F.col("cell"))
         ).drop("_hot")
     return cur

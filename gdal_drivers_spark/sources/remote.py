@@ -72,7 +72,6 @@ def default_transport(url: str, attempt: int) -> tuple[int, bytes]:
 def fetch_remote_tiles(
     requests: DataFrame,
     transport: Transport | None = None,
-    url_col: str = "url",
     max_attempts: int = 3,
     backoff_s: float = 0.05,
 ) -> DataFrame:
@@ -90,7 +89,7 @@ def fetch_remote_tiles(
     def _fetch(batches):
         for pdf in batches:
             out = []
-            for url in pdf[url_col].astype(str):
+            for url in pdf["url"].astype(str):
                 m = URL_RE.match(url)
                 if not m:
                     continue

@@ -18,6 +18,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from ..core import codecs, mvtcodec, qcell
 
@@ -115,32 +116,19 @@ def images_df(spark: SparkSession, n: int, partitions: int | None = None) -> Dat
     return spark.range(0, n, 1, parts).mapInPandas(gen, IMAGES_SCHEMA)
 
 
-def boundaries_pdf(z: int, region_mod: int = 8) -> pd.DataFrame:
-    """Tile-boundary table: one row per level-z cell (FIXTURES.md §2) —
-    z-x-y addressing with max = 2^z − 1 bounds (mbtiles.cpp:146-152).
-    Small (4^z rows) — the broadcast side of the spatial join."""
+def region_boundaries(spark: SparkSession, z: int, region_mod: int) -> DataFrame:
+    """Boundary table (FIXTURES.md §2): one (cell, region) row per cell
+    of the level-``z`` grid, region = ``r{(x + y) % region_mod}``, built
+    as Column arithmetic over ``spark.range(4^z)``. Small (4^z rows) —
+    the broadcast side of the region cell join."""
     n = 1 << z
-    x, y = np.meshgrid(np.arange(n, dtype=np.int64), np.arange(n, dtype=np.int64), indexing="ij")
-    x, y = x.ravel(), y.ravel()
-    cell = qcell.pack(z, x, y)
-    x0, y0, x1, y1 = WORLD.cell_extents(cell)
-    return pd.DataFrame(
-        {
-            "cell": cell,
-            "z": np.full(len(x), z, np.int32),
-            "x": x,
-            "y": y,
-            "x0": x0,
-            "y0": y0,
-            "x1": x1,
-            "y1": y1,
-            "region": [f"r{int(v) % region_mod}" for v in (x + y)],
-        }
+    return spark.range(n * n).select(
+        (F.col("id").cast("long") / n).cast("long").alias("bx"),
+        (F.col("id") % n).alias("by"),
+    ).select(
+        qcell.pack_col(z, F.col("bx"), F.col("by")).alias("cell"),
+        F.concat(F.lit("r"), ((F.col("bx") + F.col("by")) % region_mod)).alias("region"),
     )
-
-
-def boundaries_df(spark: SparkSession, z: int) -> DataFrame:
-    return spark.createDataFrame(boundaries_pdf(z))
 
 
 def quads_pdf(depth: int, seed: int = 42) -> pd.DataFrame:

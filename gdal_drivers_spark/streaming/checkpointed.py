@@ -137,7 +137,6 @@ def start_checkpointed_ingest(
     assigned: DataFrame,
     writer: CheckpointedWriter,
     checkpoint_dir: str,
-    key: str = "image_id",
     fail_after_commit_of: int | None = None,
 ):
     """Wire a streaming transformation chain (e.g.
@@ -145,8 +144,7 @@ def start_checkpointed_ingest(
     available-now triggering. Returns the started query."""
     return (
         assigned.writeStream.foreachBatch(
-            checkpointed_sink(writer, key=key,
-                              fail_after_commit_of=fail_after_commit_of,
+            checkpointed_sink(writer, fail_after_commit_of=fail_after_commit_of,
                               checkpoint_dir=checkpoint_dir)
         )
         .option("checkpointLocation", checkpoint_dir)
@@ -164,7 +162,6 @@ def start_index_ingest(
     cvec: str = "cvec",
     codewords: list | None = None,
     m: int = 8,
-    residual: bool = True,
     fail_after_commit_of: int | None = None,
 ):
     """Continuous ANN-index ingest (r05): per micro-batch, coarse-
@@ -196,8 +193,7 @@ def start_index_ingest(
         idx = (
             ivf_assign(df, centroids, cid=cid, cvec=cvec)
             if codewords is None
-            else ivfpq_encode(df, centroids, codewords, m,
-                              cid=cid, cvec=cvec, residual=residual)
+            else ivfpq_encode(df, centroids, codewords, m, cid=cid, cvec=cvec)
         )
         sink0(idx, epoch_id)
 

@@ -22,18 +22,12 @@ from pyspark.sql import DataFrame, functions as F
 def stream_exact_dedup(
     df: DataFrame,
     ts_col: str = "ts",
-    key_col: str | None = None,
-    bytes_col: str = "bytes",
     watermark: str = "10 minutes",
 ) -> DataFrame:
-    """First-seen-wins exact dedup on a stream.
-
-    ``key_col=None`` derives the key as md5(bytes) — identical to the
-    batch ``exact_dedup`` content key (JVM-side md5, no Python).
-    """
-    if key_col is None:
-        df = df.withColumn("content_key", F.md5(F.col(bytes_col)))
-        key_col = "content_key"
+    """First-seen-wins exact dedup on a stream, keyed by md5(``bytes``)
+    — identical to the batch ``exact_dedup`` content key (JVM-side md5,
+    no Python)."""
+    df = df.withColumn("content_key", F.md5(F.col("bytes")))
     return df.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
-        [key_col]
+        ["content_key"]
     )

@@ -169,10 +169,7 @@ def test_scatter_drops_far_out_of_grid_points(spark):
         "py": [5, 5, -(10**9), W - 1],
         "v": [1, 2, 3, 4],
     })
-    out = _scatter(
-        spark.createDataFrame(pdf), T, Z, 4, (GRID, GRID),
-        "px", "py", "v", "pid",
-    )
+    out = _scatter(spark.createDataFrame(pdf), T, Z, 4, (GRID, GRID))
     rows = out.collect()
     # the three dirty points scatter to exactly 0 rows ...
     assert all(r["_pid"] == 3 for r in rows)

@@ -1,8 +1,12 @@
 """The grouped-kernel runner (operators/_groups.run_grouped) as a tested
 property: every per-tile Python stage goes through it, and its output
 does not depend on how the input is partitioned or how Arrow cuts the
-groups into batches."""
+groups into batches. Also the package's source-shape guards (no Spark):
+one cell codec, no join-shape flags, no unreferenced public function,
+no str/bool setting that no caller sets, and ``COVERAGE.md`` names only
+code that runs."""
 
+import ast
 import json
 import os
 import re
@@ -67,6 +71,126 @@ def test_no_join_shape_flags():
                 continue
             hits += [f"{info.name}.{name}({p})"
                      for p in inspect.signature(fn).parameters if flags.match(p)]
+    assert hits == []
+
+
+REPO = os.path.dirname(PKG)
+# Where a caller of a package function may live.
+CALLERS = ("gdal_drivers_spark", "perfbench", "tests", "scripts",
+           "__spark_entry__.py", "bench.py")
+# Parameters that name a column of a public output schema and stay even
+# if no caller sets them today, as ``module.function(param)``.
+SCHEMA_NAMES = frozenset()
+
+
+def _caller_trees() -> dict:
+    """Parsed AST of every ``.py`` file in ``CALLERS``, by path."""
+    paths = []
+    for top in CALLERS:
+        top = os.path.join(REPO, top)
+        if top.endswith(".py"):
+            paths.append(top)
+        for root, _, files in os.walk(top):
+            paths += [os.path.join(root, f) for f in files if f.endswith(".py")]
+    return {p: ast.parse(open(p, encoding="utf-8").read(), p) for p in paths}
+
+
+def _public_functions(trees: dict) -> list:
+    """``(module, def node, path)`` of every module-level public function
+    of the package, ``module`` dotted relative to the package."""
+    out = []
+    for path, tree in trees.items():
+        if path.startswith(PKG + os.sep):
+            mod = os.path.relpath(path, PKG)[:-3].replace(os.sep, ".")
+            out += [(mod, node, path) for node in tree.body
+                    if isinstance(node, ast.FunctionDef) and not node.name.startswith("_")]
+    return out
+
+
+def _name(node):
+    """The name an ``ast.Name`` or ``ast.Attribute`` node refers to."""
+    return getattr(node, "id", None) or getattr(node, "attr", None)
+
+
+def _unreferenced(trees: dict) -> list:
+    """``module.function`` of every public package function that nothing
+    names (calls, passes or imports and uses) outside its own definition."""
+    fns = _public_functions(trees)
+    names = {node.name for _, node, _ in fns}
+    seen = {}  # name -> [(path, line)]
+    for path, tree in trees.items():
+        for n in ast.walk(tree):
+            name = _name(n)
+            if name in names:
+                seen.setdefault(name, []).append((path, n.lineno))
+    return [f"{mod}.{node.name}" for mod, node, path in fns
+            if all(p == path and node.lineno <= line <= node.end_lineno
+                   for p, line in seen.get(node.name, ()))]
+
+
+def test_every_public_function_is_referenced():
+    """No dead code: every public package function is named somewhere
+    outside its own definition, in the package or in a caller of it."""
+    assert _unreferenced(_caller_trees()) == []
+
+
+def test_every_str_or_bool_option_is_set_by_a_caller():
+    """No setting nothing sets: every str- or bool-defaulted parameter of
+    a public package function is passed, by keyword or by position, at
+    some call of that function name, or is a public output-schema name
+    in ``SCHEMA_NAMES``. A ``*``/``**`` splat sets nothing it can name.
+    ``None``-defaulted options are outside this check."""
+    trees = _caller_trees()
+    calls = {}
+    for tree in trees.values():
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Call):
+                calls.setdefault(_name(n.func), []).append(n)
+    hits = []
+    for mod, node, _ in _public_functions(trees):
+        a = node.args
+        pos = a.posonlyargs + a.args
+        defaults = [None] * (len(pos) - len(a.defaults)) + a.defaults
+        params = [(i, p.arg, d) for i, (p, d) in enumerate(zip(pos, defaults))]
+        params += [(None, p.arg, d) for p, d in zip(a.kwonlyargs, a.kw_defaults)]
+        for i, name, default in params:
+            if not (isinstance(default, ast.Constant) and isinstance(default.value, (str, bool))):
+                continue
+            if f"{mod}.{node.name}({name})" in SCHEMA_NAMES:
+                continue
+            if not any(any(k.arg == name for k in c.keywords)
+                       or (i is not None and len(c.args) > i
+                           and not any(isinstance(x, ast.Starred) for x in c.args[:i + 1]))
+                       for c in calls.get(node.name, ())):
+                hits.append(f"{mod}.{node.name}({name})")
+    assert hits == []
+
+
+def test_coverage_symbols_resolve():
+    """Every `` `module.symbol` `` that ``COVERAGE.md`` names, where
+    ``module`` is a package module (optionally with its ``dir/`` prefix),
+    is code that runs: it imports from one module of that name
+    (``dedup.*`` may live in ``operators/dedup`` or ``streaming/dedup``),
+    and, if it is a public function, something calls it."""
+    import importlib
+
+    modules = {}
+    for root, _, files in os.walk(PKG):
+        for f in files:
+            if f.endswith(".py") and f != "__init__.py":
+                rel = os.path.relpath(os.path.join(root, f), PKG)[:-3]
+                modules.setdefault(os.path.basename(rel), []).append(rel.replace(os.sep, "."))
+    dead = _unreferenced(_caller_trees())
+    text = open(os.path.join(REPO, "COVERAGE.md"), encoding="utf-8").read()
+    hits = []
+    for prefix, mod, sym in re.findall(r"`((?:\w+/)*)(\w+)\.(\w+)[`(]", text):
+        cands = [m for m in modules.get(mod, ()) if m.endswith(prefix.replace("/", ".") + mod)]
+        if sym == "py" or not cands:
+            continue
+        found = [m for m in cands
+                 if hasattr(importlib.import_module("gdal_drivers_spark." + m), sym)]
+        if not found or all(f"{m}.{sym}" in dead for m in found):
+            hits.append(f"{prefix}{mod}.{sym}")
     assert hits == []
 
 
