@@ -32,11 +32,11 @@ from __future__ import annotations
 import ast
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gdal_drivers_spark.core import codecs
+from gdal_drivers_spark.operators._groups import run_batches
 
 _BINOPS = {
     ast.Add: np.add,
@@ -144,33 +144,27 @@ def band_calc(
         )
         joined = side if joined is None else joined.join(side, "_id", "inner")
 
-    def _run(batches):
-        # no itertuples here: it mangles underscore-prefixed columns
-        for pdf in batches:
-            out = []
-            for i in range(len(pdf)):
-                rid = pdf["_id"].iloc[i]
-                try:
-                    env = {}
-                    shape = None
-                    for name in names:
-                        img = codecs.decode(
-                            bytes(pdf[f"_b_{name}"].iloc[i]),
-                            pdf[f"_f_{name}"].iloc[i],
-                        ).astype(np.int64)
-                        if shape is None:
-                            shape = img.shape
-                        elif img.shape != shape:
-                            raise ValueError(f"shape mismatch {img.shape} vs {shape}")
-                        env[name] = img
-                    res = np.broadcast_to(fn(env), shape)
-                    outb = np.clip(res, 0, 255).astype(np.uint8)
-                except Exception:
-                    out.append((rid, None, None, None, None, False))
-                    continue
-                out.append((rid, codecs.encode_raw(outb),
-                            int(shape[1]), int(shape[0]), "raw", True))
-            yield pd.DataFrame(
-                out, columns=["image_id", "bytes", "w", "h", "fmt", "ok"])
+    cols = ["_id"] + [c for name in names for c in (f"_b_{name}", f"_f_{name}")]
 
-    return joined.mapInPandas(_run, CALC_SCHEMA)
+    def _kernel(g):
+        for i, rid in enumerate(g["_id"]):
+            try:
+                env = {}
+                shape = None
+                for name in names:
+                    img = codecs.decode(
+                        bytes(g[f"_b_{name}"][i]), g[f"_f_{name}"][i]
+                    ).astype(np.int64)
+                    if shape is None:
+                        shape = img.shape
+                    elif img.shape != shape:
+                        raise ValueError(f"shape mismatch {img.shape} vs {shape}")
+                    env[name] = img
+                res = np.broadcast_to(fn(env), shape)
+                outb = np.clip(res, 0, 255).astype(np.uint8)
+            except Exception:
+                yield rid, None, None, None, None, False
+                continue
+            yield rid, codecs.encode_raw(outb), int(shape[1]), int(shape[0]), "raw", True
+
+    return run_batches(joined, cols, _kernel, CALC_SCHEMA)

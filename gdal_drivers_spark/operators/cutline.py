@@ -29,12 +29,12 @@ does."""
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gdal_drivers_spark.core import qcell
 from gdal_drivers_spark.core.geometry import points_in_polygon
+from gdal_drivers_spark.operators._groups import run_batches
 
 _OUT_SCHEMA = "cell long, raster binary, n_kept long, boundary boolean"
 
@@ -84,64 +84,46 @@ def cutline_crop(
         F.lit(False).alias("boundary"),
     )
 
-    def _kernel(batches):
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples():
-                cell = int(row.cell)
-                _, ctx, cty = qcell.unpack_int(cell)
-                x0, y0 = ctx * t, cty * t
-                raw = getattr(row, raster)
-                if raw is None:
-                    out.append((cell, None, -1, True))
-                    continue
-                buf = bytes(raw)
-                if len(buf) != t * t:
-                    out.append((cell, None, -1, True))
-                    continue
-                # whole-tile shortcut: corner membership + EXACT
-                # segment-rect intersection (an edge's bbox is a far
-                # too coarse gate for long diagonal edges — it would
-                # classify most interior tiles as boundary and destroy
-                # the O(perimeter) claim): an edge enters the tile rect
-                # iff its bbox overlaps AND the rect's four corners are
-                # not all strictly on one side of the edge's line
-                cx = np.array([x0 + 0.5, x0 + t - 0.5, x0 + 0.5, x0 + t - 0.5])
-                cy = np.array([y0 + 0.5, y0 + 0.5, y0 + t - 0.5, y0 + t - 0.5])
-                corners = points_in_polygon(cx, cy, ring_c)
-                ex0 = np.minimum(edges[:, 0, 0], edges[:, 1, 0])
-                ex1 = np.maximum(edges[:, 0, 0], edges[:, 1, 0])
-                ey0 = np.minimum(edges[:, 0, 1], edges[:, 1, 1])
-                ey1 = np.maximum(edges[:, 0, 1], edges[:, 1, 1])
-                bbox_ov = (ex0 < x0 + t) & (ex1 > x0) & (ey0 < y0 + t) & (ey1 > y0)
-                rx = np.array([x0, x0 + t, x0, x0 + t], np.float64)
-                ry = np.array([y0, y0, y0 + t, y0 + t], np.float64)
-                dx = edges[:, 1, 0] - edges[:, 0, 0]
-                dy = edges[:, 1, 1] - edges[:, 0, 1]
-                cross = (dx[None, :] * (ry[:, None] - edges[None, :, 0, 1])
-                         - dy[None, :] * (rx[:, None] - edges[None, :, 0, 0]))
-                one_side = (cross > 0).all(axis=0) | (cross < 0).all(axis=0)
-                overlap = (bbox_ov & ~one_side).any()
-                if not overlap and corners.all():
-                    out.append((cell, buf, t * t, False))
-                    continue
-                if not overlap and not corners.any():
-                    out.append((cell, empty, 0, False))
-                    continue
-                gx = (np.arange(t)[None, :] + x0 + 0.5).repeat(t, axis=0)
-                gy = (np.arange(t)[:, None] + y0 + 0.5).repeat(t, axis=1)
-                inside = points_in_polygon(
-                    gx.ravel(), gy.ravel(), ring_c
-                ).reshape(t, t)
-                img = np.frombuffer(buf, np.uint8).reshape(t, t).copy()
-                img[~inside] = nd
-                out.append((cell, img.tobytes(), int(inside.sum()), True))
-            yield pd.DataFrame(
-                out, columns=["cell", "raster", "n_kept", "boundary"])
+    ex0 = np.minimum(edges[:, 0, 0], edges[:, 1, 0])
+    ex1 = np.maximum(edges[:, 0, 0], edges[:, 1, 0])
+    ey0 = np.minimum(edges[:, 0, 1], edges[:, 1, 1])
+    ey1 = np.maximum(edges[:, 0, 1], edges[:, 1, 1])
+    dx = edges[:, 1, 0] - edges[:, 0, 0]
+    dy = edges[:, 1, 1] - edges[:, 0, 1]
 
-    boundary = (
-        tiles.filter(~disjoint)
-        .select("cell", F.col(raster).alias(raster))
-        .mapInPandas(_kernel, _OUT_SCHEMA)
-    )
+    def _tile(cell, buf):
+        if buf is None or len(buf) != t * t:
+            return cell, None, -1, True
+        _, ctx, cty = qcell.unpack_int(cell)
+        x0, y0 = ctx * t, cty * t
+        # whole-tile shortcut: corner membership + EXACT segment-rect
+        # intersection (an edge's bbox is a far too coarse gate for
+        # long diagonal edges — it would classify most interior tiles
+        # as boundary and destroy the O(perimeter) claim): an edge
+        # enters the tile rect iff its bbox overlaps AND the rect's
+        # four corners are not all strictly on one side of the edge's
+        # line
+        cx = np.array([x0 + 0.5, x0 + t - 0.5, x0 + 0.5, x0 + t - 0.5])
+        cy = np.array([y0 + 0.5, y0 + 0.5, y0 + t - 0.5, y0 + t - 0.5])
+        corners = points_in_polygon(cx, cy, ring_c)
+        bbox_ov = (ex0 < x0 + t) & (ex1 > x0) & (ey0 < y0 + t) & (ey1 > y0)
+        rx = np.array([x0, x0 + t, x0, x0 + t], np.float64)
+        ry = np.array([y0, y0, y0 + t, y0 + t], np.float64)
+        cross = (dx[None, :] * (ry[:, None] - edges[None, :, 0, 1])
+                 - dy[None, :] * (rx[:, None] - edges[None, :, 0, 0]))
+        one_side = (cross > 0).all(axis=0) | (cross < 0).all(axis=0)
+        overlap = (bbox_ov & ~one_side).any()
+        if not overlap and corners.all():
+            return cell, buf, t * t, False
+        if not overlap and not corners.any():
+            return cell, empty, 0, False
+        gx = (np.arange(t)[None, :] + x0 + 0.5).repeat(t, axis=0)
+        gy = (np.arange(t)[:, None] + y0 + 0.5).repeat(t, axis=1)
+        inside = points_in_polygon(gx.ravel(), gy.ravel(), ring_c).reshape(t, t)
+        img = np.frombuffer(buf, np.uint8).reshape(t, t).copy()
+        img[~inside] = nd
+        return cell, img.tobytes(), int(inside.sum()), True
+
+    boundary = run_batches(tiles.filter(~disjoint), ["cell", raster],
+                           lambda g: map(_tile, g["cell"], g[raster]), _OUT_SCHEMA)
     return outside.unionByName(boundary)

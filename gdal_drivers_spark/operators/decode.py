@@ -3,7 +3,7 @@
 Plays the role of the reference's driver registry + ``IReadBlock``
 (``/root/reference/gdal-drivers/register.cpp:37-47`` dispatch;
 per-block decode hooks ``mask.cpp:219``, ``solid.cpp:443``,
-``blender.cpp:559``): one Arrow-batched pandas UDF decodes a whole
+``blender.cpp:559``): one scalar Arrow UDF decodes a whole
 column batch of image payloads, dispatching per row on the ``fmt``
 column (or magic sniff), entirely inside the Python worker — the JVM
 sees only binary in / fixed-width stats out. Per-image numpy work is
@@ -18,12 +18,11 @@ amplifies through the shuffle.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..core import codecs
+from ._groups import row_udf
 
 DECODE_STATS_SCHEMA = (
     "dec_w int, dec_h int, dec_c int, px_mean double, px_min int, px_max int, dec_ok boolean"
@@ -39,34 +38,18 @@ def decode_stats(images: DataFrame) -> DataFrame:
     aggregations without shipping pixel arrays through the shuffle.
     """
 
-    @F.pandas_udf(DECODE_STATS_SCHEMA)
-    def _decode(bufs: pd.Series, fmts: pd.Series) -> pd.DataFrame:
-        n = len(bufs)
-        out = {
-            "dec_w": np.zeros(n, np.int32),
-            "dec_h": np.zeros(n, np.int32),
-            "dec_c": np.zeros(n, np.int32),
-            "px_mean": np.zeros(n, np.float64),
-            "px_min": np.zeros(n, np.int32),
-            "px_max": np.zeros(n, np.int32),
-            "dec_ok": np.zeros(n, bool),
-        }
-        for i, (buf, fmt) in enumerate(zip(bufs, fmts)):
-            try:
-                img = codecs.decode(bytes(buf), fmt)
-            except Exception:  # noqa: BLE001 — poison-row guard:
-                # corrupt payloads raise whatever the codec stack
-                # raises (zlib.error on truncation, struct.error on
-                # short headers, ValueError on bad magic…). One bad
-                # blob among 10^12 must mark its row dec_ok=false,
-                # never kill the stage.
-                continue
-            out["dec_h"][i], out["dec_w"][i], out["dec_c"][i] = img.shape
-            out["px_mean"][i] = float(img.mean())
-            out["px_min"][i] = int(img.min())
-            out["px_max"][i] = int(img.max())
-            out["dec_ok"][i] = True
-        return pd.DataFrame(out)
+    def _decode(buf, fmt):
+        try:
+            img = codecs.decode(bytes(buf), fmt)
+        except Exception:  # noqa: BLE001 — poison-row guard:
+            # corrupt payloads raise whatever the codec stack raises
+            # (zlib.error on truncation, struct.error on short headers,
+            # ValueError on bad magic…). One bad blob among 10^12 must
+            # mark its row dec_ok=false (zero stats), never kill the
+            # stage.
+            return 0, 0, 0, 0.0, 0, 0, False
+        h, w, c = img.shape
+        return w, h, c, float(img.mean()), int(img.min()), int(img.max()), True
 
     # asNondeterministic (guide §4.4, r06): downstream filters on the
     # decoded columns (`.filter("dec_ok")` is the canonical consumer)
@@ -79,7 +62,7 @@ def decode_stats(images: DataFrame) -> DataFrame:
     # source or partition columns that could prune the scan: callers
     # should filter those columns BEFORE decode_stats, or every row is
     # decoded. Pinned by test_poison::test_decode_stats_filter_decodes_once.
-    dec = _decode.asNondeterministic()
+    dec = row_udf(_decode, DECODE_STATS_SCHEMA).asNondeterministic()
     return images.withColumn("_d", dec(F.col("bytes"), F.col("fmt"))).select(
         "*", "_d.*"
     ).drop("_d")

@@ -29,12 +29,12 @@ hash gate.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from gdal_drivers_spark.core import qcell
+from gdal_drivers_spark.core import codecs, qcell
+from gdal_drivers_spark.operators._groups import row_udf
 from gdal_drivers_spark.operators.halo import run_halo
 
 
@@ -362,38 +362,26 @@ def color_relief(
         raise ValueError("ramp needs >= 2 stops")
     if not (np.diff(xs) > 0).all():
         raise ValueError("ramp elevations must be strictly increasing")
-    xs_l, cs_l = xs.tolist(), cs.tolist()  # plan-time capture (no numpy pickle)
 
-    @F.pandas_udf("struct<r binary, g binary, b binary, ok boolean>")
-    def _relief(col: pd.Series) -> pd.DataFrame:
-        import numpy as np
+    def _relief(b):
+        try:
+            v = codecs.decode(bytes(b)).ravel().astype(np.float64)
+        except Exception:
+            return b"", b"", b"", False
+        v = np.clip(v, xs[0], xs[-1])
+        idx = np.clip(np.searchsorted(xs, v, side="right") - 1, 0, len(xs) - 2)
+        e0, e1 = xs[idx], xs[idx + 1]
+        frac = (v - e0) / (e1 - e0)
+        planes = [
+            np.rint(cs[idx, ch] + frac * (cs[idx + 1, ch] - cs[idx, ch]))
+            .clip(0, 255).astype(np.uint8).tobytes()
+            for ch in range(3)
+        ]
+        return (*planes, True)
 
-        from gdal_drivers_spark.core import codecs
-
-        X = np.array(xs_l, np.float64)
-        C = np.array(cs_l, np.float64)
-        out = []
-        for b in col:
-            try:
-                v = codecs.decode(bytes(b)).ravel().astype(np.float64)
-            except Exception:
-                out.append((b"", b"", b"", False))
-                continue
-            v = np.clip(v, X[0], X[-1])
-            idx = np.clip(np.searchsorted(X, v, side="right") - 1, 0, len(X) - 2)
-            e0, e1 = X[idx], X[idx + 1]
-            frac = (v - e0) / (e1 - e0)
-            planes = []
-            for ch in range(3):
-                c0, c1 = C[idx, ch], C[idx + 1, ch]
-                planes.append(
-                    np.rint(c0 + frac * (c1 - c0)).clip(0, 255).astype(np.uint8).tobytes()
-                )
-            out.append((planes[0], planes[1], planes[2], True))
-        return pd.DataFrame(out, columns=["r", "g", "b", "ok"])
-
+    relief = row_udf(_relief, "struct<r binary, g binary, b binary, ok boolean>")
     other = [c for c in tiles.columns if c != "tile"]
-    return tiles.withColumn("_c", _relief(F.col("tile"))).select(
+    return tiles.withColumn("_c", relief(F.col("tile"))).select(
         *other, "_c.r", "_c.g", "_c.b", F.col("_c.ok").alias("ok")
     )
 

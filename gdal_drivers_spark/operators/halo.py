@@ -38,13 +38,12 @@ the poison and duplicate rules below hold for every halo operator.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gdal_drivers_spark.core import qcell
-from gdal_drivers_spark.operators._groups import run_grouped
+from gdal_drivers_spark.operators._groups import row_udf, run_grouped
 
 
 def parse_halo(dxs, dys, payloads, t: int, w: int):
@@ -241,26 +240,20 @@ def with_halo_bands(
         raise ValueError(f"halo width {w} outside [1, tile_px={t}]")
     names = ("_r0", "_rl", "_c0", "_cl", "_b00", "_b0l", "_bl0", "_bll")
 
-    @F.pandas_udf("struct<" + ",".join(f"{k}:binary" for k in names) + ">")
-    def _bands(col: pd.Series) -> pd.DataFrame:
-        import numpy as np
+    def _bands(raw):
+        try:
+            arr = np.frombuffer(bytes(raw), np.uint8).reshape(t, t)
+        except (TypeError, ValueError):  # NULL or wrong-length tile
+            return (None,) * 8  # (0,0) still ships the raw payload
+        return tuple(np.ascontiguousarray(s).tobytes() for s in (
+            arr[:w], arr[t - w:], arr[:, :w], arr[:, t - w:],
+            arr[:w, :w], arr[:w, t - w:], arr[t - w:, :w], arr[t - w:, t - w:],
+        ))
 
-        rows = []
-        for raw in col:
-            try:
-                arr = np.frombuffer(bytes(raw), np.uint8).reshape(t, t)
-            except (TypeError, ValueError):  # NULL or wrong-length tile
-                rows.append((None,) * 8)  # (0,0) still ships the raw payload
-                continue
-            rows.append(tuple(np.ascontiguousarray(s).tobytes() for s in (
-                arr[:w], arr[t - w:], arr[:, :w], arr[:, t - w:],
-                arr[:w, :w], arr[:w, t - w:], arr[t - w:, :w], arr[t - w:, t - w:],
-            )))
-        return pd.DataFrame(rows, columns=list(names), dtype=object)
-
+    bands = row_udf(_bands, "struct<" + ",".join(f"{k}:binary" for k in names) + ">")
     stripped = tiles.select(
         F.col("cell").alias("cell"), F.col(tile).alias("tile")
-    ).withColumn("_s", _bands(F.col("tile"))).select("cell", "tile", "_s.*")
+    ).withColumn("_s", bands(F.col("tile"))).select("cell", "tile", "_s.*")
 
     dx, dy = -F.col("_dx"), -F.col("_dy")  # contribution offset rel. target
     payload = (

@@ -20,10 +20,10 @@ from __future__ import annotations
 import struct
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..core import codecs
+from ._groups import row_udf, run_batches
 
 _VID_MAGIC = b"GVD1"
 
@@ -52,30 +52,34 @@ def nn_resize(img: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
     return img[ys][:, xs]
 
 
-RESIZE_SCHEMA = "image_id string, bytes binary, w int, h int, fmt string, ok boolean"
+IMAGE_SCHEMA = "image_id string, bytes binary, w int, h int, fmt string, ok boolean"
+
+
+def _map_images(images: DataFrame, fn) -> DataFrame:
+    """(image_id, ``fn(pixels)`` raw-encoded, its w, h, "raw", ok) per
+    (image_id, bytes, fmt) row, in one Arrow hop.
+
+    Poison policy (house rule, as decode_stats/phash_images): a
+    NULL/corrupt payload, or one ``fn`` rejects by raising, keeps its
+    row with bytes=NULL and ok=false — never a stage kill, never a
+    silent drop."""
+
+    def _kernel(g):
+        for rid, buf, fmt in zip(g["image_id"], g["bytes"], g["fmt"]):
+            try:
+                res = fn(codecs.decode(bytes(buf), fmt))
+            except Exception:
+                yield rid, None, None, None, None, False
+                continue
+            yield rid, codecs.encode_raw(res), int(res.shape[1]), int(res.shape[0]), "raw", True
+
+    return run_batches(images, ["image_id", "bytes", "fmt"], _kernel, IMAGE_SCHEMA)
 
 
 def resize_images(images: DataFrame, out_w: int, out_h: int) -> DataFrame:
-    """Batch decode → resize → raw re-encode. One Arrow hop, numpy math.
-
-    Poison policy (house rule, as decode_stats/phash_images): a
-    NULL/corrupt payload keeps its row with bytes=NULL and ok=false —
-    never a stage kill, never a silent drop."""
-
-    def _run(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples():
-                try:
-                    img = codecs.decode(bytes(r.bytes), r.fmt)
-                    small = nn_resize(img, out_w, out_h)
-                except Exception:
-                    out.append((r.image_id, None, None, None, None, False))
-                    continue
-                out.append((r.image_id, codecs.encode_raw(small), out_w, out_h, "raw", True))
-            yield pd.DataFrame(out, columns=["image_id", "bytes", "w", "h", "fmt", "ok"])
-
-    return images.mapInPandas(_run, RESIZE_SCHEMA)
+    """Batch decode → resize → raw re-encode. One Arrow hop, numpy math;
+    poison rows as ``_map_images``."""
+    return _map_images(images, lambda img: nn_resize(img, out_w, out_h))
 
 
 FEATURES_SCHEMA = "image_id string, feat array<double>, n_pixels long, ok boolean"
@@ -96,37 +100,27 @@ def image_features(images: DataFrame, bins: int = 16) -> DataFrame:
     joins; the flag makes the corruption countable)."""
     width = 256 // bins
 
-    def _run(batches):
-        for pdf in batches:
-            ids, feats, npix, oks = [], [], [], []
-            for r in pdf.itertuples():
-                try:
-                    img = codecs.decode(bytes(r.bytes), r.fmt)
-                except Exception:
-                    ids.append(r.image_id)
-                    feats.append(None)
-                    npix.append(None)
-                    oks.append(False)
-                    continue
-                chans = [
-                    # clip the bucket index: when 256 % bins != 0 the
-                    # top partial bucket folds into the last bin, so
-                    # the histogram always sums to n_pixels (ADVICE r01)
-                    np.bincount(
-                        np.minimum(img[:, :, c].ravel() // width, bins - 1),
-                        minlength=bins,
-                    )[:bins]
-                    for c in range(img.shape[2])
-                ]
-                ids.append(r.image_id)
-                feats.append(np.concatenate(chans).astype(np.float64))
-                npix.append(img.shape[0] * img.shape[1])
-                oks.append(True)
-            yield pd.DataFrame(
-                {"image_id": ids, "feat": feats, "n_pixels": npix, "ok": oks}
-            )
+    def _kernel(g):
+        for rid, buf, fmt in zip(g["image_id"], g["bytes"], g["fmt"]):
+            try:
+                img = codecs.decode(bytes(buf), fmt)
+            except Exception:
+                yield rid, None, None, False
+                continue
+            chans = [
+                # clip the bucket index: when 256 % bins != 0 the
+                # top partial bucket folds into the last bin, so
+                # the histogram always sums to n_pixels (ADVICE r01)
+                np.bincount(
+                    np.minimum(img[:, :, c].ravel() // width, bins - 1),
+                    minlength=bins,
+                )[:bins]
+                for c in range(img.shape[2])
+            ]
+            yield (rid, np.concatenate(chans).astype(np.float64).tolist(),
+                   img.shape[0] * img.shape[1], True)
 
-    return images.mapInPandas(_run, FEATURES_SCHEMA)
+    return run_batches(images, ["image_id", "bytes", "fmt"], _kernel, FEATURES_SCHEMA)
 
 
 FRAMES_SCHEMA = "video_id string, frame_idx int, bytes binary, w int, h int, ok boolean"
@@ -139,45 +133,18 @@ def frame_sample(videos: DataFrame, every_k: int = 2) -> DataFrame:
     (frame_idx=-1, ok=false) — distinct from a valid empty container
     (zero rows) and never a stage kill."""
 
-    def _run(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples():
-                try:
-                    frames = decode_video(bytes(r.bytes))
-                except Exception:
-                    out.append((r.video_id, -1, None, None, None, False))
-                    continue
-                for i in range(0, len(frames), every_k):
-                    f = frames[i]
-                    out.append((r.video_id, i, codecs.encode_raw(f), f.shape[1], f.shape[0], True))
-            yield pd.DataFrame(out, columns=["video_id", "frame_idx", "bytes", "w", "h", "ok"])
-
-    return videos.mapInPandas(_run, FRAMES_SCHEMA)
-
-
-def frame_sample_udtf(spark, videos: DataFrame, every_k: int = 2) -> DataFrame:
-    """Native Python UDTF form of frame sampling (PySpark 4 `udtf` —
-    the engine's literal table-function surface for the reference's
-    one-dataset→many-features shape, SURVEY §2.9 U2). Same semantics
-    as `frame_sample`; registered and invoked through SQL so the
-    lateral-join plumbing is exercised."""
-    from pyspark.sql.functions import udtf
-
-    @udtf(returnType="frame_idx int, w int, h int, px_sum bigint")
-    class SampleFrames:
-        def eval(self, video_bytes, k: int):
-            frames = decode_video(bytes(video_bytes))
-            for i in range(0, len(frames), k):
+    def _kernel(g):
+        for vid, buf in zip(g["video_id"], g["bytes"]):
+            try:
+                frames = decode_video(bytes(buf))
+            except Exception:
+                yield vid, -1, None, None, None, False
+                continue
+            for i in range(0, len(frames), every_k):
                 f = frames[i]
-                yield i, f.shape[1], f.shape[0], int(f.sum(dtype=np.int64))
+                yield vid, i, codecs.encode_raw(f), f.shape[1], f.shape[0], True
 
-    spark.udtf.register("sample_frames", SampleFrames)
-    videos.createOrReplaceTempView("_videos_udtf_in")
-    return spark.sql(
-        f"SELECT v.video_id, s.* FROM _videos_udtf_in v, "
-        f"LATERAL sample_frames(v.bytes, {every_k}) s"
-    )
+    return run_batches(videos, ["video_id", "bytes"], _kernel, FRAMES_SCHEMA)
 
 
 # ----------------------------------------------------------------- audio
@@ -256,31 +223,20 @@ def audio_features(audio: DataFrame) -> DataFrame:
     Poison policy: NULL/corrupt/compressed payloads flag their row
     (ok=false, NULL stats) — never a stage kill."""
 
-    def _run(batches):
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples():
-                rid = r.audio_id
-                try:
-                    arr, rate, _ = decode_wav(bytes(r.bytes))
-                    flat = arr.astype(np.int64).ravel()
-                    n = arr.shape[0]
-                    sq = int((flat * flat).sum())
-                    rms = float(np.sqrt(sq / flat.size)) if flat.size else 0.0
-                    peak = int(np.abs(flat).max()) if flat.size else 0
-                    rows.append((rid, n, rate, sq, rms, peak, True))
-                except Exception:
-                    rows.append((rid, None, None, None, None, None, False))
-            # object columns: a poison row's None must not widen the
-            # int64 sums of its batch to float64 (see phash_images)
-            yield pd.DataFrame(
-                rows,
-                columns=["audio_id", "n_samples", "sample_rate", "sq_sum",
-                         "rms", "peak", "ok"],
-                dtype=object,
-            )
+    def _kernel(g):
+        for rid, buf in zip(g["audio_id"], g["bytes"]):
+            try:
+                arr, rate, _ = decode_wav(bytes(buf))
+            except Exception:
+                yield rid, None, None, None, None, None, False
+                continue
+            flat = arr.astype(np.int64).ravel()
+            sq = int((flat * flat).sum())
+            rms = float(np.sqrt(sq / flat.size)) if flat.size else 0.0
+            peak = int(np.abs(flat).max()) if flat.size else 0
+            yield rid, arr.shape[0], rate, sq, rms, peak, True
 
-    return audio.mapInPandas(_run, AUDIO_SCHEMA)
+    return run_batches(audio, ["audio_id", "bytes"], _kernel, AUDIO_SCHEMA)
 
 
 PATCHES_SCHEMA = (
@@ -300,47 +256,20 @@ def patch_grid(images: DataFrame, patch: int) -> DataFrame:
     (py=px=-1, ok=false) — distinct from a valid too-small image (zero
     patches, silent) and never a stage kill."""
 
-    def _run(batches):
-        import numpy as np
+    def _kernel(g):
+        for rid, buf, fmt in zip(g["image_id"], g["bytes"], g["fmt"]):
+            try:
+                img = codecs.decode(bytes(buf), fmt)
+            except Exception:
+                yield rid, -1, -1, None, None, None, None, False
+                continue
+            for py in range(img.shape[0] // patch):
+                for px in range(img.shape[1] // patch):
+                    crop = img[py * patch : py * patch + patch, px * patch : px * patch + patch]
+                    yield (rid, py, px, codecs.encode_raw(np.ascontiguousarray(crop)),
+                           patch, patch, "raw", True)
 
-        from ..core import codecs
-
-        for pdf in batches:
-            ids, pys, pxs, outs, ws, hs, fmts, oks = [], [], [], [], [], [], [], []
-            for r in pdf.itertuples():
-                try:
-                    img = codecs.decode(bytes(r.bytes), r.fmt)
-                except Exception:
-                    ids.append(r.image_id)
-                    pys.append(-1)
-                    pxs.append(-1)
-                    outs.append(None)
-                    ws.append(None)
-                    hs.append(None)
-                    fmts.append(None)
-                    oks.append(False)
-                    continue
-                H, W = img.shape[0], img.shape[1]
-                for py in range(H // patch):
-                    for px in range(W // patch):
-                        crop = img[
-                            py * patch : py * patch + patch,
-                            px * patch : px * patch + patch,
-                        ]
-                        ids.append(r.image_id)
-                        pys.append(py)
-                        pxs.append(px)
-                        outs.append(codecs.encode_raw(np.ascontiguousarray(crop)))
-                        ws.append(patch)
-                        hs.append(patch)
-                        fmts.append("raw")
-                        oks.append(True)
-            yield pd.DataFrame(
-                {"image_id": ids, "py": pys, "px": pxs, "bytes": outs,
-                 "w": ws, "h": hs, "fmt": fmts, "ok": oks}
-            )
-
-    return images.mapInPandas(_run, PATCHES_SCHEMA)
+    return run_batches(images, ["image_id", "bytes", "fmt"], _kernel, PATCHES_SCHEMA)
 
 
 _PHASH_D32 = codecs.dct_basis(32)
@@ -377,19 +306,13 @@ def phash_images(images: DataFrame) -> DataFrame:
     ``ph_ok`` can never fabricate duplicate pairs out of corrupt
     payloads."""
 
-    @F.pandas_udf("struct<phash: long, ph_ok: boolean>")
-    def _ph(col: pd.Series) -> pd.DataFrame:
-        rows = []
-        for b in col:
-            try:
-                rows.append((phash64_np(codecs.decode(bytes(b))), True))
-            except Exception:
-                rows.append((None, False))
-        # object columns keep exact Python ints beside a poison row's
-        # None; a numeric frame would widen phash to float64 and round
-        # every hash above 2**53 in the batch
-        return pd.DataFrame(rows, columns=["phash", "ph_ok"], dtype=object)
+    def _phash(b):
+        try:
+            return phash64_np(codecs.decode(bytes(b))), True
+        except Exception:
+            return None, False
 
+    _ph = row_udf(_phash, "struct<phash: long, ph_ok: boolean>")
     return images.withColumn("_p", _ph(F.col("bytes"))).select(
         F.col("image_id"), F.col("_p.phash").alias("phash"), F.col("_p.ph_ok").alias("ph_ok")
     )
@@ -408,9 +331,6 @@ def websafe_palette() -> np.ndarray:
     lv = np.arange(6) * 51
     r, g, b = np.meshgrid(lv, lv, lv, indexing="ij")
     return np.stack([r, g, b], axis=-1).reshape(216, 3).astype(np.int64)
-
-
-PCT_SCHEMA = "image_id string, bytes binary, w int, h int, fmt string, ok boolean"
 
 
 def rgb2pct(images: DataFrame, palette: np.ndarray) -> DataFrame:
@@ -432,34 +352,22 @@ def rgb2pct(images: DataFrame, palette: np.ndarray) -> DataFrame:
     palsq = (pal * pal).sum(1)
     chunk = 1 << 16  # peak extra memory = chunk×P int64 (~113 MB at P=216)
 
-    def _run(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples():
-                try:
-                    img = codecs.decode(bytes(r.bytes), r.fmt).astype(np.int64)
-                    if img.shape[2] != 3:
-                        raise ValueError("rgb2pct needs a 3-band image")
-                    # |x−p|² = |x|² − 2x·pᵀ + |p|², chunked — the naive
-                    # (h,w,P,3) broadcast tensor is ~5 GB for a 1-Mpx
-                    # image; exact int64 matmul, argmin keeps the
-                    # FIRST (lowest-index) minimum on ties
-                    flat = img.reshape(-1, 3)
-                    idx1 = np.empty(len(flat), np.uint8)
-                    for o in range(0, len(flat), chunk):
-                        f = flat[o:o + chunk]
-                        d2 = ((f * f).sum(1)[:, None] - 2 * (f @ pal.T)
-                              + palsq[None, :])
-                        idx1[o:o + chunk] = d2.argmin(axis=1)
-                    idx = idx1.reshape(img.shape[0], img.shape[1])
-                except Exception:
-                    out.append((r.image_id, None, None, None, None, False))
-                    continue
-                out.append((r.image_id, codecs.encode_raw(idx[:, :, None]),
-                            int(img.shape[1]), int(img.shape[0]), "raw", True))
-            yield pd.DataFrame(out, columns=["image_id", "bytes", "w", "h", "fmt", "ok"])
+    def _quantize(img):
+        img = img.astype(np.int64)
+        if img.shape[2] != 3:
+            raise ValueError("rgb2pct needs a 3-band image")
+        # |x−p|² = |x|² − 2x·pᵀ + |p|², chunked — the naive (h,w,P,3)
+        # broadcast tensor is ~5 GB for a 1-Mpx image; exact int64
+        # matmul, argmin keeps the FIRST (lowest-index) minimum on ties
+        flat = img.reshape(-1, 3)
+        idx1 = np.empty(len(flat), np.uint8)
+        for o in range(0, len(flat), chunk):
+            f = flat[o:o + chunk]
+            d2 = (f * f).sum(1)[:, None] - 2 * (f @ pal.T) + palsq[None, :]
+            idx1[o:o + chunk] = d2.argmin(axis=1)
+        return idx1.reshape(img.shape[0], img.shape[1], 1)
 
-    return images.mapInPandas(_run, PCT_SCHEMA)
+    return _map_images(images, _quantize)
 
 
 def pct2rgb(images: DataFrame, palette: np.ndarray) -> DataFrame:
@@ -474,25 +382,14 @@ def pct2rgb(images: DataFrame, palette: np.ndarray) -> DataFrame:
     lut = pal.astype(np.uint8)
     pmax = pal.shape[0]
 
-    def _run(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples():
-                try:
-                    img = codecs.decode(bytes(r.bytes), r.fmt)
-                    if img.shape[2] != 1:
-                        raise ValueError("pct2rgb needs a 1-band image")
-                    if int(img.max(initial=0)) >= pmax:
-                        raise ValueError("palette index out of range")
-                    rgb = lut[img[:, :, 0]]
-                except Exception:
-                    out.append((r.image_id, None, None, None, None, False))
-                    continue
-                out.append((r.image_id, codecs.encode_raw(rgb),
-                            int(img.shape[1]), int(img.shape[0]), "raw", True))
-            yield pd.DataFrame(out, columns=["image_id", "bytes", "w", "h", "fmt", "ok"])
+    def _expand(img):
+        if img.shape[2] != 1:
+            raise ValueError("pct2rgb needs a 1-band image")
+        if int(img.max(initial=0)) >= pmax:
+            raise ValueError("palette index out of range")
+        return lut[img[:, :, 0]]
 
-    return images.mapInPandas(_run, PCT_SCHEMA)
+    return _map_images(images, _expand)
 
 
 def color_histogram(images: DataFrame, bits: int = 5) -> DataFrame:
@@ -508,27 +405,24 @@ def color_histogram(images: DataFrame, bits: int = 5) -> DataFrame:
     shift = 8 - int(bits)
     half = (1 << shift) // 2 if shift else 0
 
-    def _run(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples():
-                try:
-                    img = codecs.decode(bytes(r.bytes), r.fmt)
-                    if img.shape[2] != 3:
-                        raise ValueError("needs a 3-band image")
-                except Exception:
-                    out.append((None, None, None, 0, False))
-                    continue
-                q = (img.reshape(-1, 3) >> shift).astype(np.int64)
-                key = (q[:, 0] << 16) | (q[:, 1] << 8) | q[:, 2]
-                uk, cnt = np.unique(key, return_counts=True)
-                for k, n in zip(uk, cnt):
-                    out.append((int((k >> 16) << shift) + half,
-                                int(((k >> 8) & 0xFF) << shift) + half,
-                                int((k & 0xFF) << shift) + half, int(n), True))
-            yield pd.DataFrame(out, columns=["r", "g", "b", "n_px", "ok"])
+    def _kernel(g):
+        for buf, fmt in zip(g["bytes"], g["fmt"]):
+            try:
+                img = codecs.decode(bytes(buf), fmt)
+                if img.shape[2] != 3:
+                    raise ValueError("needs a 3-band image")
+            except Exception:
+                yield None, None, None, 0, False
+                continue
+            q = (img.reshape(-1, 3) >> shift).astype(np.int64)
+            key = (q[:, 0] << 16) | (q[:, 1] << 8) | q[:, 2]
+            uk, cnt = np.unique(key, return_counts=True)
+            for k, n in zip(uk.tolist(), cnt.tolist()):
+                yield (((k >> 16) << shift) + half, (((k >> 8) & 0xFF) << shift) + half,
+                       ((k & 0xFF) << shift) + half, n, True)
 
-    part = images.mapInPandas(_run, "r int, g int, b int, n_px long, ok boolean")
+    part = run_batches(images, ["bytes", "fmt"], _kernel,
+                       "r int, g int, b int, n_px long, ok boolean")
     return part.groupBy("r", "g", "b", "ok").agg(F.sum("n_px").alias("n_px"))
 
 
@@ -592,33 +486,21 @@ def equalize_images(images: DataFrame) -> DataFrame:
     One Arrow hop per batch — bincount + cumsum + LUT gather per band,
     no shuffle; poison rows follow the house rule."""
 
-    def _run(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples():
-                try:
-                    img = codecs.decode(bytes(r.bytes), r.fmt)
-                    h, w, c = img.shape
-                    res = np.empty_like(img)
-                    n = h * w
-                    for b in range(c):
-                        cdf = np.cumsum(np.bincount(
-                            img[:, :, b].ravel(), minlength=256).astype(np.int64))
-                        cdf_min = int(cdf[int(img[:, :, b].min())])
-                        if n == cdf_min:
-                            res[:, :, b] = 0
-                            continue
-                        lut = ((cdf - cdf_min) * 255 // (n - cdf_min))
-                        res[:, :, b] = np.clip(lut, 0, 255).astype(
-                            np.uint8)[img[:, :, b]]
-                except Exception:
-                    out.append((r.image_id, None, None, None, None, False))
-                    continue
-                out.append((r.image_id, codecs.encode_raw(res),
-                            int(w), int(h), "raw", True))
-            yield pd.DataFrame(out, columns=["image_id", "bytes", "w", "h", "fmt", "ok"])
+    def _equalize(img):
+        h, w, c = img.shape
+        res = np.empty_like(img)
+        n = h * w
+        for b in range(c):
+            cdf = np.cumsum(np.bincount(img[:, :, b].ravel(), minlength=256).astype(np.int64))
+            cdf_min = int(cdf[int(img[:, :, b].min())])
+            if n == cdf_min:
+                res[:, :, b] = 0
+                continue
+            lut = (cdf - cdf_min) * 255 // (n - cdf_min)
+            res[:, :, b] = np.clip(lut, 0, 255).astype(np.uint8)[img[:, :, b]]
+        return res
 
-    return images.mapInPandas(_run, PCT_SCHEMA)
+    return _map_images(images, _equalize)
 
 
 def scale_images(
@@ -638,31 +520,20 @@ def scale_images(
     if src is not None and not src[0] < src[1]:
         raise ValueError(f"src range {src} must be increasing")
 
-    def _run(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples():
-                try:
-                    img = codecs.decode(bytes(r.bytes), r.fmt).astype(np.int64)
-                    h, w, c = img.shape
-                    res = np.empty((h, w, c), np.uint8)
-                    for b in range(c):
-                        band = img[:, :, b]
-                        s0, s1 = (int(band.min()), int(band.max())) \
-                            if src is None else (int(src[0]), int(src[1]))
-                        if s0 == s1:
-                            res[:, :, b] = d0
-                            continue
-                        v = d0 + (np.clip(band, s0, s1) - s0) * (d1 - d0) // (s1 - s0)
-                        res[:, :, b] = v.astype(np.uint8)
-                except Exception:
-                    out.append((r.image_id, None, None, None, None, False))
-                    continue
-                out.append((r.image_id, codecs.encode_raw(res),
-                            int(w), int(h), "raw", True))
-            yield pd.DataFrame(out, columns=["image_id", "bytes", "w", "h", "fmt", "ok"])
+    def _scale(img):
+        img = img.astype(np.int64)
+        res = np.empty(img.shape, np.uint8)
+        for b in range(img.shape[2]):
+            band = img[:, :, b]
+            s0, s1 = (int(band.min()), int(band.max())) \
+                if src is None else (int(src[0]), int(src[1]))
+            if s0 == s1:
+                res[:, :, b] = d0
+                continue
+            res[:, :, b] = d0 + (np.clip(band, s0, s1) - s0) * (d1 - d0) // (s1 - s0)
+        return res
 
-    return images.mapInPandas(_run, PCT_SCHEMA)
+    return _map_images(images, _scale)
 
 
 def pansharpen(
@@ -695,34 +566,26 @@ def pansharpen(
         "_id", "inner",
     )
 
-    def _run(batches):
-        for pdf in batches:
-            out = []
-            for i in range(len(pdf)):
-                rid = pdf["_id"].iloc[i]
-                try:
-                    m = codecs.decode(bytes(pdf["_mb"].iloc[i]),
-                                      pdf["_mf"].iloc[i]).astype(np.int64)
-                    p = codecs.decode(bytes(pdf["_pb"].iloc[i]),
-                                      pdf["_pf"].iloc[i]).astype(np.int64)
-                    if m.shape[2] != len(wa):
-                        raise ValueError("band count != weight count")
-                    if p.shape[2] != 1 or p.shape[:2] != m.shape[:2]:
-                        raise ValueError(f"grid mismatch {p.shape} vs {m.shape}")
-                    den = (m * wa[None, None, :]).sum(axis=2)
-                    num = m * p * ws  # broadcasts the (h,w,1) pan
-                    res = np.where(
-                        den[:, :, None] > 0,
-                        num // np.where(den[:, :, None] > 0, den[:, :, None], 1),
-                        0,
-                    )
-                    outb = np.clip(res, 0, 255).astype(np.uint8)
-                except Exception:
-                    out.append((rid, None, None, None, None, False))
-                    continue
-                out.append((rid, codecs.encode_raw(outb),
-                            int(outb.shape[1]), int(outb.shape[0]), "raw", True))
-            yield pd.DataFrame(
-                out, columns=["image_id", "bytes", "w", "h", "fmt", "ok"])
+    def _kernel(g):
+        for rid, mb, mf, pb, pf in zip(g["_id"], g["_mb"], g["_mf"], g["_pb"], g["_pf"]):
+            try:
+                m = codecs.decode(bytes(mb), mf).astype(np.int64)
+                p = codecs.decode(bytes(pb), pf).astype(np.int64)
+                if m.shape[2] != len(wa):
+                    raise ValueError("band count != weight count")
+                if p.shape[2] != 1 or p.shape[:2] != m.shape[:2]:
+                    raise ValueError(f"grid mismatch {p.shape} vs {m.shape}")
+                den = (m * wa[None, None, :]).sum(axis=2)
+                num = m * p * ws  # broadcasts the (h,w,1) pan
+                res = np.where(
+                    den[:, :, None] > 0,
+                    num // np.where(den[:, :, None] > 0, den[:, :, None], 1),
+                    0,
+                )
+                outb = np.clip(res, 0, 255).astype(np.uint8)
+            except Exception:
+                yield rid, None, None, None, None, False
+                continue
+            yield rid, codecs.encode_raw(outb), int(outb.shape[1]), int(outb.shape[0]), "raw", True
 
-    return joined.mapInPandas(_run, PCT_SCHEMA)
+    return run_batches(joined, ["_id", "_mb", "_mf", "_pb", "_pf"], _kernel, IMAGE_SCHEMA)

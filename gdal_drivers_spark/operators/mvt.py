@@ -31,11 +31,10 @@ import json
 import struct
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..core import mvtcodec
-from ._groups import run_grouped
+from ._groups import run_batches, run_grouped
 
 FEATURES_SCHEMA = (
     "z int, tx long, ty long, layer string, fid long, geom_type string, "
@@ -63,63 +62,52 @@ def decode_features(
     'id'-attribute FID fallback necessarily disappears with the
     fields, exactly as in the reference."""
 
-    def _decode(batches):
-        for pdf in batches:
-            out = []
-            for lr in pdf.itertuples():
-                keys = list(lr.keys)
-                values = list(lr.values)
-                for fi, f in enumerate(lr.features):
-                    gt = int(f["geom_type"])
-                    if gt not in _TYPE_NAMES:
-                        continue  # UNKNOWN skipped (mvt.cpp:526-533)
-                    # --- attributes (dictionary join, J4)
-                    props = {}
-                    if fields:
-                        tags = list(f["tags"])
-                        for i in range(0, len(tags) - 1, 2):  # odd trailing ignored
-                            ki, vi = tags[i], tags[i + 1]
-                            if 0 <= ki < len(keys) and 0 <= vi < len(values):
-                                props[keys[ki]] = values[vi]
-                    # --- FID: proto id wins, else 'id' attribute, else seq
-                    fid = int(f["id"])
-                    if fid == 0 and "id" in props:
-                        try:
-                            fid = int(props["id"])
-                        except ValueError:
-                            fid = fi
-                    # --- geometry
-                    stream = np.asarray(list(f["geometry"]), np.int64)
-                    parts = mvtcodec.decode_geometry(gt, stream)
-                    world_parts = mvtcodec.tile_to_world(
-                        parts, int(lr.z), int(lr.tx), int(lr.ty), int(lr.extent), world
-                    )
-                    if gt == mvtcodec.GEOM_POLYGON:
-                        polys = mvtcodec.assemble_polygons(world_parts)
-                        n_rings = sum(len(p) for p in polys)
-                        geom = [[r.tolist() for r in p] for p in polys]
-                        n_parts = len(polys)
-                    else:
-                        n_rings = 0
-                        geom = [p.tolist() for p in world_parts]
-                        n_parts = len(world_parts)
-                    n_vertices = int(sum(len(p) for p in world_parts))
-                    out.append(
-                        (
-                            int(lr.z), int(lr.tx), int(lr.ty), lr.layer, fid,
-                            _TYPE_NAMES[gt], n_parts, n_rings, n_vertices,
-                            json.dumps(geom), props,
-                        )
-                    )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "z", "tx", "ty", "layer", "fid", "geom_type",
-                    "n_parts", "n_rings", "n_vertices", "geom_json", "props",
-                ],
-            )
+    cols = ["z", "tx", "ty", "layer", "extent", "keys", "values", "features"]
 
-    return layers.mapInPandas(_decode, FEATURES_SCHEMA)
+    def _decode(g):
+        for z, tx, ty, layer, extent, keys, values, feats in zip(*(g[c] for c in cols)):
+            for fi, f in enumerate(feats):
+                gt = f["geom_type"]
+                if gt not in _TYPE_NAMES:
+                    continue  # UNKNOWN skipped (mvt.cpp:526-533)
+                # --- attributes (dictionary join, J4)
+                props = {}
+                if fields:
+                    tags = f["tags"]
+                    for i in range(0, len(tags) - 1, 2):  # odd trailing ignored
+                        ki, vi = tags[i], tags[i + 1]
+                        if 0 <= ki < len(keys) and 0 <= vi < len(values):
+                            props[keys[ki]] = values[vi]
+                yield (z, tx, ty, layer, _fid(int(f["id"]), props, fi), _TYPE_NAMES[gt],
+                       *_geometry(gt, f["geometry"], z, tx, ty, extent, world), props)
+
+    return run_batches(layers, cols, _decode, FEATURES_SCHEMA)
+
+
+def _fid(fid: int, props: dict, fi: int) -> int:
+    """Feature id: the proto id wins, else the 'id' attribute, else the
+    feature's sequence number in its layer."""
+    if fid == 0 and "id" in props:
+        try:
+            return int(props["id"])
+        except ValueError:
+            return fi
+    return fid
+
+
+def _geometry(gt: int, stream, z: int, tx: int, ty: int, extent: int, world) -> tuple:
+    """(n_parts, n_rings, n_vertices, geom_json) of one feature's
+    command stream, in world coordinates."""
+    parts = mvtcodec.decode_geometry(gt, np.asarray(stream, np.int64))
+    world_parts = mvtcodec.tile_to_world(parts, z, tx, ty, extent, world)
+    if gt == mvtcodec.GEOM_POLYGON:
+        polys = mvtcodec.assemble_polygons(world_parts)
+        n_parts, n_rings = len(polys), sum(len(p) for p in polys)
+        geom = [[r.tolist() for r in p] for p in polys]
+    else:
+        n_parts, n_rings = len(world_parts), 0
+        geom = [p.tolist() for p in world_parts]
+    return n_parts, n_rings, int(sum(len(p) for p in world_parts)), json.dumps(geom)
 
 
 _TYPE_IDS = {v: k for k, v in _TYPE_NAMES.items()}
@@ -217,82 +205,47 @@ def decode_features_proto(
     tag→dictionary/Value work is skipped entirely."""
     from ..core import mvtproto
 
-    def _decode(batches):
-        for pdf in batches:
-            out = []
-            for tr in pdf.itertuples():
-                try:
-                    layers = mvtproto.decode_tile(bytes(tr.data))
-                except (ValueError, IndexError, UnicodeDecodeError, struct.error):
-                    # poison tile → zero rows, stage survives
-                    # (struct.error: truncated fixed32/fixed64 Value)
-                    continue
-                for lr in layers:
-                    keys = lr["keys"]
-                    vals = lr["values"]
-                    extent = int(lr["extent"])
-                    if extent <= 0:
-                        continue  # degenerate layer: poison, zero rows
-                    for fi, f in enumerate(lr["features"]):
-                        gt = int(f["geom_type"])
-                        if gt not in _TYPE_NAMES:
-                            continue  # UNKNOWN skipped (mvt.cpp:526-533)
-                        props: dict = {}
-                        tprops: dict = {}
-                        if fields:
-                            tags = f["tags"]
-                            for i in range(0, len(tags) - 1, 2):
-                                ki, vi = int(tags[i]), int(tags[i + 1])
-                                if 0 <= ki < len(keys) and 0 <= vi < len(vals):
-                                    kind, v = vals[vi]
-                                    props[keys[ki]] = _stringize(kind, v)
-                                    tprops[keys[ki]] = _typed(kind, v)
-                        fid = int(f["id"])
-                        if fid == 0 and "id" in props:
-                            try:
-                                fid = int(props["id"])
-                            except ValueError:
-                                fid = fi
-                        # the geometry guard must cover the COMMAND
-                        # STREAM decode too: valid protobuf framing can
-                        # still carry a bad opcode / truncated deltas /
-                        # degenerate stream — such a feature poisons
-                        # only itself, never the stage (review r02)
-                        try:
-                            stream = np.asarray(f["geometry"], np.int64)
-                            parts = mvtcodec.decode_geometry(gt, stream)
-                            world_parts = mvtcodec.tile_to_world(
-                                parts, int(tr.z), int(tr.tx), int(tr.ty), extent, world
-                            )
-                            if gt == mvtcodec.GEOM_POLYGON:
-                                polys = mvtcodec.assemble_polygons(world_parts)
-                                n_rings = sum(len(p) for p in polys)
-                                geom = [[r.tolist() for r in p] for p in polys]
-                                n_parts = len(polys)
-                            else:
-                                n_rings = 0
-                                geom = [p.tolist() for p in world_parts]
-                                n_parts = len(world_parts)
-                            n_vertices = int(sum(len(p) for p in world_parts))
-                        except (ValueError, IndexError, ZeroDivisionError, OverflowError):
-                            continue
-                        out.append(
-                            (
-                                int(tr.z), int(tr.tx), int(tr.ty), lr["name"], fid,
-                                _TYPE_NAMES[gt], n_parts, n_rings, n_vertices,
-                                json.dumps(geom), props, tprops,
-                            )
-                        )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "z", "tx", "ty", "layer", "fid", "geom_type",
-                    "n_parts", "n_rings", "n_vertices", "geom_json",
-                    "props", "props_typed",
-                ],
-            )
+    def _decode(g):
+        for z, tx, ty, data in zip(g["z"], g["tx"], g["ty"], g["data"]):
+            try:
+                layers = mvtproto.decode_tile(bytes(data))
+            except (ValueError, IndexError, UnicodeDecodeError, struct.error):
+                # poison tile → zero rows, stage survives
+                # (struct.error: truncated fixed32/fixed64 Value)
+                continue
+            for lr in layers:
+                keys = lr["keys"]
+                vals = lr["values"]
+                extent = int(lr["extent"])
+                if extent <= 0:
+                    continue  # degenerate layer: poison, zero rows
+                for fi, f in enumerate(lr["features"]):
+                    gt = int(f["geom_type"])
+                    if gt not in _TYPE_NAMES:
+                        continue  # UNKNOWN skipped (mvt.cpp:526-533)
+                    props: dict = {}
+                    tprops: dict = {}
+                    if fields:
+                        tags = f["tags"]
+                        for i in range(0, len(tags) - 1, 2):
+                            ki, vi = int(tags[i]), int(tags[i + 1])
+                            if 0 <= ki < len(keys) and 0 <= vi < len(vals):
+                                kind, v = vals[vi]
+                                props[keys[ki]] = _stringize(kind, v)
+                                tprops[keys[ki]] = _typed(kind, v)
+                    # the geometry guard must cover the COMMAND STREAM
+                    # decode too: valid protobuf framing can still carry
+                    # a bad opcode / truncated deltas / degenerate
+                    # stream — such a feature poisons only itself, never
+                    # the stage (review r02)
+                    try:
+                        geom = _geometry(gt, f["geometry"], z, tx, ty, extent, world)
+                    except (ValueError, IndexError, ZeroDivisionError, OverflowError):
+                        continue
+                    yield (z, tx, ty, lr["name"], _fid(int(f["id"]), props, fi),
+                           _TYPE_NAMES[gt], *geom, props, tprops)
 
-    return tiles.mapInPandas(_decode, PROTO_FEATURES_SCHEMA)
+    return run_batches(tiles, ["z", "tx", "ty", "data"], _decode, PROTO_FEATURES_SCHEMA)
 
 LAYERS_SCHEMA = (
     "z int, tx long, ty long, layer string, extent int, keys array<string>, "
@@ -313,7 +266,6 @@ def encode_layers(
     ints, re-encode command streams (zigzag + cursor deltas). Grouped
     Arrow UDF keyed by (z,tx,ty,layer) — the same partitioning a
     tile sink writes with, so encode feeds the writer shuffle-free."""
-    import json
 
     def _encode(key, g):
         z, tx, ty, layer = *key[:3], str(key[3])

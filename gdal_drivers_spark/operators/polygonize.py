@@ -37,12 +37,12 @@ analytically derivable so its oracle is exact anyway).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gdal_drivers_spark.core import qcell
+from gdal_drivers_spark.operators._groups import run_batches
 from gdal_drivers_spark.operators.dedup import connected_components
 
 
@@ -111,113 +111,109 @@ def _polygonize_parts(
     ox, oy = int(grid_origin[0]), int(grid_origin[1])
     W = gw * t  # global width in pixels (gpid = gy * W + gx)
 
-    def gen(batches):
-        for pdf in batches:
-            srows = []
-            for row in pdf.itertuples():
-                _, tx, ty = qcell.unpack_int(row.cell)
-                tx, ty = tx - ox, ty - oy
-                if not (0 <= tx < gw and 0 <= ty < gh):
-                    raise ValueError(
-                        f"tile ({tx + ox}, {ty + oy}) outside the declared "
-                        f"grid origin={grid_origin} size={grid_wh}: gpid "
-                        "linearization would alias across rows and fuse "
-                        "unrelated components"
+    def gen(cols):
+        srows = []
+        for cell, payload in zip(cols["cell"], cols[tile_col]):
+            _, tx, ty = qcell.unpack_int(cell)
+            tx, ty = tx - ox, ty - oy
+            if not (0 <= tx < gw and 0 <= ty < gh):
+                raise ValueError(
+                    f"tile ({tx + ox}, {ty + oy}) outside the declared "
+                    f"grid origin={grid_origin} size={grid_wh}: gpid "
+                    "linearization would alias across rows and fuse "
+                    "unrelated components"
+                )
+            try:
+                v = np.frombuffer(bytes(payload), np.uint8)
+                v = v.reshape(t, t).astype(np.int64)
+            except Exception:
+                srows.append((1, -1, -1, -1, 0))  # poison marker
+                continue
+            gx0, gy0 = tx * t, ty * t
+            roots = _label_tile(v, connectivity)
+            gy = np.arange(t)[:, None] + gy0
+            gx = np.arange(t)[None, :] + gx0
+            gpid = (gy * W + gx).ravel().astype(np.int64)
+            flat = v.ravel()
+            # canonical node id per local root: min gpid (vectorized)
+            min_g = np.full(t * t, np.iinfo(np.int64).max, np.int64)
+            np.minimum.at(min_g, roots, gpid)
+            counts = np.bincount(roots, minlength=t * t)
+            node_px = min_g[roots]  # per-pixel canonical node id
+            # kind 0: local component summaries
+            for r in np.flatnonzero(counts):
+                srows.append((0, int(min_g[r]), int(flat[r]), -1, int(counts[r])))
+            if adjacency:
+                # kind 2: in-tile boundary counts between DIFFERENT
+                # local components (pair_key column = second node)
+                npx2 = node_px.reshape(t, t)
+                ha, hb = npx2[:, :-1].ravel(), npx2[:, 1:].ravel()
+                va, vb = npx2[:-1, :].ravel(), npx2[1:, :].ravel()
+                a = np.concatenate([ha, va])
+                b = np.concatenate([hb, vb])
+                m = a != b
+                if m.any():
+                    pairs = np.stack(
+                        [np.minimum(a[m], b[m]), np.maximum(a[m], b[m])], 1
                     )
-                try:
-                    v = np.frombuffer(bytes(getattr(row, tile_col)), np.uint8)
-                    v = v.reshape(t, t).astype(np.int64)
-                except Exception:
-                    srows.append((1, -1, -1, -1, 0))  # poison marker
-                    continue
-                gx0, gy0 = tx * t, ty * t
-                roots = _label_tile(v, connectivity)
-                gy = np.arange(t)[:, None] + gy0
-                gx = np.arange(t)[None, :] + gx0
-                gpid = (gy * W + gx).ravel().astype(np.int64)
-                flat = v.ravel()
-                # canonical node id per local root: min gpid (vectorized)
-                min_g = np.full(t * t, np.iinfo(np.int64).max, np.int64)
-                np.minimum.at(min_g, roots, gpid)
-                counts = np.bincount(roots, minlength=t * t)
-                node_px = min_g[roots]  # per-pixel canonical node id
-                # kind 0: local component summaries
-                for r in np.flatnonzero(counts):
-                    srows.append((0, int(min_g[r]), int(flat[r]), -1, int(counts[r])))
-                if adjacency:
-                    # kind 2: in-tile boundary counts between DIFFERENT
-                    # local components (pair_key column = second node)
-                    npx2 = node_px.reshape(t, t)
-                    ha, hb = npx2[:, :-1].ravel(), npx2[:, 1:].ravel()
-                    va, vb = npx2[:-1, :].ravel(), npx2[1:, :].ravel()
-                    a = np.concatenate([ha, va])
-                    b = np.concatenate([hb, vb])
-                    m = a != b
-                    if m.any():
-                        pairs = np.stack(
-                            [np.minimum(a[m], b[m]), np.maximum(a[m], b[m])], 1
-                        )
-                        uq, cnt2 = np.unique(pairs, axis=0, return_counts=True)
-                        for (na, nb), c in zip(uq, cnt2):
-                            srows.append((2, int(na), -1, int(nb), int(c)))
-                # kind 1: seam rows. pair key (×4 keyspace): horizontal
-                # = west gpid·4, vertical = north gpid·4+1, and under
-                # 8-connectivity the diagonals ↘ = upper-left gpid·4+2,
-                # ↙ = upper-right gpid·4+3 — every side derives the key
-                # from its OWN coordinates alone, so no halo is shipped
-                def seam(idx):
-                    for i in idx:
-                        yield int(node_px[i]), int(flat[i])
+                    uq, cnt2 = np.unique(pairs, axis=0, return_counts=True)
+                    for (na, nb), c in zip(uq, cnt2):
+                        srows.append((2, int(na), -1, int(nb), int(c)))
+            # kind 1: seam rows. pair key (×4 keyspace): horizontal
+            # = west gpid·4, vertical = north gpid·4+1, and under
+            # 8-connectivity the diagonals ↘ = upper-left gpid·4+2,
+            # ↙ = upper-right gpid·4+3 — every side derives the key
+            # from its OWN coordinates alone, so no halo is shipped
+            def seam(idx):
+                for i in idx:
+                    yield int(node_px[i]), int(flat[i])
 
-                east = np.arange(t) * t + (t - 1)
-                for (node, val), i in zip(seam(east), east):
-                    srows.append((1, node, val, int(gpid[i]) * 4, 1))
-                if gx0 > 0:
-                    west = np.arange(t) * t
-                    for (node, val), i in zip(seam(west), west):
-                        srows.append((1, node, val, (int(gpid[i]) - 1) * 4, 1))
-                south = (t - 1) * t + np.arange(t)
-                for (node, val), i in zip(seam(south), south):
-                    srows.append((1, node, val, int(gpid[i]) * 4 + 1, 1))
-                if gy0 > 0:
-                    north = np.arange(t)
-                    for (node, val), i in zip(seam(north), north):
-                        srows.append((1, node, val, (int(gpid[i]) - W) * 4 + 1, 1))
-                if connectivity == 8:
-                    H = gh * t
-                    west = np.arange(t) * t
-                    north = np.arange(t)
+            east = np.arange(t) * t + (t - 1)
+            for (node, val), i in zip(seam(east), east):
+                srows.append((1, node, val, int(gpid[i]) * 4, 1))
+            if gx0 > 0:
+                west = np.arange(t) * t
+                for (node, val), i in zip(seam(west), west):
+                    srows.append((1, node, val, (int(gpid[i]) - 1) * 4, 1))
+            south = (t - 1) * t + np.arange(t)
+            for (node, val), i in zip(seam(south), south):
+                srows.append((1, node, val, int(gpid[i]) * 4 + 1, 1))
+            if gy0 > 0:
+                north = np.arange(t)
+                for (node, val), i in zip(seam(north), north):
+                    srows.append((1, node, val, (int(gpid[i]) - W) * 4 + 1, 1))
+            if connectivity == 8:
+                H = gh * t
+                west = np.arange(t) * t
+                north = np.arange(t)
 
-                    def emit_diag(idx, keyfn, guard):
-                        for i in np.unique(idx):
-                            g = int(gpid[i])
-                            if guard(g % W, g // W):
-                                srows.append((1, int(node_px[i]),
-                                              int(flat[i]), keyfn(g), 1))
+                def emit_diag(idx, keyfn, guard):
+                    for i in np.unique(idx):
+                        g = int(gpid[i])
+                        if guard(g % W, g // W):
+                            srows.append((1, int(node_px[i]),
+                                          int(flat[i]), keyfn(g), 1))
 
-                    # ↘ pair (p, p+W+1): upper-left side = east∪south,
-                    # lower-right side = west∪north of the OTHER tiles
-                    emit_diag(np.concatenate([east, south]),
-                              lambda g: g * 4 + 2,
-                              lambda x, y: x < W - 1 and y < H - 1)
-                    emit_diag(np.concatenate([west, north]),
-                              lambda g: (g - W - 1) * 4 + 2,
-                              lambda x, y: x > 0 and y > 0)
-                    # ↙ pair (p, p+W−1): upper-right side = west∪south,
-                    # lower-left side = east∪north
-                    emit_diag(np.concatenate([west, south]),
-                              lambda g: g * 4 + 3,
-                              lambda x, y: x > 0 and y < H - 1)
-                    emit_diag(np.concatenate([east, north]),
-                              lambda g: (g - W + 1) * 4 + 3,
-                              lambda x, y: x < W - 1 and y > 0)
-            yield pd.DataFrame(
-                srows, columns=["kind", "node", "value", "pair_key", "n_px"]
-            )
+                # ↘ pair (p, p+W+1): upper-left side = east∪south,
+                # lower-right side = west∪north of the OTHER tiles
+                emit_diag(np.concatenate([east, south]),
+                          lambda g: g * 4 + 2,
+                          lambda x, y: x < W - 1 and y < H - 1)
+                emit_diag(np.concatenate([west, north]),
+                          lambda g: (g - W - 1) * 4 + 2,
+                          lambda x, y: x > 0 and y > 0)
+                # ↙ pair (p, p+W−1): upper-right side = west∪south,
+                # lower-left side = east∪north
+                emit_diag(np.concatenate([west, south]),
+                          lambda g: g * 4 + 3,
+                          lambda x, y: x > 0 and y < H - 1)
+                emit_diag(np.concatenate([east, north]),
+                          lambda g: (g - W + 1) * 4 + 3,
+                          lambda x, y: x < W - 1 and y > 0)
+        return srows
 
-    raw = tiles.mapInPandas(
-        gen, "kind int, node long, value long, pair_key long, n_px long"
-    )
+    raw = run_batches(tiles, ["cell", tile_col], gen,
+                      "kind int, node long, value long, pair_key long, n_px long")
     raw = raw.localCheckpoint(eager=False)
     summaries = raw.filter("kind = 0").select("node", "value", "n_px")
     n_bad = raw.filter("kind = 1 and node = -1")
@@ -474,38 +470,30 @@ def sieve_apply(
         "cell", "tile", "_tx", "_ty", "_patch"
     )
 
-    def relabel(batches):
-        # positional iteration: itertuples() renames _-prefixed columns
-        for pdf in batches:
-            out = []
-            for kc, payload, rtx, rty, patch in zip(
-                pdf.iloc[:, 0], pdf.iloc[:, 1], pdf.iloc[:, 2],
-                pdf.iloc[:, 3], pdf.iloc[:, 4],
-            ):
-                kc = int(kc)
-                if patch is None or (isinstance(patch, float)):
-                    out.append((kc, payload, 0))
-                    continue
-                tx, ty = int(rtx), int(rty)
-                v = np.frombuffer(bytes(payload), np.uint8).reshape(t, t)
-                roots = _label_tile(v.astype(np.int64))
-                gy = np.arange(t)[:, None] + ty * t
-                gx = np.arange(t)[None, :] + tx * t
-                gpid = (gy * W + gx).ravel().astype(np.int64)
-                min_g = np.full(t * t, np.iinfo(np.int64).max, np.int64)
-                np.minimum.at(min_g, roots, gpid)
-                node_px = min_g[roots]
-                nv = {int(p["node"]): int(p["new_value"]) for p in patch}
-                flatpx = v.ravel().copy()
-                n_rel = 0
-                for node, val in nv.items():
-                    m = node_px == node
-                    n_rel += int(m.sum())
-                    flatpx[m] = val
-                out.append((kc, flatpx.tobytes(), n_rel))
-            yield pd.DataFrame(out, columns=["cell", "tile", "n_relabeled"])
+    def relabel(g):
+        for kc, payload, tx, ty, patch in zip(g["cell"], g["tile"], g["_tx"], g["_ty"], g["_patch"]):
+            if patch is None:
+                yield kc, payload, 0
+                continue
+            v = np.frombuffer(bytes(payload), np.uint8).reshape(t, t)
+            roots = _label_tile(v.astype(np.int64))
+            gy = np.arange(t)[:, None] + ty * t
+            gx = np.arange(t)[None, :] + tx * t
+            gpid = (gy * W + gx).ravel().astype(np.int64)
+            min_g = np.full(t * t, np.iinfo(np.int64).max, np.int64)
+            np.minimum.at(min_g, roots, gpid)
+            node_px = min_g[roots]
+            nv = {p["node"]: p["new_value"] for p in patch}
+            flatpx = v.ravel().copy()
+            n_rel = 0
+            for node, val in nv.items():
+                m = node_px == node
+                n_rel += int(m.sum())
+                flatpx[m] = val
+            yield kc, flatpx.tobytes(), n_rel
 
-    return joined.mapInPandas(relabel, "cell long, tile binary, n_relabeled long")
+    return run_batches(joined, ["cell", "tile", "_tx", "_ty", "_patch"], relabel,
+                       "cell long, tile binary, n_relabeled long")
 
 
 def contour_polygons(
@@ -539,26 +527,16 @@ def contour_polygons(
     t = int(tile_px)
     lva = np.asarray(lv, np.int64)
 
-    def _band(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples():
-                raw = getattr(r, tile_col)
-                if raw is None:  # upstream poison row: polygonize owns it
-                    out.append((r.cell, None))
-                    continue
-                buf = bytes(raw)
-                if len(buf) != t * t:
-                    out.append((r.cell, buf))  # polygonize flags it
-                    continue
-                img = np.frombuffer(buf, np.uint8)
-                out.append((r.cell,
-                            np.searchsorted(lva, img, side="right")
-                            .astype(np.uint8).tobytes()))
-            yield pd.DataFrame(out, columns=["cell", tile_col])
+    def _band(raw):
+        # an upstream poison row (NULL) or a wrong-length payload passes
+        # through: polygonize owns the poison accounting
+        if raw is None or len(raw) != t * t:
+            return raw
+        return np.searchsorted(lva, np.frombuffer(raw, np.uint8), side="right").astype(np.uint8).tobytes()
 
-    banded = tiles.select("cell", tile_col).mapInPandas(
-        _band, f"cell long, {tile_col} binary")
+    banded = run_batches(tiles, ["cell", tile_col],
+                         lambda g: zip(g["cell"], map(_band, g[tile_col])),
+                         f"cell long, {tile_col} binary")
     comp = polygonize(banded, t, grid_wh, tile_col, grid_origin,
                       max_iter, connectivity=connectivity)
     arr = F.array(*[F.lit(x).cast("long") for x in lv])

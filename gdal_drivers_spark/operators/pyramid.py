@@ -25,12 +25,11 @@ from __future__ import annotations
 from functools import reduce
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gdal_drivers_spark.core import qcell
-from gdal_drivers_spark.operators._groups import run_grouped
+from gdal_drivers_spark.operators._groups import run_batches, run_grouped
 
 PYRAMID_SCHEMA = "cell long, band int, tile binary, ts int"
 # Levels per grouped kernel: a group holds ≤ 4**STRIDE leaves, 64 tiles
@@ -307,35 +306,27 @@ def retile(
     frag_schema = ("ocell long, ox int, oy int, fw int, fh int, "
                    "frag binary, bad boolean")
 
-    def _slice(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples():
-                _, tx, ty = qcell.unpack_int(r.cell)
-                gx0, gy0 = tx * ti, ty * ti
-                raw = getattr(r, tile_col)
-                buf = b"" if raw is None else bytes(raw)
-                bad = len(buf) != ti * ti
-                img = (None if bad
-                       else np.frombuffer(buf, np.uint8).reshape(ti, ti))
-                for otx in range(gx0 // to, (gx0 + ti - 1) // to + 1):
-                    for oty in range(gy0 // to, (gy0 + ti - 1) // to + 1):
-                        ix0 = max(gx0, otx * to)
-                        ix1 = min(gx0 + ti, (otx + 1) * to)
-                        iy0 = max(gy0, oty * to)
-                        iy1 = min(gy0 + ti, (oty + 1) * to)
-                        if ix0 >= ix1 or iy0 >= iy1:
-                            continue
-                        oc = qcell.pack_int(z, otx, oty)
-                        if bad:
-                            out.append((oc, 0, 0, 0, 0, b"", True))
-                            continue
-                        fr = img[iy0 - gy0:iy1 - gy0, ix0 - gx0:ix1 - gx0]
-                        out.append((oc, ix0 - otx * to, iy0 - oty * to,
-                                    ix1 - ix0, iy1 - iy0,
-                                    fr.tobytes(), False))
-            yield pd.DataFrame(
-                out, columns=["ocell", "ox", "oy", "fw", "fh", "frag", "bad"])
+    def _slice(g):
+        for cell, raw in zip(g["cell"], g[tile_col]):
+            _, tx, ty = qcell.unpack_int(cell)
+            gx0, gy0 = tx * ti, ty * ti
+            bad = raw is None or len(raw) != ti * ti
+            img = None if bad else np.frombuffer(raw, np.uint8).reshape(ti, ti)
+            for otx in range(gx0 // to, (gx0 + ti - 1) // to + 1):
+                for oty in range(gy0 // to, (gy0 + ti - 1) // to + 1):
+                    ix0 = max(gx0, otx * to)
+                    ix1 = min(gx0 + ti, (otx + 1) * to)
+                    iy0 = max(gy0, oty * to)
+                    iy1 = min(gy0 + ti, (oty + 1) * to)
+                    if ix0 >= ix1 or iy0 >= iy1:
+                        continue
+                    oc = qcell.pack_int(z, otx, oty)
+                    if bad:
+                        yield oc, 0, 0, 0, 0, b"", True
+                        continue
+                    fr = img[iy0 - gy0:iy1 - gy0, ix0 - gx0:ix1 - gx0]
+                    yield (oc, ix0 - otx * to, iy0 - oty * to, ix1 - ix0, iy1 - iy0,
+                           fr.tobytes(), False)
 
     def _assemble(key, g):
         kc = key[0]
@@ -346,7 +337,7 @@ def retile(
             img[oy:oy + fh, ox:ox + fw] = np.frombuffer(frag, np.uint8).reshape(fh, fw)
         return [(kc, img.tobytes(), len(g["frag"]), True)]
 
-    frags = tiles.select("cell", tile_col).mapInPandas(_slice, frag_schema)
+    frags = run_batches(tiles, ["cell", tile_col], _slice, frag_schema)
     assembled = run_grouped(
         frags, ["ocell"], ["ox", "oy", "fw", "fh", "frag", "bad"], _assemble,
         "cell long, tile binary, n_src long, ok boolean")

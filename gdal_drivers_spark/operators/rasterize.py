@@ -21,12 +21,11 @@ quads — emitting exactly the quadtree the mask writer would store.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gdal_drivers_spark.core import qcell
-from gdal_drivers_spark.operators._groups import run_grouped
+from gdal_drivers_spark.operators._groups import run_batches, run_grouped
 
 WHITE, GRAY, BLACK = 255, 128, 0
 _VAL = {"white": WHITE, "gray": GRAY, "black": BLACK}
@@ -145,18 +144,13 @@ def vectorize_tiles(tiles: DataFrame, depth: int, tile_px: int = 256) -> DataFra
     merge; cross-tile merging is a subsequent groupBy on parent ids
     (rarely worth it — the reference's trees are per-file too)."""
 
-    def _vec(pdf_iter):
-        for pdf in pdf_iter:
-            out = []
-            for r in pdf.itertuples():
-                tile = np.frombuffer(r.tile, np.uint8).reshape(r.ts, r.ts)
-                ox, oy = int(r.tx) * tile_px, int(r.ty) * tile_px
-                for level, qx, qy, size, v in _merge_quads(tile, ox, oy, depth):
-                    name = "white" if v == WHITE else ("gray" if v == GRAY else "black")
-                    out.append((level, qx, qy, size, name))
-            yield pd.DataFrame(out, columns=["level", "qx", "qy", "size", "value"])
+    def _vec(g):
+        for tx, ty, tile, ts in zip(g["tx"], g["ty"], g["tile"], g["ts"]):
+            px = np.frombuffer(tile, np.uint8).reshape(ts, ts)
+            for level, qx, qy, size, v in _merge_quads(px, tx * tile_px, ty * tile_px, depth):
+                yield level, qx, qy, size, "white" if v == WHITE else ("gray" if v == GRAY else "black")
 
-    return tiles.mapInPandas(_vec, VECTORIZE_SCHEMA)
+    return run_batches(tiles, ["tx", "ty", "tile", "ts"], _vec, VECTORIZE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -315,35 +309,23 @@ def burn_into(
         "cell", "full",
     )
 
-    def _merge(batches):
-        for pdf in batches:
-            out = []
-            for i in range(len(pdf)):
-                c = int(pdf["cell"].iloc[i])
-                braw = pdf["_base"].iloc[i]
-                if pdf["raster"].iloc[i] is None:
-                    # base cell outside the burn universe: loud poison
-                    out.append((c, None, -1, -1, False))
-                    continue
-                nb = int(pdf["n_burned"].iloc[i])
-                nf = int(pdf["n_features"].iloc[i])
-                burned_b = bytes(pdf["raster"].iloc[i])
-                if braw is None:
-                    out.append((c, burned_b, nb, nf, True))
-                    continue
-                bbuf = bytes(braw)
-                if len(bbuf) != t * t:
-                    out.append((c, None, -1, nf, False))
-                    continue
-                m = np.frombuffer(bytes(pdf["mask"].iloc[i]), np.uint8)
-                img = np.where(m > 0, np.frombuffer(burned_b, np.uint8),
-                               np.frombuffer(bbuf, np.uint8)).astype(np.uint8)
-                out.append((c, img.tobytes(), nb, nf, True))
-            yield pd.DataFrame(
-                out,
-                columns=["cell", "raster", "n_burned", "n_features", "ok"])
+    def _merge(g):
+        for c, burned, nb, nf, mask, base in zip(
+            g["cell"], g["raster"], g["n_burned"], g["n_features"], g["mask"], g["_base"]
+        ):
+            if burned is None:
+                # base cell outside the burn universe: loud poison
+                yield c, None, -1, -1, False
+            elif base is None:
+                yield c, burned, nb, nf, True
+            elif len(base) != t * t:
+                yield c, None, -1, nf, False
+            else:
+                img = np.where(np.frombuffer(mask, np.uint8) > 0, np.frombuffer(burned, np.uint8),
+                               np.frombuffer(base, np.uint8)).astype(np.uint8)
+                yield c, img.tobytes(), nb, nf, True
 
-    return joined.mapInPandas(
-        _merge,
+    return run_batches(
+        joined, ["cell", "raster", "n_burned", "n_features", "mask", "_base"], _merge,
         "cell long, raster binary, n_burned long, n_features long, ok boolean",
     )

@@ -33,7 +33,6 @@ are no join-shape flags. The paths, all standard at scale:
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, Window, functions as F
 
@@ -146,32 +145,29 @@ def lsh_bucket(vec: str, dim: int, n_planes: int = 8, table: int = 0):
     return bucket.cast("long")
 
 
-def _as_int64_vec(v):
-    """Arrow/pandas array cell → exact int64 ndarray, or None for a
-    malformed cell. Arrow hands an int64 array WITH nulls to pandas as
-    float64 with NaN (or object with None) — and ``astype(int64)`` on
-    NaN silently wraps to INT_MIN garbage instead of raising, so the
-    vectorized kernels must screen NaN/None explicitly to reproduce
-    the JVM folds' NULL semantics (r06)."""
-    if v is None:
+def _vec_rows(vs, dim: int):
+    """The first ``dim`` elements of every row of a ``list<long>`` Arrow
+    batch, gathered from its one flat int64 value buffer into an
+    (n, dim) matrix, and the row lengths; None when some row is NULL,
+    holds a NULL element or is shorter than ``dim`` (the kernels then
+    take their per-row poison path)."""
+    flat = vs.flatten()
+    if vs.null_count or flat.null_count:
         return None
-    a = np.asarray(v)
-    if a.ndim != 1:
+    offs = vs.offsets.to_numpy()
+    lens = np.diff(offs)
+    if (lens < dim).any():
         return None
-    if a.dtype == object:
-        if any(x is None for x in a):
-            return None
-        try:
-            return a.astype(np.int64)
-        except (TypeError, ValueError):
-            return None
-    if np.issubdtype(a.dtype, np.floating):
-        if np.isnan(a).any():
-            return None
-        return a.astype(np.int64)
-    if np.issubdtype(a.dtype, np.integer):
-        return a.astype(np.int64)
-    return None
+    vals = flat.to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
+    return vals[(offs[:-1] - offs[0])[:, None] + np.arange(dim)], lens
+
+
+def _list_array(m: np.ndarray):
+    """An (n, k) numpy matrix → Arrow ``list`` array of its n rows."""
+    import pyarrow as pa
+
+    offsets = np.arange(0, m.size + 1, m.shape[1], dtype=np.int32)
+    return pa.ListArray.from_arrays(pa.array(offsets), pa.array(m.ravel()))
 
 
 def _plane_sign_weights(plane: int, dim: int) -> list[int]:
@@ -208,25 +204,24 @@ def _lsh_buckets_udf(dim: int, n_planes: int, n_tables: int):
     )
     pow_bits = (1 << (n_planes - 1 - np.arange(n_planes))).astype(np.int64)
 
-    def _row(a):
-        if a is None or len(a) < dim:
+    def _row(v):
+        if v is None or None in v or len(v) < dim:
             return [0] * n_tables  # NULL fold → all-0 bits
+        a = np.array(v, np.int64)
         s = W @ a[:dim]
         if len(a) > dim:
             s = s - int(a[dim:].sum())
         bits = (s > 0).astype(np.int64).reshape(n_tables, n_planes)
-        return [int(b) for b in bits @ pow_bits]
+        return bits @ pow_bits
 
-    @F.pandas_udf("array<long>")
-    def _buckets(qs: pd.Series) -> pd.Series:
-        arrs = [_as_int64_vec(v) for v in qs]
-        if all(a is not None and len(a) == dim for a in arrs):
-            Q = np.stack(arrs) if arrs else np.empty((0, dim), np.int64)
-            S = Q @ W.T
-            bits = (S > 0).astype(np.int64)
-            B = bits.reshape(len(Q), n_tables, n_planes) @ pow_bits
-            return pd.Series(list(B))
-        return pd.Series([_row(a) for a in arrs])
+    @F.arrow_udf("array<long>")
+    def _buckets(qs):
+        rows = _vec_rows(qs, dim)
+        if rows is None or (rows[1] != dim).any():
+            return _list_array(np.array([_row(v) for v in qs.to_pylist()], np.int64)
+                               .reshape(len(qs), n_tables))
+        bits = (rows[0] @ W.T > 0).astype(np.int64)
+        return _list_array(bits.reshape(len(qs), n_tables, n_planes) @ pow_bits)
 
     return _buckets
 
@@ -489,26 +484,24 @@ def ivf_assign(
         uniq[0] if len(uniq) == 1 else (None, (None, None))
     )
 
-    def _row(a):
-        if a is None:
+    def _row(v):
+        if v is None or None in v:
             return min_lid  # every dot NULL → all-NULL tie-break
-        grp = groups.get(len(a))
+        grp = groups.get(len(v))
         if grp is None:
             return min_lid
         lids, M = grp
-        d = M @ a
+        d = M @ np.array(v, np.int64)
         return int(lids[int(np.argmax(d))])  # lids ascending → first max
 
-    @F.pandas_udf(list_type)
-    def _assign(vs: pd.Series) -> pd.Series:
-        arrs = [_as_int64_vec(v) for v in vs]
-        if fast_dim is not None and all(
-            a is not None and len(a) == fast_dim for a in arrs
-        ):
-            X = np.stack(arrs) if arrs else np.empty((0, fast_dim), np.int64)
-            D = X @ fast_m.T
-            return pd.Series(fast_lids[np.argmax(D, axis=1)])
-        return pd.Series([_row(a) for a in arrs], dtype=np.int64)
+    @F.arrow_udf(list_type)
+    def _assign(vs):
+        import pyarrow as pa
+
+        rows = None if fast_dim is None else _vec_rows(vs, fast_dim)
+        if rows is None or (rows[1] != fast_dim).any():
+            return pa.array([_row(v) for v in vs.to_pylist()], pa.int64())
+        return pa.array(fast_lids[np.argmax(rows[0] @ fast_m.T, axis=1)])
 
     return c.select(
         F.col("_cid").alias(cid), _assign(F.col("_cv")).alias("list_id"), "_cv"
@@ -883,35 +876,29 @@ def _pq_codes_udf(codewords: list[list[int]], m: int):
     def _row(v):
         # per-subspace: an incomplete/NULL-bearing slice had NULL dists
         # for every codeword → the old array_min picked code 0
+        codes = [0] * m
         if v is None:
-            return [0] * m
-        vals = list(v)
-        codes = []
+            return codes
         for j in range(m):
-            sl = vals[j * d:(j + 1) * d]
-            a = None
-            if len(sl) == d:
-                a = _as_int64_vec(sl)
-            if a is None:
-                codes.append(0)
-                continue
-            dist = ((a[None, :] - cb[:, j * d:(j + 1) * d]) ** 2).sum(axis=1)
-            codes.append(int(np.argmin(dist)))
+            sl = v[j * d:(j + 1) * d]
+            if len(sl) == d and None not in sl:
+                dist = ((np.array(sl, np.int64)[None, :] - cb[:, j * d:(j + 1) * d]) ** 2).sum(axis=1)
+                codes[j] = int(np.argmin(dist))
         return codes
 
-    @F.pandas_udf("array<int>")
-    def _codes(vs: pd.Series) -> pd.Series:
-        arrs = [_as_int64_vec(v) for v in vs]
-        if all(a is not None and len(a) >= dim for a in arrs):
-            X = np.stack([a[:dim] for a in arrs]) if arrs else np.empty(
-                (0, dim), np.int64)
-            codes = np.empty((len(X), m), dtype=np.int32)
-            for j in range(m):
-                sl = slice(j * d, (j + 1) * d)
-                D = ((X[:, None, sl] - cb[None, :, sl]) ** 2).sum(axis=2)
-                codes[:, j] = np.argmin(D, axis=1)
-            return pd.Series(list(codes))
-        return pd.Series([_row(v) for v in vs])
+    @F.arrow_udf("array<int>")
+    def _codes(vs):
+        rows = _vec_rows(vs, dim)
+        if rows is None:
+            return _list_array(np.array([_row(v) for v in vs.to_pylist()], np.int32)
+                               .reshape(len(vs), m))
+        X = rows[0]
+        codes = np.empty((len(X), m), dtype=np.int32)
+        for j in range(m):
+            sl = slice(j * d, (j + 1) * d)
+            D = ((X[:, None, sl] - cb[None, :, sl]) ** 2).sum(axis=2)
+            codes[:, j] = np.argmin(D, axis=1)
+        return _list_array(codes)
 
     return _codes
 

@@ -56,7 +56,7 @@ def pip_join(
 
     Plan shape: points get their level-z cell (codegen arithmetic) →
     equi-join against the broadcast (cell → candidate polygon) map →
-    exact vectorized ray-cast refine in an Arrow-batched pandas UDF
+    exact vectorized ray-cast refine in a scalar Arrow UDF
     (the generalization of the reference's per-pixel point-in-rect,
     blender.cpp:590-600). Polygon vertex data rides inside the UDF
     closure — broadcast once per executor, not per row.
@@ -81,16 +81,18 @@ def pip_join(
     pts = points.withColumn("cell", qcell.cell_of_col(z, "px", "py"))
     joined = pts.join(F.broadcast(cand), "cell", "inner")
 
-    @F.pandas_udf("boolean")
-    def _inside(pxs: pd.Series, pys: pd.Series, pids: pd.Series) -> pd.Series:
+    @F.arrow_udf("boolean")
+    def _inside(pxs, pys, pids):
+        import pyarrow as pa
+
         out = np.zeros(len(pxs), bool)
-        x = pxs.to_numpy(np.float64)
-        y = pys.to_numpy(np.float64)
-        ids = pids.to_numpy()
+        x = pxs.to_numpy(zero_copy_only=False).astype(np.float64)
+        y = pys.to_numpy(zero_copy_only=False).astype(np.float64)
+        ids = pids.to_numpy(zero_copy_only=False)
         for pid in np.unique(ids):
             m = ids == pid
             out[m] = geometry.points_in_polygon(x[m], y[m], rings[int(pid)])
-        return pd.Series(out)
+        return pa.array(out)
 
     return joined.filter(_inside(F.col("px"), F.col("py"), F.col("poly_id")))
 

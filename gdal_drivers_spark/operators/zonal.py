@@ -27,12 +27,12 @@ stats operator.
 
 from __future__ import annotations
 
-import pandas as pd
-
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..core import qcell
+from ..core import codecs, qcell
+from ._groups import row_udf, run_batches
 
 _STAT_SCHEMA = "n_px long, px_sum long, px_min long, px_max long, px_ok boolean"
 
@@ -48,33 +48,19 @@ def tile_stats(tiles: DataFrame, nodata: int | None = None) -> DataFrame:
     payload among 10^12 rows must mark ITS row (``px_ok=false``,
     neutral stats), never kill the stage."""
 
-    @F.pandas_udf(f"struct<{_STAT_SCHEMA}>")
-    def _stats(col: pd.Series) -> pd.DataFrame:
-        import numpy as np
+    def _stats(b):
+        try:
+            px = codecs.decode(bytes(b)).ravel()
+        except Exception:
+            return 0, 0, 255, 0, False
+        if nodata is not None:
+            px = px[px != nodata]
+        if not px.size:
+            return 0, 0, 255, 0, True
+        return int(px.size), int(px.sum(dtype=np.int64)), int(px.min()), int(px.max()), True
 
-        from gdal_drivers_spark.core import codecs
-
-        rows = []
-        for b in col:
-            try:
-                px = codecs.decode(bytes(b)).ravel()
-            except Exception:
-                rows.append((0, 0, 255, 0, False))
-                continue
-            if nodata is not None:
-                px = px[px != nodata]
-            if px.size:
-                rows.append(
-                    (int(px.size), int(px.sum(dtype=np.int64)),
-                     int(px.min()), int(px.max()), True)
-                )
-            else:
-                rows.append((0, 0, 255, 0, True))
-        return pd.DataFrame(
-            rows, columns=["n_px", "px_sum", "px_min", "px_max", "px_ok"]
-        )
-
-    return tiles.withColumn("_s", _stats(F.col("tile"))).select(
+    stats = row_udf(_stats, f"struct<{_STAT_SCHEMA}>")
+    return tiles.withColumn("_s", stats(F.col("tile"))).select(
         *[c for c in tiles.columns if c != "tile"], "_s.*"
     )
 
@@ -128,28 +114,20 @@ def tile_class_counts(tiles: DataFrame, nodata: int | None = None) -> DataFrame:
     row (it carries no classes) but keeps ``px_ok=true`` — "sparse
     absent" and "present but corrupt" stay distinguishable."""
 
-    @F.pandas_udf("array<struct<value int, n_px long>>")
-    def _counts(col: pd.Series) -> pd.Series:
-        import numpy as np
+    def _counts(b):
+        try:
+            px = codecs.decode(bytes(b)).ravel()
+        except Exception:
+            return None
+        if nodata is not None:
+            px = px[px != nodata]
+        vals, cnts = np.unique(px, return_counts=True)
+        return list(zip(vals.tolist(), cnts.tolist()))
 
-        from gdal_drivers_spark.core import codecs
-
-        out = []
-        for b in col:
-            try:
-                px = codecs.decode(bytes(b)).ravel()
-            except Exception:
-                out.append(None)
-                continue
-            if nodata is not None:
-                px = px[px != nodata]
-            vals, cnts = np.unique(px, return_counts=True)
-            out.append([(int(v), int(n)) for v, n in zip(vals, cnts)])
-        return pd.Series(out)
-
+    counts = row_udf(_counts, "array<struct<value int, n_px long>>")
     other = [c for c in tiles.columns if c != "tile"]
     return (
-        tiles.withColumn("_h", _counts(F.col("tile")))
+        tiles.withColumn("_h", counts(F.col("tile")))
         .withColumn("px_ok", F.col("_h").isNotNull())
         # explode_outer keeps corrupt AND empty tiles as a NULL-value row
         .select(*other, "px_ok", F.explode_outer("_h").alias("_e"))
@@ -199,33 +177,21 @@ def raster_stats(tiles: DataFrame, nodata: int | None = None) -> DataFrame:
     Plan: one Arrow hop to per-tile moments, one map-side-combined
     global aggregate — pixels never shuffle."""
 
-    @F.pandas_udf("struct<n_px long, px_sum long, px_sq long, px_min long, px_max long, px_ok boolean>")
-    def _mom(col: pd.Series) -> pd.DataFrame:
-        import numpy as np
+    def _mom(b):
+        try:
+            px = codecs.decode(bytes(b)).ravel()
+        except Exception:
+            return 0, 0, 0, 255, 0, False
+        if nodata is not None:
+            px = px[px != nodata]
+        if not px.size:
+            return 0, 0, 0, 255, 0, True
+        x = px.astype(np.int64)
+        return int(px.size), int(x.sum()), int((x * x).sum()), int(px.min()), int(px.max()), True
 
-        from gdal_drivers_spark.core import codecs
-
-        rows = []
-        for b in col:
-            try:
-                px = codecs.decode(bytes(b)).ravel()
-            except Exception:
-                rows.append((0, 0, 0, 255, 0, False))
-                continue
-            if nodata is not None:
-                px = px[px != nodata]
-            if px.size:
-                x = px.astype(np.int64)
-                rows.append((int(px.size), int(x.sum()), int((x * x).sum()),
-                             int(px.min()), int(px.max()), True))
-            else:
-                rows.append((0, 0, 0, 255, 0, True))
-        return pd.DataFrame(
-            rows,
-            columns=["n_px", "px_sum", "px_sq", "px_min", "px_max", "px_ok"],
-        )
-
-    m = tiles.withColumn("_m", _mom(F.col("tile"))).select("_m.*")
+    mom = row_udf(
+        _mom, "struct<n_px long, px_sum long, px_sq long, px_min long, px_max long, px_ok boolean>")
+    m = tiles.withColumn("_m", mom(F.col("tile"))).select("_m.*")
     no_px = F.col("n_px") == 0
     mean = F.col("px_sum") / F.col("n_px")
     return (
@@ -249,7 +215,7 @@ def raster_stats(tiles: DataFrame, nodata: int | None = None) -> DataFrame:
     )
 
 
-def raster_histogram(tiles: DataFrame, nodata: int | None = None) -> DataFrame:
+def raster_histogram(tiles: DataFrame) -> DataFrame:
     """gdalinfo -hist: one row per pixel value with its global count
     (GDAL's exact 256-bucket histogram for Byte rasters). Pixels
     reduce to ≤256 (value, n) rows per tile in one Arrow hop
@@ -258,7 +224,7 @@ def raster_histogram(tiles: DataFrame, nodata: int | None = None) -> DataFrame:
     (value NULL, n_bad_tiles) row — poison counted, never fatal;
     values never seen simply have no row (GDAL prints 0 buckets; the
     relational form is absence)."""
-    c = tile_class_counts(tiles.select("tile"), nodata=nodata)
+    c = tile_class_counts(tiles.select("tile"))
     c = c.filter(F.col("value").isNotNull() | ~F.col("px_ok"))
     return c.groupBy("value").agg(
         F.when(F.col("value").isNull(), F.count("*"))
@@ -267,11 +233,7 @@ def raster_histogram(tiles: DataFrame, nodata: int | None = None) -> DataFrame:
     )
 
 
-def zonal_mode(
-    tiles: DataFrame,
-    zones: DataFrame,
-    nodata: int | None = None,
-) -> DataFrame:
+def zonal_mode(tiles: DataFrame, zones: DataFrame) -> DataFrame:
     """Majority class per zone — ties → LOWEST value, the same rule as
     the warp/pyramid mode kernels. The score is a struct (n_px, −value)
     under Spark's lexicographic struct ordering, so one ``max_by``
@@ -280,7 +242,7 @@ def zonal_mode(
     count·256 encoding). Corrupt tiles are excluded from the vote
     (they carry no class); count them via zonal_histogram's NULL row
     if needed."""
-    hist = zonal_histogram(tiles, zones, nodata=nodata).filter(F.col("value").isNotNull())
+    hist = zonal_histogram(tiles, zones).filter(F.col("value").isNotNull())
     score = F.struct(F.col("n_px"), (-F.col("value")).alias("neg_v"))
     return hist.groupBy("zone").agg(
         F.max_by("value", score).alias("mode_value"),
@@ -306,32 +268,21 @@ def to_xyz(
     This is a fan-out export (t² rows per tile): downstream writes
     should go straight to a partitioned sink; there is deliberately no
     collect-shaped form."""
-    import numpy as np
-
     t = int(tile_px)
     sk = skip_value
 
-    def _run(batches):
-        for pdf in batches:
-            out = []
-            for i in range(len(pdf)):
-                kc = int(pdf["cell"].iloc[i])
-                raw = pdf[tile_col].iloc[i]
-                buf = b"" if raw is None else bytes(raw)
-                if len(buf) != t * t:
-                    out.append(pd.DataFrame(
-                        {"gx": [-1], "gy": [-1], "v": [-1]}))
-                    continue
-                _, tx, ty = qcell.unpack_int(kc)
-                v = np.frombuffer(buf, np.uint8).astype(np.int64)
-                gx = (np.arange(t)[None, :] + tx * t).repeat(t, 0).ravel()
-                gy = (np.arange(t)[:, None] + ty * t).repeat(t, 1).ravel()
-                if sk is not None:
-                    m = v != sk
-                    gx, gy, v = gx[m], gy[m], v[m]
-                out.append(pd.DataFrame({"gx": gx, "gy": gy, "v": v}))
-            yield pd.concat(out) if out else pd.DataFrame(
-                {"gx": [], "gy": [], "v": []})
+    def _kernel(g):
+        for kc, raw in zip(g["cell"], g[tile_col]):
+            if raw is None or len(raw) != t * t:
+                yield -1, -1, -1
+                continue
+            _, tx, ty = qcell.unpack_int(kc)
+            v = np.frombuffer(raw, np.uint8).astype(np.int64)
+            gx = (np.arange(t)[None, :] + tx * t).repeat(t, 0).ravel()
+            gy = (np.arange(t)[:, None] + ty * t).repeat(t, 1).ravel()
+            if sk is not None:
+                m = v != sk
+                gx, gy, v = gx[m], gy[m], v[m]
+            yield from zip(gx.tolist(), gy.tolist(), v.tolist())
 
-    return tiles.select("cell", tile_col).mapInPandas(
-        _run, "gx long, gy long, v long")
+    return run_batches(tiles, ["cell", tile_col], _kernel, "gx long, gy long, v long")

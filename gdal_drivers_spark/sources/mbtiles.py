@@ -26,9 +26,10 @@ from __future__ import annotations
 
 import sqlite3
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..operators._groups import row_udf, run_batches
 
 TILES_SCHEMA = (
     "archive string, zoom int, x long, tms_y long, y long, tile_data binary"
@@ -55,106 +56,83 @@ def read_mbtiles(spark: SparkSession, paths: list[str] | DataFrame) -> DataFrame
             [(p,) for p in paths], "archive string"
         )
 
-    def _zooms(batches):
-        for pdf in batches:
-            rows = []
-            for p in pdf["archive"]:
-                # poison-archive guard: a corrupt/missing/foreign SQLite
-                # file yields zero work units for that archive; the scan
-                # stage survives (same philosophy as decode_stats's
-                # poison rows)
-                try:
-                    con = _connect_ro(str(p))
-                except sqlite3.Error:
-                    continue
-                try:
-                    for (z,) in con.execute(
-                        "SELECT DISTINCT zoom_level FROM tiles"
-                    ):
-                        rows.append((str(p), int(z)))
-                except sqlite3.Error:
-                    pass
-                finally:
-                    con.close()
-            yield pd.DataFrame(rows, columns=["archive", "zoom"])
+    def _zooms(g):
+        for p in map(str, g["archive"]):
+            # poison-archive guard: a corrupt/missing/foreign SQLite
+            # file yields zero work units for that archive; the scan
+            # stage survives (same philosophy as decode_stats's
+            # poison rows)
+            try:
+                con = _connect_ro(p)
+            except sqlite3.Error:
+                continue
+            try:
+                for (z,) in con.execute("SELECT DISTINCT zoom_level FROM tiles"):
+                    yield p, int(z)
+            except sqlite3.Error:
+                pass
+            finally:
+                con.close()
 
-    units = pdf_paths.mapInPandas(_zooms, "archive string, zoom int")
+    units = run_batches(pdf_paths, ["archive"], _zooms, "archive string, zoom int")
     # fan the (archive, zoom) units across the cluster
     units = units.repartition("archive", "zoom")
 
-    def _scan(batches):
-        for pdf in batches:
-            for r in pdf.itertuples():
-                # an archive that turned unreadable between stages
-                # poisons only its own rows
-                try:
-                    con = _connect_ro(str(r.archive))
-                except sqlite3.Error:
-                    continue
-                try:
-                    cur = con.execute(
-                        "SELECT tile_column, tile_row, tile_data FROM tiles "
-                        "WHERE zoom_level = ?",
-                        (int(r.zoom),),
-                    )
-                    maxrow = (1 << int(r.zoom)) - 1
-                    while True:
-                        try:
-                            chunk = cur.fetchmany(4096)
-                        except sqlite3.Error:
-                            break  # corrupt page mid-scan: keep rows so far
-                        if not chunk:
-                            break
-                        # NULL tile_data / non-integer coords are legal
-                        # SQLite (no constraints on the tiles table) but
-                        # poison rows here — skip them, keep the rest
-                        good = [
-                            c for c in chunk
-                            if c[2] is not None
-                            and isinstance(c[0], int) and isinstance(c[1], int)
-                        ]
-                        if not good:
-                            continue
-                        yield pd.DataFrame(
-                            {
-                                "archive": str(r.archive),
-                                "zoom": int(r.zoom),
-                                "x": [int(c[0]) for c in good],
-                                "tms_y": [int(c[1]) for c in good],
-                                "y": [maxrow - int(c[1]) for c in good],
-                                "tile_data": [bytes(c[2]) for c in good],
-                            }
-                        )
-                except sqlite3.Error:
-                    pass  # missing tiles table etc.: zero rows, no crash
-                finally:
-                    con.close()
+    def _scan(g):
+        for archive, zoom in zip(map(str, g["archive"]), g["zoom"]):
+            # an archive that turned unreadable between stages
+            # poisons only its own rows
+            try:
+                con = _connect_ro(archive)
+            except sqlite3.Error:
+                continue
+            try:
+                cur = con.execute(
+                    "SELECT tile_column, tile_row, tile_data FROM tiles "
+                    "WHERE zoom_level = ?",
+                    (zoom,),
+                )
+                maxrow = (1 << zoom) - 1
+                while True:
+                    try:
+                        chunk = cur.fetchmany(4096)
+                    except sqlite3.Error:
+                        break  # corrupt page mid-scan: keep rows so far
+                    if not chunk:
+                        break
+                    # NULL tile_data / non-integer coords are legal
+                    # SQLite (no constraints on the tiles table) but
+                    # poison rows here — skip them, keep the rest
+                    for x, tms_y, data in chunk:
+                        if data is not None and isinstance(x, int) and isinstance(tms_y, int):
+                            yield archive, zoom, x, tms_y, maxrow - tms_y, bytes(data)
+            except sqlite3.Error:
+                pass  # missing tiles table etc.: zero rows, no crash
+            finally:
+                con.close()
 
-    return units.mapInPandas(_scan, TILES_SCHEMA)
+    return run_batches(units, ["archive", "zoom"], _scan, TILES_SCHEMA)
 
 
 def read_metadata(spark: SparkSession, paths: list[str]) -> DataFrame:
     """The archive ``metadata`` key/value table (format/name/bounds)."""
     pdf_paths = spark.createDataFrame([(p,) for p in paths], "archive string")
 
-    def _meta(batches):
-        for pdf in batches:
-            rows = []
-            for p in pdf["archive"]:
-                try:
-                    con = _connect_ro(str(p))
-                except sqlite3.Error:
-                    continue  # missing/unopenable archive: zero rows
-                try:
-                    for k, v in con.execute("SELECT name, value FROM metadata"):
-                        rows.append((str(p), str(k), str(v)))
-                except sqlite3.Error:
-                    pass  # optional table / not-a-database: zero rows
-                finally:
-                    con.close()
-            yield pd.DataFrame(rows, columns=["archive", "key", "value"])
+    def _meta(g):
+        for p in map(str, g["archive"]):
+            try:
+                con = _connect_ro(p)
+            except sqlite3.Error:
+                continue  # missing/unopenable archive: zero rows
+            try:
+                for k, v in con.execute("SELECT name, value FROM metadata"):
+                    yield p, str(k), str(v)
+            except sqlite3.Error:
+                pass  # optional table / not-a-database: zero rows
+            finally:
+                con.close()
 
-    return pdf_paths.mapInPandas(_meta, "archive string, key string, value string")
+    return run_batches(pdf_paths, ["archive"], _meta, "archive string, key string, value string")
 
 
 def gunzip_col(col: Column) -> Column:
@@ -163,13 +141,9 @@ def gunzip_col(col: Column) -> Column:
     anything else verbatim, and corrupt gzip as ``b""`` — an empty
     payload that decodes to zero rows, never a stage failure."""
 
-    @F.pandas_udf("binary")
-    def _gunzip(blobs: pd.Series) -> pd.Series:
-        from ..core.codecs import gunzip_sniff
+    from ..core.codecs import gunzip_sniff
 
-        return pd.Series([gunzip_sniff(b) or b"" for b in blobs])
-
-    return _gunzip(col)
+    return row_udf(lambda b: gunzip_sniff(b) or b"", "binary")(col)
 
 
 def read_mbtiles_features(spark: SparkSession, paths: list[str] | DataFrame) -> DataFrame:

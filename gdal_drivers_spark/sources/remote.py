@@ -32,8 +32,9 @@ import re
 import time
 from collections.abc import Callable
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from ..operators._groups import run_batches
 
 Transport = Callable[[str, int], tuple[int, bytes]]
 
@@ -86,48 +87,37 @@ def fetch_remote_tiles(
     """
     tp = transport if transport is not None else default_transport
 
-    def _fetch(batches):
-        for pdf in batches:
-            out = []
-            for url in pdf["url"].astype(str):
-                m = URL_RE.match(url)
-                if not m:
-                    continue
-                z, x, y = int(m.group(2)), int(m.group(3)), int(m.group(4))
-                if x > (1 << z) - 1 or y > (1 << z) - 1:
-                    continue  # bounds rule, mbtiles.cpp:146-152
-                status, payload, attempt = -1, b"", 0
-                while attempt < max_attempts:
-                    try:
-                        status, payload = tp(url, attempt)
-                    except Exception:
-                        # a transport that leaks (custom transports may
-                        # not guard like default_transport) still only
-                        # poisons its own row (ADVICE r01)
-                        status, payload = 599, b""
-                    attempt += 1
-                    if status not in _TRANSIENT:
-                        break
-                    if attempt < max_attempts:
-                        time.sleep(backoff_s * (2 ** (attempt - 1)))
-                if status != 200:
-                    payload = b""
-                else:
-                    from ..core.codecs import gunzip_sniff
+    def _fetch(g):
+        from ..core.codecs import gunzip_sniff
 
-                    decoded = gunzip_sniff(payload)
-                    if decoded is None:
-                        # corrupt gzip body: sentinel status, empty
-                        # payload — row survives, stage survives
-                        status, payload = -2, b""
-                    else:
-                        payload = decoded
-                out.append((url, z, x, y, status, attempt, payload))
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "url", "zoom", "x", "y", "status", "n_attempts", "tile_data",
-                ],
-            )
+        for url in map(str, g["url"]):
+            m = URL_RE.match(url)
+            if not m:
+                continue
+            z, x, y = int(m.group(2)), int(m.group(3)), int(m.group(4))
+            if x > (1 << z) - 1 or y > (1 << z) - 1:
+                continue  # bounds rule, mbtiles.cpp:146-152
+            status, payload, attempt = -1, b"", 0
+            while attempt < max_attempts:
+                try:
+                    status, payload = tp(url, attempt)
+                except Exception:
+                    # a transport that leaks (custom transports may
+                    # not guard like default_transport) still only
+                    # poisons its own row (ADVICE r01)
+                    status, payload = 599, b""
+                attempt += 1
+                if status not in _TRANSIENT:
+                    break
+                if attempt < max_attempts:
+                    time.sleep(backoff_s * (2 ** (attempt - 1)))
+            if status != 200:
+                payload = b""
+            else:
+                decoded = gunzip_sniff(payload)
+                # corrupt gzip body: sentinel status, empty payload —
+                # row survives, stage survives
+                status, payload = (-2, b"") if decoded is None else (status, decoded)
+            yield url, z, x, y, status, attempt, payload
 
-    return requests.mapInPandas(_fetch, FETCH_SCHEMA)
+    return run_batches(requests, ["url"], _fetch, FETCH_SCHEMA)

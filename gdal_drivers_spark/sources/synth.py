@@ -4,8 +4,8 @@ The primary table is ``images`` with the exact BASELINE.json input_hint
 shape: (image_id:string, bytes:binary, w:int, h:int, fmt:string,
 caption:string, phash:long). Generation is a pure function of the row
 index, so it is reproducible at any scale and *distributed*: rows are
-produced by ``spark.range(n).mapInPandas(...)`` — each partition
-synthesizes its own slice, nothing funnels through the driver (the way
+produced from ``spark.range(n)`` by one narrow Arrow kernel — each
+partition synthesizes its own slice, nothing funnels through the driver (the way
 a 10^12-row table would actually be materialized on a cluster).
 
 Sidecar fixtures (tile boundaries, quadtree masks, blend sources,
@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..core import codecs, mvtcodec, qcell
+from ..operators._groups import run_batches
 
 WORLD = qcell.UNIT  # unit-square world; squared-up like mask.cpp:285-297
 
@@ -77,27 +78,23 @@ def _caption(i: int) -> str:
     return f"caption {i} {_ADJ[i % len(_ADJ)]} {_NOUN[i % len(_NOUN)]}"
 
 
-def gen_images_pdf(ids: np.ndarray, channels: int = 3) -> pd.DataFrame:
-    """One pandas batch of the images table for the given row indices."""
-    ph = phash_of(ids)
+def _image_rows(ids: np.ndarray, channels: int = 3) -> list:
+    """Rows of the images table (``IMAGES_SCHEMA``) for the given row
+    indices."""
     rows = []
-    for i, p in zip(ids.tolist(), ph.tolist()):
+    for i, p in zip(ids.tolist(), phash_of(ids).tolist()):
         w = _SIZES[(p >> 8) % len(_SIZES)]
         h = _SIZES[(p >> 16) % len(_SIZES)]
         fmt = _FMTS[i % len(_FMTS)]
         img = pattern(w, h, channels, p)
-        rows.append(
-            (
-                f"img{i:012d}",
-                codecs.ENCODERS[fmt](img),
-                w,
-                h,
-                fmt,
-                _caption(i),
-                p,
-            )
-        )
-    return pd.DataFrame(rows, columns=["image_id", "bytes", "w", "h", "fmt", "caption", "phash"])
+        rows.append((f"img{i:012d}", codecs.ENCODERS[fmt](img), w, h, fmt, _caption(i), p))
+    return rows
+
+
+def gen_images_pdf(ids: np.ndarray, channels: int = 3) -> pd.DataFrame:
+    """One pandas batch of the images table for the given row indices."""
+    return pd.DataFrame(_image_rows(ids, channels),
+                        columns=["image_id", "bytes", "w", "h", "fmt", "caption", "phash"])
 
 
 IMAGES_SCHEMA = (
@@ -108,12 +105,8 @@ IMAGES_SCHEMA = (
 def images_df(spark: SparkSession, n: int, partitions: int | None = None) -> DataFrame:
     """Distributed images table: spark.range → per-partition synthesis."""
     parts = partitions or max(8, min(256, n // 2048 or 1))
-
-    def gen(batches):
-        for pdf in batches:
-            yield gen_images_pdf(pdf["id"].to_numpy())
-
-    return spark.range(0, n, 1, parts).mapInPandas(gen, IMAGES_SCHEMA)
+    return run_batches(spark.range(0, n, 1, parts), ["id"],
+                       lambda g: _image_rows(np.array(g["id"], np.int64)), IMAGES_SCHEMA)
 
 
 def region_boundaries(spark: SparkSession, z: int, region_mod: int) -> DataFrame:

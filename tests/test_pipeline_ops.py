@@ -319,27 +319,6 @@ def test_dedup_cache_swap_bounds_persisted_frames(spark):
     assert not dedup._ACTIVE_CACHES
 
 
-def test_frame_sample_udtf_matches_mapinpandas(spark):
-    """The native Python UDTF (lateral table function) must produce the
-    same sampled frames as the mapInPandas form."""
-    from gdal_drivers_spark.operators.multimodal import frame_sample_udtf
-
-    vids = []
-    for v in range(3):
-        frames = [synth.pattern(16, 16, 3, v * 100 + i) for i in range(7)]
-        vids.append((f"vid{v}", encode_video(frames)))
-    df = spark.createDataFrame(pd.DataFrame(vids, columns=["video_id", "bytes"]))
-    base = {
-        (r["video_id"], r["frame_idx"]): codecs.decode(bytes(r["bytes"])).sum()
-        for r in frame_sample(df, every_k=3).collect()
-    }
-    got = {
-        (r["video_id"], r["frame_idx"]): r["px_sum"]
-        for r in frame_sample_udtf(spark, df, every_k=3).collect()
-    }
-    assert got == {k: int(v) for k, v in base.items()}
-
-
 def test_near_dup_default_is_pruned_with_recall(spark):
     """VERDICT r01 #7: near_dup_pairs defaults to the LSH-bucketed plan
     (no cross join in the executed plan); exact=True is the opt-in

@@ -1,10 +1,11 @@
-"""The grouped-kernel runner (operators/_groups.run_grouped) as a tested
-property: every per-tile Python stage goes through it, and its output
-does not depend on how the input is partitioned or how Arrow cuts the
-groups into batches. Also the package's source-shape guards (no Spark):
-one cell codec, no join-shape flags, no unreferenced public function,
-no str/bool setting that no caller sets, and ``COVERAGE.md`` names only
-code that runs."""
+"""The kernel runners (operators/_groups: ``run_grouped`` per group,
+``run_batches``/``row_udf``/``arrow_udf`` per row) as a tested property:
+every Python stage goes through them, and their output does not depend
+on how the input is partitioned or how Arrow cuts it into batches.
+Also the package's source-shape guards (no Spark): one cell codec, no
+join-shape flags, no unreferenced public function, no str/bool/None
+setting that no caller sets, and ``COVERAGE.md`` names only code that
+runs."""
 
 import ast
 import json
@@ -41,6 +42,14 @@ def test_no_pandas_grouped_map_left():
     the package (``applyInPandasWithState`` is the streaming state API,
     a different operator)."""
     assert _package_hits(r"applyInPandas\(") == []
+
+
+def test_no_pandas_row_kernels_left():
+    """Per-row kernels cross as Arrow: no ``mapInPandas(`` or
+    ``pandas_udf(`` anywhere in the package (``run_batches``,
+    ``row_udf`` or ``F.arrow_udf`` instead), so no batch can widen a
+    nullable int64 to float64."""
+    assert _package_hits(r"mapInPandas\(|pandas_udf\(") == []
 
 
 def test_cell_layout_lives_in_qcell():
@@ -135,11 +144,11 @@ def test_every_public_function_is_referenced():
 
 
 def test_every_str_or_bool_option_is_set_by_a_caller():
-    """No setting nothing sets: every str- or bool-defaulted parameter of
-    a public package function is passed, by keyword or by position, at
-    some call of that function name, or is a public output-schema name
-    in ``SCHEMA_NAMES``. A ``*``/``**`` splat sets nothing it can name.
-    ``None``-defaulted options are outside this check."""
+    """No setting nothing sets: every str-, bool- or None-defaulted
+    parameter of a public package function is passed, by keyword or by
+    position, at some call of that function name, or is a public
+    output-schema name in ``SCHEMA_NAMES``. A ``*``/``**`` splat sets
+    nothing it can name."""
     trees = _caller_trees()
     calls = {}
     for tree in trees.values():
@@ -154,7 +163,8 @@ def test_every_str_or_bool_option_is_set_by_a_caller():
         params = [(i, p.arg, d) for i, (p, d) in enumerate(zip(pos, defaults))]
         params += [(None, p.arg, d) for p, d in zip(a.kwonlyargs, a.kw_defaults)]
         for i, name, default in params:
-            if not (isinstance(default, ast.Constant) and isinstance(default.value, (str, bool))):
+            if not (isinstance(default, ast.Constant)
+                    and (default.value is None or isinstance(default.value, (str, bool)))):
                 continue
             if f"{mod}.{node.name}({name})" in SCHEMA_NAMES:
                 continue
@@ -342,11 +352,32 @@ def _mvt(spark):
     return df, lambda d: encode_layers(d, extent=256)
 
 
+def _cutline(spark):
+    from gdal_drivers_spark.operators.cutline import cutline_crop
+
+    # bbox [2, 14]²: the tx = 2 column is disjoint (JVM path), the rest
+    # run the per-row kernel (whole-tile shortcuts and boundary tiles)
+    ring = [(2, 3), (13, 2), (14, 12), (3, 13)]
+    return (_tiles(spark).withColumnRenamed("tile", "raster"),
+            lambda d: cutline_crop(d, ring, T))
+
+
+def _knn(spark):
+    from gdal_drivers_spark.operators.similarity import knn_graph
+
+    rng = np.random.default_rng(4)
+    vecs = rng.uniform(-1, 1, (24, 4)).round(3)
+    df = spark.createDataFrame([(i, v.tolist()) for i, v in enumerate(vecs)],
+                               "cid long, cvec array<double>")
+    return df, lambda d: knn_graph(d, dim=4, k=2, n_planes=3, n_tables=2)
+
+
 FAMILIES = {
     "dem_halo": _dem, "proximity": _proximity, "blend": _blend,
     "pyramid_rollup": _pyramid, "pyramid_build": _build, "pyramid_update": _update,
     "warp": _warp, "gridding": _gridding,
     "rasterize_burn": _burn, "mvt_encode": _mvt,
+    "cutline_crop": _cutline, "knn_graph": _knn,
 }
 
 
