@@ -21,10 +21,11 @@ Spark DataFrame operators:
 - training-data pipeline ops (dedup / similarity / text / multimodal)
   over the documents + embeddings tables.
 
-Pixel work is numpy over Arrow batches: per-row maps are pandas UDFs,
-and every per-tile kernel runs once per group through one grouped
-Arrow runner (``operators._groups.run_grouped``); everything relational
-stays JVM-side for Catalyst/Tungsten.
+Pixel work is numpy over Arrow batches, never pandas: per-row maps run
+through ``operators._groups.run_batches`` (or its Column form
+``row_udf``), and every per-tile kernel runs once per group through
+``operators._groups.run_grouped``; everything relational stays
+JVM-side for Catalyst/Tungsten.
 """
 
 from __future__ import annotations

@@ -3,7 +3,7 @@
 
 The reference iterates features one at a time (``GetNextFeature``,
 ``mvt.cpp:524-618``); here a whole encoded layer decodes in one
-``mapInPandas`` batch and ``explode``s to feature rows:
+Arrow batch (``_groups.run_batches``) and explodes to feature rows:
 
 - UNKNOWN-type features skipped (``mvt.cpp:526-533``, P5);
 - dictionary tag join: tags = (key-idx, value-idx) pairs; odd trailing

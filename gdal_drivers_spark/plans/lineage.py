@@ -8,7 +8,7 @@ its structured error/warning channel (``mvt.cpp:262-287``
 checkNonzero/checkZero/checkSingle; consumed-input warning
 ``mvt.cpp:207-213``) — here it becomes data, not stderr.
 
-Implementation: ``mapInPandas`` pass-through that also yields side rows
+Implementation: a per-row Arrow pass-through that also yields side rows
 is not possible (one schema per stream), so lineage is a *parallel*
 aggregation over the same partitioning: ``spark_partition_id()`` +
 groupBy — zero extra shuffle when the input is already partitioned, one

@@ -5,7 +5,7 @@ recognition ``mvt.cpp:654-672``) re-expressed as a distributed batched
 fetcher.
 
 Spark-first shape: requests are rows; the fetch runs inside
-``mapInPandas`` so one Python worker handles a whole Arrow batch with
+``_groups.run_batches`` so one Python worker handles a whole Arrow batch with
 a single transport instance (connection reuse), and the work
 parallelizes across partitions — the 10^12-scale ingestion pattern
 where each executor drains its own shard of the URL list. Retry with
