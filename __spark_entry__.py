@@ -20,6 +20,8 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from gdal_drivers_spark.operators._groups import row_udf, run_batches, run_grouped  # noqa: E402
+
 Z_ASSIGN = 6  # 64×64 grid for assignment queries
 _CELL0 = 6 * (1 << 52)  # packed level prefix
 
@@ -28,6 +30,34 @@ def _ship(spark: SparkSession) -> SparkSession:
     from gdal_drivers_spark import _ship as ship
 
     return ship(spark)
+
+
+def _pixel_checksum(col, decoded: bool = False):
+    """The house per-raster hash-gate reduction as a
+    ``struct<v_sum, vpos_sum>`` Column: the value sum and the 1-based
+    position-weighted value sum of a binary column's raw u8 bytes, or,
+    ``decoded``, of its codec-decoded pixels."""
+    import numpy as np
+
+    from gdal_drivers_spark.core import codecs
+
+    def _ck(b):
+        flat = codecs.decode(b).ravel() if decoded else np.frombuffer(b, np.uint8)
+        flat = flat.astype(np.int64)
+        return int(flat.sum()), int((flat * (np.arange(flat.size) + 1)).sum())
+
+    return row_udf(_ck, "struct<v_sum:long,vpos_sum:long>")(col)
+
+
+def _tile_checksums(out: DataFrame, raster: str, *cols: str) -> DataFrame:
+    """(tcx, tcy, *cols, v_sum, vpos_sum) per row of a cell-keyed frame
+    whose ``raster`` column holds raw u8 pixels."""
+    return out.select(
+        (F.shiftright(F.col("cell"), 26) % F.lit(1 << 26)).alias("tcx"),
+        (F.col("cell") % F.lit(1 << 26)).alias("tcy"),
+        *cols,
+        _pixel_checksum(F.col(raster)).alias("_c"),
+    ).select("tcx", "tcy", *cols, "_c.v_sum", "_c.vpos_sum")
 
 
 def _orders_footprints(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -221,7 +251,6 @@ def q_warp_reproject(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import numpy as np
 
-    from gdal_drivers_spark.core import codecs
     from gdal_drivers_spark.core.srs import R_MERC
     from gdal_drivers_spark.operators.warp import warp_tiles
 
@@ -238,34 +267,11 @@ def q_warp_reproject(spark: SparkSession, sf_dir: str) -> DataFrame:
     y1, y0 = merc_y(40.5), merc_y(47.5)
     dst_gt = np.array([x0, (x1 - x0) / 128.0, 0.0, y0, 0.0, (y1 - y0) / 128.0])
 
-    # source tiles built on executors from the deterministic pattern
-    grid = spark.range(0, 16, 1, min(16, spark.sparkContext.defaultParallelism)).select(
-        (F.col("id") % 4).alias("scx"), (F.col("id") / 4).cast("long").alias("scy")
-    )
-
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples():
-                gx = np.arange(TS) + int(r.scx) * TS
-                gy = np.arange(TS) + int(r.scy) * TS
-                img = ((gx[None, :] * 3 + gy[:, None] * 5 + 11) % 256).astype(np.uint8)
-                rows.append((int(r.scx), int(r.scy), codecs.encode_raw(img[:, :, None])))
-            yield pd.DataFrame(rows, columns=["scx", "scy", "tile"])
-
-    src = grid.mapInPandas(gen, "scx long, scy long, tile binary")
     out = warp_tiles(
-        src, src_gt, dst_gt, (128, 128), tile_px=TS, method="nearest",
-        src_srs="EPSG:4326", dst_srs="EPSG:3857",
+        _pattern_src_tiles(spark, ts=TS, ntiles=4), src_gt, dst_gt, (128, 128), tile_px=TS,
+        method="nearest", src_srs="EPSG:4326", dst_srs="EPSG:3857",
     )
-
-    @F.pandas_udf("long")
-    def px_sum(tile: pd.Series) -> pd.Series:
-        return pd.Series(
-            [int(np.frombuffer(bytes(b), np.uint8).sum(dtype=np.int64)) for b in tile]
-        )
-
-    return out.select("ocx", "ocy", px_sum(F.col("tile")).alias("px_sum"), "ts")
+    return out.select("ocx", "ocy", _pixel_checksum(F.col("tile")).v_sum.alias("px_sum"), "ts")
 
 
 def _warp_reproject_oracle_sql() -> str:
@@ -569,92 +575,64 @@ def q_mvt_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
 
     from gdal_drivers_spark.core import mvtcodec
-    from gdal_drivers_spark.operators.mvt import decode_features
+    from gdal_drivers_spark.operators.mvt import LAYERS_SCHEMA, decode_features
 
     supp = spark.read.parquet(f"{sf_dir}/supplier.parquet").select("s_suppkey")
 
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for s in pdf["s_suppkey"].astype("int64"):
-                s = int(s)
-                tx, ty = s % 4, (s * 3) % 4
-                pts = np.array(
-                    [[(s * 17 + 31 * j) % 256, (s * 23 + 41 * j) % 256] for j in range(3)],
-                    np.int64,
-                )
-                a, b = (s * 29) % 200, (s * 37) % 200
-                ring_a = np.array([[a, b], [a + 40, b + 8], [a + 8, b + 48]], np.int64)
-                ring_b = np.array(
-                    [[a + 12, b + 12], [a + 14, b + 20], [a + 20, b + 14]], np.int64
-                )
-                feats = [
-                    {
-                        "id": 2 * s,
-                        "tags": [0, s % 3],
-                        "geom_type": mvtcodec.GEOM_POINT,
-                        "geometry": mvtcodec.encode_geometry(
-                            mvtcodec.GEOM_POINT, [pts]
-                        ).tolist(),
-                    },
-                    {
-                        "id": 2 * s + 1,
-                        # (0,s%3) + (1,3) kept, (7,9) out-of-bounds dropped,
-                        # trailing 0 ignored (mvt.cpp:545-560)
-                        "tags": [0, s % 3, 1, 3, 7, 9, 0],
-                        "geom_type": mvtcodec.GEOM_POLYGON,
-                        "geometry": mvtcodec.encode_geometry(
-                            mvtcodec.GEOM_POLYGON, [ring_a, ring_b]
-                        ).tolist(),
-                    },
-                ]
-                rows.append(
-                    (2, tx, ty, "suppliers", 256, ["kind", "flag"], ["a", "b", "c", "x"], feats)
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["z", "tx", "ty", "layer", "extent", "keys", "values", "features"],
+    def gen(g):
+        for s in g["s_suppkey"]:
+            tx, ty = s % 4, (s * 3) % 4
+            pts = np.array(
+                [[(s * 17 + 31 * j) % 256, (s * 23 + 41 * j) % 256] for j in range(3)],
+                np.int64,
             )
+            a, b = (s * 29) % 200, (s * 37) % 200
+            ring_a = np.array([[a, b], [a + 40, b + 8], [a + 8, b + 48]], np.int64)
+            ring_b = np.array(
+                [[a + 12, b + 12], [a + 14, b + 20], [a + 20, b + 14]], np.int64
+            )
+            feats = [
+                {
+                    "id": 2 * s,
+                    "tags": [0, s % 3],
+                    "geom_type": mvtcodec.GEOM_POINT,
+                    "geometry": mvtcodec.encode_geometry(mvtcodec.GEOM_POINT, [pts]).tolist(),
+                },
+                {
+                    "id": 2 * s + 1,
+                    # (0,s%3) + (1,3) kept, (7,9) out-of-bounds dropped,
+                    # trailing 0 ignored (mvt.cpp:545-560)
+                    "tags": [0, s % 3, 1, 3, 7, 9, 0],
+                    "geom_type": mvtcodec.GEOM_POLYGON,
+                    "geometry": mvtcodec.encode_geometry(
+                        mvtcodec.GEOM_POLYGON, [ring_a, ring_b]
+                    ).tolist(),
+                },
+            ]
+            yield 2, tx, ty, "suppliers", 256, ["kind", "flag"], ["a", "b", "c", "x"], feats
 
-    layers = supp.mapInPandas(
-        gen,
-        "z int, tx long, ty long, layer string, extent int, keys array<string>, "
-        "values array<string>, features array<struct<id:long,tags:array<int>,"
-        "geom_type:int,geometry:array<long>>>",
-    )
-    feats = decode_features(layers)
+    feats = decode_features(run_batches(supp, ["s_suppkey"], gen, LAYERS_SCHEMA))
 
-    @F.pandas_udf("sum_xq long, sum_yq long")
-    def coord_sums(geom_json: pd.Series) -> pd.DataFrame:
-        xs, ys = [], []
-        for g in geom_json:
-            pts = []
+    def coord_sums(g):
+        pts = []
 
-            def rec(n):
-                if n and not isinstance(n[0], list):
-                    pts.append(n)
-                else:
-                    for m in n:
-                        rec(m)
+        def rec(n):
+            if n and not isinstance(n[0], list):
+                pts.append(n)
+            else:
+                for m in n:
+                    rec(m)
 
-            rec(json.loads(g))
-            arr = np.asarray(pts, np.float64)
-            xs.append(int(np.rint(arr[:, 0] * 1024).sum()))
-            ys.append(int(np.rint(arr[:, 1] * 1024).sum()))
-        return pd.DataFrame({"sum_xq": xs, "sum_yq": ys})
+        rec(json.loads(g))
+        arr = np.asarray(pts, np.float64)
+        return int(np.rint(arr[:, 0] * 1024).sum()), int(np.rint(arr[:, 1] * 1024).sum())
 
     return feats.select(
-        "fid",
-        "geom_type",
-        "n_parts",
-        "n_rings",
-        "n_vertices",
-        coord_sums(F.col("geom_json")).alias("cs"),
-        F.col("props")["kind"].alias("kind"),
-        F.col("props")["flag"].alias("flag"),
-    ).select(
         "fid", "geom_type", "n_parts", "n_rings", "n_vertices",
-        F.col("cs.sum_xq").alias("sum_xq"), F.col("cs.sum_yq").alias("sum_yq"),
+        row_udf(coord_sums, "struct<sum_xq:long,sum_yq:long>")(F.col("geom_json")).alias("cs"),
+        F.col("props")["kind"].alias("kind"), F.col("props")["flag"].alias("flag"),
+    ).select(
+        "fid", "geom_type", "n_parts", "n_rings", "n_vertices", "cs.sum_xq", "cs.sum_yq",
         "kind", "flag",
     )
 
@@ -701,18 +679,15 @@ def q_mvt_proto_typed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "s_suppkey", "s_name", (F.col("s_suppkey") % 4).alias("tx")
     )
 
-    def build_tile(key, pdf):
-        tx = int(key[0])
-        pdf = pdf.sort_values("s_suppkey")
+    def build_tile(key, g):
         keys = ["cnt", "flag", "name", "neg", "score", "w"]
         values, feats = [], []
-        for r in pdf.itertuples():
-            k = int(r.s_suppkey)
+        for k, name in sorted(zip(g["s_suppkey"], g["s_name"])):
             base = len(values)
             values += [
                 ("int", 3 * k + 1),
                 ("bool", k % 2 == 1),
-                ("string", str(r.s_name)),
+                ("string", str(name)),
                 ("sint", -(k + 7)),
                 ("double", k / 4.0),
                 ("float", k * 0.5),
@@ -736,11 +711,10 @@ def q_mvt_proto_typed(spark: SparkSession, sf_dir: str) -> DataFrame:
             [{"name": "typed", "extent": 256, "version": 2,
               "keys": keys, "values": values, "features": feats}]
         )
-        return pd.DataFrame({"z": [2], "tx": [tx], "ty": [1], "data": [blob]})
+        return [(2, key[0], 1, blob)]
 
-    tiles = supp.groupBy("tx").applyInPandas(
-        build_tile, "z int, tx long, ty long, data binary"
-    )
+    tiles = run_grouped(supp, ["tx"], ["s_suppkey", "s_name"], build_tile,
+                        "z int, tx long, ty long, data binary")
     feats = decode_features_proto(tiles)
     tp = F.col("props_typed")
     return feats.select(
@@ -820,30 +794,18 @@ def q_warp_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gdal_drivers_spark.core import codecs
     from gdal_drivers_spark.operators.warp import warp_tiles
 
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"]:
-                scx, scy = int(i) % 8, int(i) // 8
-                v = (scx * 13 + scy * 29) % 251
-                img = np.full((32, 32, 1), v, np.uint8)
-                rows.append((scx, scy, codecs.encode_raw(img)))
-            yield pd.DataFrame(rows, columns=["scx", "scy", "tile"])
+    def gen(g):
+        for i in g["id"]:
+            scx, scy = i % 8, i // 8
+            v = (scx * 13 + scy * 29) % 251
+            yield scx, scy, codecs.encode_raw(np.full((32, 32, 1), v, np.uint8))
 
-    src = spark.range(
-        0, 64, 1, min(64, spark.sparkContext.defaultParallelism)
-    ).mapInPandas(gen, "scx long, scy long, tile binary")
+    src = run_batches(spark.range(0, 64, 1, min(64, spark.sparkContext.defaultParallelism)),
+                      ["id"], gen, "scx long, scy long, tile binary")
     src_gt = np.array([0.0, 1 / 256, 0.0, 1.0, 0.0, -1 / 256])
     dst_gt = np.array([0.0, 1 / 128, 0.0, 1.0, 0.0, -1 / 128])
     out = warp_tiles(src, src_gt, dst_gt, dst_shape=(128, 128), tile_px=32, method="nearest")
-
-    @F.pandas_udf("long")
-    def px_sum(tile: pd.Series) -> pd.Series:
-        return pd.Series(
-            [int(np.frombuffer(bytes(b), np.uint8).sum(dtype=np.int64)) for b in tile]
-        )
-
-    return out.select("ocx", "ocy", px_sum(F.col("tile")).alias("px_sum"))
+    return out.select("ocx", "ocy", _pixel_checksum(F.col("tile")).v_sum.alias("px_sum"))
 
 
 _WARP_ORACLE_SQL = """
@@ -858,46 +820,20 @@ _WARP_ORACLE_SQL = """
 
 def _pattern_src_tiles(spark, ts: int = 32, ntiles: int = 4, quant: int = 1):
     """Deterministic source raster for the warp-kernel contract
-    queries: global pixel (gx, gy) = (gx·3 + gy·5 + 11) % 256, tiled
-    ts px, built on executors (same pattern as q_warp_reproject).
+    queries: (scx, scy, tile) rows of ts-px codec-raw tiles whose global
+    pixel (gx, gy) = (gx·3 + gy·5 + 11) % 256 — the
+    ``_grid_pattern_tiles`` grid at level 0, keyed by tile column/row.
     ``quant`` floors values to multiples of quant — quant=64 gives the
     4-class categorical raster the mode kernel votes over."""
-    import numpy as np
-
-    from gdal_drivers_spark.core import codecs
-
-    grid = spark.range(
-        0, ntiles * ntiles, 1,
-        min(ntiles * ntiles, spark.sparkContext.defaultParallelism),
-    ).select(
-        (F.col("id") % ntiles).alias("scx"),
-        (F.col("id") / ntiles).cast("long").alias("scy"),
+    tiles = _grid_pattern_tiles(
+        spark, 0, ntiles, ts, lambda gx, gy: (gx * 3 + gy * 5 + 11) % 256 // quant * quant,
+        encode=True,
     )
-
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples():
-                gx = np.arange(ts) + int(r.scx) * ts
-                gy = np.arange(ts) + int(r.scy) * ts
-                img = ((gx[None, :] * 3 + gy[:, None] * 5 + 11) % 256).astype(np.uint8)
-                img = (img // quant) * quant
-                rows.append((int(r.scx), int(r.scy), codecs.encode_raw(img[:, :, None])))
-            yield pd.DataFrame(rows, columns=["scx", "scy", "tile"])
-
-    return grid.mapInPandas(gen, "scx long, scy long, tile binary")
-
-
-def _px_sum_udf():
-    import numpy as np
-
-    @F.pandas_udf("long")
-    def px_sum(tile: pd.Series) -> pd.Series:
-        return pd.Series(
-            [int(np.frombuffer(bytes(b), np.uint8).sum(dtype=np.int64)) for b in tile]
-        )
-
-    return px_sum
+    return tiles.select(
+        F.shiftright(F.col("cell"), 26).alias("scx"),
+        (F.col("cell") % F.lit(1 << 26)).alias("scy"),
+        "tile",
+    )
 
 
 def q_warp_cubic(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -917,7 +853,7 @@ def q_warp_cubic(spark: SparkSession, sf_dir: str) -> DataFrame:
     src_gt = np.array([0.0, 1 / 128, 0.0, 1.0, 0.0, -1 / 128])
     dst_gt = np.array([0.25, 1 / 256, 0.0, 0.75, 0.0, -1 / 256])
     out = warp_tiles(src, src_gt, dst_gt, (128, 128), tile_px=32, method="cubic")
-    return out.select("ocx", "ocy", _px_sum_udf()(F.col("tile")).alias("px_sum"))
+    return out.select("ocx", "ocy", _pixel_checksum(F.col("tile")).v_sum.alias("px_sum"))
 
 
 _WARP_CUBIC_ORACLE_SQL = """
@@ -976,7 +912,7 @@ def q_warp_cubicspline(spark: SparkSession, sf_dir: str) -> DataFrame:
     dst_gt = np.array([0.25, 1 / 256, 0.0, 0.75, 0.0, -1 / 256])
     out = warp_tiles(src, src_gt, dst_gt, (128, 128), tile_px=32,
                      method="cubicspline")
-    return out.select("ocx", "ocy", _px_sum_udf()(F.col("tile")).alias("px_sum"))
+    return out.select("ocx", "ocy", _pixel_checksum(F.col("tile")).v_sum.alias("px_sum"))
 
 
 _WARP_CUBICSPLINE_ORACLE_SQL = """
@@ -1033,7 +969,7 @@ def q_warp_bilinear(spark: SparkSession, sf_dir: str) -> DataFrame:
     src_gt = np.array([0.0, 1 / 128, 0.0, 1.0, 0.0, -1 / 128])
     dst_gt = np.array([0.25, 1 / 256, 0.0, 0.75, 0.0, -1 / 256])
     out = warp_tiles(src, src_gt, dst_gt, (128, 128), tile_px=32, method="bilinear")
-    return out.select("ocx", "ocy", _px_sum_udf()(F.col("tile")).alias("px_sum"))
+    return out.select("ocx", "ocy", _pixel_checksum(F.col("tile")).v_sum.alias("px_sum"))
 
 
 _WARP_BILINEAR_ORACLE_SQL = """
@@ -1077,7 +1013,7 @@ def q_warp_average(spark: SparkSession, sf_dir: str) -> DataFrame:
     src_gt = np.array([0.0, 1 / 128, 0.0, 1.0, 0.0, -1 / 128])
     dst_gt = np.array([0.0, 1 / 64, 0.0, 1.0, 0.0, -1 / 64])
     out = warp_tiles(src, src_gt, dst_gt, (64, 64), tile_px=32, method="average")
-    return out.select("ocx", "ocy", _px_sum_udf()(F.col("tile")).alias("px_sum"))
+    return out.select("ocx", "ocy", _pixel_checksum(F.col("tile")).v_sum.alias("px_sum"))
 
 
 _WARP_AVERAGE_ORACLE_SQL = """
@@ -1109,12 +1045,11 @@ def q_warp_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _pattern_src_tiles(spark, ts=32, ntiles=4)
     src_gt = np.array([0.0, 1 / 128, 0.0, 1.0, 0.0, -1 / 128])
     dst_gt = np.array([0.0, 1 / 64, 0.0, 1.0, 0.0, -1 / 64])
-    px = _px_sum_udf()
     mn = warp_tiles(src, src_gt, dst_gt, (64, 64), tile_px=32, method="min").select(
-        "ocx", "ocy", px(F.col("tile")).alias("min_sum")
+        "ocx", "ocy", _pixel_checksum(F.col("tile")).v_sum.alias("min_sum")
     )
     mx = warp_tiles(src, src_gt, dst_gt, (64, 64), tile_px=32, method="max").select(
-        "ocx", "ocy", px(F.col("tile")).alias("max_sum")
+        "ocx", "ocy", _pixel_checksum(F.col("tile")).v_sum.alias("max_sum")
     )
     return mn.join(mx, ["ocx", "ocy"])
 
@@ -1153,12 +1088,11 @@ def q_warp_sumrms(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _pattern_src_tiles(spark, ts=32, ntiles=4)
     src_gt = np.array([0.0, 1 / 128, 0.0, 1.0, 0.0, -1 / 128])
     dst_gt = np.array([0.0, 1 / 64, 0.0, 1.0, 0.0, -1 / 64])
-    px = _px_sum_udf()
     sm = warp_tiles(src, src_gt, dst_gt, (64, 64), tile_px=32, method="sum").select(
-        "ocx", "ocy", px(F.col("tile")).alias("sum_sum")
+        "ocx", "ocy", _pixel_checksum(F.col("tile")).v_sum.alias("sum_sum")
     )
     rm = warp_tiles(src, src_gt, dst_gt, (64, 64), tile_px=32, method="rms").select(
-        "ocx", "ocy", px(F.col("tile")).alias("rms_sum")
+        "ocx", "ocy", _pixel_checksum(F.col("tile")).v_sum.alias("rms_sum")
     )
     return sm.join(rm, ["ocx", "ocy"])
 
@@ -1198,46 +1132,24 @@ def q_warp_mask(spark: SparkSession, sf_dir: str) -> DataFrame:
     both break the hash."""
     import numpy as np
 
-    from gdal_drivers_spark.core import codecs
     from gdal_drivers_spark.operators.warp import warp_tiles
 
-    ts, ntiles = 32, 4
-    grid = spark.range(
-        0, ntiles * ntiles, 1,
-        min(ntiles * ntiles, spark.sparkContext.defaultParallelism),
-    ).select(
-        (F.col("id") % ntiles).alias("scx"),
-        (F.col("id") / ntiles).cast("long").alias("scy"),
+    def mask(scx, scy):
+        gx = np.arange(32) + scx * 32
+        gy = np.arange(32) + scy * 32
+        return ((((gx[None, :] * 7 + gy[:, None] * 11) % 13) >= 3).astype(np.uint8) * 255).tobytes()
+
+    src = _pattern_src_tiles(spark, ts=32, ntiles=4).withColumn(
+        "mask", row_udf(mask, "binary")(F.col("scx"), F.col("scy"))
     )
-
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples():
-                gx = np.arange(ts) + int(r.scx) * ts
-                gy = np.arange(ts) + int(r.scy) * ts
-                img = ((gx[None, :] * 3 + gy[:, None] * 5 + 11) % 256).astype(np.uint8)
-                m = (((gx[None, :] * 7 + gy[:, None] * 11) % 13) >= 3).astype(np.uint8) * 255
-                rows.append((int(r.scx), int(r.scy),
-                             codecs.encode_raw(img[:, :, None]),
-                             np.ascontiguousarray(m).tobytes()))
-            yield pd.DataFrame(rows, columns=["scx", "scy", "tile", "mask"])
-
-    src = grid.mapInPandas(gen, "scx long, scy long, tile binary, mask binary")
     src_gt = np.array([0.0, 1 / 128, 0.0, 1.0, 0.0, -1 / 128])
     dst_gt = np.array([0.0, 1 / 64, 0.0, 1.0, 0.0, -1 / 64])
     out = warp_tiles(src, src_gt, dst_gt, (64, 64), tile_px=32, method="nearest",
                      with_mask=True)
-
-    @F.pandas_udf("long")
-    def n_valid(mask: pd.Series) -> pd.Series:
-        return pd.Series(
-            [int((np.frombuffer(bytes(b), np.uint8) > 0).sum()) for b in mask]
-        )
-
+    n_valid = row_udf(lambda b: int((np.frombuffer(b, np.uint8) > 0).sum()), "long")
     return out.select(
         "ocx", "ocy",
-        _px_sum_udf()(F.col("tile")).alias("px_sum"),
+        _pixel_checksum(F.col("tile")).v_sum.alias("px_sum"),
         n_valid(F.col("mask")).alias("n_valid"),
     )
 
@@ -1277,7 +1189,7 @@ def q_warp_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     src_gt = np.array([0.0, 1 / 128, 0.0, 1.0, 0.0, -1 / 128])
     dst_gt = np.array([0.0, 1 / 64, 0.0, 1.0, 0.0, -1 / 64])
     out = warp_tiles(src, src_gt, dst_gt, (64, 64), tile_px=32, method="mode")
-    return out.select("ocx", "ocy", _px_sum_udf()(F.col("tile")).alias("mode_sum"))
+    return out.select("ocx", "ocy", _pixel_checksum(F.col("tile")).v_sum.alias("mode_sum"))
 
 
 _WARP_MODE_ORACLE_SQL = """
@@ -1313,10 +1225,9 @@ def q_warp_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _pattern_src_tiles(spark, ts=32, ntiles=4)
     src_gt = np.array([0.0, 1 / 128, 0.0, 1.0, 0.0, -1 / 128])
     dst_gt = np.array([0.0, 1 / 64, 0.0, 1.0, 0.0, -1 / 64])
-    px = _px_sum_udf()
     parts = [
         warp_tiles(src, src_gt, dst_gt, (64, 64), tile_px=32, method=m).select(
-            "ocx", "ocy", px(F.col("tile")).alias(f"{m}_sum")
+            "ocx", "ocy", _pixel_checksum(F.col("tile")).v_sum.alias(f"{m}_sum")
         )
         for m in ("med", "q1", "q3")
     ]
@@ -1363,67 +1274,14 @@ def q_warp_lanczos(spark: SparkSession, sf_dir: str) -> DataFrame:
     src_gt = np.array([0.0, 1 / 128, 0.0, 1.0, 0.0, -1 / 128])
     dst_gt = np.array([0.25, 1 / 256, 0.0, 0.75, 0.0, -1 / 256])
     out = warp_tiles(src, src_gt, dst_gt, (128, 128), tile_px=32, method="lanczos")
-    return out.select("ocx", "ocy", _px_sum_udf()(F.col("tile")).alias("px_sum"))
+    return out.select("ocx", "ocy", _pixel_checksum(F.col("tile")).v_sum.alias("px_sum"))
 
 
 
-def q_maskfile_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S8 + S4 + S2 (quadtree mask write → magic-probe → read,
-    mask.cpp:95-108/130-175/266-308): per-mask quad sets serialize to
-    the GQM1 binary format on executors, the scan path parses them
-    back; per-mask quad counts must survive the cycle."""
-    from gdal_drivers_spark.core import maskfile
-
-    p = spark.read.parquet(f"{sf_dir}/part.parquet")
-    h = (F.col("p_partkey") * F.lit(2654435761)) % F.lit(256)
-    quads = (
-        p.select(
-            (F.col("p_partkey") % 5).alias("mask_id"),
-            (h % 16).alias("qx"),
-            (h.cast("long") / 16).cast("long").alias("qy"),
-        )
-        .distinct()
-        .select(
-            "mask_id",
-            F.lit(4).alias("level"),
-            "qx",
-            "qy",
-            F.when((F.col("qx") + F.col("qy")) % 2 == 0, "white")
-            .otherwise("gray")
-            .alias("value"),
-        )
-    )
-
-    def _write(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        buf = maskfile.write_mask(pdf, depth=4, extents=(0.0, 0.0, 1.0, 1.0))
-        return pd.DataFrame({"mask_id": [int(key[0])], "buf": [buf]})
-
-    masks = quads.groupBy("mask_id").applyInPandas(_write, "mask_id long, buf binary")
-
-    def _read(batches):
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples():
-                buf = bytes(r.buf)
-                assert maskfile.probe(buf)
-                q, depth, _ext, _srs = maskfile.read_mask(buf)
-                rows.append(
-                    (int(r.mask_id), depth, len(q), int((q["value"] == "white").sum()))
-                )
-            yield pd.DataFrame(rows, columns=["mask_id", "depth", "n_quads", "n_white"])
-
-    return masks.mapInPandas(_read, "mask_id long, depth int, n_quads long, n_white long")
-
-
-def q_maskfile_gdalqm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S2/S4/S8 over the REFERENCE header wire layout: masks serialize
-    with the exact GDALQM header (6-byte magic + 2×u8 reserved +
-    u32-len WKT + 4×f64 extents, mask.cpp:274-303), are magic-probed
-    (mask.cpp:95-108) and parsed back (header per mask.cpp:130-163).
-    SRS and squared-up extents must survive; quad counts as in
-    maskfile_roundtrip."""
-    from gdal_drivers_spark.core import maskfile
-
+def _written_masks(spark: SparkSession, sf_dir: str, write) -> DataFrame:
+    """(mask_id, buf): five per-mask level-4 quad sets derived from the
+    part table, each serialized on executors by ``write(quads)`` (a
+    pandas quads table → mask bytes)."""
     p = spark.read.parquet(f"{sf_dir}/part.parquet")
     h = (F.col("p_partkey") * F.lit(2654435761)) % F.lit(256)
     quads = (
@@ -1441,33 +1299,51 @@ def q_maskfile_gdalqm(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    def _write(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        buf = maskfile.write_mask(
-            pdf, depth=4, extents=(0.0, 0.0, 1.0, 1.0),
-            srs='LOCAL_CS["qm"]', wire="gdalqm",
-        )
-        return pd.DataFrame({"mask_id": [int(key[0])], "buf": [buf]})
+    return run_grouped(quads, ["mask_id"], ["level", "qx", "qy", "value"],
+                       lambda key, g: [(key[0], write(pd.DataFrame(g)))],
+                       "mask_id long, buf binary")
 
-    masks = quads.groupBy("mask_id").applyInPandas(_write, "mask_id long, buf binary")
 
-    def _read(batches):
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples():
-                buf = bytes(r.buf)
-                assert buf[:6] == b"GDALQM" and maskfile.probe(buf)
-                q, depth, ext, srs = maskfile.read_mask(buf)
-                rows.append(
-                    (int(r.mask_id), depth, len(q),
-                     int((q["value"] == "white").sum()), srs, float(ext[2]))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["mask_id", "depth", "n_quads", "n_white", "srs", "ur_x"],
-            )
+def q_maskfile_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """S8 + S4 + S2 (quadtree mask write → magic-probe → read,
+    mask.cpp:95-108/130-175/266-308): per-mask quad sets serialize to
+    the GQM1 binary format on executors, the scan path parses them
+    back; per-mask quad counts must survive the cycle."""
+    from gdal_drivers_spark.core import maskfile
 
-    return masks.mapInPandas(
-        _read,
+    def _read(g):
+        for mask_id, buf in zip(g["mask_id"], g["buf"]):
+            assert maskfile.probe(buf)
+            q, depth, _ext, _srs = maskfile.read_mask(buf)
+            yield mask_id, depth, len(q), int((q["value"] == "white").sum())
+
+    masks = _written_masks(
+        spark, sf_dir, lambda q: maskfile.write_mask(q, depth=4, extents=(0.0, 0.0, 1.0, 1.0))
+    )
+    return run_batches(masks, ["mask_id", "buf"], _read,
+                       "mask_id long, depth int, n_quads long, n_white long")
+
+
+def q_maskfile_gdalqm(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """S2/S4/S8 over the REFERENCE header wire layout: masks serialize
+    with the exact GDALQM header (6-byte magic + 2×u8 reserved +
+    u32-len WKT + 4×f64 extents, mask.cpp:274-303), are magic-probed
+    (mask.cpp:95-108) and parsed back (header per mask.cpp:130-163).
+    SRS and squared-up extents must survive; quad counts as in
+    maskfile_roundtrip."""
+    from gdal_drivers_spark.core import maskfile
+
+    def _read(g):
+        for mask_id, buf in zip(g["mask_id"], g["buf"]):
+            assert buf[:6] == b"GDALQM" and maskfile.probe(buf)
+            q, depth, ext, srs = maskfile.read_mask(buf)
+            yield mask_id, depth, len(q), int((q["value"] == "white").sum()), srs, float(ext[2])
+
+    masks = _written_masks(spark, sf_dir, lambda q: maskfile.write_mask(
+        q, depth=4, extents=(0.0, 0.0, 1.0, 1.0), srs='LOCAL_CS["qm"]', wire="gdalqm",
+    ))
+    return run_batches(
+        masks, ["mask_id", "buf"], _read,
         "mask_id long, depth int, n_quads long, n_white long, srs string, ur_x double",
     )
 
@@ -1504,36 +1380,14 @@ def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     neighbor resize to 16×16 (Arrow batch decode/re-encode) → exact
     per-image pixel sums. The resize gather is closed-form on the
     deterministic pattern, so the oracle reproduces it in SQL."""
-    import numpy as np
-
-    from gdal_drivers_spark.core import codecs
     from gdal_drivers_spark.operators.multimodal import resize_images
-    from gdal_drivers_spark.sources.synth import pattern
 
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for s in pdf["s_suppkey"]:
-                img = pattern(32, 32, 1, int(s) % 256)
-                rows.append((str(int(s)), codecs.encode_raw(img), 32, 32, "raw"))
-            yield pd.DataFrame(rows, columns=["image_id", "bytes", "w", "h", "fmt"])
-
-    images = spark.read.parquet(f"{sf_dir}/supplier.parquet").select("s_suppkey").mapInPandas(
-        gen, "image_id string, bytes binary, w int, h int, fmt string"
-    )
-    small = resize_images(images, 16, 16)
-
-    @F.pandas_udf("long")
-    def px_sum(b: pd.Series) -> pd.Series:
-        return pd.Series(
-            [int(codecs.decode(bytes(x)).sum(dtype=np.int64)) for x in b]
-        )
-
+    small = resize_images(_supplier_pattern_images(spark, sf_dir, lambda s: s % 256), 16, 16)
     return small.select(
         F.col("image_id").cast("long").alias("sid"),
         "w",
         "h",
-        px_sum(F.col("bytes")).alias("px_sum"),
+        _pixel_checksum(F.col("bytes"), decoded=True).v_sum.alias("px_sum"),
     )
 
 
@@ -1541,34 +1395,12 @@ def q_patch_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vision-training patch extraction: 32×32 deterministic images cut
     into a 2×2 grid of 16-px patches (narrow Arrow fan-out, the ViT
     prep shape); exact per-patch pixel sums, closed-form oracle."""
-    import numpy as np
-
-    from gdal_drivers_spark.core import codecs
     from gdal_drivers_spark.operators.multimodal import patch_grid
-    from gdal_drivers_spark.sources.synth import pattern
 
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for s in pdf["s_suppkey"]:
-                img = pattern(32, 32, 1, int(s) % 256)
-                rows.append((str(int(s)), codecs.encode_raw(img), 32, 32, "raw"))
-            yield pd.DataFrame(rows, columns=["image_id", "bytes", "w", "h", "fmt"])
-
-    images = spark.read.parquet(f"{sf_dir}/supplier.parquet").select("s_suppkey").mapInPandas(
-        gen, "image_id string, bytes binary, w int, h int, fmt string"
-    )
-    patches = patch_grid(images, patch=16)
-
-    @F.pandas_udf("long")
-    def px_sum(b: pd.Series) -> pd.Series:
-        return pd.Series(
-            [int(codecs.decode(bytes(x)).sum(dtype=np.int64)) for x in b]
-        )
-
+    patches = patch_grid(_supplier_pattern_images(spark, sf_dir, lambda s: s % 256), patch=16)
     return patches.select(
         F.col("image_id").cast("long").alias("sid"),
-        "py", "px", "w", px_sum(F.col("bytes")).alias("px_sum"),
+        "py", "px", "w", _pixel_checksum(F.col("bytes"), decoded=True).v_sum.alias("px_sum"),
     )
 
 
@@ -1604,20 +1436,16 @@ def q_feather_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     s = spark.read.parquet(f"{sf_dir}/supplier.parquet").select("s_suppkey")
 
-    @F.pandas_udf("long")
-    def wsum_q(keys: pd.Series) -> pd.Series:
-        i = (np.arange(16) + 0.5) / 16.0
-        px, py = np.meshgrid(i, i)
-        px, py = px.ravel(), py.ravel()
-        out = []
-        for k in keys:
-            k = int(k)
-            vx0, vy0 = (k % 4) / 16.0, (k % 5) / 16.0
-            w = feather_weight(px, py, vx0, vy0, vx0 + 0.5, vy0 + 0.5, 1 / 8, 1 / 8)
-            out.append(int(round(float(w.sum()) * 4096)))
-        return pd.Series(out)
+    i = (np.arange(16) + 0.5) / 16.0
+    px, py = (c.ravel() for c in np.meshgrid(i, i))
 
-    return s.select(F.col("s_suppkey").alias("sid"), wsum_q(F.col("s_suppkey")).alias("wsum_q"))
+    def wsum_q(k):
+        vx0, vy0 = (k % 4) / 16.0, (k % 5) / 16.0
+        w = feather_weight(px, py, vx0, vy0, vx0 + 0.5, vy0 + 0.5, 1 / 8, 1 / 8)
+        return int(round(float(w.sum()) * 4096))
+
+    return s.select(F.col("s_suppkey").alias("sid"),
+                    row_udf(wsum_q, "long")(F.col("s_suppkey")).alias("wsum_q"))
 
 
 _FEATHER_ORACLE_SQL = """
@@ -1684,8 +1512,6 @@ def q_gzip_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     + byte sum."""
     import gzip as _gzip
 
-    import numpy as np
-
     p = spark.read.parquet(f"{sf_dir}/part.parquet")
     hh = (F.col("p_partkey") * F.lit(2654435761)) % F.lit(1024)
     store_keys = (
@@ -1699,16 +1525,13 @@ def q_gzip_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("zoom", F.lit(5))
     )
 
-    def _mk(batches):
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples():
-                plain = (("tile-" + str(int(r.pk)) + ";") * (int(r.pk) % 3 + 1)).encode()
-                blob = _gzip.compress(plain, 6, mtime=0) if r.pk % 2 == 0 else plain
-                rows.append((int(r.zoom), int(r.x), int(r.y), blob))
-            yield pd.DataFrame(rows, columns=["zoom", "x", "y", "tile_data"])
+    def _mk(g):
+        for zoom, x, y, pk in zip(g["zoom"], g["x"], g["y"], g["pk"]):
+            plain = (("tile-" + str(pk) + ";") * (pk % 3 + 1)).encode()
+            yield zoom, x, y, _gzip.compress(plain, 6, mtime=0) if pk % 2 == 0 else plain
 
-    store = store_keys.mapInPandas(_mk, "zoom int, x long, y long, tile_data binary")
+    store = run_batches(store_keys, ["zoom", "x", "y", "pk"], _mk,
+                        "zoom int, x long, y long, tile_data binary")
 
     requests = spark.read.parquet(f"{sf_dir}/supplier.parquet").select(
         F.col("s_suppkey").alias("req_id"),
@@ -1720,18 +1543,9 @@ def q_gzip_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     fetched = fetch_tiles(requests, store)
 
-    @F.pandas_udf("n_bytes long, byte_sum long")
-    def _stats(blobs: pd.Series) -> pd.DataFrame:
-        ls, ss = [], []
-        for b in blobs:
-            arr = np.frombuffer(bytes(b), np.uint8)
-            ls.append(len(arr))
-            ss.append(int(arr.sum(dtype=np.int64)))
-        return pd.DataFrame({"n_bytes": ls, "byte_sum": ss})
-
-    return fetched.select("req_id", "x", "y", _stats(F.col("tile_data")).alias("st")).select(
-        "req_id", "x", "y", F.col("st.n_bytes").alias("n_bytes"),
-        F.col("st.byte_sum").alias("byte_sum"),
+    return fetched.select(
+        "req_id", "x", "y", F.length("tile_data").cast("long").alias("n_bytes"),
+        _pixel_checksum(F.col("tile_data")).v_sum.alias("byte_sum"),
     )
 
 
@@ -2016,35 +1830,20 @@ def q_config_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_nationkey", "n_name"
     )
 
-    def rt(batches):
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples():
-                k = int(r.n_nationkey)
-                cfg = {
-                    "size_x": 256 * (k % 4 + 1),
-                    "nodata": k / 2.0,
-                    "bands": [k % 3 + 1, 2, 7],
-                    "name": str(r.n_name),
-                }
-                parsed = from_ini(to_ini(cfg, section="solid"))["solid"]
-                rows.append(
-                    (
-                        k,
-                        int(parsed["size_x"]),
-                        float(parsed["nodata"]),
-                        int(parsed["bands"][0]),
-                        len(parsed["bands"]),
-                        str(parsed["name"]),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["nation", "size_x", "nodata", "band0", "n_bands", "name"],
-            )
+    def rt(g):
+        for k, name in zip(g["n_nationkey"], g["n_name"]):
+            cfg = {
+                "size_x": 256 * (k % 4 + 1),
+                "nodata": k / 2.0,
+                "bands": [k % 3 + 1, 2, 7],
+                "name": str(name),
+            }
+            parsed = from_ini(to_ini(cfg, section="solid"))["solid"]
+            yield (k, int(parsed["size_x"]), float(parsed["nodata"]), int(parsed["bands"][0]),
+                   len(parsed["bands"]), str(parsed["name"]))
 
-    return nat.mapInPandas(
-        rt,
+    return run_batches(
+        nat, ["n_nationkey", "n_name"], rt,
         "nation long, size_x long, nodata double, band0 long, n_bands int, name string",
     )
 
@@ -2760,18 +2559,13 @@ def q_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     supp = spark.read.parquet(f"{sf_dir}/supplier.parquet").select("s_suppkey")
 
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for k in pdf["s_suppkey"].astype("int64"):
-                k = int(k)
-                n = 256 + k % 128
-                i = np.arange(n, dtype=np.int64)
-                v = ((k * 7 + i * 31) % 4096 - 2048).astype(np.int16)
-                rows.append((str(k), encode_wav(v, rate=16000)))
-            yield pd.DataFrame(rows, columns=["audio_id", "bytes"])
+    def gen(g):
+        for k in g["s_suppkey"]:
+            i = np.arange(256 + k % 128, dtype=np.int64)
+            v = ((k * 7 + i * 31) % 4096 - 2048).astype(np.int16)
+            yield str(k), encode_wav(v, rate=16000)
 
-    clips = supp.mapInPandas(gen, "audio_id string, bytes binary")
+    clips = run_batches(supp, ["s_suppkey"], gen, "audio_id string, bytes binary")
     return audio_features(clips).select(
         F.col("audio_id").cast("long").alias("k"),
         "n_samples",
@@ -2916,39 +2710,29 @@ def q_unknown_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
 
     from gdal_drivers_spark.core import mvtcodec
-    from gdal_drivers_spark.operators.mvt import decode_features
+    from gdal_drivers_spark.operators.mvt import LAYERS_SCHEMA, decode_features
 
     supp = spark.read.parquet(f"{sf_dir}/supplier.parquet").select("s_suppkey")
 
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for s in pdf["s_suppkey"].astype("int64"):
-                s = int(s)
-                pts = np.array([[(s * 7) % 256, (s * 11) % 256]], np.int64)
-                line = np.array([[s % 256, (s * 3) % 256], [(s + 5) % 256, (s * 3 + 9) % 256]], np.int64)
-                pt_stream = mvtcodec.encode_geometry(mvtcodec.GEOM_POINT, [pts]).tolist()
-                feats = [
-                    {"id": 3 * s + 1, "tags": [], "geom_type": mvtcodec.GEOM_POINT,
-                     "geometry": pt_stream},
-                    {"id": 3 * s + 2, "tags": [], "geom_type": mvtcodec.GEOM_LINESTRING,
-                     "geometry": mvtcodec.encode_geometry(mvtcodec.GEOM_LINESTRING, [line]).tolist()},
-                    # UNKNOWN: well-formed stream, type 0 — must be dropped
-                    {"id": 3 * s + 3, "tags": [], "geom_type": mvtcodec.GEOM_UNKNOWN,
-                     "geometry": pt_stream},
-                ]
-                rows.append((1, s % 2, (s * 3) % 2, "mixed", 256, [], [], feats))
-            yield pd.DataFrame(
-                rows,
-                columns=["z", "tx", "ty", "layer", "extent", "keys", "values", "features"],
+    def gen(g):
+        for s in g["s_suppkey"]:
+            pts = np.array([[(s * 7) % 256, (s * 11) % 256]], np.int64)
+            line = np.array(
+                [[s % 256, (s * 3) % 256], [(s + 5) % 256, (s * 3 + 9) % 256]], np.int64
             )
+            pt_stream = mvtcodec.encode_geometry(mvtcodec.GEOM_POINT, [pts]).tolist()
+            feats = [
+                {"id": 3 * s + 1, "tags": [], "geom_type": mvtcodec.GEOM_POINT,
+                 "geometry": pt_stream},
+                {"id": 3 * s + 2, "tags": [], "geom_type": mvtcodec.GEOM_LINESTRING,
+                 "geometry": mvtcodec.encode_geometry(mvtcodec.GEOM_LINESTRING, [line]).tolist()},
+                # UNKNOWN: well-formed stream, type 0 — must be dropped
+                {"id": 3 * s + 3, "tags": [], "geom_type": mvtcodec.GEOM_UNKNOWN,
+                 "geometry": pt_stream},
+            ]
+            yield 1, s % 2, (s * 3) % 2, "mixed", 256, [], [], feats
 
-    layers = supp.mapInPandas(
-        gen,
-        "z int, tx long, ty long, layer string, extent int, keys array<string>, "
-        "values array<string>, features array<struct<id:long,tags:array<int>,"
-        "geom_type:int,geometry:array<long>>>",
-    )
+    layers = run_batches(supp, ["s_suppkey"], gen, LAYERS_SCHEMA)
     return (
         decode_features(layers)
         .groupBy("geom_type")
@@ -3039,24 +2823,17 @@ def q_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/multimodal.image_features) → argmax bin / max count, all
     JVM-side after the one Arrow hop. Oracle rebuilds the histogram
     relationally from the pixel formula."""
-    import numpy as np
-
     from gdal_drivers_spark.core import codecs
     from gdal_drivers_spark.operators.multimodal import image_features
     from gdal_drivers_spark.sources.synth import pattern
 
     supp = spark.read.parquet(f"{sf_dir}/supplier.parquet").select("s_suppkey")
 
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for s in pdf["s_suppkey"].astype("int64"):
-                s = int(s)
-                img = pattern(16, 16, 1, s % 256)
-                rows.append((str(s), codecs.encode_raw(img), "raw"))
-            yield pd.DataFrame(rows, columns=["image_id", "bytes", "fmt"])
+    def gen(g):
+        for s in g["s_suppkey"]:
+            yield str(s), codecs.encode_raw(pattern(16, 16, 1, s % 256)), "raw"
 
-    images = supp.mapInPandas(gen, "image_id string, bytes binary, fmt string")
+    images = run_batches(supp, ["s_suppkey"], gen, "image_id string, bytes binary, fmt string")
     feats = image_features(images, bins=16)
     return feats.select(
         F.col("image_id").cast("long").alias("k"),
@@ -3394,6 +3171,8 @@ def q_rasterize_quads(spark: SparkSession, sf_dir: str) -> DataFrame:
     at z=6 painted into 16-px tiles; the per-tile white-pixel count
     decoded from the actual painted bytes equals the relational count
     of white cells per tile region (oracle-checked)."""
+    import numpy as np
+
     from gdal_drivers_spark.operators.rasterize import rasterize_quads
 
     p = spark.read.parquet(f"{sf_dir}/part.parquet")
@@ -3409,13 +3188,7 @@ def q_rasterize_quads(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.max("value").alias("value"))
     )
     tiles = rasterize_quads(quads, depth=6, tile_px=16)
-
-    @F.pandas_udf("long")
-    def n_white(tile: pd.Series) -> pd.Series:
-        import numpy as np
-
-        return pd.Series([int((np.frombuffer(bytes(b), np.uint8) == 255).sum()) for b in tile])
-
+    n_white = row_udf(lambda b: int((np.frombuffer(b, np.uint8) == 255).sum()), "long")
     return tiles.select("tx", "ty", n_white(F.col("tile")).alias("n_white_px"), "ts")
 
 
@@ -3434,32 +3207,19 @@ def q_blend_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     supp = spark.read.parquet(f"{sf_dir}/supplier.parquet")
 
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for k in pdf["s_suppkey"]:
-                img = pattern(32, 32, 1, int(k) * 7919)
-                cell = (2 << 52) + ((int(k) % 4) << 26) + (int(k) // 4 % 4)
-                rows.append((cell, 0, int(k), codecs.encode_raw(img), 0.0, 0.0, 1.0, 1.0))
-            yield pd.DataFrame(
-                rows,
-                columns=["cell", "band", "source_id", "tile", "vx0", "vy0", "vx1", "vy1"],
-            )
+    def gen(g):
+        for k in g["s_suppkey"]:
+            cell = (2 << 52) + ((k % 4) << 26) + (k // 4 % 4)
+            yield cell, 0, k, codecs.encode_raw(pattern(32, 32, 1, k * 7919)), 0.0, 0.0, 1.0, 1.0
 
-    contribs = supp.select("s_suppkey").mapInPandas(
-        gen, "cell long, band int, source_id long, tile binary, vx0 double, vy0 double, vx1 double, vy1 double"
+    contribs = run_batches(
+        supp, ["s_suppkey"], gen,
+        "cell long, band int, source_id long, tile binary, "
+        "vx0 double, vy0 double, vx1 double, vy1 double",
     )
     out = blend_tiles(contribs, tile_px=32)
-
-    @F.pandas_udf("long")
-    def px_sum(tile: pd.Series) -> pd.Series:
-        import numpy as np
-
-        return pd.Series(
-            [int(np.frombuffer(bytes(b), np.uint8).sum(dtype=np.int64)) for b in tile]
-        )
-
-    return out.select("cell", "band", "n_sources", px_sum(F.col("tile")).alias("px_sum"))
+    return out.select("cell", "band", "n_sources",
+                      _pixel_checksum(F.col("tile")).v_sum.alias("px_sum"))
 
 
 _BLEND_CELLS_ORACLE_SQL = """
@@ -3498,20 +3258,13 @@ def q_caption_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     synthesized on executors with its real caption column, rows pass
     through the Arrow decode stage, and every (image_id, caption) pair
     is emitted for the oracle to reproduce verbatim."""
-    import numpy as np
-
     from gdal_drivers_spark.operators.decode import decode_stats
-    from gdal_drivers_spark.sources.synth import IMAGES_SCHEMA, gen_images_pdf
+    from gdal_drivers_spark.sources.synth import images_df
 
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select("o_orderkey").filter(
         F.col("o_orderkey") % 7 == 0
     )
-
-    def gen(batches):
-        for pdf in batches:
-            yield gen_images_pdf(pdf["o_orderkey"].to_numpy(np.int64))
-
-    images = orders.repartition(16).mapInPandas(gen, IMAGES_SCHEMA)
+    images = images_df(orders.repartition(16).select(F.col("o_orderkey").alias("id")))
     return decode_stats(images).filter("dec_ok").select("image_id", "caption")
 
 
@@ -3540,23 +3293,16 @@ def q_psnr_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     supp = spark.read.parquet(f"{sf_dir}/supplier.parquet").select("s_suppkey")
 
-    def gen(batches):
-        fmts = ["raw", "png", "thumb"]
-        for pdf in batches:
-            rows = []
-            for k in pdf["s_suppkey"]:
-                k = int(k)
-                fmt = fmts[k % 3]
-                img = pattern(32, 32, 1, k % 256)
-                dec = codecs.decode(codecs.ENCODERS[fmt](img), fmt)
-                err = int(np.abs(dec.astype(np.int32) - img.astype(np.int32)).max())
-                p = codecs.psnr(img, dec)
-                rows.append((k, fmt, err, bool(p >= 40.0)))
-            yield pd.DataFrame(rows, columns=["k", "fmt", "max_abs_err", "psnr_ok"])
+    def gen(g):
+        for k in g["s_suppkey"]:
+            fmt = ["raw", "png", "thumb"][k % 3]
+            img = pattern(32, 32, 1, k % 256)
+            dec = codecs.decode(codecs.ENCODERS[fmt](img), fmt)
+            err = int(np.abs(dec.astype(np.int32) - img.astype(np.int32)).max())
+            yield k, fmt, err, bool(codecs.psnr(img, dec) >= 40.0)
 
-    return supp.repartition(16).mapInPandas(
-        gen, "k long, fmt string, max_abs_err int, psnr_ok boolean"
-    )
+    return run_batches(supp.repartition(16), ["s_suppkey"], gen,
+                       "k long, fmt string, max_abs_err int, psnr_ok boolean")
 
 
 _PSNR_ORACLE_SQL = """
@@ -3691,38 +3437,25 @@ def _grid_pattern_tiles(spark, z, n, ts, img_fn, shape="dem", encode=False):
 
     from gdal_drivers_spark.core import codecs
 
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"]:
-                tx, ty = int(i) // n, int(i) % n
-                gx = np.arange(ts)[None, :] + tx * ts
-                gy = np.arange(ts)[:, None] + ty * ts
-                img = img_fn(gx, gy).astype(np.uint8)
-                payload = (
-                    codecs.encode_raw(img[:, :, None]) if encode else img.tobytes()
-                )
-                cellv = (z << 52) | (tx << 26) | ty
-                if shape == "pyramid":
-                    rows.append((cellv, 0, payload, ts))
-                else:
-                    rows.append((cellv, payload))
-            cols = (
-                ["cell", "band", "tile", "ts"] if shape == "pyramid"
-                else ["cell", "tile"]
-            )
-            yield pd.DataFrame(rows, columns=cols)
+    def gen(g):
+        for i in g["id"]:
+            tx, ty = i // n, i % n
+            gx = np.arange(ts)[None, :] + tx * ts
+            gy = np.arange(ts)[:, None] + ty * ts
+            img = img_fn(gx, gy).astype(np.uint8)
+            payload = codecs.encode_raw(img[:, :, None]) if encode else img.tobytes()
+            cellv = (z << 52) | (tx << 26) | ty
+            yield (cellv, 0, payload, ts) if shape == "pyramid" else (cellv, payload)
 
     schema = (
         "cell long, band int, tile binary, ts int" if shape == "pyramid"
         else "cell long, tile binary"
     )
     # r06: cap partitions at the row count — spark.range(16) otherwise
-    # opens defaultParallelism (32) mapInPandas tasks, half of them
-    # empty, each paying a Python-worker round trip on these
-    # fixture-sized grids
+    # opens defaultParallelism (32) tasks, half of them empty, each
+    # paying a Python-worker round trip on these fixture-sized grids
     n_parts = min(n * n, spark.sparkContext.defaultParallelism)
-    return spark.range(0, n * n, 1, n_parts).mapInPandas(gen, schema)
+    return run_batches(spark.range(0, n * n, 1, n_parts), ["id"], gen, schema)
 
 
 def q_pyramid_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3746,7 +3479,7 @@ def q_pyramid_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(
         (F.shiftright(F.col("cell"), 26) % F.lit(1 << 26)).alias("pcx"),
         (F.col("cell") % F.lit(1 << 26)).alias("pcy"),
-        _px_sum_udf()(F.col("tile")).alias("mode_sum"),
+        _pixel_checksum(F.col("tile")).v_sum.alias("mode_sum"),
     )
 
 
@@ -3775,13 +3508,12 @@ def q_pyramid_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("cell").isin(delta_cells))
     levels = build_pyramid(base, from_level=4, to_level=2, agg="min")
     updated = update_pyramid(levels, delta, agg="min")
-    px = _px_sum_udf()
     parts = [
         updated[z].select(
             F.shiftright(F.col("cell"), 52).alias("level"),
             (F.shiftright(F.col("cell"), 26) % F.lit(1 << 26)).alias("cx"),
             (F.col("cell") % F.lit(1 << 26)).alias("cy"),
-            px(F.col("tile")).alias("px_sum"),
+            _pixel_checksum(F.col("tile")).v_sum.alias("px_sum"),
         )
         for z in (4, 3, 2)
     ]
@@ -3853,13 +3585,8 @@ def q_solid_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, 1024, 768, [(7.0, "u8"), (1000.0, "u16"), (123456.0, "i32")], tile_px=256
     )
 
-    @F.pandas_udf("long")
-    def px_sum(tile: pd.Series, dtype: pd.Series) -> pd.Series:
-        dt = {"u8": np.uint8, "u16": np.uint16, "i32": np.int32}
-        return pd.Series(
-            [int(np.frombuffer(bytes(b), dt[d]).sum(dtype=np.int64)) for b, d in zip(tile, dtype)]
-        )
-
+    dt = {"u8": np.uint8, "u16": np.uint16, "i32": np.int32}
+    px_sum = row_udf(lambda b, d: int(np.frombuffer(b, dt[d]).sum(dtype=np.int64)), "long")
     return (
         tiles.withColumn("s", px_sum(F.col("tile"), F.col("dtype")))
         .groupBy("band")
@@ -3882,18 +3609,11 @@ def q_decode_fmt(spark: SparkSession, sf_dir: str) -> DataFrame:
     payload in Arrow batches, report per-format counts + decode-ok
     counts. The fmt distribution is oracle-checked; pixel values are
     covered by the PSNR/parity pytest suite."""
-    import numpy as np
-
     from gdal_drivers_spark.operators.decode import decode_stats
-    from gdal_drivers_spark.sources.synth import IMAGES_SCHEMA, gen_images_pdf
+    from gdal_drivers_spark.sources.synth import images_df
 
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select("o_orderkey")
-
-    def gen(batches):
-        for pdf in batches:
-            yield gen_images_pdf(pdf["o_orderkey"].to_numpy(np.int64))
-
-    images = orders.repartition(32).mapInPandas(gen, IMAGES_SCHEMA)
+    images = images_df(orders.repartition(32).select(F.col("o_orderkey").alias("id")))
     return decode_stats(images).groupBy("fmt").agg(
         F.count("*").alias("n_images"),
         F.sum(F.col("dec_ok").cast("long")).alias("n_ok"),
@@ -3989,58 +3709,29 @@ def q_zonal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffling. Tiles are deterministic patterns on part keys (FIXTURES
     §1), zones partition the 16×16 cell grid by anti-diagonal band —
     the oracle reproduces every pixel in SQL via generate_series."""
-    from gdal_drivers_spark.core import codecs
     from gdal_drivers_spark.operators.zonal import zonal_stats
-    from gdal_drivers_spark.sources.synth import pattern
 
-    part = spark.read.parquet(f"{sf_dir}/part.parquet").select("p_partkey")
-
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for k in pdf["p_partkey"]:
-                k = int(k)
-                h = (k * 2654435761) % 256
-                cell = (4 << 52) + ((h % 16) << 26) + (h // 16)
-                rows.append((cell, codecs.encode_raw(pattern(32, 32, 1, k * 7919))))
-            yield pd.DataFrame(rows, columns=["cell", "tile"])
-
-    tiles = part.mapInPandas(gen, "cell long, tile binary")
-    zones = spark.range(256).select(
-        (
-            F.lit(4 << 52)
-            + F.shiftleft(F.col("id") % 16, 26)
-            + (F.col("id") / 16).cast("long")
-        ).alias("cell"),
-        F.concat(
-            F.lit("r"),
-            ((F.col("id") % 16 + (F.col("id") / 16).cast("long")) % 8),
-        ).alias("zone"),
-    )
-    return zonal_stats(tiles, zones)
+    return zonal_stats(*_zone_fixture(spark, sf_dir))
 
 
-def _categorical_zone_fixture(spark: SparkSession, sf_dir: str):
-    """Shared fixture for the categorical zonal queries: the
-    q_zonal_stats tile/zone layout with pixel values quantized to 4
-    classes (multiples of 64) — label-raster semantics, tie-rich."""
+def _zone_fixture(spark: SparkSession, sf_dir: str, quant: int = 1):
+    """(tiles, zones) for the zonal queries: one 32-px pattern tile per
+    part key on the level-4 16×16 cell grid, zones by anti-diagonal
+    band. ``quant`` floors pixel values to its multiples — quant=64
+    gives the 4-class label raster (tie-rich) the categorical zonal
+    queries need."""
     from gdal_drivers_spark.core import codecs
     from gdal_drivers_spark.sources.synth import pattern
 
     part = spark.read.parquet(f"{sf_dir}/part.parquet").select("p_partkey")
 
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for k in pdf["p_partkey"]:
-                k = int(k)
-                h = (k * 2654435761) % 256
-                cell = (4 << 52) + ((h % 16) << 26) + (h // 16)
-                img = pattern(32, 32, 1, k * 7919) // 64 * 64
-                rows.append((cell, codecs.encode_raw(img)))
-            yield pd.DataFrame(rows, columns=["cell", "tile"])
+    def gen(g):
+        for k in g["p_partkey"]:
+            h = (k * 2654435761) % 256
+            img = pattern(32, 32, 1, k * 7919) // quant * quant
+            yield (4 << 52) + ((h % 16) << 26) + (h // 16), codecs.encode_raw(img)
 
-    tiles = part.mapInPandas(gen, "cell long, tile binary")
+    tiles = run_batches(part, ["p_partkey"], gen, "cell long, tile binary")
     zones = spark.range(256).select(
         (
             F.lit(4 << 52)
@@ -4063,7 +3754,7 @@ def q_zonal_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy move count rows, never pixels."""
     from gdal_drivers_spark.operators.zonal import zonal_histogram
 
-    tiles, zones = _categorical_zone_fixture(spark, sf_dir)
+    tiles, zones = _zone_fixture(spark, sf_dir, quant=64)
     out = zonal_histogram(tiles, zones)
     # no corrupt tiles in the fixture; COALESCE keeps the column
     # non-nullable through the checker's pandas hop (house rule)
@@ -4080,7 +3771,7 @@ def q_zonal_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     one max_by over the histogram — no window sort."""
     from gdal_drivers_spark.operators.zonal import zonal_mode
 
-    tiles, zones = _categorical_zone_fixture(spark, sf_dir)
+    tiles, zones = _zone_fixture(spark, sf_dir, quant=64)
     return zonal_mode(tiles, zones)
 
 
@@ -4290,8 +3981,6 @@ def q_color_relief(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounding is banker's (np.rint ↔ round_even). Per-tile channel
     sums; a wrong segment pick, a clamp error at 255, or an
     interpolation-order drift all break the hash."""
-    import numpy as np
-
     from gdal_drivers_spark.operators.dem import color_relief
 
     tiles = _grid_pattern_tiles(spark, 2, 4, 32, lambda gx, gy: (3 * gx + 5 * gy) % 256, encode=True)
@@ -4303,18 +3992,8 @@ def q_color_relief(spark: SparkSession, sf_dir: str) -> DataFrame:
         (256, (255, 255, 255)),
     ]
     out = color_relief(tiles, ramp)
-
-    @F.pandas_udf("long")
-    def plane_sum(b: pd.Series) -> pd.Series:
-        return pd.Series(
-            [int(np.frombuffer(bytes(x), np.uint8).sum(dtype=np.int64)) for x in b]
-        )
-
     return out.select(
-        "cell",
-        plane_sum(F.col("r")).alias("r_sum"),
-        plane_sum(F.col("g")).alias("g_sum"),
-        plane_sum(F.col("b")).alias("b_sum"),
+        "cell", *(_pixel_checksum(F.col(c)).v_sum.alias(f"{c}_sum") for c in "rgb")
     )
 
 
@@ -4510,7 +4189,7 @@ def q_sieve_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.shiftright(F.col("cell"), 26) % F.lit(1 << 26)).alias("tcx"),
         (F.col("cell") % F.lit(1 << 26)).alias("tcy"),
         F.col("n_relabeled"),
-        _px_sum_udf()(F.col("tile")).alias("px_sum"),
+        _pixel_checksum(F.col("tile")).v_sum.alias("px_sum"),
     )
 
 
@@ -4668,23 +4347,7 @@ def q_grid_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     out = grid_nearest(_grid_fixture_points(spark), 32, 4, 7, (4, 4))
 
-    @F.pandas_udf("struct<v_sum long, vpos_sum long>")
-    def _ck(raster: pd.Series) -> pd.DataFrame:
-        import numpy as np
-
-        rows = []
-        for b in raster:
-            flat = np.frombuffer(bytes(b), np.uint8).astype(np.int64)
-            rows.append((int(flat.sum()),
-                         int((flat * (np.arange(flat.size) + 1)).sum())))
-        return pd.DataFrame(rows, columns=["v_sum", "vpos_sum"])
-
-    return out.select(
-        (F.shiftright(F.col("cell"), 26) % F.lit(1 << 26)).alias("tcx"),
-        (F.col("cell") % F.lit(1 << 26)).alias("tcy"),
-        "n_points", "n_filled",
-        _ck(F.col("raster")).alias("_c"),
-    ).select("tcx", "tcy", "n_points", "n_filled", "_c.v_sum", "_c.vpos_sum")
+    return _tile_checksums(out, "raster", "n_points", "n_filled")
 
 
 _GRID_PTS_CTE = """
@@ -4778,38 +4441,20 @@ def _supplier_pattern_images(spark, sf_dir, band_phash, bands=1):
     from gdal_drivers_spark.core import codecs
     from gdal_drivers_spark.sources.synth import pattern
 
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for s in pdf["s_suppkey"]:
-                img = pattern(32, 32, bands, band_phash(int(s)))
-                rows.append((str(int(s)), codecs.encode_raw(img), 32, 32, "raw"))
-            yield pd.DataFrame(rows, columns=["image_id", "bytes", "w", "h", "fmt"])
+    def gen(g):
+        for s in g["s_suppkey"]:
+            yield str(s), codecs.encode_raw(pattern(32, 32, bands, band_phash(s))), 32, 32, "raw"
 
-    return spark.read.parquet(f"{sf_dir}/supplier.parquet").select(
-        "s_suppkey"
-    ).mapInPandas(gen, "image_id string, bytes binary, w int, h int, fmt string")
+    return run_batches(spark.read.parquet(f"{sf_dir}/supplier.parquet"), ["s_suppkey"], gen,
+                       "image_id string, bytes binary, w int, h int, fmt string")
 
 
 def _raster_checksum_cols(out):
     """(sid, v_sum, vpos_sum) from a (image_id, bytes) raster frame —
-    the house per-image hash-gate reduction."""
-    import numpy as np
-
-    from gdal_drivers_spark.core import codecs
-
-    @F.pandas_udf("struct<v_sum long, vpos_sum long>")
-    def _ck(b: pd.Series) -> pd.DataFrame:
-        rows = []
-        for x in b:
-            flat = codecs.decode(bytes(x)).ravel().astype(np.int64)
-            rows.append((int(flat.sum()),
-                         int((flat * (np.arange(flat.size) + 1)).sum())))
-        return pd.DataFrame(rows, columns=["v_sum", "vpos_sum"])
-
+    the house per-image hash-gate reduction over decoded pixels."""
     return out.select(
         F.col("image_id").cast("long").alias("sid"),
-        _ck(F.col("bytes")).alias("_c"),
+        _pixel_checksum(F.col("bytes"), decoded=True).alias("_c"),
     ).select("sid", "_c.v_sum", "_c.vpos_sum")
 
 
@@ -4927,29 +4572,13 @@ def q_retile(spark: SparkSession, sf_dir: str) -> DataFrame:
     by construction; the oracle regroups the closed-form pixels by the
     output grid. Checked per output tile: source count, value sum,
     position-weighted sum."""
-    import numpy as np
-
     from gdal_drivers_spark.operators.pyramid import retile
 
     tiles = _grid_pattern_tiles(
         spark, 4, 3, 32, lambda gx, gy: (3 * gx + 5 * gy) % 256)
     out = retile(tiles, 32, 48, 4, (3, 3))
 
-    @F.pandas_udf("struct<v_sum long, vpos_sum long>")
-    def _ck(b: pd.Series) -> pd.DataFrame:
-        rows = []
-        for x in b:
-            flat = np.frombuffer(bytes(x), np.uint8).astype(np.int64)
-            rows.append((int(flat.sum()),
-                         int((flat * (np.arange(flat.size) + 1)).sum())))
-        return pd.DataFrame(rows, columns=["v_sum", "vpos_sum"])
-
-    return out.select(
-        (F.shiftright(F.col("cell"), 26) % F.lit(1 << 26)).alias("tcx"),
-        (F.col("cell") % F.lit(1 << 26)).alias("tcy"),
-        "n_src", "ok",
-        _ck(F.col("tile")).alias("_c"),
-    ).select("tcx", "tcy", "n_src", "ok", "_c.v_sum", "_c.vpos_sum")
+    return _tile_checksums(out, "tile", "n_src", "ok")
 
 
 _RETILE_ORACLE_SQL = """
@@ -4976,8 +4605,6 @@ def q_viewshed(spark: SparkSession, sf_dir: str) -> DataFrame:
     16 observers × ≤317 targets × ≤9 steps. Checked per observer:
     in-grid window size, evaluated and visible counts, and the
     position-weighted sum of the visibility raster."""
-    import numpy as np
-
     from gdal_drivers_spark.operators.viewshed import viewshed
 
     tiles = _grid_pattern_tiles(
@@ -4989,17 +4616,9 @@ def q_viewshed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = viewshed(obs, tiles, 32, 4, (4, 4), radius=10, observer_height=2)
 
-    @F.pandas_udf("long")
-    def _vpos(b: pd.Series) -> pd.Series:
-        vals = []
-        for x in b:
-            flat = np.frombuffer(bytes(x), np.uint8).astype(np.int64)
-            vals.append(int((flat * (np.arange(flat.size) + 1)).sum()))
-        return pd.Series(vals)
-
     return out.select(
         "oid", "n_window", "n_eval", "n_visible",
-        _vpos(F.col("vis")).alias("vpos_sum"),
+        _pixel_checksum(F.col("vis")).vpos_sum.alias("vpos_sum"),
     )
 
 
@@ -5117,40 +4736,20 @@ def q_mosaic_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from gdal_drivers_spark.operators.blend import mosaic_lastwins
 
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"]:
-                tx, ty = int(i) // 4, int(i) % 4
-                x = np.arange(32)[None, :] + tx * 32
-                y = np.arange(32)[:, None] + ty * 32
-                c = (4 << 52) + (tx << 26) + ty
-                rows.append((c, 1, ((3 * x + 5 * y) % 256)
-                             .astype(np.uint8).tobytes()))
-                if (tx + ty) % 2 == 0:
-                    rows.append((c, 2, ((x + 7 * y + 3) % 256)
-                                 .astype(np.uint8).tobytes()))
-            yield pd.DataFrame(rows, columns=["cell", "src_id", "raster"])
+    def gen(g):
+        for i in g["id"]:
+            tx, ty = i // 4, i % 4
+            x = np.arange(32)[None, :] + tx * 32
+            y = np.arange(32)[:, None] + ty * 32
+            c = (4 << 52) + (tx << 26) + ty
+            yield c, 1, ((3 * x + 5 * y) % 256).astype(np.uint8).tobytes()
+            if (tx + ty) % 2 == 0:
+                yield c, 2, ((x + 7 * y + 3) % 256).astype(np.uint8).tobytes()
 
-    tiles = spark.range(16).mapInPandas(
-        gen, "cell long, src_id long, raster binary")
+    tiles = run_batches(spark.range(16), ["id"], gen, "cell long, src_id long, raster binary")
     out = mosaic_lastwins(tiles, 32)
 
-    @F.pandas_udf("struct<v_sum long, vpos_sum long>")
-    def _ck(b: pd.Series) -> pd.DataFrame:
-        rows = []
-        for x in b:
-            flat = np.frombuffer(bytes(x), np.uint8).astype(np.int64)
-            rows.append((int(flat.sum()),
-                         int((flat * (np.arange(flat.size) + 1)).sum())))
-        return pd.DataFrame(rows, columns=["v_sum", "vpos_sum"])
-
-    return out.select(
-        (F.shiftright(F.col("cell"), 26) % F.lit(1 << 26)).alias("tcx"),
-        (F.col("cell") % F.lit(1 << 26)).alias("tcy"),
-        "n_sources", "n_filled",
-        _ck(F.col("raster")).alias("_c"),
-    ).select("tcx", "tcy", "n_sources", "n_filled", "_c.v_sum", "_c.vpos_sum")
+    return _tile_checksums(out, "raster", "n_sources", "n_filled")
 
 
 _MOSAIC_MERGE_ORACLE_SQL = """
@@ -5274,8 +4873,6 @@ def q_burn_raster(spark: SparkSession, sf_dir: str) -> DataFrame:
     feature→tile fan-out is a JVM bbox explode; the oracle mirrors it
     for n_features. Checked per tile: burned-pixel count, landed
     features, value sum, position-weighted sum."""
-    import numpy as np
-
     from gdal_drivers_spark.operators.rasterize import burn_features
 
     feats = [
@@ -5292,21 +4889,7 @@ def q_burn_raster(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = burn_features(fdf, 16, 4, (4, 4), init=7)
 
-    @F.pandas_udf("struct<v_sum long, vpos_sum long>")
-    def _ck(b: pd.Series) -> pd.DataFrame:
-        rows = []
-        for x in b:
-            flat = np.frombuffer(bytes(x), np.uint8).astype(np.int64)
-            rows.append((int(flat.sum()),
-                         int((flat * (np.arange(flat.size) + 1)).sum())))
-        return pd.DataFrame(rows, columns=["v_sum", "vpos_sum"])
-
-    return out.select(
-        (F.shiftright(F.col("cell"), 26) % F.lit(1 << 26)).alias("tcx"),
-        (F.col("cell") % F.lit(1 << 26)).alias("tcy"),
-        "n_burned", "n_features",
-        _ck(F.col("raster")).alias("_c"),
-    ).select("tcx", "tcy", "n_burned", "n_features", "_c.v_sum", "_c.vpos_sum")
+    return _tile_checksums(out, "raster", "n_burned", "n_features")
 
 
 _BURN_ORACLE_SQL = """
@@ -5409,42 +4992,13 @@ def q_cutline(spark: SparkSession, sf_dir: str) -> DataFrame:
     JVM-side (no Python, no decode); only boundary tiles rasterize.
     Checked per tile: kept-pixel count, value sum, position-weighted
     value sum of the masked raster."""
-    import numpy as np
-
     from gdal_drivers_spark.operators.cutline import cutline_crop
 
-    t, grid, z = 16, 6, 4
     ring = [[5, 3], [58, 13], [40, 62], [9, 50]]
+    tiles = _grid_pattern_tiles(spark, 4, 6, 16, lambda gx, gy: (3 * gx + 5 * gy) % 256)
+    out = cutline_crop(tiles.withColumnRenamed("tile", "raster"), ring, 16, nodata=0)
 
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"]:
-                tx, ty = int(i) // grid, int(i) % grid
-                x = np.arange(t)[None, :] + tx * t
-                y = np.arange(t)[:, None] + ty * t
-                tile = ((3 * x + 5 * y) % 256).astype(np.uint8)
-                rows.append(((z << 52) + (tx << 26) + ty, tile.tobytes()))
-            yield pd.DataFrame(rows, columns=["cell", "raster"])
-
-    tiles = spark.range(grid * grid).mapInPandas(gen, "cell long, raster binary")
-    out = cutline_crop(tiles, ring, t, nodata=0)
-
-    @F.pandas_udf("struct<v_sum long, vpos_sum long>")
-    def _ck(b: pd.Series) -> pd.DataFrame:
-        rows = []
-        for x in b:
-            flat = np.frombuffer(bytes(x), np.uint8).astype(np.int64)
-            rows.append((int(flat.sum()),
-                         int((flat * (np.arange(flat.size) + 1)).sum())))
-        return pd.DataFrame(rows, columns=["v_sum", "vpos_sum"])
-
-    return out.select(
-        (F.shiftright(F.col("cell"), 26) % F.lit(1 << 26)).alias("tcx"),
-        (F.col("cell") % F.lit(1 << 26)).alias("tcy"),
-        "n_kept",
-        _ck(F.col("raster")).alias("_c"),
-    ).select("tcx", "tcy", "n_kept", "_c.v_sum", "_c.vpos_sum")
+    return _tile_checksums(out, "raster", "n_kept")
 
 
 _CUTLINE_ORACLE_SQL = """
@@ -5540,33 +5094,20 @@ def q_grid_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     least(count,255) included) → the oracle replays every pixel's
     in-radius aggregate in SQL; checked per tile: candidate and filled
     counts plus (sum, position-weighted sum) of each band."""
-    import numpy as np
-
     from gdal_drivers_spark.operators.gridding import grid_datametrics
 
     out = grid_datametrics(_grid_fixture_points(spark), 32, 4, 7, (4, 4))
 
-    @F.pandas_udf("struct<s long, p long>")
-    def _ck(raster: pd.Series) -> pd.DataFrame:
-        rows = []
-        for b in raster:
-            flat = np.frombuffer(bytes(b), np.uint8).astype(np.int64)
-            rows.append((int(flat.sum()),
-                         int((flat * (np.arange(flat.size) + 1)).sum())))
-        return pd.DataFrame(rows, columns=["s", "p"])
-
+    bands = {"cnt": "count", "min": "vmin", "max": "vmax", "rng": "vrange"}
     return out.select(
         (F.shiftright(F.col("cell"), 26) % F.lit(1 << 26)).alias("tcx"),
         (F.col("cell") % F.lit(1 << 26)).alias("tcy"),
         "n_points", "n_filled",
-        _ck(F.col("count")).alias("_c"), _ck(F.col("vmin")).alias("_n"),
-        _ck(F.col("vmax")).alias("_x"), _ck(F.col("vrange")).alias("_r"),
+        *(_pixel_checksum(F.col(c)).alias(f"_{b}") for b, c in bands.items()),
     ).select(
         "tcx", "tcy", "n_points", "n_filled",
-        F.col("_c.s").alias("cnt_sum"), F.col("_c.p").alias("cnt_pos"),
-        F.col("_n.s").alias("min_sum"), F.col("_n.p").alias("min_pos"),
-        F.col("_x.s").alias("max_sum"), F.col("_x.p").alias("max_pos"),
-        F.col("_r.s").alias("rng_sum"), F.col("_r.p").alias("rng_pos"),
+        *(F.col(f"_{b}.{f}").alias(f"{b}_{o}") for b in bands
+          for f, o in (("v_sum", "sum"), ("vpos_sum", "pos"))),
     )
 
 
@@ -5619,23 +5160,7 @@ def q_fillnodata(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, 4, 4, 32, lambda gx, gy: ((3 * gx + 5 * gy) % 256) // 64 * 64)
     out = fillnodata(tiles, tile_px=32, nodata=0, max_dist=5)
 
-    @F.pandas_udf("struct<v_sum long, vpos_sum long>")
-    def _ck(raster: pd.Series) -> pd.DataFrame:
-        import numpy as np
-
-        rows = []
-        for b in raster:
-            flat = np.frombuffer(bytes(b), np.uint8).astype(np.int64)
-            rows.append((int(flat.sum()),
-                         int((flat * (np.arange(flat.size) + 1)).sum())))
-        return pd.DataFrame(rows, columns=["v_sum", "vpos_sum"])
-
-    return out.select(
-        (F.shiftright(F.col("cell"), 26) % F.lit(1 << 26)).alias("tcx"),
-        (F.col("cell") % F.lit(1 << 26)).alias("tcy"),
-        "n_filled", "n_unfilled",
-        _ck(F.col("tile")).alias("_c"),
-    ).select("tcx", "tcy", "n_filled", "n_unfilled", "_c.v_sum", "_c.vpos_sum")
+    return _tile_checksums(out, "tile", "n_filled", "n_unfilled")
 
 
 _FILLNODATA_ORACLE_SQL = """
@@ -5726,31 +5251,22 @@ def q_pct2rgb(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gdal_drivers_spark.operators.multimodal import pct2rgb, websafe_palette
     from gdal_drivers_spark.sources.synth import pattern
 
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for s in pdf["s_suppkey"]:
-                idx = (pattern(32, 32, 1, int(s) % 256).astype(np.int64) % 216).astype(np.uint8)
-                rows.append((str(int(s)), codecs.encode_raw(idx), 32, 32, "raw"))
-            yield pd.DataFrame(rows, columns=["image_id", "bytes", "w", "h", "fmt"])
+    def gen(g):
+        for s in g["s_suppkey"]:
+            idx = (pattern(32, 32, 1, s % 256).astype(np.int64) % 216).astype(np.uint8)
+            yield str(s), codecs.encode_raw(idx), 32, 32, "raw"
 
-    images = spark.read.parquet(f"{sf_dir}/supplier.parquet").select("s_suppkey").mapInPandas(
-        gen, "image_id string, bytes binary, w int, h int, fmt string"
-    )
+    images = run_batches(spark.read.parquet(f"{sf_dir}/supplier.parquet"), ["s_suppkey"], gen,
+                         "image_id string, bytes binary, w int, h int, fmt string")
     out = pct2rgb(images, websafe_palette())
 
-    @F.pandas_udf("struct<r_sum long, g_sum long, b_sum long>")
-    def _ck(b: pd.Series) -> pd.DataFrame:
-        rows = []
-        for x in b:
-            img = codecs.decode(bytes(x)).astype(np.int64)
-            rows.append((int(img[:, :, 0].sum()), int(img[:, :, 1].sum()),
-                         int(img[:, :, 2].sum())))
-        return pd.DataFrame(rows, columns=["r_sum", "g_sum", "b_sum"])
+    def channel_sums(b):
+        img = codecs.decode(b).astype(np.int64)
+        return tuple(int(img[:, :, c].sum()) for c in range(3))
 
+    sums = row_udf(channel_sums, "struct<r_sum:long,g_sum:long,b_sum:long>")
     return out.select(
-        F.col("image_id").cast("long").alias("sid"),
-        _ck(F.col("bytes")).alias("_c"),
+        F.col("image_id").cast("long").alias("sid"), sums(F.col("bytes")).alias("_c"),
     ).select("sid", "_c.r_sum", "_c.g_sum", "_c.b_sum")
 
 
@@ -5838,26 +5354,16 @@ def q_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     correctness is pinned by tests/test_pipeline_ops.py
     (identical-image equality, perturbation Hamming bound, poison
     flags, near-dup composition)."""
-    import numpy as np
-
     from gdal_drivers_spark.operators.multimodal import phash_images
-    from gdal_drivers_spark.sources.synth import IMAGES_SCHEMA, gen_images_pdf
+    from gdal_drivers_spark.sources.synth import images_df
 
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select("o_orderkey")
-
-    def gen(batches):
-        for pdf in batches:
-            yield gen_images_pdf(pdf["o_orderkey"].to_numpy(np.int64))
-
     # deterministic subset (a bare limit() may pick different rows per
     # evaluation of this twice-referenced subtree) + persist so the
     # image synthesis runs once, not once per join side
-    images = (
-        orders.filter("o_orderkey <= 3000")
-        .repartition(16)
-        .mapInPandas(gen, IMAGES_SCHEMA)
-        .persist()
-    )
+    images = images_df(
+        orders.filter("o_orderkey <= 3000").repartition(16).select(F.col("o_orderkey").alias("id"))
+    ).persist()
     ph = phash_images(images).join(images.select("image_id", "fmt"), "image_id")
     return ph.groupBy("fmt").agg(
         F.count(F.lit(1)).alias("n_images"),
@@ -6686,23 +6192,13 @@ def entry(spark: SparkSession) -> DataFrame:
     per-region rollup. Returns one row per region with decode-verified
     pixel stats."""
     _ship(spark)
-    import pandas as pd
-
     from gdal_drivers_spark.operators.assign import assign_tiles
     from gdal_drivers_spark.operators.decode import decode_stats
-    from gdal_drivers_spark.sources.synth import IMAGES_SCHEMA, gen_images_pdf, region_boundaries
+    from gdal_drivers_spark.sources.synth import images_df, region_boundaries
 
     sf_dir = "/root/testdata/sf0.001"
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select("o_orderkey")
-
-    def gen(batches):
-        import numpy as np
-
-        for pdf in batches:
-            yield gen_images_pdf(pdf["o_orderkey"].to_numpy(np.int64))
-
-    images = orders.mapInPandas(gen, IMAGES_SCHEMA)
-    decoded = decode_stats(images)
+    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    decoded = decode_stats(images_df(orders.select(F.col("o_orderkey").alias("id"))))
     assigned = assign_tiles(decoded, z=Z_ASSIGN)
     bounds = region_boundaries(spark, Z_ASSIGN, 8)
     return (

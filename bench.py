@@ -203,7 +203,7 @@ def run(sf_dir: str, cpus: int) -> dict:
     n_img = 20_000
     img_dir = f"/tmp/bench_images_{n_img}"
     if not os.path.isdir(img_dir):
-        synth.images_df(spark, n_img, partitions=cpus * 2).write.mode(
+        synth.images_df(spark.range(0, n_img, 1, cpus * 2)).write.mode(
             "overwrite"
         ).parquet(img_dir)
     # 1 file per input split (the 64 bench files are ~0.5 MB; default
@@ -230,28 +230,17 @@ def run(sf_dir: str, cpus: int) -> dict:
     n_cells, n_src, ts = 512, 4, 256
     blend_dir = f"/tmp/bench_blend_{n_cells}x{n_src}"
     if not os.path.isdir(blend_dir):
-        import pandas as _pd
-
         from gdal_drivers_spark.core import codecs as _codecs
+        from gdal_drivers_spark.operators._groups import run_batches
         from gdal_drivers_spark.sources.synth import pattern as _pattern
 
-        def _gen(batches):
-            for pdf in batches:
-                rows = []
-                for i in pdf["id"]:
-                    i = int(i)
-                    cell = (6 << 52) + (i // n_src)
-                    img = _pattern(ts, ts, 1, (i * 2654435761) % 256)
-                    rows.append(
-                        (cell, 0, i % n_src, _codecs.encode_raw(img), 0.0, 0.0, 1.0, 1.0)
-                    )
-                yield _pd.DataFrame(
-                    rows,
-                    columns=["cell", "band", "source_id", "tile", "vx0", "vy0", "vx1", "vy1"],
-                )
+        def _gen(g):
+            for i in g["id"]:
+                tile = _codecs.encode_raw(_pattern(ts, ts, 1, (i * 2654435761) % 256))
+                yield (6 << 52) + (i // n_src), 0, i % n_src, tile, 0.0, 0.0, 1.0, 1.0
 
-        spark.range(0, n_cells * n_src, 1, cpus * 2).mapInPandas(
-            _gen,
+        run_batches(
+            spark.range(0, n_cells * n_src, 1, cpus * 2), ["id"], _gen,
             "cell long, band int, source_id long, tile binary, "
             "vx0 double, vy0 double, vx1 double, vy1 double",
         ).write.mode("overwrite").parquet(blend_dir)
@@ -307,25 +296,8 @@ def run(sf_dir: str, cpus: int) -> dict:
     pyr_leaf_dir = f"/tmp/bench_pyr_leaves_{n_grid}x{pts}"
     pyr_lvl_dir = f"/tmp/bench_pyr_levels_{n_grid}x{pts}"
     if not os.path.isdir(pyr_leaf_dir) or not os.path.isdir(f"{pyr_lvl_dir}/3"):
-        import numpy as _np
-        import pandas as _pd
-
-        def _leafgen(batches):
-            for pdf in batches:
-                rows = []
-                for i in pdf["id"]:
-                    i = int(i)
-                    cx, cy = i // n_grid, i % n_grid
-                    gx = _np.arange(pts) + cx * pts
-                    gy = _np.arange(pts) + cy * pts
-                    img = ((gx[None, :] * 3 + gy[:, None] * 5 + 11) % 256).astype(
-                        _np.uint8
-                    )
-                    rows.append(((6 << 52) | (cx << 26) | cy, 0, img.tobytes(), pts))
-                yield _pd.DataFrame(rows, columns=["cell", "band", "tile", "ts"])
-
-        spark.range(0, n_grid * n_grid, 1, cpus * 2).mapInPandas(
-            _leafgen, "cell long, band int, tile binary, ts int"
+        entry_mod._grid_pattern_tiles(
+            spark, 6, n_grid, pts, lambda gx, gy: (gx * 3 + gy * 5 + 11) % 256, shape="pyramid"
         ).write.mode("overwrite").parquet(pyr_leaf_dir)
         lv = build_pyramid(spark.read.parquet(pyr_leaf_dir), 6, 3, agg="mean")
         for z in (5, 4, 3):
@@ -340,17 +312,13 @@ def run(sf_dir: str, cpus: int) -> dict:
     record("pyramid_full_rebuild", dt, dt_min)
 
     import numpy as _np
-    import pandas as _pd
 
     _delta_rows = []
     for i in range(16):
         cx, cy = (i * 7) % n_grid, (i * 13) % n_grid
         img = _np.full((pts, pts), (i * 37) % 256, _np.uint8)
         _delta_rows.append(((6 << 52) | (cx << 26) | cy, 0, img.tobytes(), pts))
-    delta_df = spark.createDataFrame(
-        _pd.DataFrame(_delta_rows, columns=["cell", "band", "tile", "ts"]),
-        schema="cell long, band int, tile binary, ts int",
-    )
+    delta_df = spark.createDataFrame(_delta_rows, schema="cell long, band int, tile binary, ts int")
 
     def _incremental():
         levels = {6: spark.read.parquet(pyr_leaf_dir)}

@@ -4,9 +4,10 @@ The primary table is ``images`` with the exact BASELINE.json input_hint
 shape: (image_id:string, bytes:binary, w:int, h:int, fmt:string,
 caption:string, phash:long). Generation is a pure function of the row
 index, so it is reproducible at any scale and *distributed*: rows are
-produced from ``spark.range(n)`` by one narrow Arrow kernel — each
-partition synthesizes its own slice, nothing funnels through the driver (the way
-a 10^12-row table would actually be materialized on a cluster).
+produced from an id frame (``spark.range(n)``, or a table's keys) by one
+narrow Arrow kernel — each partition synthesizes its own slice, nothing
+funnels through the driver (the way a 10^12-row table would actually be
+materialized on a cluster).
 
 Sidecar fixtures (tile boundaries, quadtree masks, blend sources,
 MVT-style encoded tiles, keyed tile store) mirror the reference data
@@ -78,23 +79,17 @@ def _caption(i: int) -> str:
     return f"caption {i} {_ADJ[i % len(_ADJ)]} {_NOUN[i % len(_NOUN)]}"
 
 
-def _image_rows(ids: np.ndarray, channels: int = 3) -> list:
+def _image_rows(ids: list) -> list:
     """Rows of the images table (``IMAGES_SCHEMA``) for the given row
     indices."""
     rows = []
-    for i, p in zip(ids.tolist(), phash_of(ids).tolist()):
+    for i, p in zip(ids, phash_of(np.array(ids, np.int64)).tolist()):
         w = _SIZES[(p >> 8) % len(_SIZES)]
         h = _SIZES[(p >> 16) % len(_SIZES)]
         fmt = _FMTS[i % len(_FMTS)]
-        img = pattern(w, h, channels, p)
+        img = pattern(w, h, 3, p)
         rows.append((f"img{i:012d}", codecs.ENCODERS[fmt](img), w, h, fmt, _caption(i), p))
     return rows
-
-
-def gen_images_pdf(ids: np.ndarray, channels: int = 3) -> pd.DataFrame:
-    """One pandas batch of the images table for the given row indices."""
-    return pd.DataFrame(_image_rows(ids, channels),
-                        columns=["image_id", "bytes", "w", "h", "fmt", "caption", "phash"])
 
 
 IMAGES_SCHEMA = (
@@ -102,11 +97,12 @@ IMAGES_SCHEMA = (
 )
 
 
-def images_df(spark: SparkSession, n: int, partitions: int | None = None) -> DataFrame:
-    """Distributed images table: spark.range → per-partition synthesis."""
-    parts = partitions or max(8, min(256, n // 2048 or 1))
-    return run_batches(spark.range(0, n, 1, parts), ["id"],
-                       lambda g: _image_rows(np.array(g["id"], np.int64)), IMAGES_SCHEMA)
+def images_df(ids: DataFrame) -> DataFrame:
+    """The images table for the row indices in the long ``id`` column
+    of ``ids``: ``spark.range(0, n, 1, partitions)`` for n rows, or any
+    id frame with its own filters and partitioning. Each partition
+    synthesizes its own rows in one narrow Arrow kernel."""
+    return run_batches(ids, ["id"], lambda g: _image_rows(g["id"]), IMAGES_SCHEMA)
 
 
 def region_boundaries(spark: SparkSession, z: int, region_mod: int) -> DataFrame:

@@ -11,6 +11,12 @@ twin on DuckDB over the same parquet, then compares:
     note even when the numeric values agree — exactly the class of bug
     CORRECTNESS_r01 flagged on 10 queries.
 
+Spark results are read with ``toArrow()`` (no pandas hop, so a long
+column holding a NULL stays ``int64``), and every query's Spark-side
+sha256 is printed, rows-only ones included, so two checkouts can be
+compared query by query. The session is ``get_spark()``'s
+(``SPARK_GRAFT_CPUS`` or the affinity core count, UTC session time zone).
+
 Usage:  python scripts/check_correctness.py [query ...]
 """
 
@@ -20,7 +26,6 @@ import os
 import sys
 
 import duckdb
-import pyarrow as pa
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as entry_mod  # noqa: E402
@@ -57,23 +62,10 @@ def _hash_rows(rows):
 
 
 def main(names):
-    from pyspark.sql import SparkSession
+    from gdal_drivers_spark import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.driver.memory", "8g")
-        .appName("check_correctness")
-        .getOrCreate()
-    )
+    spark = get_spark("check_correctness")
     spark.sparkContext.setLogLevel("ERROR")
-    # ship the package zip so worker-side closures that import package
-    # modules (codecs, synth, …) resolve regardless of the cwd the
-    # checker is launched from — queries whose UDF closures only touch
-    # numpy/pandas pass without this and mask the gap
-    from gdal_drivers_spark import _ship
-
-    _ship(spark)
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
@@ -85,10 +77,12 @@ def main(names):
     for name in targets:
         sdf = qs[name](spark, SF_DIR)
         cols = sorted(sdf.columns)
-        spark_tbl = pa.Table.from_pandas(sdf.toPandas()[cols])
+        spark_tbl = sdf.toArrow().select(cols)
+        sh = _hash_rows([[row[c] for c in cols] for row in spark_tbl.to_pylist()])
+        tail = f"({spark_tbl.num_rows} rows) spark_sha256={sh}"
         sql = oracles.get(name)
         if sql is None:
-            print(f"{name}: rows-only ({spark_tbl.num_rows} rows)")
+            print(f"{name}: rows-only {tail}", flush=True)
             continue
         duck_tbl = con.sql(sql).arrow()
         duck_tbl = duck_tbl.rename_columns([c.lower() for c in duck_tbl.column_names])
@@ -98,7 +92,7 @@ def main(names):
             # column-set mismatch: report FAIL and move on — indexing
             # duck rows by spark names would KeyError and abort the
             # whole gate (review r02)
-            print(f"{name}: FAIL COLS spark={cols} duck={dcols}")
+            print(f"{name}: FAIL COLS spark={cols} duck={dcols} {tail}")
             bad += 1
             continue
         duck_tbl = duck_tbl.select([c.lower() for c in cols])
@@ -107,13 +101,11 @@ def main(names):
                 notes.append(f"TYPE {sc.name}: spark={sc.type} duck={dc.type}")
         if spark_tbl.num_rows != duck_tbl.num_rows:
             notes.append(f"ROWS spark={spark_tbl.num_rows} duck={duck_tbl.num_rows}")
-        sh = _hash_rows(spark_tbl.to_pylist() and [list(r.values()) for r in [
-            {c: row[c] for c in cols} for row in spark_tbl.to_pylist()]])
         dh = _hash_rows([[row[c.lower()] for c in cols] for row in duck_tbl.to_pylist()])
         if sh != dh:
             notes.append("HASH mismatch")
         status = "OK" if not notes else "FAIL " + "; ".join(notes)
-        print(f"{name}: {status} ({spark_tbl.num_rows} rows)")
+        print(f"{name}: {status} {tail}", flush=True)
         if notes:
             bad += 1
     spark.stop()

@@ -10,6 +10,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def spark():
     from gdal_drivers_spark import get_spark
 
-    sp = get_spark("tests", cores=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
+    sp = get_spark("tests")
     sp.sparkContext.setLogLevel("ERROR")
     yield sp

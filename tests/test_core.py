@@ -370,11 +370,23 @@ def test_trafo_tile_to_world():
 
 # --------------------------------------------------------------- synth
 
-def test_images_deterministic_and_decodable():
-    pdf = synth.gen_images_pdf(np.arange(24))
-    pdf2 = synth.gen_images_pdf(np.arange(24))
-    assert pdf.equals(pdf2)
-    for _, r in pdf.iterrows():
+def test_images_deterministic_and_decodable(spark):
+    """An images_df row is a function of its id alone: the same ids give
+    the same rows at 1 and 3 partitions, every 7th id gives the rows a
+    dense range has for those ids, and each payload decodes to its
+    pattern."""
+    from pyspark.sql import functions as F
+
+    def rows(ids):
+        return sorted(synth.images_df(ids).collect())
+
+    assert rows(spark.range(0, 24, 1, 1)) == rows(spark.range(0, 24, 1, 3))
+    sparse = rows(spark.range(0, 24, 1, 3).select((F.col("id") * 7).alias("id")))
+    assert sparse == rows(spark.range(0, 24 * 7, 1, 1).filter(F.col("id") % 7 == 0))
+    assert len(sparse) == 24
+    for r in sparse:
+        i = int(r["image_id"][3:])
+        assert i % 7 == 0 and r["phash"] == int(synth.phash_of(i))
         img = codecs.decode(bytes(r["bytes"]))
         assert img.shape == (r["h"], r["w"], 3)
         ref = synth.pattern(r["w"], r["h"], 3, r["phash"])
@@ -382,7 +394,7 @@ def test_images_deterministic_and_decodable():
             assert (img == ref).all()
         else:
             assert codecs.psnr(ref, img) >= 40.0
-        assert r["caption"].startswith(f"caption {int(r['image_id'][3:])}")
+        assert r["caption"].startswith(f"caption {i} ")
 
 
 def test_footprints_in_world():

@@ -22,7 +22,7 @@ def _assignments(spark):
     """The pipeline's assignments, and an Observation counting the
     synthesized images that enter it."""
     images, seen = observed(
-        synth.images_df(spark, N_IMAGES, partitions=8), "image_id", name="images"
+        synth.images_df(spark.range(0, N_IMAGES, 1, 8)), "image_id", name="images"
     )
     decoded = decode_stats(images)
     assigned = assign_tiles(decoded.filter("dec_ok"), z=Z)

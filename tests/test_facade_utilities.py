@@ -32,7 +32,7 @@ def _tiles(spark, col):
 
 
 def test_imageset_utility_verbs(spark):
-    imgs = synth.images_df(spark, 24)
+    imgs = synth.images_df(spark.range(0, 24, 1, 8))
     assert equalize_images(imgs).filter("ok").count() == 24
     assert scale_images(imgs, dst=(10, 200)).filter("ok").count() == 24
     pal = build_palette_median_cut(imgs)  # median-cut over this corpus

@@ -25,12 +25,11 @@ from gdal_drivers_spark.sources import synth
 
 
 def test_resize_images(spark):
-    pdf = synth.gen_images_pdf(np.arange(12))
-    df = spark.createDataFrame(pdf)
+    df = synth.images_df(spark.range(0, 12, 1, 2))
     out = resize_images(df, 32, 32).collect()
     assert len(out) == 12
     by_id = {r["image_id"]: r for r in out}
-    for r in pdf.itertuples():
+    for r in df.collect():
         got = codecs.decode(bytes(by_id[r.image_id]["bytes"]))
         src = codecs.decode(bytes(r.bytes))
         exp = nn_resize(src, 32, 32)

@@ -37,19 +37,32 @@ def _package_hits(pattern: str, skip: tuple = ()) -> list:
     return hits
 
 
+def _kernel_hits(pattern: str) -> list:
+    """``_package_hits`` plus the same scan of the two scripts that run
+    Python kernels outside the package: the contract harness and
+    ``bench.py``."""
+    hits = _package_hits(pattern)
+    for f in ("__spark_entry__.py", "bench.py"):
+        for i, line in enumerate(open(os.path.join(REPO, f), encoding="utf-8"), 1):
+            if re.search(pattern, line):
+                hits.append(f"{f}:{i}")
+    return hits
+
+
 def test_no_pandas_grouped_map_left():
     """Grouped kernels run one way: no ``applyInPandas(`` anywhere in
-    the package (``applyInPandasWithState`` is the streaming state API,
-    a different operator)."""
-    assert _package_hits(r"applyInPandas\(") == []
+    the package, the contract harness or ``bench.py``
+    (``applyInPandasWithState`` is the streaming state API, a different
+    operator)."""
+    assert _kernel_hits(r"applyInPandas\(") == []
 
 
 def test_no_pandas_row_kernels_left():
     """Per-row kernels cross as Arrow: no ``mapInPandas(`` or
-    ``pandas_udf(`` anywhere in the package (``run_batches``,
-    ``row_udf`` or ``F.arrow_udf`` instead), so no batch can widen a
-    nullable int64 to float64."""
-    assert _package_hits(r"mapInPandas\(|pandas_udf\(") == []
+    ``pandas_udf(`` anywhere in the package, the contract harness or
+    ``bench.py`` (``run_batches``, ``row_udf`` or ``F.arrow_udf``
+    instead), so no batch can widen a nullable int64 to float64."""
+    assert _kernel_hits(r"mapInPandas\(|pandas_udf\(") == []
 
 
 def test_cell_layout_lives_in_qcell():

@@ -28,7 +28,7 @@ def _stream_files(spark, images, stream_dir, n_files=4):
 
 
 def test_stream_kill_restart_is_exactly_once_and_byte_identical(spark, tmp_path):
-    images = synth.images_df(spark, 160, partitions=4)
+    images = synth.images_df(spark.range(0, 160, 1, 4))
     stream_dir = str(tmp_path / "imgs")
     _stream_files(spark, images, stream_dir, n_files=4)
 
@@ -97,7 +97,7 @@ def test_stream_identity_guard_refuses_new_checkpoint_lineage(spark, tmp_path):
     FAST when a different id targets a manifest with committed
     batches; re-running under the ORIGINAL checkpoint still resumes
     cleanly."""
-    images = synth.images_df(spark, 80, partitions=2)
+    images = synth.images_df(spark.range(0, 80, 1, 2))
     stream_dir = str(tmp_path / "imgs")
     _stream_files(spark, images, stream_dir, n_files=2)
     out = str(tmp_path / "out")
@@ -134,7 +134,7 @@ def test_stream_compaction_preserves_validate_and_resume(spark, tmp_path):
     after compaction commit as new epochs on top of the compacted
     layout, and validate() stays green across the mixed
     compacted/uncompacted batches."""
-    images = synth.images_df(spark, 160, partitions=4)
+    images = synth.images_df(spark.range(0, 160, 1, 4))
     stream_dir = str(tmp_path / "imgs")
     _stream_files(spark, images, stream_dir, n_files=4)
     out = str(tmp_path / "out")
@@ -170,7 +170,7 @@ def test_stream_compaction_preserves_validate_and_resume(spark, tmp_path):
     assert w.validate("image_id")
 
     # new arrivals post-compaction commit as fresh epochs
-    more = synth.images_df(spark, 80, partitions=2)
+    more = synth.images_df(spark.range(0, 80, 1, 2))
     tmp = tempfile.mkdtemp()
     more.coalesce(2).write.mode("overwrite").parquet(tmp + "/d")
     for i, part in enumerate(sorted(glob.glob(tmp + "/d/part-*.parquet"))):
@@ -197,7 +197,7 @@ def test_stream_identity_guard_refuses_unverifiable_manifest(spark, tmp_path):
     KNOW the lineage is unchanged; doing so resumes cleanly."""
     from gdal_drivers_spark.streaming.checkpointed import _stream_query_id
 
-    images = synth.images_df(spark, 80, partitions=2)
+    images = synth.images_df(spark.range(0, 80, 1, 2))
     stream_dir = str(tmp_path / "imgs")
     _stream_files(spark, images, stream_dir, n_files=2)
     out = str(tmp_path / "out")
@@ -219,7 +219,7 @@ def test_stream_identity_guard_refuses_unverifiable_manifest(spark, tmp_path):
     # a new file arrives so the resume actually presents an epoch —
     # the guard runs on the first epoch of a run (a batchless no-op
     # resume has nothing to lose and nothing to check)
-    more = synth.images_df(spark, 40, partitions=1)
+    more = synth.images_df(spark.range(0, 40, 1, 1))
     tmp2 = str(tmp_path / "more")
     more.coalesce(1).write.parquet(tmp2)
     shutil.copy(sorted(glob.glob(tmp2 + "/part-*.parquet"))[0],

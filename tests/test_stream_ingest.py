@@ -13,7 +13,7 @@ from gdal_drivers_spark.streaming.ingest import assign_images_stream, read_image
 
 
 def test_stream_assignment_equals_batch(spark, tmp_path):
-    images = synth.images_df(spark, 200, partitions=4)
+    images = synth.images_df(spark.range(0, 200, 1, 4))
     # batch truth
     batch = assign_tiles(decode_stats(images).filter("dec_ok"), z=6)
     expected = sorted((r["image_id"], r["cell"]) for r in batch.select("image_id", "cell").collect())

@@ -193,7 +193,7 @@ def test_engine_fluent_pipeline(spark):
     from gdal_drivers_spark.operators.assign import assign_tiles
     from gdal_drivers_spark.plans.skew import cell_census
 
-    assigned = assign_tiles(synth.images_df(spark, 64), z=5)
+    assigned = assign_tiles(synth.images_df(spark.range(0, 64, 1, 8)), z=5)
     census = cell_census(assigned).collect()
     assert sum(r["count"] for r in census) == assigned.count()
     ini = to_ini({"z": 5, "bands": [1, 2]})
@@ -205,7 +205,7 @@ def test_engine_image_pipeline_ops(spark):
     from gdal_drivers_spark.operators.dedup import phash_near_dup
     from gdal_drivers_spark.operators.multimodal import image_features, resize_images
 
-    imgs = synth.images_df(spark, 32)
+    imgs = synth.images_df(spark.range(0, 32, 1, 8))
     feats = image_features(imgs, bins=16).collect()
     assert len(feats) == 32
     # histogram mass = pixels × channels (feat is channel-concatenated)
