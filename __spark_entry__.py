@@ -1280,8 +1280,8 @@ def q_warp_lanczos(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _written_masks(spark: SparkSession, sf_dir: str, write) -> DataFrame:
     """(mask_id, buf): five per-mask level-4 quad sets derived from the
-    part table, each serialized on executors by ``write(quads)`` (a
-    pandas quads table → mask bytes)."""
+    part table, each serialized on executors by ``write(quads)`` (an
+    iterable of ``(level, qx, qy, value)`` rows → mask bytes)."""
     p = spark.read.parquet(f"{sf_dir}/part.parquet")
     h = (F.col("p_partkey") * F.lit(2654435761)) % F.lit(256)
     quads = (
@@ -1299,8 +1299,9 @@ def _written_masks(spark: SparkSession, sf_dir: str, write) -> DataFrame:
         )
     )
 
-    return run_grouped(quads, ["mask_id"], ["level", "qx", "qy", "value"],
-                       lambda key, g: [(key[0], write(pd.DataFrame(g)))],
+    cols = ["level", "qx", "qy", "value"]
+    return run_grouped(quads, ["mask_id"], cols,
+                       lambda key, g: [(key[0], write(zip(*(g[c] for c in cols))))],
                        "mask_id long, buf binary")
 
 
@@ -1315,7 +1316,7 @@ def q_maskfile_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         for mask_id, buf in zip(g["mask_id"], g["buf"]):
             assert maskfile.probe(buf)
             q, depth, _ext, _srs = maskfile.read_mask(buf)
-            yield mask_id, depth, len(q), int((q["value"] == "white").sum())
+            yield mask_id, depth, len(q["value"]), int((q["value"] == "white").sum())
 
     masks = _written_masks(
         spark, sf_dir, lambda q: maskfile.write_mask(q, depth=4, extents=(0.0, 0.0, 1.0, 1.0))
@@ -1337,7 +1338,8 @@ def q_maskfile_gdalqm(spark: SparkSession, sf_dir: str) -> DataFrame:
         for mask_id, buf in zip(g["mask_id"], g["buf"]):
             assert buf[:6] == b"GDALQM" and maskfile.probe(buf)
             q, depth, ext, srs = maskfile.read_mask(buf)
-            yield mask_id, depth, len(q), int((q["value"] == "white").sum()), srs, float(ext[2])
+            v = q["value"]
+            yield mask_id, depth, len(v), int((v == "white").sum()), srs, float(ext[2])
 
     masks = _written_masks(spark, sf_dir, lambda q: maskfile.write_mask(
         q, depth=4, extents=(0.0, 0.0, 1.0, 1.0), srs='LOCAL_CS["qm"]', wire="gdalqm",
@@ -2373,7 +2375,7 @@ def q_ann_index_reuse(spark: SparkSession, sf_dir: str) -> DataFrame:
     must equal the inline-assignment path exactly, which is what the
     oracle replays (same SQL as ann_ivf, two query windows)."""
     from gdal_drivers_spark.operators.similarity import (
-        ivf_assign, ivf_topk, read_ivf_index, write_ivf_index,
+        ivf_assign, ivf_topk, write_ivf_index,
     )
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
@@ -2402,7 +2404,7 @@ def q_ann_index_reuse(spark: SparkSession, sf_dir: str) -> DataFrame:
         path=f"/tmp/{table}",
         buckets=8,
     )
-    lists = read_ivf_index(spark, table)
+    lists = spark.table(table)
     out = []
     for batch, (lo, hi) in enumerate(((0, 10), (10, 20)), start=1):
         qs = emb.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < hi)).select(
@@ -2471,8 +2473,7 @@ def q_ann_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     full-corpus build bit-exactly, which is what the oracle replays
     (inline IVF over the whole corpus — base ∪ delta IS the corpus)."""
     from gdal_drivers_spark.operators.similarity import (
-        append_to_ivf_index, ivf_assign, ivf_topk, read_ivf_index,
-        write_ivf_index,
+        append_to_ivf_index, ivf_assign, ivf_topk, write_ivf_index,
     )
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
@@ -2498,7 +2499,7 @@ def q_ann_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
     return ivf_topk(qs, None, cents, k=5, nprobe=2,
-                    lists=read_ivf_index(spark, table))
+                    lists=spark.table(table))
 
 
 _ANN_INDEX_APPEND_ORACLE_SQL = """

@@ -30,12 +30,11 @@ from __future__ import annotations
 import struct
 
 import numpy as np
-import pandas as pd
 
 MAGIC = b"GQM1"
 MAGIC_REF = b"GDALQM"  # mask.cpp:56
 _VAL_CODE = {"black": 0, "white": 1, "gray": 2}
-_CODE_VAL = {v: k for k, v in _VAL_CODE.items()}
+_CODE_VAL = np.array(list(_VAL_CODE))  # code → name
 
 
 def square_up(x0: float, y0: float, x1: float, y1: float, depth: int):
@@ -47,15 +46,20 @@ def square_up(x0: float, y0: float, x1: float, y1: float, depth: int):
 
 
 def write_mask(
-    quads: pd.DataFrame,
+    quads,
     depth: int,
     extents: tuple[float, float, float, float],
     srs: str = "LOCAL_CS[\"unit\"]",
     wire: str = "gqm1",
 ) -> bytes:
-    """Serialize a quads table (level, qx, qy, value) to the mask
-    format. ``wire="gdalqm"`` emits the reference's header layout
-    (6-byte ``GDALQM`` magic + 2×u8 reserved, mask.cpp:274-277)."""
+    """Serialize an iterable of ``(level, qx, qy, value)`` quad rows
+    (``value`` one of ``black``/``white``/``gray``) to the mask format.
+    ``wire="gdalqm"`` emits the reference's header layout (6-byte
+    ``GDALQM`` magic + 2×u8 reserved, mask.cpp:274-277)."""
+    recs = [
+        struct.pack("<BIIB", int(level), int(qx), int(qy), _VAL_CODE[value])
+        for level, qx, qy, value in quads
+    ]
     x0, y0, x1, y1 = square_up(*extents, depth)
     wkt = srs.encode()
     out = [
@@ -64,11 +68,9 @@ def write_mask(
         struct.pack("<I", len(wkt)),
         wkt,
         struct.pack("<4d", x0, y0, x1, y1),
-        struct.pack("<BI", depth, len(quads)),
+        struct.pack("<BI", depth, len(recs)),
     ]
-    for r in quads.itertuples():
-        out.append(struct.pack("<BIIB", int(r.level), int(r.qx), int(r.qy), _VAL_CODE[r.value]))
-    return b"".join(out)
+    return b"".join(out + recs)
 
 
 def probe(buf: bytes) -> bool:
@@ -78,7 +80,9 @@ def probe(buf: bytes) -> bool:
 
 
 def read_mask(buf: bytes):
-    """Parse → (quads pandas DataFrame, depth, extents, srs)."""
+    """Parse → (quads, depth, extents, srs). ``quads`` maps each column
+    (``level``, ``qx``, ``qy``, ``size``: int64; ``value``: str) to a
+    numpy array, one element per stored quad."""
     if buf[:6] == MAGIC_REF:
         pos = 8  # 6-byte magic + 2 reserved (mask.cpp:130-143)
     elif buf[:4] == MAGIC:
@@ -98,13 +102,11 @@ def read_mask(buf: bytes):
     qx = rec[:, 1:5].copy().view(np.uint32).ravel().astype(np.int64)
     qy = rec[:, 5:9].copy().view(np.uint32).ravel().astype(np.int64)
     val = rec[:, 9]
-    quads = pd.DataFrame(
-        {
-            "level": level,
-            "qx": qx,
-            "qy": qy,
-            "size": np.int64(1) << (np.int64(depth) - level),
-            "value": [_CODE_VAL[int(v)] for v in val],
-        }
-    )
+    quads = {
+        "level": level,
+        "qx": qx,
+        "qy": qy,
+        "size": np.int64(1) << (np.int64(depth) - level),
+        "value": _CODE_VAL[val],
+    }
     return quads, int(depth), tuple(extents), srs

@@ -337,6 +337,10 @@ def connected_components(
     guard as operators/knn.py); the driver loop stops on the exact
     fixed point (changed == 0), with ``max_iter`` as the certified
     bound for adversarial chains.
+
+    The edge list and every round's labels are ``localCheckpoint``ed
+    (eager jobs). Their blocks live only on executors: losing an
+    executor fails the job, with no lineage to recompute them from.
     """
     spark = edges.sparkSession
     # undirected: both directions, plus self-loops so isolated label

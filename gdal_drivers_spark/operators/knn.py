@@ -43,6 +43,10 @@ def knn_join(
     evenly). Returns (qid, pid, dist2, rank) with rank 1..k by
     (dist2, pid) — deterministic total order, matching a brute-force
     SQL oracle row-for-row.
+
+    Each ring's top-k and pending queries are ``localCheckpoint``ed.
+    Their blocks live only on executors: losing an executor fails the
+    job, with no lineage to recompute them from.
     """
     n = 1 << z
     side = coord_span // n

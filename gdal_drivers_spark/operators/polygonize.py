@@ -105,7 +105,12 @@ def _polygonize_parts(
     ``adjacency=True`` the Arrow hop also emits kind-2 rows — in-tile
     boundary counts between DIFFERENT local components, with the
     ``pair_key`` column carrying the second node id — for sieve's
-    largest-neighbor rule."""
+    largest-neighbor rule.
+
+    The raw frame is ``localCheckpoint``ed, for ``polygonize``,
+    ``sieve`` and ``sieve_apply`` alike. Its blocks live only on
+    executors: losing an executor fails the job, with no lineage to
+    recompute them from."""
     t = int(tile_px)
     gw, gh = int(grid_wh[0]), int(grid_wh[1])
     ox, oy = int(grid_origin[0]), int(grid_origin[1])

@@ -15,8 +15,8 @@ are no join-shape flags. The paths, all standard at scale:
 
 - **sign-LSH bucketed** (the scale path): random-hyperplane sign bits
   (here: deterministic pseudo-hyperplanes from fixed integer seeds —
-  no runtime RNG) bucket the corpus; queries probe their own bucket ±
-  multiprobe flips. Approximate: recall measured against brute force
+  no runtime RNG) bucket the corpus; queries probe their own bucket
+  in every table. Approximate: recall measured against brute force
   in tests, not hash-matched against an oracle. Two shapes, two
   functions: ``lsh_topk`` serves a small query batch (queries
   broadcast), ``knn_graph`` builds the corpus self-kNN graph (ids-only
@@ -242,23 +242,12 @@ def _by_table(base: DataFrame, *keep: str) -> DataFrame:
     return base.select(*keep, F.posexplode("_bs").alias("_t", "_b"))
 
 
-def _multiprobe(side: DataFrame, n_planes: int) -> DataFrame:
-    """Radius-1 multiprobe: every (``_t``, ``_b``) row also probes the
-    ``n_planes`` buckets one sign flip away."""
-    flips = [F.col("_b").bitwiseXOR(F.lit(1 << i)).cast("long") for i in range(n_planes)]
-    return side.select(
-        *[c for c in side.columns if c != "_b"],
-        F.explode(F.array(F.col("_b"), *flips)).alias("_b"),
-    )
-
-
 def lsh_topk(
     queries: DataFrame,
     corpus: DataFrame,
     dim: int,
     k: int = 5,
     n_planes: int = 8,
-    probe_bits: int = 0,
     n_tables: int = 4,
 ) -> DataFrame:
     """Approximate top-k serving: score only same-bucket candidates.
@@ -269,22 +258,16 @@ def lsh_topk(
     rollup. For queries == corpus use ``knn_graph``, whose broadcast
     side would otherwise be the whole ×n_tables exploded corpus.
 
-    Two standard recall levers, composable:
-    - ``n_tables`` (OR-amplification, the default lever): L
-      independent plane sets; the candidate set is the union of
-      same-bucket matches over tables. Cost: the corpus index is L×
-      (each vector appears in L (table, bucket) rows), recall
-      1-(1-p^b)^L. Measured on the sf0.01 embeddings fixture:
-      recall@5 = 0.42 / 0.62 / 0.88 / 0.90 at L = 1/2/4/8.
-    - ``probe_bits=1``: radius-1 multiprobe within each table (also
-      probe the n_planes buckets one sign-flip away) — cheaper than
-      more tables (no corpus blow-up), weaker per unit of extra
-      candidates."""
+    The recall lever is ``n_tables`` (OR-amplification): L independent
+    plane sets; a query probes its own bucket in each, and the
+    candidate set is the union of same-bucket matches over tables.
+    Cost: the corpus index is L× (each vector appears in L (table,
+    bucket) rows), recall 1-(1-p^b)^L. Measured on the sf0.01
+    embeddings fixture: recall@5 = 0.42 / 0.62 / 0.88 / 0.90 at
+    L = 1/2/4/8."""
     n_tables = max(1, n_tables)
     buckets_udf = _lsh_buckets_udf(dim, n_planes, n_tables)
     q = _by_table(_lsh_base(queries, "qid", "qvec", "_qid", "_qv", buckets_udf), "_qid", "_qv")
-    if probe_bits >= 1:
-        q = _multiprobe(q, n_planes)
     c = _by_table(_lsh_base(corpus, "cid", "cvec", "_cid", "_cv", buckets_udf), "_cid", "_cv")
     scored = c.join(F.broadcast(q), ["_t", "_b"]).select(
         "_qid", "_cid", dot_int(F.col("_qv"), F.col("_cv")).alias("dot_q")
@@ -301,7 +284,6 @@ def knn_graph(
     k: int = 5,
     n_planes: int = 8,
     n_tables: int = 4,
-    probe_bits: int = 0,
 ) -> DataFrame:
     """Corpus self-kNN via LSH — the kNN-GRAPH construction shape
     (dedup graphs, clustering seeds): queries = corpus, so NEITHER
@@ -337,8 +319,6 @@ def knn_graph(
     ).localCheckpoint(eager=True)
     c = _by_table(base, "_cid")
     q = c.select(F.col("_cid").alias("_qid"), "_t", "_b")
-    if probe_bits >= 1:
-        q = _multiprobe(q, n_planes)
     pairs = (
         c.join(q, ["_t", "_b"])
         .select("_qid", "_cid")
@@ -376,7 +356,11 @@ def ivf_train(
     Cost per round at scale: one broadcast-join pass over the corpus +
     one groupBy(list) of dim-component partial sums — both map-side
     combined; nothing quadratic, nothing driver-side except the
-    n_lists×dim centroid table itself."""
+    n_lists×dim centroid table itself.
+
+    Each round's centroids are ``localCheckpoint``ed (an eager job).
+    Their blocks live only on executors: losing an executor fails the
+    job, with no lineage to recompute them from."""
     spread = _spread_key()
     init = (
         corpus.select(
@@ -508,69 +492,23 @@ def ivf_assign(
     )
 
 
-_UNSET = object()  # "no cached residual flag" sentinel (None is a valid flag)
-
-
-def _residual_flag(encoded: DataFrame) -> bool | None:
-    """Homogeneous ``_residual`` flag of an encoded index, validated
-    with ONE aggregate (min == max), not a sampled ``.first()`` — a
-    heterogeneous index (a union or append mixing residual=True/False
-    partitions) is REFUSED instead of silently mis-ranking (ADVICE
-    r04). Returns None when the column is absent or the frame empty."""
-    if "_residual" not in encoded.columns:
-        return None
-    row = encoded.agg(
-        F.min("_residual").alias("lo"), F.max("_residual").alias("hi")
-    ).first()
-    if row["lo"] is None:
-        return None
-    if bool(row["lo"]) != bool(row["hi"]):
-        raise ValueError(
-            "encoded index mixes residual=True and residual=False rows "
-            "(union/append of incompatible indexes) — rebuild or re-encode "
-            "one side before serving"
-        )
-    return bool(row["lo"])
-
-
 def write_ivf_index(
     lists: DataFrame, table: str, path: str, buckets: int = 16
 ) -> None:
     """Persist a built IVF index (the ``ivf_assign`` output — or the
     ``ivfpq_encode`` output for PQ codes) as a parquet table BUCKETED
     by ``list_id``: the index-build half of the serving path. Query
-    batches then run against ``read_ivf_index`` and never re-scan or
-    re-quantize the corpus (VERDICT r03 #1 — at 10¹² vectors the
+    batches then run against ``spark.table(table)`` and never re-scan
+    or re-quantize the corpus (VERDICT r03 #1 — at 10¹² vectors the
     repeated assignment pass was the dominant avoidable serving cost);
     bucketing clusters each inverted list's rows so a probe touches a
-    bounded file set. Delegates to the engine's layout contract
-    (``plans/layout.write_bucketed``).
-
-    ``_residual`` homogeneity is validated ONCE here (aggregate, not a
-    sampled row) and recorded as the ``gds.residual`` table property,
-    so readers and appends can check compatibility from metadata. The
-    validation runs AFTER the write, over the just-written table — one
-    scan of a single RLE boolean column — not over the input frame:
-    pre-write validation would execute the whole upstream encode DAG
-    twice (once for the aggregate, once for the write), doubling the
-    dominant cost of an index build. A mixed-flag input is still
-    refused — the half-written table is dropped before the raise."""
-    import shutil
-
+    bounded file set. ``spark.read.parquet(path)`` reads the same rows
+    without the catalog, but carries no bucket metadata, so joins
+    against it shuffle instead of pruning buckets. Delegates to the
+    engine's layout contract (``plans/layout.write_bucketed``)."""
     from gdal_drivers_spark.plans.layout import write_bucketed
 
-    spark = lists.sparkSession
     write_bucketed(lists, table, path, buckets, key="list_id")
-    try:
-        flag = _residual_flag(spark.table(table))
-    except ValueError:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        shutil.rmtree(path, ignore_errors=True)
-        raise
-    if flag is not None:
-        spark.sql(
-            f"ALTER TABLE {table} SET TBLPROPERTIES ('gds.residual'='{str(flag).lower()}')"
-        )
 
 
 def append_to_ivf_index(delta: DataFrame, table: str) -> None:
@@ -578,48 +516,17 @@ def append_to_ivf_index(delta: DataFrame, table: str) -> None:
     ingests continuously — assign/encode ONLY the new vectors
     (``ivf_assign``/``ivfpq_encode`` over the delta) and append the
     result to the persisted bucketed layout; serving then reads the
-    union via ``read_ivf_index`` with no rebuild. The write touches
+    union via ``spark.table(table)`` with no rebuild. The write touches
     delta-sized data only (the base index is never re-scanned —
     plan-asserted in tests); Spark validates the bucket spec against
     the existing table, so appended files land in the same
-    ``list_id`` buckets the probes prune by.
-
-    Residual compatibility is enforced from metadata: a delta whose
-    ``_residual`` flag (aggregate-validated) differs from the table's
-    ``gds.residual`` property is refused — the mixed index would
-    mis-rank silently (ADVICE r04)."""
+    ``list_id`` buckets the probes prune by."""
     spark = delta.sparkSession
     info = {
         r["col_name"]: r["data_type"]
         for r in spark.sql(f"DESCRIBE TABLE EXTENDED {table}").collect()
     }
     buckets = int(info.get("Num Buckets", "16"))
-    props = {
-        r["key"]: r["value"]
-        for r in spark.sql(f"SHOW TBLPROPERTIES {table}").collect()
-    }
-    base_flag = props.get("gds.residual")
-    delta_flag = _residual_flag(delta)
-    if base_flag is None and delta_flag is not None:
-        # pre-property table (or the ALTER was lost mid-session):
-        # silently skipping the check here would let an incompatible
-        # delta append cleanly and mis-rank at serve time — derive the
-        # flag from the table's own column (one scan of an RLE boolean)
-        # and BACKFILL the property so the next append reads metadata
-        derived = _residual_flag(spark.table(table))
-        if derived is not None:
-            base_flag = str(derived).lower()
-            spark.sql(
-                f"ALTER TABLE {table} SET TBLPROPERTIES "
-                f"('gds.residual'='{base_flag}')"
-            )
-    if base_flag is not None and delta_flag is not None:
-        if (base_flag == "true") != delta_flag:
-            raise ValueError(
-                f"delta encoded with residual={delta_flag} but index table "
-                f"{table} holds residual={base_flag} codes — re-encode the "
-                "delta with the table's decomposition"
-            )
     (
         delta.write.mode("append")
         .bucketBy(buckets, "list_id")
@@ -651,41 +558,6 @@ def index_stats(lists: DataFrame) -> DataFrame:
             F.expr("n_vectors * 1000000L div _tot").alias("ppm"),
         )
     )
-
-
-def read_ivf_index(spark, table: str | None = None, path: str | None = None) -> DataFrame:
-    """Read back a persisted IVF index for the ``lists=``/``encoded=``
-    query-time arguments of ``ivf_topk``/``ivfpq_topk``.
-
-    ``table`` resolves through the session catalog (bucketing metadata
-    preserved — probes prune by ``list_id`` bucket). ``path`` reads
-    the parquet directly, bypassing the shared catalog/warehouse — the
-    catalog-free alternative for concurrent sessions that must not
-    race on a table name (VERDICT r04 "wrong" #4); the trade-off is
-    that a path read carries no bucket metadata, so joins against it
-    shuffle instead of pruning buckets.
-
-    The index's residual flag is resolved HERE, once per read — from
-    the ``gds.residual`` table property (one catalog RPC, no job) when
-    reading a table, else one aggregate over the boolean column — and
-    cached on the returned frame, so ``ivfpq_topk``'s residual check
-    costs a hot serving loop nothing (the pre-r05 behavior re-scanned
-    the whole index every call)."""
-    if (table is None) == (path is None):
-        raise ValueError("read_ivf_index takes exactly one of table= or path=")
-    df = spark.table(table) if table is not None else spark.read.parquet(path)
-    flag = None
-    if table is not None:
-        props = {
-            r["key"]: r["value"]
-            for r in spark.sql(f"SHOW TBLPROPERTIES {table}").collect()
-        }
-        if "gds.residual" in props:
-            flag = props["gds.residual"] == "true"
-    if flag is None:
-        flag = _residual_flag(df)
-    df._gds_residual_flag = flag
-    return df
 
 
 def _probe_lists(queries: DataFrame, centroids: DataFrame, nprobe: int) -> DataFrame:
@@ -721,9 +593,9 @@ def ivf_topk(
 
     INDEX LIFECYCLE (VERDICT r03 #1): pass ``lists=`` (an
     ``ivf_assign`` result, typically persisted via ``write_ivf_index``
-    and read back) to serve repeated query batches without re-scanning
-    the corpus — ``corpus`` may then be None. The convenience default
-    (lists=None) assigns in-line.
+    and read back with ``spark.table``) to serve repeated query batches
+    without re-scanning the corpus — ``corpus`` may then be None. The
+    convenience default (lists=None) assigns in-line.
 
     The probe frame — |Q|·nprobe rows carrying one quantized query
     vector each — is broadcast, the serving shape: the lists side is
@@ -1009,7 +881,6 @@ def ivfpq_encode(
     m: int,
     cid: str = "cid",
     cvec: str = "cvec",
-    residual: bool = True,
 ) -> DataFrame:
     """IVF-PQ index build: assign every corpus vector to its inverted
     list (``ivf_assign`` — one broadcast pass, one shuffled row per
@@ -1017,29 +888,18 @@ def ivfpq_encode(
     Output: (cid, list_id, codes) — the persistable index frame
     (``write_ivf_index``) that ``ivfpq_topk`` serves from.
 
-    ``residual=True`` (the default, and the standard IVF-ADC design —
-    Jégou et al. 2011 §III) encodes x − centroid(list) instead of raw
-    x: the quantizer spends its 2^bits on within-list variance, which
-    materially improves recall at equal m (VERDICT r03 #2; measured in
-    test_pipeline_ops on a clustered 5k fixture). The centroid is
+    The codes quantize the residual x − centroid(list), not raw x (the
+    standard IVF-ADC design, Jégou et al. 2011 §III): the quantizer
+    spends its 2^bits on within-list variance, which materially
+    improves recall over flat PQ at equal m (VERDICT r03 #2; measured
+    in test_pipeline_ops on a clustered 5k fixture). The centroid is
     re-joined broadcast (tiny), so the encode still adds no shuffle
     beyond the assignment's one row per vector. ``codewords`` must
-    then quantize residuals (``ivfpq_codewords_from_sample``)."""
+    quantize residuals (``ivfpq_codewords_from_sample`` or
+    ``ivfpq_train``)."""
     codes_udf = _pq_codes_udf(codewords, m)
-    # the `_residual` literal rides along (constant-folded, RLE'd on
-    # disk) so a PERSISTED index remembers which scoring decomposition
-    # its codes expect — ivfpq_topk(encoded=...) refuses a mismatch
-    # instead of silently mis-ranking (r04 review)
-    if not residual:
-        return ivf_assign(corpus, centroids, cid=cid, cvec=cvec).select(
-            F.col(cid), "list_id",
-            codes_udf(F.col("_cv")).alias("codes"),
-            F.lit(False).alias("_residual"),
-        )
     return _residual_frame(corpus, centroids, cid, cvec).select(
-        F.col(cid), "list_id",
-        codes_udf(F.col("_r")).alias("codes"),
-        F.lit(True).alias("_residual"),
+        F.col(cid), "list_id", codes_udf(F.col("_r")).alias("codes"),
     )
 
 
@@ -1072,7 +932,6 @@ def ivfpq_topk(
     k: int = 5,
     nprobe: int = 2,
     encoded: DataFrame | None = None,
-    residual: bool = True,
 ) -> DataFrame:
     """IVF-PQ — the standard composition at 10^12 vectors (Jégou et
     al. 2011): inverted-list probe reduction (IVF) × memory/arithmetic
@@ -1080,19 +939,17 @@ def ivfpq_topk(
     ADC-scores ONLY those lists' codes — m table lookups per candidate
     instead of a dim-length dot, over codes instead of vectors.
 
-    RESIDUAL scoring (default, Jégou §III): codes quantize
-    x − centroid, so the score decomposes exactly as
+    RESIDUAL scoring (Jégou §III): codes quantize x − centroid, so the
+    score decomposes exactly as
     ``dot(q, x) ≈ dot(q, centroid) + ADC(q, residual codes)`` — the
     per-list offset ``dot(q, centroid)`` is already computed by the
     probe ranking, so residual costs nothing extra at query time.
 
     INDEX LIFECYCLE (VERDICT r03 #1): pass ``encoded=`` (an
-    ``ivfpq_encode`` result — same ``residual`` flag! — typically
-    persisted via ``write_ivf_index``) to serve repeated query batches
-    without re-scanning or re-quantizing the corpus; ``corpus`` may
-    then be None. The flag compatibility of a passed index is
-    aggregate-validated (min==max of ``_residual`` — a heterogeneous
-    union/append is refused, ADVICE r04).
+    ``ivfpq_encode`` result, typically persisted via
+    ``write_ivf_index`` and read back with ``spark.table``) to serve
+    repeated query batches without re-scanning or re-quantizing the
+    corpus; ``corpus`` may then be None.
 
     The probe frame (|Q|·nprobe rows, each carrying its m×ncodes ADC
     tables) is broadcast, as in ``ivf_topk``.
@@ -1105,38 +962,18 @@ def ivfpq_topk(
             raise ValueError(
                 "ivfpq_topk needs either corpus or a prebuilt encoded index"
             )
-        encoded = ivfpq_encode(corpus, centroids, codewords, m, residual=residual)
+        encoded = ivfpq_encode(corpus, centroids, codewords, m)
     else:
         missing = {"cid", "list_id", "codes"} - set(encoded.columns)
         if missing:
             raise ValueError(f"prebuilt encoded index lacks columns {sorted(missing)}")
-        # refuse an index whose codes were built under the OTHER
-        # scoring decomposition — the mismatch would mis-rank
-        # silently (raw codes + centroid offset, or vice versa).
-        # Aggregate-validated: a mixed-flag union/append raises
-        # inside _residual_flag (ADVICE r04 — the old sampled
-        # .first() let heterogeneous indexes through). The flag
-        # resolved by read_ivf_index (table property — no job) is
-        # honored when present, and an aggregate result is cached
-        # on the frame, so a serving loop reusing one index frame
-        # pays at most one validation job, not one per call.
-        flag = getattr(encoded, "_gds_residual_flag", _UNSET)
-        if flag is _UNSET:
-            flag = _residual_flag(encoded)
-            encoded._gds_residual_flag = flag
-        if flag is not None and flag != residual:
-            raise ValueError(
-                f"encoded index was built with residual={flag} but "
-                f"ivfpq_topk was called with residual={residual}"
-            )
     probes = _probe_lists(queries, centroids, nprobe).select(
         "_qid",
         F.col("_lid").alias("list_id"),
         F.col("_d"),
         _pq_tables_expr(F.col("_qv"), codewords, m).alias("_tab"),
     )
-    adc = _pq_adc_score(F.col("codes"), F.col("_tab"))
-    score = (F.col("_d") + adc) if residual else adc
+    score = F.col("_d") + _pq_adc_score(F.col("codes"), F.col("_tab"))
     scored = encoded.join(F.broadcast(probes), "list_id").select(
         "_qid", F.col("cid").alias("_cid"), score.alias("adc_q"),
     )
@@ -1160,7 +997,7 @@ def ivfpq_train(
     integer grid — ADVICE r04), and run the standard per-subspace
     Lloyd (``pq_train``) over it. Same bounded-driver contract: only
     the m·ncodes·d codebook leaves the cluster. Feed the result to
-    ``ivfpq_encode``/``ivfpq_topk`` with ``residual=True``."""
+    ``ivfpq_encode``/``ivfpq_topk``."""
     res = _residual_frame(corpus, centroids, "cid", "cvec").select(
         F.col("cid"),
         F.transform(F.col("_r"), lambda v: v.cast("double") / 10000.0).alias("cvec"),

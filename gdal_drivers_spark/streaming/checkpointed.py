@@ -98,15 +98,13 @@ def _check_stream_identity(writer: CheckpointedWriter, checkpoint_dir: str) -> N
 def checkpointed_sink(
     writer: CheckpointedWriter,
     key: str = "image_id",
-    fail_after_commit_of: int | None = None,
     checkpoint_dir: str | None = None,
 ):
     """``foreachBatch`` callable committing each epoch as one
-    checkpoint batch. ``fail_after_commit_of`` is the test kill-switch:
-    raise right AFTER that epoch's manifest commit — the state a real
-    crash leaves when it dies between the engine commit and Spark's own
-    offset commit, which forces an epoch REPLAY on restart (the
-    replayed epoch must be skipped by the manifest, not re-applied).
+    checkpoint batch through ``writer.write_batches``. A crash between
+    that manifest commit and Spark's own offset commit forces an epoch
+    REPLAY on restart; the replayed epoch is skipped by the manifest,
+    not re-applied.
 
     ``checkpoint_dir`` (when known — ``start_checkpointed_ingest``
     always passes it) arms the stream-identity guard: the first epoch
@@ -119,16 +117,7 @@ def checkpointed_sink(
             _check_stream_identity(writer, checkpoint_dir)
             checked.append(True)
         b = int(epoch_id)
-        kill = fail_after_commit_of is not None and b == fail_after_commit_of
-        writer.write_batches(
-            df,
-            F.lit(b).cast("long"),
-            key=key,
-            batch_ids=[b],
-            # fail_after=1 commits this (single) batch then raises —
-            # the "committed but stream-uncheckpointed" crash point
-            fail_after=1 if kill else None,
-        )
+        writer.write_batches(df, F.lit(b).cast("long"), key=key, batch_ids=[b])
 
     return _sink
 
@@ -137,15 +126,13 @@ def start_checkpointed_ingest(
     assigned: DataFrame,
     writer: CheckpointedWriter,
     checkpoint_dir: str,
-    fail_after_commit_of: int | None = None,
 ):
     """Wire a streaming transformation chain (e.g.
     ``ingest.assign_images_stream``) into the checkpointed sink with
     available-now triggering. Returns the started query."""
     return (
         assigned.writeStream.foreachBatch(
-            checkpointed_sink(writer, fail_after_commit_of=fail_after_commit_of,
-                              checkpoint_dir=checkpoint_dir)
+            checkpointed_sink(writer, checkpoint_dir=checkpoint_dir)
         )
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
@@ -162,7 +149,6 @@ def start_index_ingest(
     cvec: str = "cvec",
     codewords: list | None = None,
     m: int = 8,
-    fail_after_commit_of: int | None = None,
 ):
     """Continuous ANN-index ingest (r05): per micro-batch, coarse-
     assign ONLY the epoch's delta (``similarity.ivf_assign`` —
@@ -184,10 +170,7 @@ def start_index_ingest(
     ``read_stream_index`` — never a rescan of earlier epochs."""
     from ..operators.similarity import ivf_assign, ivfpq_encode
 
-    sink0 = checkpointed_sink(
-        writer, key=cid, fail_after_commit_of=fail_after_commit_of,
-        checkpoint_dir=checkpoint_dir,
-    )
+    sink0 = checkpointed_sink(writer, key=cid, checkpoint_dir=checkpoint_dir)
 
     def _sink(df: DataFrame, epoch_id: int) -> None:
         idx = (
@@ -211,7 +194,8 @@ def read_stream_index(
     """Committed stream-ingested IVF assignments as a serving
     ``lists=`` frame for ``ivf_topk`` (columns ``cid, list_id, _cv``;
     the ``batch`` partition column is dropped). ``base`` unions an
-    existing persisted index (``similarity.read_ivf_index``) under the
+    existing persisted index (``spark.table`` of a
+    ``similarity.write_ivf_index`` table) under the
     stream-ingested epochs, so serving sees base + every COMMITTED
     epoch and never an uncommitted or replayed one — the manifest is
     the single source of index-membership truth."""
@@ -227,7 +211,6 @@ def start_pyramid_ingest(
     writer: CheckpointedWriter,
     checkpoint_dir: str,
     agg: str = "mean",
-    fail_after_commit_of: int | None = None,
 ):
     """Continuous overview maintenance (r05): per micro-batch, apply
     the epoch's leaf-tile delta to the CURRENT pyramid state and
@@ -249,10 +232,7 @@ def start_pyramid_ingest(
     stateful streaming aggregation, the wrong machine)."""
     from ..operators.pyramid import pyramid_delta
 
-    sink0 = checkpointed_sink(
-        writer, key="cell", fail_after_commit_of=fail_after_commit_of,
-        checkpoint_dir=checkpoint_dir,
-    )
+    sink0 = checkpointed_sink(writer, key="cell", checkpoint_dir=checkpoint_dir)
 
     def _sink(df: DataFrame, epoch_id: int) -> None:
         levels = read_stream_pyramid(writer, base_levels())

@@ -75,24 +75,25 @@ def test_cell_layout_lives_in_qcell():
 
 
 def test_no_join_shape_flags():
-    """A plan is chosen from the inputs, not from a caller flag: no
-    public operator takes a join-shape (broadcast hint, self-join) or
-    validation-skip parameter."""
-    import importlib
-    import inspect
-    import pkgutil
-
-    from gdal_drivers_spark import operators
-
-    flags = re.compile(r"^(broadcast_\w+|self_join|exclude_self|check_residual)$")
+    """A plan is chosen from the inputs, not from a caller flag, and a
+    failure is injected by a test patch, not by an option: no function
+    or method of the package takes a join-shape (broadcast hint,
+    self-join), validation-skip, code-encoding, multiprobe or
+    kill-switch parameter."""
+    flags = re.compile(r"^(broadcast_\w+|self_join|exclude_self|check_residual"
+                       r"|residual|probe_bits|fail_after|fail_after_commit_of)$")
     hits = []
-    for info in pkgutil.iter_modules(operators.__path__):
-        mod = importlib.import_module(f"{operators.__name__}.{info.name}")
-        for name, fn in inspect.getmembers(mod, inspect.isfunction):
-            if name.startswith("_") or fn.__module__ != mod.__name__:
+    for root, _, files in os.walk(PKG):
+        for f in files:
+            if not f.endswith(".py"):
                 continue
-            hits += [f"{info.name}.{name}({p})"
-                     for p in inspect.signature(fn).parameters if flags.match(p)]
+            p = os.path.join(root, f)
+            for n in ast.walk(ast.parse(open(p, encoding="utf-8").read(), p)):
+                if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    a = n.args
+                    hits += [f"{os.path.relpath(p, PKG)}:{n.lineno} {n.name}({x.arg})"
+                             for x in a.posonlyargs + a.args + a.kwonlyargs
+                             if flags.match(x.arg)]
     assert hits == []
 
 

@@ -27,7 +27,8 @@ def _stream_files(spark, images, stream_dir, n_files=4):
     shutil.rmtree(tmp)
 
 
-def test_stream_kill_restart_is_exactly_once_and_byte_identical(spark, tmp_path):
+def test_stream_kill_restart_is_exactly_once_and_byte_identical(
+        spark, tmp_path, crash_after_commit):
     images = synth.images_df(spark.range(0, 160, 1, 4))
     stream_dir = str(tmp_path / "imgs")
     _stream_files(spark, images, stream_dir, n_files=4)
@@ -37,16 +38,14 @@ def test_stream_kill_restart_is_exactly_once_and_byte_identical(spark, tmp_path)
     ckpt_a = str(tmp_path / "ckpt_a")
     wa = CheckpointedWriter(spark, out_a)
 
-    def run(fail_after_commit_of=None):
+    def run():
         stream = read_images_stream(spark, stream_dir, max_files=1)
         q = start_checkpointed_ingest(
-            assign_images_stream(stream, z=6), wa, ckpt_a,
-            fail_after_commit_of=fail_after_commit_of,
-        )
+            assign_images_stream(stream, z=6), wa, ckpt_a)
         q.awaitTermination()
 
-    with pytest.raises(Exception, match="injected failure"):
-        run(fail_after_commit_of=1)
+    with crash_after_commit(wa, 1), pytest.raises(Exception, match="injected failure"):
+        run()
     committed_mid = wa.committed()
     assert committed_mid == {0, 1}  # epoch 1 committed, THEN the crash
 

@@ -63,7 +63,8 @@ def _stream_files(df, stream_dir, n_files):
     return df.schema
 
 
-def test_stream_index_ingest_exactly_once_matches_batch_build(spark, tmp_path):
+def test_stream_index_ingest_exactly_once_matches_batch_build(
+        spark, tmp_path, crash_after_commit):
     cents = _cents(spark)
     fresh = _emb(spark, 120, start=200).repartition(3)
     stream_dir = str(tmp_path / "emb")
@@ -73,21 +74,17 @@ def test_stream_index_ingest_exactly_once_matches_batch_build(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     w = CheckpointedWriter(spark, out)
 
-    def run(fail_after_commit_of=None):
+    def run():
         stream = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(stream_dir)
         )
-        q = start_index_ingest(
-            stream, cents, w, ckpt,
-            fail_after_commit_of=fail_after_commit_of,
-        )
-        q.awaitTermination()
+        start_index_ingest(stream, cents, w, ckpt).awaitTermination()
 
     # kill right AFTER epoch 1's manifest commit → Spark replays epoch 1
-    with pytest.raises(Exception, match="injected failure"):
-        run(fail_after_commit_of=1)
+    with crash_after_commit(w, 1), pytest.raises(Exception, match="injected failure"):
+        run()
     assert w.committed() == {0, 1}
 
     run()  # restart: replayed epoch skipped, remaining epochs land

@@ -55,7 +55,8 @@ def _levels_bytes(levels):
     }
 
 
-def test_stream_pyramid_equals_batch_rebuild_with_kill_replay(spark, tmp_path):
+def test_stream_pyramid_equals_batch_rebuild_with_kill_replay(
+        spark, tmp_path, crash_after_commit):
     rng = np.random.default_rng(41)
     base_rows = _tile_rows(rng, [(4 + cx, 8 + cy) for cx in range(4) for cy in range(4)])
     base = spark.createDataFrame(
@@ -82,22 +83,19 @@ def test_stream_pyramid_equals_batch_rebuild_with_kill_replay(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     writer = CheckpointedWriter(spark, out)
 
-    def run(fail_after_commit_of=None):
+    def run():
         stream = (
             spark.readStream.schema(LEAF_SCHEMA)
             .option("maxFilesPerTrigger", 1)
             .parquet(stream_dir)
         )
-        q = start_pyramid_ingest(
-            stream, base_levels, writer, ckpt, agg="mean",
-            fail_after_commit_of=fail_after_commit_of,
-        )
+        q = start_pyramid_ingest(stream, base_levels, writer, ckpt, agg="mean")
         q.awaitTermination()
 
     # kill right AFTER epoch 0's manifest commit → epoch 0 is replayed
     # on restart and must be skipped by the manifest
-    with pytest.raises(Exception, match="injected failure"):
-        run(fail_after_commit_of=0)
+    with crash_after_commit(writer, 0), pytest.raises(Exception, match="injected failure"):
+        run()
     assert writer.committed() == {0}
     run()
     assert writer.committed() == {0, 1, 2}

@@ -152,14 +152,15 @@ def test_mvt_nofields_skips_attribute_decode(spark):
 
 def test_maskfile_roundtrip():
     quads = synth.quads_pdf(6)
-    buf = maskfile.write_mask(quads, 6, (0.0, 0.0, 1.0, 1.0))
+    rows = quads[["level", "qx", "qy", "value"]].itertuples(index=False)
+    buf = maskfile.write_mask(rows, 6, (0.0, 0.0, 1.0, 1.0))
     assert maskfile.probe(buf)
     assert not maskfile.probe(b"GARBAGE!")
     q2, depth, extents, srs = maskfile.read_mask(buf)
     assert depth == 6
     assert extents == (0.0, 0.0, 1.0, 1.0)
     a = quads.sort_values(["level", "qx", "qy"]).reset_index(drop=True)
-    b = q2.sort_values(["level", "qx", "qy"]).reset_index(drop=True)
+    b = pd.DataFrame(q2).sort_values(["level", "qx", "qy"]).reset_index(drop=True)
     assert (a["value"].values == b["value"].values).all()
     assert (a["qx"].values == b["qx"].values).all()
     assert (a["size"].values == b["size"].values).all()
