@@ -561,12 +561,16 @@ def _pip_oracle_sql() -> str:
     """
 
 
+_TILE_ROWS = "z int, tx long, ty long, data binary"  # one protobuf .mvt blob per row
+
+
 def q_mvt_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S11/J4/F1-F9/W2 end-to-end: per-supplier vector-tile layers are
     ENCODED on executors (zigzag + command words + cursor deltas,
-    mvt.cpp:164-261 inverse), then decoded by the engine's batch MVT
-    reader (dictionary tag join with out-of-bounds drop + odd-trailing
-    ignore, winding-rule polygon assembly, Trafo to world). The oracle
+    mvt.cpp:164-261 inverse) and framed as protobuf tiles, then decoded
+    by the engine's batch MVT reader (dictionary tag join with
+    out-of-bounds drop + odd-trailing ignore, winding-rule polygon
+    assembly, Trafo to world). The oracle
     computes the expected world coordinates relationally — the
     round-trip must reproduce them exactly (×1024 quantization is
     lossless: all coords are dyadic)."""
@@ -574,8 +578,8 @@ def q_mvt_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import numpy as np
 
-    from gdal_drivers_spark.core import mvtcodec
-    from gdal_drivers_spark.operators.mvt import LAYERS_SCHEMA, decode_features
+    from gdal_drivers_spark.core import mvtcodec, mvtproto
+    from gdal_drivers_spark.operators.mvt import decode_features
 
     supp = spark.read.parquet(f"{sf_dir}/supplier.parquet").select("s_suppkey")
 
@@ -609,9 +613,11 @@ def q_mvt_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                     ).tolist(),
                 },
             ]
-            yield 2, tx, ty, "suppliers", 256, ["kind", "flag"], ["a", "b", "c", "x"], feats
+            yield 2, tx, ty, mvtproto.encode_tile([{
+                "name": "suppliers", "extent": 256, "version": 2, "keys": ["kind", "flag"],
+                "values": [("string", v) for v in "abcx"], "features": feats}])
 
-    feats = decode_features(run_batches(supp, ["s_suppkey"], gen, LAYERS_SCHEMA))
+    feats = decode_features(run_batches(supp, ["s_suppkey"], gen, _TILE_ROWS))
 
     def coord_sums(g):
         pts = []
@@ -673,7 +679,7 @@ def q_mvt_proto_typed(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
 
     from gdal_drivers_spark.core import mvtproto
-    from gdal_drivers_spark.operators.mvt import decode_features_proto
+    from gdal_drivers_spark.operators.mvt import decode_features
 
     supp = spark.read.parquet(f"{sf_dir}/supplier.parquet").select(
         "s_suppkey", "s_name", (F.col("s_suppkey") % 4).alias("tx")
@@ -713,9 +719,8 @@ def q_mvt_proto_typed(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return [(2, key[0], 1, blob)]
 
-    tiles = run_grouped(supp, ["tx"], ["s_suppkey", "s_name"], build_tile,
-                        "z int, tx long, ty long, data binary")
-    feats = decode_features_proto(tiles)
+    tiles = run_grouped(supp, ["tx"], ["s_suppkey", "s_name"], build_tile, _TILE_ROWS)
+    feats = decode_features(tiles)
     tp = F.col("props_typed")
     return feats.select(
         "fid",
@@ -2710,8 +2715,8 @@ def q_unknown_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     surviving per-type counts and fid sums relationally."""
     import numpy as np
 
-    from gdal_drivers_spark.core import mvtcodec
-    from gdal_drivers_spark.operators.mvt import LAYERS_SCHEMA, decode_features
+    from gdal_drivers_spark.core import mvtcodec, mvtproto
+    from gdal_drivers_spark.operators.mvt import decode_features
 
     supp = spark.read.parquet(f"{sf_dir}/supplier.parquet").select("s_suppkey")
 
@@ -2731,11 +2736,12 @@ def q_unknown_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
                 {"id": 3 * s + 3, "tags": [], "geom_type": mvtcodec.GEOM_UNKNOWN,
                  "geometry": pt_stream},
             ]
-            yield 1, s % 2, (s * 3) % 2, "mixed", 256, [], [], feats
+            yield 1, s % 2, (s * 3) % 2, mvtproto.encode_tile([{
+                "name": "mixed", "extent": 256, "version": 2, "keys": [], "values": [],
+                "features": feats}])
 
-    layers = run_batches(supp, ["s_suppkey"], gen, LAYERS_SCHEMA)
     return (
-        decode_features(layers)
+        decode_features(run_batches(supp, ["s_suppkey"], gen, _TILE_ROWS))
         .groupBy("geom_type")
         .agg(F.count("*").alias("n_features"), F.sum("fid").alias("sum_fid"))
     )

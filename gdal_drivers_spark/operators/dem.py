@@ -3,7 +3,7 @@
 
 The 3×3 Horn (1981) kernel needs each pixel's 8 neighbors, so tile
 edges need neighbor-tile pixels: the strip-projected halo exchange
-(``operators/halo.with_halo_strips``) re-keys every tile to its ≤8
+(``operators/halo.with_halo_bands`` at width 1) re-keys every tile to its ≤8
 neighbors shipping ONLY the 1-px edge strip (or corner byte) each
 neighbor reads, and one grouped Arrow UDF per target tile assembles
 the (t+2)² padded window — cross-tile seams are then EXACT (identical

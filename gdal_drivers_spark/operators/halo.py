@@ -24,7 +24,8 @@ Two fan-out strategies:
   receive only the pixels they read. Shuffle bytes ≈ raster bytes (the
   self contribution) + 4·w·t + 4·w² per tile (+0.8% at t=512, w=1 vs
   the 9× of the full re-key — the difference between "works" and
-  "doesn't" at 100 TB of DEM). ``with_halo_strips`` is its w=1 case.
+  "doesn't" at 100 TB of DEM). At w=1 it ships the 1-px strips 3×3
+  kernels read.
 
 Both run the same re-key (``_rekey``): the offset explode, the
 neighbor cell read and packed through ``core.qcell``'s Column forms,
@@ -112,9 +113,9 @@ def halo_convolve(tiles: DataFrame, tile_px: int) -> DataFrame:
     """Cross-tile 3×3 box-mean — the halo join's pixel use case (the
     sliding spatial window of ``blender.cpp:601-624`` generalized to
     neighbor-PIXEL kernels). Each target cell's group receives its own
-    tile plus the 1-px strips of its ≤8 neighbors
-    (``with_halo_strips`` — the kernel reads exactly that ring, so the
-    exchange ships ≈ raster bytes instead of 9×), assembles the
+    tile plus the 1-px strips of its ≤8 neighbors (``with_halo_bands``
+    at width 1 — the kernel reads exactly that ring, so the exchange
+    ships ≈ raster bytes instead of 9×), assembles the
     (t+2)² value + presence window, convolves, and emits the interior
     — tile seams are exact, identical to convolving the stitched full
     image.
@@ -185,37 +186,21 @@ def _rekey(tiles: DataFrame, ring: int) -> DataFrame:
     )
 
 
-def with_halo_strips(tiles: DataFrame, tile_px: int, tile: str = "tile") -> DataFrame:
-    """Strip-projected ring-1 halo for 3×3 kernels: ``with_halo_bands``
-    at width 1. Each side neighbor receives the 1-px edge strip it
-    reads (payload index = the coordinate that varies along the shared
-    edge), each diagonal neighbor the single corner byte its padded
-    window reads — e.g. the (-1,-1) contribution ships n[t-1, t-1].
-
-    This projection is LOSSLESS for the DEM assembler including its
-    corner-fallback chain (a missing diagonal falls back to a side
-    neighbor's corner pixel — always an element of that side's strip)."""
-    return with_halo_bands(tiles, tile_px, 1, tile=tile)
-
-
-def with_halo_bands(
-    tiles: DataFrame,
-    tile_px: int,
-    width: int,
-    tile: str = "tile",
-) -> DataFrame:
+def with_halo_bands(tiles: DataFrame, tile_px: int, width: int) -> DataFrame:
     """Band-projected ring-1 halo — the exchange layer for kernels of
     support radius ``width`` (3×3 DEM kernels at w=1, bounded-radius
     proximity, morphology, wide convolutions). Each tile ships its
     full payload only to itself; each side neighbor receives the
     ``width`` edge rows/columns it reads, each diagonal neighbor the
     ``width``×``width`` corner block. Exchange bytes ≈ raster +
-    4·w·t + 4·w² per tile instead of 9× the raster.
+    4·w·t + 4·w² per tile instead of 9× the raster. At width 1 (3×3
+    kernels) the projection is LOSSLESS for the DEM assembler including
+    its corner-fallback chain (a missing diagonal falls back to a side
+    neighbor's corner pixel — always an element of that side's strip).
 
-    Input rows: (cell:long, tile:binary raw u8 tile_px²) — the payload
-    column name is ``tile`` (parameter; extra input columns are
-    dropped). Output columns: ``target_cell``, ``dx``/``dy`` (offset
-    of the CONTRIBUTING tile relative to the target, as in
+    Input rows: (cell:long, tile:binary raw u8 tile_px²); extra input
+    columns are dropped. Output columns: ``target_cell``, ``dx``/``dy``
+    (offset of the CONTRIBUTING tile relative to the target, as in
     ``with_halo``) and ``payload``: row-major C-order slices of the
     source tile (north/south bands: (w, t); west/east bands: (t, w);
     corners: (w, w)), so the assembler can ``reshape`` without
@@ -251,9 +236,9 @@ def with_halo_bands(
         ))
 
     bands = row_udf(_bands, "struct<" + ",".join(f"{k}:binary" for k in names) + ">")
-    stripped = tiles.select(
-        F.col("cell").alias("cell"), F.col(tile).alias("tile")
-    ).withColumn("_s", bands(F.col("tile"))).select("cell", "tile", "_s.*")
+    stripped = tiles.select("cell", "tile").withColumn("_s", bands(F.col("tile"))).select(
+        "cell", "tile", "_s.*"
+    )
 
     dx, dy = -F.col("_dx"), -F.col("_dy")  # contribution offset rel. target
     payload = (

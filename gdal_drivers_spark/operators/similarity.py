@@ -903,24 +903,29 @@ def ivfpq_encode(
     )
 
 
+def _residual_corpus(corpus: DataFrame, centroids: DataFrame) -> DataFrame:
+    """(cid, cvec = (x − centroid(list)) / 10⁴): the residual frame
+    rescaled into the quantizer's float domain, so the flat PQ
+    codebook functions run on residuals unchanged. ÷10⁴ is NOT exact
+    in double (1e-4 has no binary representation), but the int
+    round-trip holds: ``quantize`` re-rounds, and v/10⁴·10⁴ errs far
+    below 0.5 of the integer grid (ADVICE r04)."""
+    return _residual_frame(corpus, centroids, "cid", "cvec").select(
+        F.col("cid"),
+        F.transform(F.col("_r"), lambda v: v.cast("double") / 10000.0).alias("cvec"),
+    )
+
+
 def ivfpq_codewords_from_sample(
     corpus: DataFrame,
     centroids: DataFrame,
     ncodes: int,
 ) -> list[list[int]]:
-    """Deterministic RESIDUAL codebook for ``ivfpq_encode``: the
-    residuals (x − assigned centroid, exact ints) of the ``ncodes``
-    corpus vectors with the smallest engine-portable spread hash —
-    the residual-space analogue of ``pq_codewords_from_sample``."""
-    spread = _spread_key()
-    rows = (
-        _residual_frame(corpus, centroids, "cid", "cvec")
-        .select("_r", spread.alias("_h"), F.col("cid").alias("_cid"))
-        .orderBy("_h", "_cid")
-        .limit(ncodes)
-        .collect()
-    )
-    return [[int(v) for v in r["_r"]] for r in rows]
+    """Deterministic RESIDUAL codebook for ``ivfpq_encode``:
+    ``pq_codewords_from_sample`` over the residuals (x − assigned
+    centroid, exact ints) — the ``ncodes`` corpus vectors with the
+    smallest engine-portable spread hash."""
+    return pq_codewords_from_sample(_residual_corpus(corpus, centroids), ncodes)
 
 
 def ivfpq_topk(
@@ -988,21 +993,13 @@ def ivfpq_train(
     iters: int = 2,
 ) -> list[list[int]]:
     """Lloyd-refined RESIDUAL codebooks for IVF-PQ (r04 — the training
-    half of the residual design, Jégou §III): materialize the residual
-    x − centroid(list) frame once (one ``ivf_assign`` pass + a
-    broadcast centroid subtract, exact ints), rescale it into the
-    quantizer's float domain (÷10⁴ — NOT exact in double, 1e-4 has no
-    binary representation; the int round-trip still holds because
-    ``quantize`` re-rounds and v/10⁴·10⁴ errs far below 0.5 ulp of the
-    integer grid — ADVICE r04), and run the standard per-subspace
-    Lloyd (``pq_train``) over it. Same bounded-driver contract: only
-    the m·ncodes·d codebook leaves the cluster. Feed the result to
-    ``ivfpq_encode``/``ivfpq_topk``."""
-    res = _residual_frame(corpus, centroids, "cid", "cvec").select(
-        F.col("cid"),
-        F.transform(F.col("_r"), lambda v: v.cast("double") / 10000.0).alias("cvec"),
-    )
-    return pq_train(res, ncodes=ncodes, m=m, iters=iters)
+    half of the residual design, Jégou §III): the standard
+    per-subspace Lloyd (``pq_train``) over the residual x −
+    centroid(list) frame (one ``ivf_assign`` pass + a broadcast
+    centroid subtract, exact ints, rescaled by ``_residual_corpus``).
+    Same bounded-driver contract: only the m·ncodes·d codebook leaves
+    the cluster. Feed the result to ``ivfpq_encode``/``ivfpq_topk``."""
+    return pq_train(_residual_corpus(corpus, centroids), ncodes=ncodes, m=m, iters=iters)
 
 
 def pq_train(

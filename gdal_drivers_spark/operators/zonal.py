@@ -4,8 +4,8 @@ The classic GDAL raster workflow (for each zone/polygon: count, sum,
 min, max, mean of the pixels inside it), re-expressed so that PIXELS
 NEVER SHUFFLE:
 
-1. ``tile_stats``: each tile row reduces to (n_px, px_sum, px_min,
-   px_max) in ONE Arrow hop — a narrow map, no shuffle; after it the
+1. ``tile_stats``: each tile row reduces to (n_px, px_sum, px_sq,
+   px_min, px_max) in ONE Arrow hop — a narrow map, no shuffle; after it the
    frame is a few longs per tile regardless of tile size;
 2. the tile-stat rows join the zone map on the cell id — a plain
    equi-join (zone maps are cell→zone products of ``rasterize`` /
@@ -34,15 +34,18 @@ from pyspark.sql import functions as F
 from ..core import codecs, qcell
 from ._groups import row_udf, run_batches
 
-_STAT_SCHEMA = "n_px long, px_sum long, px_min long, px_max long, px_ok boolean"
+_STAT_SCHEMA = (
+    "n_px long, px_sum long, px_sq long, px_min long, px_max long, px_ok boolean"
+)
 
 
 def tile_stats(tiles: DataFrame, nodata: int | None = None) -> DataFrame:
     """Append per-tile pixel statistics (one Arrow hop, narrow). Tile
     payloads go through the codec registry (magic sniff), so any
-    registered format works; stats are shape-agnostic. With
-    ``nodata``, pixels equal to it are excluded from all four stats;
-    an all-nodata tile reports n_px=0 and neutral min/max (255/0).
+    registered format works; stats are shape-agnostic. ``px_sq`` is
+    Σx², the second moment ``raster_stats`` needs. With ``nodata``,
+    pixels equal to it are excluded from all five stats; an all-nodata
+    tile reports n_px=0 and neutral min/max (255/0).
 
     Poison policy (same as decode.decode_stats): a NULL or corrupt
     payload among 10^12 rows must mark ITS row (``px_ok=false``,
@@ -52,12 +55,13 @@ def tile_stats(tiles: DataFrame, nodata: int | None = None) -> DataFrame:
         try:
             px = codecs.decode(bytes(b)).ravel()
         except Exception:
-            return 0, 0, 255, 0, False
+            return 0, 0, 0, 255, 0, False
         if nodata is not None:
             px = px[px != nodata]
         if not px.size:
-            return 0, 0, 255, 0, True
-        return int(px.size), int(px.sum(dtype=np.int64)), int(px.min()), int(px.max()), True
+            return 0, 0, 0, 255, 0, True
+        x = px.astype(np.int64)
+        return int(px.size), int(x.sum()), int((x * x).sum()), int(px.min()), int(px.max()), True
 
     stats = row_udf(_stats, f"struct<{_STAT_SCHEMA}>")
     return tiles.withColumn("_s", stats(F.col("tile"))).select(
@@ -174,24 +178,9 @@ def raster_stats(tiles: DataFrame, nodata: int | None = None) -> DataFrame:
     long, and the partial aggregation is mergeable at any scale), so
     the only FP ops are the final two divisions and one sqrt — single
     correctly-rounded IEEE ops, bit-replayable in a SQL oracle.
-    Plan: one Arrow hop to per-tile moments, one map-side-combined
-    global aggregate — pixels never shuffle."""
-
-    def _mom(b):
-        try:
-            px = codecs.decode(bytes(b)).ravel()
-        except Exception:
-            return 0, 0, 0, 255, 0, False
-        if nodata is not None:
-            px = px[px != nodata]
-        if not px.size:
-            return 0, 0, 0, 255, 0, True
-        x = px.astype(np.int64)
-        return int(px.size), int(x.sum()), int((x * x).sum()), int(px.min()), int(px.max()), True
-
-    mom = row_udf(
-        _mom, "struct<n_px long, px_sum long, px_sq long, px_min long, px_max long, px_ok boolean>")
-    m = tiles.withColumn("_m", mom(F.col("tile"))).select("_m.*")
+    Plan: one Arrow hop to per-tile moments (``tile_stats``), one
+    map-side-combined global aggregate — pixels never shuffle."""
+    m = tile_stats(tiles.select("tile"), nodata=nodata)
     no_px = F.col("n_px") == 0
     mean = F.col("px_sum") / F.col("n_px")
     return (

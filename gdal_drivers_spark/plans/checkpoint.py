@@ -194,15 +194,13 @@ class CheckpointedWriter:
         # per batch: xor of per-bucket xors == batch xor) is collected
         # for the manifest rows, so driver memory stays flat in the
         # bucket count and linear only in #batches (ints — 10⁴⁺ fine).
-        from gdal_drivers_spark.plans.lineage import lineage_bucket
-
         nonempty = [b for b in pending if b not in set(empty)]
         per_batch = {b: (0, 0) for b in pending}
         if nonempty:
             written = self.spark.read.option("basePath", self.out).parquet(
                 *[f"{self.out}/batch={b}" for b in nonempty]
             )
-            # portable=False bucket: the checkpoint key may be any type
+            # pmod(xxhash64) bucket: the checkpoint key may be any type
             # (string image_id, nullable) — xxhash64 buckets never
             # throw and never come back NULL. Key envelope via
             # try_cast: NULL (hence 0) for non-numeric keys instead of
@@ -211,7 +209,8 @@ class CheckpointedWriter:
             recs_df = (
                 written.groupBy(
                     "batch",
-                    lineage_bucket(key, lineage_buckets, portable=False).alias("bucket"),
+                    F.pmod(F.xxhash64(F.col(key)), F.lit(int(lineage_buckets)))
+                    .cast("long").alias("bucket"),
                 )
                 .agg(
                     F.count("*").alias("n"),

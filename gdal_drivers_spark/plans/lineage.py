@@ -42,29 +42,6 @@ def lineage_records(df: DataFrame, key: str) -> DataFrame:
     )
 
 
-def lineage_bucket(key: str, n_buckets: int, portable: bool = True):
-    """Deterministic lineage bucket of a row.
-
-    ``portable=True`` (default): engine-portable multiplicative key
-    hash (``operators.sample._mix``) mod ``n_buckets`` — pure
-    arithmetic on an INTEGER key, replayable bit-for-bit by any engine
-    over the same rows, so bucket-level lineage doubles as
-    cross-run/cross-engine evidence (and the contract oracle can check
-    it in SQL). Requires an integer-castable key (ANSI cast throws on
-    arbitrary strings).
-
-    ``portable=False``: ``pmod(xxhash64(key), n)`` — Spark-only but
-    accepts ANY key type, and never yields NULL (a NULL key hashes to
-    the xxhash64 seed), so string/NULL keys bucket safely. This is
-    what the checkpoint writer uses, since its key may be e.g. a
-    string image_id."""
-    if portable:
-        from gdal_drivers_spark.operators.sample import _mix
-
-        return (_mix(key) % F.lit(int(n_buckets))).cast("long")
-    return F.pmod(F.xxhash64(F.col(key)), F.lit(int(n_buckets))).cast("long")
-
-
 def bucket_lineage_records(df: DataFrame, key: str, n_buckets: int = 64) -> DataFrame:
     """Engine-portable lineage: one record per deterministic key-hash
     bucket — (bucket, n_rows, checksum, key_min, key_max). The
@@ -72,11 +49,18 @@ def bucket_lineage_records(df: DataFrame, key: str, n_buckets: int = 64) -> Data
     aggregation and row order cannot change it) and bounded by
     n_rows·2³², inside int64 up to ~2·10⁹ rows per bucket. All four
     aggregates map-side combine, so the shuffle carries ≤ n_buckets
-    rows per task regardless of data size."""
+    rows per task regardless of data size.
+
+    The bucket is the engine-portable multiplicative key hash
+    (``operators.sample._mix``) mod ``n_buckets`` — pure arithmetic on
+    an INTEGER key, replayable bit-for-bit by any engine over the same
+    rows, so bucket-level lineage doubles as cross-run/cross-engine
+    evidence (and the contract oracle checks it in SQL). Requires an
+    integer-castable key (ANSI cast throws on arbitrary strings)."""
     from gdal_drivers_spark.operators.sample import _mix
 
     return (
-        df.groupBy(lineage_bucket(key, n_buckets).alias("bucket"))
+        df.groupBy((_mix(key) % F.lit(int(n_buckets))).cast("long").alias("bucket"))
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
             F.sum(_mix(key)).cast("long").alias("checksum"),

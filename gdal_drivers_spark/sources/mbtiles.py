@@ -151,13 +151,13 @@ def read_mbtiles_features(spark: SparkSession, paths: list[str] | DataFrame) -> 
     reference's whole read path (``gdal.Open("x.mbtiles/z-x-y")``,
     mbtiles.cpp:128-225 + mvt.cpp:732-770) over every tile at once —
     scan, gzip sniff, protobuf decode."""
-    from ..operators.mvt import decode_features_proto
+    from ..operators.mvt import decode_features
 
     tiles = read_mbtiles(spark, paths).select(
         F.col("zoom").alias("z"), F.col("x").alias("tx"), F.col("y").alias("ty"),
         gunzip_col(F.col("tile_data")).alias("data"),
     )
-    return decode_features_proto(tiles)
+    return decode_features(tiles)
 
 
 def write_mbtiles(path: str, rows, metadata: dict | None = None) -> None:

@@ -1,10 +1,11 @@
 """Streaming vector-tile ingestion — real protobuf tiles arriving as a
-file stream, decoded incrementally with the SAME operator the batch
-path uses (``operators/mvt.decode_features_proto``), then rolled up
-per layer/geometry with exactly-once file-stream semantics.
+file stream: ``read_tiles_stream`` hands the rows straight to the
+batch decoder (``operators/mvt.decode_features``), then
+``feature_counts`` rolls them up per layer/geometry with exactly-once
+file-stream semantics.
 
-Stream == batch holds because the proto decode is a stateless Arrow
-map (poison tiles drop to zero rows in either mode); the per-layer
+Stream == batch holds because the decode is a stateless Arrow map
+(poison tiles drop to zero rows in either mode); the per-layer
 rollup is the only stateful piece and runs in complete/update mode or
 as a stateless append of decoded features. Asserted in
 tests/test_stream_tiles.py.
@@ -20,8 +21,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.mvt import decode_features_proto
-
 TILES_STREAM_SCHEMA = "z int, tx long, ty long, data binary"
 
 
@@ -31,12 +30,6 @@ def read_tiles_stream(spark: SparkSession, path: str, max_files: int = 8) -> Dat
         .option("maxFilesPerTrigger", max_files)
         .parquet(path)
     )
-
-
-def decode_tiles_stream(tiles: DataFrame) -> DataFrame:
-    """Stateless proto decode on the stream — identical operator to the
-    batch path (stream == batch by construction)."""
-    return decode_features_proto(tiles)
 
 
 def feature_counts(features: DataFrame) -> DataFrame:

@@ -139,12 +139,12 @@ def test_halo_traffic_is_strips_not_full_tiles(raster):
     the shuffled contribution frame and bound it by raster + per-tile
     strip budget (4 side strips of t bytes + 4 corner bytes); the old
     full-tile re-key would weigh ~8.06× the raster on this 4×4 grid."""
-    from gdal_drivers_spark.operators.halo import with_halo_strips
+    from gdal_drivers_spark.operators.halo import with_halo_bands
 
     full, tiles = raster
     n_tiles = GRID * GRID
     raster_bytes = n_tiles * T * T
-    h = with_halo_strips(tiles, T)
+    h = with_halo_bands(tiles, T, 1)
     total = h.agg(F.sum(F.length("payload"))).collect()[0][0]
     budget = raster_bytes + n_tiles * (4 * T + 4)
     assert total <= budget, (total, budget)

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from gdal_drivers_spark.core import mvtcodec, mvtproto
 from gdal_drivers_spark.operators.lookup import fetch_tiles, parse_requests
-from gdal_drivers_spark.operators.mvt import decode_features_proto
+from gdal_drivers_spark.operators.mvt import decode_features, encode_tiles
 from gdal_drivers_spark.sources.mbtiles import (
     fetch_one,
     read_mbtiles,
@@ -106,7 +106,7 @@ def test_full_reference_pipeline(spark, tmp_path):
         F.col("zoom").alias("z"), F.col("x").alias("tx"),
         F.col("y").alias("ty"), F.col("tile_data").alias("data"),
     ).withColumn("z", F.col("z").cast("int"))
-    feats = decode_features_proto(tiles)
+    feats = decode_features(tiles)
     got = {r.fid: r for r in feats.collect()}
     assert len(got) == n * n
     for x in range(n):
@@ -118,30 +118,9 @@ def test_full_reference_pipeline(spark, tmp_path):
             assert r.geom_type == "point" and r.n_vertices == 1
 
 
-def test_proto_nofields_skips_value_decode(spark):
-    """MVT_NOFIELDS on the real-protobuf path (mvt.cpp:806-807):
-    fields=False yields the same features with BOTH attribute maps
-    empty, geometry untouched."""
-    tile = mvtproto.encode_tile(
-        [{"name": "l", "extent": 256, "version": 2,
-          "keys": ["a"], "values": [("int", 7)],
-          "features": [{"id": 5, "tags": np.array([0, 0], np.uint64),
-                        "geom_type": 1,
-                        "geometry": np.array([9, 2, 2], np.uint64)}]}]
-    )
-    tiles = spark.createDataFrame(
-        [(0, 0, 0, tile)], "z int, tx long, ty long, data binary"
-    )
-    full = decode_features_proto(tiles).collect()
-    bare = decode_features_proto(tiles, fields=False).collect()
-    assert full[0].props == {"a": "7"} and full[0].props_typed["a"]["i"] == 7
-    assert bare[0].props == {} and bare[0].props_typed == {}
-    assert bare[0].fid == 5 and bare[0].geom_json == full[0].geom_json
-
-
 def test_proto_poison_tile_survives(spark):
     """Corrupt protobuf bytes poison only their own rows; the stage
-    completes (decode guard in decode_features_proto)."""
+    completes (per-tile decode guard in decode_features)."""
     good = mvtproto.encode_tile(
         [{"name": "l", "extent": 256, "version": 2, "keys": [], "values": [],
           "features": [{"id": 5, "tags": np.zeros(0, np.uint64),
@@ -152,7 +131,7 @@ def test_proto_poison_tile_survives(spark):
         [(0, 0, 0, good), (0, 1, 0, b"\xff\xfe garbage"), (0, 2, 0, b"")],
         "z int, tx long, ty long, data binary",
     )
-    got = decode_features_proto(tiles).collect()
+    got = decode_features(tiles).collect()
     assert [r.fid for r in got] == [5]
 
 
@@ -179,42 +158,29 @@ def test_poison_archives_survive_scan(spark, tmp_path, archive):
 
 
 def test_proto_sink_roundtrip(spark):
-    """Full write/read symmetry: feature rows → encode_layers (array
-    sink) → encode_tiles_proto (real protobuf blobs) →
-    decode_features_proto == decode_features of the array layers."""
+    """Full write/read symmetry: feature rows → encode_tiles (real
+    protobuf blobs, one per tile) → decode_features returns the same
+    features, coordinates and props."""
     import json
 
-    from gdal_drivers_spark.operators.mvt import (
-        decode_features,
-        encode_layers,
-        encode_tiles_proto,
-    )
-    from gdal_drivers_spark.operators.mvt import decode_features_proto as dfp
-
+    rows = [
+        (1, 0, 0, "pts", 7, "point", 1, 0, 1, json.dumps([[[0.25, 0.25]]]), {"name": "a"}),
+        (1, 0, 0, "pts", 8, "point", 1, 0, 1, json.dumps([[[0.125, 0.375]]]), {"name": "b"}),
+        (1, 1, 0, "pts", 9, "point", 1, 0, 1, json.dumps([[[0.75, 0.25]]]), {"name": "c"}),
+    ]
     feats = spark.createDataFrame(
-        [
-            (1, 0, 0, "pts", 7, "point", 1, 0, 1,
-             json.dumps([[[0.25, 0.25]]]), {"name": "a"}),
-            (1, 0, 0, "pts", 8, "point", 1, 0, 1,
-             json.dumps([[[0.125, 0.375]]]), {"name": "b"}),
-            (1, 1, 0, "pts", 9, "point", 1, 0, 1,
-             json.dumps([[[0.75, 0.25]]]), {"name": "c"}),
-        ],
+        rows,
         "z int, tx long, ty long, layer string, fid long, geom_type string, "
         "n_parts int, n_rings int, n_vertices int, geom_json string, "
         "props map<string,string>",
     )
-    layers = encode_layers(feats, extent=256)
-    expected = sorted(
-        (r.fid, r.geom_type, r.n_vertices, r.props["name"], r.geom_json)
-        for r in decode_features(layers).collect()
-    )
-    blobs = encode_tiles_proto(layers)
+    blobs = encode_tiles(feats, extent=256)
+    assert blobs.count() == 2
     got = sorted(
         (r.fid, r.geom_type, r.n_vertices, r.props["name"], r.geom_json)
-        for r in dfp(blobs).collect()
+        for r in decode_features(blobs).collect()
     )
-    assert got == expected and len(got) == 3
+    assert got == sorted((r[4], r[5], r[8], r[10]["name"], r[9]) for r in rows)
 
 
 def test_engine_open_mbtiles_features(spark, tmp_path):
@@ -252,24 +218,26 @@ def test_engine_documents_deduped(spark):
 
 def test_proto_geometry_poison_feature_skipped(spark):
     """Review r02: valid protobuf framing carrying a BAD COMMAND STREAM
-    (unknown opcode / truncated deltas / extent 0) poisons only that
-    feature, never the stage."""
+    (unknown opcode / truncated deltas / no vertices / extent 0)
+    poisons only that feature, never the stage."""
     good = {"id": 1, "tags": np.zeros(0, np.uint64), "geom_type": 1,
             "geometry": np.array([9, 2, 2], np.uint64)}
     bad_opcode = {"id": 2, "tags": np.zeros(0, np.uint64), "geom_type": 1,
                   "geometry": np.array([(1 << 3) | 3], np.uint64)}  # opcode 3
     truncated = {"id": 3, "tags": np.zeros(0, np.uint64), "geom_type": 1,
                  "geometry": np.array([(5 << 3) | 1, 2, 2], np.uint64)}  # count 5, 1 pt
+    no_parts = {"id": 4, "tags": np.zeros(0, np.uint64), "geom_type": 3,
+                "geometry": np.array([7], np.uint64)}  # a lone ClosePath: no vertices
     blob = mvtproto.encode_tile(
         [{"name": "l", "extent": 256, "version": 2, "keys": [], "values": [],
-          "features": [good, bad_opcode, truncated]},
+          "features": [good, bad_opcode, truncated, no_parts]},
          {"name": "zero_extent", "extent": 0, "version": 2, "keys": [],
           "values": [], "features": [dict(good, id=9)]}]
     )
     tiles = spark.createDataFrame(
         [(0, 0, 0, blob)], "z int, tx long, ty long, data binary"
     )
-    got = decode_features_proto(tiles).collect()
+    got = decode_features(tiles).collect()
     assert [r.fid for r in got] == [1]
 
 
@@ -336,7 +304,7 @@ def test_truncated_fixed_value_poisons_only_tile(spark):
         [(0, 0, 0, good), (0, 1, 0, bad_layer)],
         "z int, tx long, ty long, data binary",
     )
-    got = decode_features_proto(tiles).collect()
+    got = decode_features(tiles).collect()
     assert [r.fid for r in got] == [5]
 
 

@@ -486,32 +486,6 @@ def test_halo_convolve_duplicate_cell_deterministic(spark):
         assert (got == 10).all(), "min-payload winner must be deterministic"
 
 
-def test_with_halo_strips_tile_column_param(spark):
-    """ADVICE r04: the payload column name is a parameter; a frame with
-    a differently-named payload produces the identical exchange."""
-    import numpy as np
-    import pandas as pd
-
-    from gdal_drivers_spark.core import qcell
-    from gdal_drivers_spark.operators.halo import with_halo_strips
-
-    t = 4
-    rows = []
-    for ty in range(2):
-        for tx in range(2):
-            img = ((np.arange(t)[:, None] * 3 + np.arange(t)[None, :] * 7
-                    + tx + 16 * ty) % 256).astype(np.uint8)
-            rows.append((int(qcell.pack(1, tx, ty)), img.tobytes()))
-    pdf = pd.DataFrame(rows, columns=["cell", "elev"])
-    renamed = spark.createDataFrame(pdf)
-    default = spark.createDataFrame(pdf.rename(columns={"elev": "tile"}))
-    a = sorted(map(tuple, with_halo_strips(renamed, t, tile="elev").collect()))
-    b = sorted(map(tuple, with_halo_strips(default, t).collect()))
-    # 2x2 grid: every tile contributes to itself + its 3 in-bounds
-    # neighbors -> 16 exchange rows
-    assert a == b and len(a) == 16
-
-
 def test_update_pyramid_duplicate_delta_rows_resolve_deterministically(spark):
     """A delta carrying two versions of one (cell, band) — e.g. one
     streaming epoch batching several files — must resolve to ONE

@@ -348,7 +348,7 @@ def _burn(spark):
 
 
 def _mvt(spark):
-    from gdal_drivers_spark.operators.mvt import encode_layers
+    from gdal_drivers_spark.operators.mvt import encode_tiles
 
     rows = []
     for i in range(12):
@@ -363,7 +363,7 @@ def _mvt(spark):
                                     "geom_json", "props"]),
         "z int, tx long, ty long, layer string, fid long, geom_type string, "
         "geom_json string, props map<string,string>")
-    return df, lambda d: encode_layers(d, extent=256)
+    return df, lambda d: encode_tiles(d, extent=256)
 
 
 def _cutline(spark):

@@ -12,12 +12,8 @@ import numpy as np
 import pandas as pd
 
 from gdal_drivers_spark.core import mvtcodec, mvtproto
-from gdal_drivers_spark.operators.mvt import decode_features_proto
-from gdal_drivers_spark.streaming.tiles import (
-    decode_tiles_stream,
-    feature_counts,
-    read_tiles_stream,
-)
+from gdal_drivers_spark.operators.mvt import decode_features
+from gdal_drivers_spark.streaming.tiles import feature_counts, read_tiles_stream
 
 
 def _proto_tiles_df(spark, n=24, poison_every=None):
@@ -55,7 +51,7 @@ def _run_stream(spark, tiles, tmp_path, name):
     for i, part in enumerate(sorted(glob.glob(tmp + "/d/part-*.parquet"))):
         shutil.copy(part, f"{stream_dir}/f{i}.parquet")
     shutil.rmtree(tmp)
-    out = decode_tiles_stream(read_tiles_stream(spark, stream_dir, max_files=1))
+    out = decode_features(read_tiles_stream(spark, stream_dir, max_files=1))
     q = (
         out.select("layer", "geom_type", "fid", "n_vertices")
         .writeStream.format("memory")
@@ -70,7 +66,7 @@ def _run_stream(spark, tiles, tmp_path, name):
 
 def test_stream_tiles_equals_batch(spark, tmp_path):
     tiles = _proto_tiles_df(spark, 24)
-    batch = decode_features_proto(tiles).select(
+    batch = decode_features(tiles).select(
         "layer", "geom_type", "fid", "n_vertices"
     )
     expected = sorted(tuple(r) for r in batch.collect())
@@ -80,7 +76,7 @@ def test_stream_tiles_equals_batch(spark, tmp_path):
     # rollup parity too
     fc = {
         (r.layer, r.geom_type): (r.n_features, r.n_vertices)
-        for r in feature_counts(decode_features_proto(tiles)).collect()
+        for r in feature_counts(decode_features(tiles)).collect()
     }
     assert fc[("lyr", "point")][0] == 12 and fc[("lyr", "linestring")][0] == 12
 

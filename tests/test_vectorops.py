@@ -4,38 +4,11 @@ FIXTURES.md §6/§7; semantics citations in the operator docstrings)."""
 import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from gdal_drivers_spark.core import mvtcodec
+from gdal_drivers_spark.core import mvtcodec, mvtproto
 from gdal_drivers_spark.operators.lookup import fetch_tiles, parse_requests
-from gdal_drivers_spark.operators.mvt import decode_features
+from gdal_drivers_spark.operators.mvt import decode_features, encode_tiles
 from gdal_drivers_spark.sources import synth
-
-LAYER_SCHEMA = T.StructType(
-    [
-        T.StructField("z", T.IntegerType()),
-        T.StructField("tx", T.LongType()),
-        T.StructField("ty", T.LongType()),
-        T.StructField("layer", T.StringType()),
-        T.StructField("extent", T.IntegerType()),
-        T.StructField("keys", T.ArrayType(T.StringType())),
-        T.StructField("values", T.ArrayType(T.StringType())),
-        T.StructField(
-            "features",
-            T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField("id", T.LongType()),
-                        T.StructField("tags", T.ArrayType(T.IntegerType())),
-                        T.StructField("geom_type", T.IntegerType()),
-                        T.StructField("geometry", T.ArrayType(T.LongType())),
-                    ]
-                )
-            ),
-        ),
-    ]
-)
 
 
 @pytest.fixture(scope="module")
@@ -43,21 +16,18 @@ def fixture_layer():
     return synth.mvt_fixture(n_features=64)
 
 
-def _layer_df(spark, fx, z=2, tx=1, ty=2):
-    feats = [
-        (int(f["id"]), [int(t) for t in f["tags"]], int(f["geom_type"]),
-         [int(g) for g in f["geometry"]])
-        for f in fx["features"]
-    ]
-    return spark.createDataFrame(
-        [(z, tx, ty, fx["layer"], fx["extent"], fx["keys"], fx["values"], feats)],
-        LAYER_SCHEMA,
+def _tile_df(spark, fx, z=2, tx=1, ty=2):
+    """One protobuf tile holding the fixture layer (string values)."""
+    blob = mvtproto.encode_tile(
+        [{"name": fx["layer"], "extent": fx["extent"], "version": 2, "keys": fx["keys"],
+          "values": [("string", v) for v in fx["values"]], "features": fx["features"]}]
     )
+    return spark.createDataFrame([(z, tx, ty, blob)], "z int, tx long, ty long, data binary")
 
 
 def test_decode_skips_unknown_and_counts(spark, fixture_layer):
     fx = fixture_layer
-    out = decode_features(_layer_df(spark, fx)).collect()
+    out = decode_features(_tile_df(spark, fx)).collect()
     n_known = sum(1 for f in fx["features"] if f["geom_type"] != mvtcodec.GEOM_UNKNOWN)
     assert len(out) == n_known
     assert all(r["geom_type"] in ("point", "linestring", "polygon") for r in out)
@@ -65,7 +35,7 @@ def test_decode_skips_unknown_and_counts(spark, fixture_layer):
 
 def test_decode_props_dictionary_rules(spark, fixture_layer):
     fx = fixture_layer
-    rows = {r["fid"]: r for r in decode_features(_layer_df(spark, fx)).collect()
+    rows = {r["fid"]: r for r in decode_features(_tile_df(spark, fx)).collect()
             if r["geom_type"] != "unknown"}
     # out-of-bounds tag indices never produce a prop key
     for r in rows.values():
@@ -91,7 +61,7 @@ def test_decode_polygon_winding_golden(spark):
              "geometry": stream}
         ],
     }
-    out = decode_features(_layer_df(spark, fx, z=0, tx=0, ty=0)).collect()
+    out = decode_features(_tile_df(spark, fx, z=0, tx=0, ty=0)).collect()
     assert len(out) == 1
     r = out[0]
     assert r["fid"] == 7
@@ -147,14 +117,16 @@ def test_request_parse_rejects_bad_paths(spark):
 
 
 def test_encode_layers_roundtrip(spark, fixture_layer):
-    """Vector write path: decode → encode_layers → decode must be a
+    """Vector write path: decode → encode_tiles → decode must be a
     fixpoint — same fid/type/shape counts, same coordinate multiset,
-    same props (dictionaries rebuilt, tag indices re-derived)."""
-    from gdal_drivers_spark.operators.mvt import encode_layers
+    same props (dictionaries rebuilt, tag indices re-derived). The sink
+    is one grouped kernel keyed by tile: its executed plan has exactly
+    one shuffle exchange."""
+    import re
 
     extent = fixture_layer["extent"]
-    first = decode_features(_layer_df(spark, fixture_layer))
-    re_encoded = encode_layers(first, extent=extent)
+    first = decode_features(_tile_df(spark, fixture_layer))
+    re_encoded = encode_tiles(first, extent=extent)
     second = decode_features(re_encoded)
 
     def snapshot(df):
@@ -174,17 +146,21 @@ def test_encode_layers_roundtrip(spark, fixture_layer):
     a, b = snapshot(first), snapshot(second)
     assert len(a) == len(b) > 0
     assert a == b
+    re_encoded.collect()
+    plan = re_encoded._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    final = plan.split("== Initial Plan ==")[0]
+    assert len(re.findall(r"\bExchange\b", final)) == 1, final
 
 
 def test_raster_vector_tile_loop(spark):
     """The full raster↔vector↔tiles loop: quadtree mask → rasterize to
     pixel tiles → vectorize back to maximal quads → each white quad
-    becomes a polygon feature → encode as MVT layers on the z=1 tile
+    becomes a polygon feature → encode as MVT tiles on the z=1 tile
     grid → decode — coordinates survive exactly (quad corners are
     dyadic, on the extent grid) and total white area is preserved."""
     import json
 
-    from gdal_drivers_spark.operators.mvt import encode_layers
     from gdal_drivers_spark.operators.rasterize import rasterize_quads, vectorize_tiles
 
     depth, tile_px, z = 6, 32, 1
@@ -212,7 +188,7 @@ def test_raster_vector_tile_loop(spark):
             columns=["z", "tx", "ty", "layer", "fid", "geom_type", "geom_json", "props"],
         )
     )
-    decoded = decode_features(encode_layers(fdf, extent=256))
+    decoded = decode_features(encode_tiles(fdf, extent=256))
     got = decoded.collect()
     assert len(got) == len(vq)
     area_out = 0.0

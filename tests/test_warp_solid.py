@@ -131,23 +131,6 @@ def test_schema_copy(spark):
         solid_tiles(spark, 64, 64, [(1, "u8", "notacolor")])
 
 
-def test_mvt_nofields_skips_attribute_decode(spark):
-    """MVT_NOFIELDS (mvt.cpp:806-807): fields=False returns the same
-    features with EMPTY attribute maps, both on the engine codec path
-    and the real-protobuf path."""
-    from gdal_drivers_spark.operators.mvt import decode_features
-    from tests.test_vectorops import _layer_df  # shared fixture builder
-
-    layers = _layer_df(spark, synth.mvt_fixture(n_features=64))
-    full = decode_features(layers).collect()
-    bare = decode_features(layers, fields=False).collect()
-    assert len(full) == len(bare) > 0
-    assert any(r["props"] for r in full)
-    assert all(not r["props"] for r in bare)
-    k = lambda r: (r["z"], r["tx"], r["ty"], r["layer"], r["fid"])
-    assert {k(r): r["geom_json"] for r in full} == {k(r): r["geom_json"] for r in bare}
-
-
 # ------------------------------------------------------------- maskfile
 
 def test_maskfile_roundtrip():
@@ -444,10 +427,10 @@ def test_warp_utm_to_webmercator_composed(spark):
 
 def test_engine_tileset_dem_zonal_verbs(spark):
     """r03: hillshade / horn_gradients / halo_convolve /
-    with_halo_strips / zonal_stats over one small tile set."""
+    with_halo_bands / zonal_stats over one small tile set."""
     from gdal_drivers_spark.core import qcell
     from gdal_drivers_spark.operators.dem import hillshade, hillshade_np, horn_gradients
-    from gdal_drivers_spark.operators.halo import halo_convolve, with_halo_strips
+    from gdal_drivers_spark.operators.halo import halo_convolve, with_halo_bands
     from gdal_drivers_spark.operators.zonal import zonal_stats
 
     t = 8
@@ -462,7 +445,7 @@ def test_engine_tileset_dem_zonal_verbs(spark):
             == hillshade_np(img)).all()
     assert horn_gradients(tiles, t).collect()[0]["n_px"] == t * t
     assert len(halo_convolve(tiles, t).collect()) == 1
-    assert with_halo_strips(tiles, t).count() == 4  # self + 3 in-bounds neighbors
+    assert with_halo_bands(tiles, t, 1).count() == 4  # self + 3 in-bounds neighbors
     # zonal goes through the codec registry (magic sniff) — encoded
     # payloads, unlike the DEM ops' raw elevation bytes
     enc = spark.createDataFrame(
